@@ -215,7 +215,7 @@ def drift_report(
     frame (columns ``_c1.._c{buckets-1}`` — exactly what the internal
     ``exact_percentiles`` call would emit) so repeated monitoring runs
     against the same BEFORE snapshot amortize the cutpoint passes
-    (registry callers serve it from an mtime-keyed cache)."""
+    (registry callers serve it from an fixture-keyed cache)."""
     from bearly_spark.operators.aggregate import bucket_assign, exact_percentiles
 
     qs = [k / buckets for k in range(1, buckets)]
@@ -284,7 +284,7 @@ def iqr_outlier_report(
     quartiles (columns ``group_cols + [_q1, _q3]``, 4dp-rounded like
     the internal call) — monitoring reruns over an unchanged snapshot
     then skip the quartile passes (registry callers share them with
-    the percentile queries via an mtime-keyed cache)."""
+    the percentile queries via an fixture-keyed cache)."""
     from bearly_spark.operators.aggregate import exact_percentiles
 
     df = df.filter(F.col(value_col).isNotNull())

@@ -117,20 +117,14 @@ PREFIX_ORDER = [
     "embedding_ann_ivf",
     # ---- first-ever seats: the whole remaining seatable backlog ----
     # relational / scalar shapes
-    "posexplode_embeddings",
-    "null_funcs_lineitem",
     "crosstab_orders",
     # text block
     "bigram_quality_documents",
     "vocabulary_documents",
-    "vocab_oov_documents",
-    "chunk_documents_windows",
-    "repetition_quality_documents",
     # curation splits / caps / decontamination
     "decontaminate_bm25_documents",
     "cluster_aware_split_documents",
     "decontaminate_embedding",
-    "stratified_sample_documents",
     "cap_per_source_documents",
     "negative_samples_documents",
     # clustering / mining tail
@@ -179,6 +173,16 @@ PREFIX_ORDER = [
     "semdedup_index_stats_query",
     # ---- re-certification: r01-only records (pre-strict-gate) ----
     "set_except_custkeys",
+    # ---- r14 carry-over: emission paths rewritten in round 14. Slots
+    # from seats green in r12-r14 (tools/seat_history.py): posexplode,
+    # null_funcs, vocab_oov, chunk_documents_windows, repetition_quality,
+    # stratified_sample.
+    "q3_shipping_priority",
+    "q10_returned_items",
+    "q18_large_volume_orders",
+    "label_communities_parts",
+    "ppr_supplier_part",
+    "pagerank_supplier_part",
     # (lang_id_distribution and rollup_orders also wait for r13 — the
     # text family holds seven greener r11/r12 seats, and rollup held an
     # r01 green on an unchanged code path; their slots went to

@@ -153,7 +153,7 @@ def q_percentiles(spark, sf_dir):
     spill-safe rank-window form in
     operators.aggregate.exact_percentiles (F.percentile buffers whole
     groups in memory). At 100 TB prefer approx_percentile (t-digest).
-    Round 12: the 3-row quartile frame is served from the mtime-keyed
+    Round 12: the 3-row quartile frame is served from the fixture-keyed
     shared cutpoint cache (``_shared.cached_percentiles``) — the IQR
     fence query draws the same quartiles, so the passes run once per
     fixture instead of once per caller/bench pass."""
@@ -189,7 +189,7 @@ def q_nation_percentiles(spark, sf_dir):
     run the shared head-sketch + combined candidate passes — every
     stage a parallel scan or mergeable aggregate, zero whole-group
     sorts). Supplier→nation are broadcast dims on the lineitem scan.
-    The 25-row result rides the shared mtime-keyed cutpoint cache."""
+    The 25-row result rides the shared fixture-keyed cutpoint cache."""
     from bearly_spark.registry._shared import cached_percentiles
 
     def build():

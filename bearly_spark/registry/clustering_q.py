@@ -19,45 +19,30 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from bearly_spark.cache import derived_dir, memo
 from bearly_spark.operators import clustering as C
 from bearly_spark.registry._core import register
-from bearly_spark.registry._shared import _scratch_index
 from bearly_spark.sources.tables import load_table
 
 _K = 8
 _ITERS = 2
 _DIM = 64
 
-#: The Lloyd fit is deterministic in (fixture, k, iters) — seeds are the
-#: k lowest ids, every step is exact integer arithmetic — so the three
-#: batch queries (profile / semdedup / prototypes) share one fit per
-#: fixture instead of paying 4 corpus passes each. Keyed on the parquet
-#: file's (path, mtime, size) like streaming.ivf_index._model_cached, so
-#: a refreshed fixture refits. The TAG is the only thing distinguishing
-#: two different augmentations of the same fixture in the key: it must
-#: uniquely NAME the fit frame's construction recipe (hence
-#: "aug-copies-lt20", not "aug") — reusing a tag for a different frame
-#: silently serves the other frame's centroids.
-_FIT_CACHE: dict[tuple, list[list[int]]] = {}
-
-
 def _fitted_centroids(df, sf_dir: str, tag: str, k: int = _K, iters: int = _ITERS):
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        key = (src, st.st_mtime, st.st_size, tag, k, iters)
-    except OSError:
-        key = None
-    if key is not None and key in _FIT_CACHE:
-        return _FIT_CACHE[key]
-    cents = C.lloyd_fit(df, k=k, iters=iters)
-    if key is not None:
-        if len(_FIT_CACHE) > 32:
-            _FIT_CACHE.clear()
-        _FIT_CACHE[key] = cents
-    return cents
+    """The Lloyd fit of ``df``, memoized per embeddings fixture. The fit
+    is deterministic in (fixture, k, iters) — seeds are the k lowest
+    ids, every step is exact integer arithmetic — so the three batch
+    queries (profile / semdedup / prototypes) share one fit instead of
+    paying 4 corpus passes each. The TAG is the only thing
+    distinguishing two different augmentations of the same fixture in
+    the key: it must uniquely NAME the fit frame's construction recipe
+    (hence "aug-copies-lt20", not "aug") — reusing a tag for a different
+    frame silently serves the other frame's centroids."""
+    return memo(
+        [f"{sf_dir}/embeddings.parquet"],
+        ("lloyd-fit", tag, k, iters),
+        lambda: C.lloyd_fit(df, k=k, iters=iters),
+    )
 
 
 def _kmeans_ctes(
@@ -504,7 +489,7 @@ def q_semdedup_multiprobe(spark, sf_dir):
 
 
 def _semdedup_scratch(spark, sf_dir: str) -> str:
-    """Build (once per fixture mtime) the shared scratch semantic index:
+    """Build (once per fixture) the shared scratch semantic index:
     frozen centroids fit on the base table, three id-ordered ingests,
     the planted exact copies arriving last. Both index queries read it."""
     from bearly_spark.streaming import semdedup_index as SI
@@ -526,7 +511,7 @@ def _semdedup_scratch(spark, sf_dir: str) -> str:
             emb.filter(F.col("vec_id") >= 300).unionByName(copies), 2, index_dir
         )
 
-    return _scratch_index(sf_dir, "semdedup-idx-v2", "embeddings", build)
+    return derived_dir(sf_dir, "semdedup-idx", [f"{sf_dir}/embeddings.parquet"], build)[0]
 
 
 @register(
@@ -700,15 +685,6 @@ haf AS (
 
 _HK1, _HK2 = 4, 4
 
-#: Shared two-level fit per (fixture, tag) — the hierarchical mirror of
-#: ``_FIT_CACHE``: three registry queries fit the same geometry, so the
-#: fit runs once per fixture instead of per query. The fine frame is
-#: stored as COLLECTED rows (<= k1*k2, tiny) and re-created as a
-#: DataFrame per call — caching the DataFrame itself would pin
-#: checkpointed RDDs to one SparkSession.
-_HIER_CACHE: dict[tuple, tuple[list, list]] = {}
-
-
 #: Collect/cache the fine-centroid frame only while it is axis-sized:
 #: it holds <= k1*k2 rows of Θ(dim) each, which is 16 here but
 #: Θ(k1·k2·dim) in general — past this bound the registry cache must
@@ -719,31 +695,29 @@ _HIER_CACHE_MAX_CELLS = 4096
 
 def _fitted_hier(df, sf_dir: str, tag: str, k1: int = _HK1, k2: int = _HK2,
                  iters: int = _ITERS, fanout: int = 4):
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        key = (src, st.st_mtime, st.st_size, tag, k1, k2, iters)
-    except OSError:
-        key = None
+    """Shared two-level fit per (fixture, tag) — the hierarchical mirror
+    of ``_fitted_centroids``: three registry queries fit the same
+    geometry, so the fit runs once per fixture instead of per query.
+    The fine frame is memoized as COLLECTED rows (<= k1*k2, tiny) and
+    re-created as a DataFrame per call — holding the DataFrame itself
+    would pin checkpointed RDDs to one SparkSession."""
     if k1 * k2 > _HIER_CACHE_MAX_CELLS:
         # too many centroids to hold driver-side: hand back the
         # DISTRIBUTED fine frame uncached (small-k fits only below)
         return C.hierarchical_fit(df, k1=k1, k2=k2, iters=iters,
                                   fanout=fanout)
-    spark = df.sparkSession
-    if key is not None and key in _HIER_CACHE:
-        coarse, fine_rows = _HIER_CACHE[key]
-    else:
+
+    def fit():
         coarse, fine = C.hierarchical_fit(df, k1=k1, k2=k2, iters=iters,
                                           fanout=fanout)
-        fine_rows = [(r.coarse, r.fine, list(r.cq)) for r in fine.collect()]
-        if key is not None:
-            if len(_HIER_CACHE) > 32:
-                _HIER_CACHE.clear()
-            _HIER_CACHE[key] = (coarse, fine_rows)
-    fine_df = spark.createDataFrame(
+        return coarse, [(r.coarse, r.fine, list(r.cq)) for r in fine.collect()]
+
+    coarse, fine_rows = memo(
+        [f"{sf_dir}/embeddings.parquet"],
+        ("hier-fit", tag, k1, k2, iters, fanout),
+        fit,
+    )
+    fine_df = df.sparkSession.createDataFrame(
         fine_rows, "coarse int, fine int, cq array<long>"
     )
     return coarse, fine_df
@@ -889,7 +863,7 @@ def _semdedup_hier_scratch(spark, sf_dir: str) -> str:
             emb.filter(F.col("vec_id") >= 300).unionByName(copies), 2, index_dir
         )
 
-    return _scratch_index(sf_dir, "semdedup-hier-idx-v1", "embeddings", build)
+    return derived_dir(sf_dir, "semdedup-hier-idx", [f"{sf_dir}/embeddings.parquet"], build)[0]
 
 
 @register(
@@ -990,31 +964,17 @@ v{t} AS (SELECT i, {rational_micro_sql('gv', 'm', C.PCA_ITERATE_SCALE)} AS val
     return ",\n".join(parts)
 
 
-#: Fitted direction per (embeddings.parquet mtime) — the power/project
-#: queries share one gram pass per fixture; the fit is axis-sized
-#: (dim ints + two exact rationals), same budget class as _FIT_CACHE.
-_PCA_CACHE: dict[tuple, dict] = {}
-
-
 def _fitted_pca(spark, sf_dir: str) -> dict:
-    import os
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(src)
-        key = (src, st.st_mtime, st.st_size, _PCA_ITERS)
-    except OSError:
-        key = None
-    if key is not None and key in _PCA_CACHE:
-        return _PCA_CACHE[key]
-    fit = C.pca_power_fit(
-        load_table(spark, sf_dir, "embeddings"), iters=_PCA_ITERS
+    """Fitted direction per embeddings fixture — the power/project
+    queries share one gram pass; the fit is axis-sized (dim ints + two
+    exact rationals)."""
+    return memo(
+        [f"{sf_dir}/embeddings.parquet"],
+        ("pca-power", _PCA_ITERS),
+        lambda: C.pca_power_fit(
+            load_table(spark, sf_dir, "embeddings"), iters=_PCA_ITERS
+        ),
     )
-    if key is not None:
-        if len(_PCA_CACHE) > 32:
-            _PCA_CACHE.clear()
-        _PCA_CACHE[key] = fit
-    return fit
 
 
 def _pca_power_oracle() -> str:
@@ -1045,7 +1005,7 @@ def q_pca_power(spark, sf_dir):
     scaled 10^6. ``ev_share`` is the exact rational
     v'Gv / (v'v * trace G) — the explained-variance share the
     direction captures (the go/no-go diagnostic for whitening before
-    IVF/PQ). Fit served from the mtime-keyed cache shared with
+    IVF/PQ). Fit served from the fixture-keyed cache shared with
     ``pca_project_embeddings``."""
     from bearly_spark.operators.clustering import _rational_micro_py
     from bearly_spark.registry._shared import _values_frame

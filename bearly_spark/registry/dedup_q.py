@@ -405,7 +405,7 @@ def q_substring_dup_spans(spark, sf_dir):
     spans — the Lee-et-al-2022 operation that document-level MinHash
     misses (boilerplate inside otherwise-distinct docs). k=30 grams,
     duplicated iff corpus count > 1, gaps-and-islands merge. Served
-    from the mtime-keyed scratch span report shared with the removal
+    from the fixture-keyed scratch span report shared with the removal
     half (``_shared._dup_spans_cached``)."""
     return _dup_spans_cached(spark, sf_dir)
 
@@ -495,7 +495,7 @@ def q_minhash_clusters(spark, sf_dir):
     round 4 (recursive min-label walk over the DuckDB-recomputed
     representative-pair graph) on top of the pair-vs-cluster
     equivalence test in tests/test_llm_ops.py. Served from the
-    mtime-keyed scratch cluster map shared with the cluster-aware
+    fixture-keyed scratch cluster map shared with the cluster-aware
     split (``_shared._minhash_clusters_cached``)."""
     return _minhash_clusters_cached(spark, sf_dir)
 

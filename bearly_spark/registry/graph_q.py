@@ -27,9 +27,7 @@ from bearly_spark.producers import produce_array, produce_stream
 from bearly_spark.sources.tables import events_with_timestamp, load_table
 
 from bearly_spark.registry._core import ORACLE, QUERIES, register  # noqa: F401
-from bearly_spark.registry._shared import (  # noqa: F401
-    _scratch_index,
-)
+from bearly_spark.cache import derived_dir
 
 
 
@@ -133,14 +131,14 @@ def _coorder_edges(spark, sf_dir):
     (triangles, local clustering, bfs, label propagation) share this
     edge list, and each used to re-run the distinct + pair-expansion
     self-join from lineitem — ~20% of the bench headline spent
-    rebuilding identical edges. Same mtime-keyed reuse as the
+    rebuilding identical edges. Same fixture-keyed reuse as the
     ANN/BM25/IVF-PQ index entries; a refreshed fixture invalidates.
     Deterministic content (DISTINCT of a pure projection), so cached
     vs inline is row-identical for the oracle gate."""
-    edge_dir = _scratch_index(
+    edge_dir, _ = derived_dir(
         sf_dir,
-        "coorder-edges-v1",
-        "lineitem",
+        "coorder-edges",
+        [f"{sf_dir}/lineitem.parquet"],
         lambda d: _build_coorder_edges(spark, sf_dir).write.parquet(d),
     )
     return spark.read.parquet(edge_dir)
@@ -149,15 +147,15 @@ def _coorder_edges(spark, sf_dir):
 def _bipartite_edges(spark, sf_dir):
     """The supplier–part bipartite edge list (suppkey*2 → partkey*2+1,
     DISTINCT — the even/odd encoding keeps the two node spaces
-    disjoint) served from the same mtime-keyed ``.scratch/`` parquet
+    disjoint) served from the same fixture-keyed ``.scratch/`` parquet
     reuse as ``_coorder_edges``: pagerank and personalized-pagerank
     both derive it from lineitem, and the Θ(|lineitem|) distinct is
     pure rebuild cost after the first run. Directed canonical form is
     cached; consumers mirror it (a narrow union, no shuffle)."""
-    edge_dir = _scratch_index(
+    edge_dir, _ = derived_dir(
         sf_dir,
-        "supplier-part-bipartite-v1",
-        "lineitem",
+        "supplier-part-bipartite",
+        [f"{sf_dir}/lineitem.parquet"],
         lambda d: load_table(spark, sf_dir, "lineitem")
         .select(
             (F.col("l_suppkey") * 2).alias("src"),

@@ -27,11 +27,8 @@ from bearly_spark.producers import produce_array, produce_stream
 from bearly_spark.sources import txlog as TXL
 from bearly_spark.sources.tables import events_with_timestamp, load_table
 
+from bearly_spark.cache import SCRATCH, derived_dir, sf_tag
 from bearly_spark.registry._core import ORACLE, QUERIES, register  # noqa: F401
-from bearly_spark.registry._shared import (  # noqa: F401
-    _SCRATCH,
-    _sf_tag,
-)
 
 
 
@@ -221,7 +218,7 @@ def q_merge_upsert(spark, sf_dir):
     from pathlib import Path
 
     orders = load_table(spark, sf_dir, "orders")
-    work_root = Path(f"{_SCRATCH}/{_sf_tag(sf_dir)}/merge_orders")
+    work_root = Path(f"{SCRATCH}/{sf_tag(sf_dir)}/merge_orders")
     shutil.rmtree(work_root, ignore_errors=True)
     work = str(work_root / "table")
     orders.repartitionByRange(8, "o_orderkey").write.parquet(work)
@@ -389,7 +386,7 @@ def q_incremental_rollup(spark, sf_dir):
         F.col("o_totalprice").cast("decimal(18,6)").alias("o_totalprice"),
     )
     keys = ["o_orderstatus", "o_orderpriority"]
-    work_root = Path(f"{_SCRATCH}/{_sf_tag(sf_dir)}/rollup_orders")
+    work_root = Path(f"{SCRATCH}/{sf_tag(sf_dir)}/rollup_orders")
     shutil.rmtree(work_root, ignore_errors=True)
     work = str(work_root / "table")
     base = orders.filter(F.col("o_orderkey") % 3 != 0)
@@ -433,42 +430,15 @@ _TXLOG_YEAR_CHUNKS = (3, 2)
 _TX_PRICE_SQL = "ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 2)"
 
 
-def _tx_price_col():
-    return F.round(
-        F.sum(F.col("o_totalprice").cast("decimal(18,6)")).cast("double"), 2
-    )
-
-
-def _txlog_orders_fixture(
-    spark, sf_dir: str, name: str, compacted: bool = False
-) -> tuple[str, list[int]]:
-    """Build (once per orders.parquet mtime) a commit-log table from
-    orders: one commit per year-chunk, one data FILE per year (each
-    year arrives as its own single-partition member of the union, and
-    Spark writes one file per partition), so every file's
-    ``o_datekey`` footer stats span exactly its year and pruning
-    decisions are deterministic at every SF. Returns (path, years)."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/{name}"
-    marker = _Path(path) / "_fixture.json"
-    want = {
-        "mtime": _os.path.getmtime(f"{sf_dir}/orders.parquet"),
-        "compacted": compacted,
-    }
-    if marker.is_file():
-        got = _json.loads(marker.read_text())
-        if {k: got.get(k) for k in want} == want:
-            return path, got["years"]
-    _shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
+def _tx_orders(spark, sf_dir: str, *extra):
+    """The orders columns the commit-log fixtures store, plus ``extra``
+    columns ahead of the ``o_datekey`` yyyymmdd int."""
+    return load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
         "o_orderpriority",
         "o_totalprice",
+        *extra,
         (
             F.year("o_orderdate") * 10000
             + F.month("o_orderdate") * 100
@@ -477,31 +447,54 @@ def _txlog_orders_fixture(
         .cast("int")
         .alias("o_datekey"),
     )
-    years = [
-        r["y"]
-        for r in orders.select(F.year(F.to_date(F.col("o_datekey").cast("string"), "yyyyMMdd")).alias("y"))
-        .distinct()
-        .orderBy("y")
-        .collect()
-    ]
-    a, b = _TXLOG_YEAR_CHUNKS
-    for chunk in (years[:a], years[a : a + b], years[a + b :]):
-        if not chunk:
-            continue
-        per_year = [
-            orders.filter(
-                (F.col("o_datekey") >= y * 10000)
-                & (F.col("o_datekey") <= y * 10000 + 1231)
-            ).coalesce(1)
-            for y in chunk
+
+
+def _tx_price_col():
+    return F.round(
+        F.sum(F.col("o_totalprice").cast("decimal(18,6)")).cast("double"), 2
+    )
+
+
+def _txlog_orders_fixture(
+    spark, sf_dir: str, compacted: bool = False
+) -> tuple[str, list[int]]:
+    """Build (once per orders fixture) a commit-log table from orders:
+    one commit per year-chunk, one data FILE per year (each year
+    arrives as its own single-partition member of the union, and Spark
+    writes one file per partition), so every file's ``o_datekey``
+    footer stats span exactly its year and pruning decisions are
+    deterministic at every SF. ``compacted`` adds one OPTIMIZE commit
+    (a separate entry). Returns (path, years)."""
+
+    def build(path):
+        orders = _tx_orders(spark, sf_dir)
+        years = [
+            r["y"]
+            for r in orders.select(F.year(F.to_date(F.col("o_datekey").cast("string"), "yyyyMMdd")).alias("y"))
+            .distinct()
+            .orderBy("y")
+            .collect()
         ]
-        TXL.write_table(per_year, path, stats_cols=["o_datekey"])
-    if compacted:
-        TXL.compact(
-            spark, path, target_files=2, stats_cols=["o_datekey"], order_by=["o_datekey"]
-        )
-    marker.write_text(_json.dumps({**want, "years": years}))
-    return path, years
+        a, b = _TXLOG_YEAR_CHUNKS
+        for chunk in (years[:a], years[a : a + b], years[a + b :]):
+            if not chunk:
+                continue
+            per_year = [
+                orders.filter(
+                    (F.col("o_datekey") >= y * 10000)
+                    & (F.col("o_datekey") <= y * 10000 + 1231)
+                ).coalesce(1)
+                for y in chunk
+            ]
+            TXL.write_table(per_year, path, stats_cols=["o_datekey"])
+        if compacted:
+            TXL.compact(
+                spark, path, target_files=2, stats_cols=["o_datekey"], order_by=["o_datekey"]
+            )
+        return years
+
+    name = "orders_txlog_compacted" if compacted else "orders_txlog"
+    return derived_dir(sf_dir, name, [f"{sf_dir}/orders.parquet"], build)
 
 
 @register(
@@ -519,7 +512,7 @@ def q_txlog_read(spark, sf_dir):
     directory listing, is the source of truth (object-store safe, no
     eventual-consistency hazard). The read must see exactly the union
     of all three commits, i.e. all of orders."""
-    path, _ = _txlog_orders_fixture(spark, sf_dir, "orders_txlog")
+    path, _ = _txlog_orders_fixture(spark, sf_dir)
     return (
         TXL.read_table(spark, path)
         .groupBy("o_orderstatus")
@@ -549,7 +542,7 @@ def q_txlog_time_travel(spark, sf_dir):
     year-chunk (rank-based first 3 distinct order years — the oracle
     states the same chunk in closed form). Old versions stay readable
     because commits only de-reference files, never rewrite them."""
-    path, _ = _txlog_orders_fixture(spark, sf_dir, "orders_txlog")
+    path, _ = _txlog_orders_fixture(spark, sf_dir)
     return (
         TXL.read_table(spark, path, version=1)
         .groupBy("o_orderstatus")
@@ -585,7 +578,7 @@ def q_txlog_skipping(spark, sf_dir):
     them in data terms (files == distinct years by construction). The
     predicate is re-applied row-level, so pruning is an I/O
     optimization, never a correctness dependence."""
-    path, years = _txlog_orders_fixture(spark, sf_dir, "orders_txlog")
+    path, years = _txlog_orders_fixture(spark, sf_dir)
     y = years[1]
     where = {"o_datekey": (y * 10000, y * 10000 + 1231)}
     scanned, total = TXL.plan_files(path, where=where)
@@ -617,9 +610,7 @@ def q_txlog_compact(spark, sf_dir):
     travel because its files remain until vacuum. Both reads are
     emitted side by side — the oracle states the same aggregate twice,
     which is exactly the invariant compaction promises."""
-    path, _ = _txlog_orders_fixture(
-        spark, sf_dir, "orders_txlog_compacted", compacted=True
-    )
+    path, _ = _txlog_orders_fixture(spark, sf_dir, compacted=True)
     latest = (
         TXL.read_table(spark, path)
         .groupBy("o_orderstatus")
@@ -659,7 +650,7 @@ def q_txlog_changes(spark, sf_dir):
     files the picked commits added/removed — compaction emits nothing
     because it is logically a no-op, which only a log (never a file
     listing) can know."""
-    path, _ = _txlog_orders_fixture(spark, sf_dir, "orders_txlog")
+    path, _ = _txlog_orders_fixture(spark, sf_dir)
     return TXL.read_changes(spark, path, from_version=1, to_version=2).select(
         "o_orderkey",
         "o_datekey",
@@ -671,27 +662,22 @@ def q_txlog_changes(spark, sf_dir):
 def _txlog_derived_fixture(spark, sf_dir: str, name: str, apply_dml) -> dict:
     """Copy the shared base table, apply ONE DML mutation via
     ``apply_dml(path, years) -> stats``, and cache the result keyed on
-    the base fixture's marker (same staleness rule as the base: a new
-    orders.parquet mtime rebuilds everything). Returns the persisted
-    DML stats dict. The cache-keying protocol lives HERE once so the
-    delete and merge queries cannot silently diverge on it."""
-    import json as _json
+    the base table's files (a rebuilt base rebuilds every derived
+    table). Returns the DML stats dict plus ``path``. The protocol
+    lives HERE once so the delete and merge queries cannot silently
+    diverge on it."""
     import shutil as _shutil
-    from pathlib import Path as _Path
 
-    base, years = _txlog_orders_fixture(spark, sf_dir, "orders_txlog")
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/{name}"
-    marker = _Path(path) / "_dml_done.json"
-    stats_file = _Path(path) / "_dml_stats.json"
-    base_marker = (_Path(base) / "_fixture.json").read_text()
-    if not (marker.is_file() and marker.read_text() == base_marker):
-        _shutil.rmtree(path, ignore_errors=True)
+    base, years = _txlog_orders_fixture(spark, sf_dir)
+
+    def build(path):
         _shutil.copytree(base, path)
-        (_Path(path) / "_fixture.json").unlink()
-        stats = apply_dml(path, years)
-        stats_file.write_text(_json.dumps(stats))
-        marker.write_text(base_marker)
-    return {"path": path, **_json.loads(stats_file.read_text())}
+        return apply_dml(path, years)
+
+    path, stats = derived_dir(
+        sf_dir, name, [f"{sf_dir}/orders.parquet", base], build
+    )
+    return {"path": path, **stats}
 
 
 def _txlog_dml_result(spark, path: str, stats: dict):
@@ -880,53 +866,32 @@ def q_txlog_dv_delete(spark, sf_dir):
 # ===================================================================
 
 
-def _txlog_partitioned_fixture(spark, sf_dir: str, name: str) -> tuple[str, list[int]]:
-    """Build (once per orders.parquet mtime) a commit-log table
+def _txlog_partitioned_fixture(spark, sf_dir: str) -> tuple[str, list[int]]:
+    """Build (once per orders fixture) a commit-log table
     HIVE-PARTITIONED on the derived ``o_year`` column
     (``txlog.write_table(partition_by=["o_year"])``): a single
     coalesce(1) commit writes exactly one file per year value under
     ``data/o_year=<y>/``, so partition pruning decisions are
     deterministic at every SF (files == distinct order years).
     Returns (path, years)."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-    from pathlib import Path as _Path
 
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/{name}"
-    marker = _Path(path) / "_fixture.json"
-    want = {"mtime": _os.path.getmtime(f"{sf_dir}/orders.parquet")}
-    if marker.is_file():
-        got = _json.loads(marker.read_text())
-        if {k: got.get(k) for k in want} == want:
-            return path, got["years"]
-    _shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_orderpriority",
-        "o_totalprice",
-        F.year("o_orderdate").cast("int").alias("o_year"),
-        (
-            F.year("o_orderdate") * 10000
-            + F.month("o_orderdate") * 100
-            + F.dayofmonth("o_orderdate")
+    def build(path):
+        orders = _tx_orders(
+            spark, sf_dir, F.year("o_orderdate").cast("int").alias("o_year")
         )
-        .cast("int")
-        .alias("o_datekey"),
-    )
-    years = [
-        r["o_year"]
-        for r in orders.select("o_year").distinct().orderBy("o_year").collect()
-    ]
-    TXL.write_table(
-        orders.coalesce(1),
-        path,
-        partition_by=["o_year"],
-        stats_cols=["o_datekey"],
-    )
-    marker.write_text(_json.dumps({**want, "years": years}))
-    return path, years
+        years = [
+            r["o_year"]
+            for r in orders.select("o_year").distinct().orderBy("o_year").collect()
+        ]
+        TXL.write_table(
+            orders.coalesce(1),
+            path,
+            partition_by=["o_year"],
+            stats_cols=["o_datekey"],
+        )
+        return years
+
+    return derived_dir(sf_dir, "orders_txlog_part", [f"{sf_dir}/orders.parquet"], build)
 
 
 @register(
@@ -958,9 +923,7 @@ def q_txlog_partitioned_scan(spark, sf_dir):
     states them in data terms (files == distinct years by
     construction). The predicate is re-applied row-level, so pruning
     stays a pure I/O optimization."""
-    path, years = _txlog_partitioned_fixture(
-        spark, sf_dir, "orders_txlog_part"
-    )
+    path, years = _txlog_partitioned_fixture(spark, sf_dir)
     y = years[2]
     where = {"o_year": (y, y)}
     planned, total = TXL.plan_files(path, where=where)

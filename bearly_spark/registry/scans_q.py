@@ -26,11 +26,8 @@ from bearly_spark.operators.aggregate import grouped_agg, sum_int64
 from bearly_spark.producers import produce_array, produce_stream
 from bearly_spark.sources.tables import events_with_timestamp, load_table
 
+from bearly_spark.cache import SCRATCH, sf_tag
 from bearly_spark.registry._core import ORACLE, QUERIES, register  # noqa: F401
-from bearly_spark.registry._shared import (  # noqa: F401
-    _SCRATCH,
-    _sf_tag,
-)
 
 
 
@@ -45,7 +42,7 @@ def q_csv_scan(spark, sf_dir):
     """CSV sink + scan round trip: write nation as headered CSV, read it
     back with an explicit schema (no inference job), aggregate. Exercises
     the text-source path end to end; correctness = parquet-derived oracle."""
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/nation_csv"
+    path = f"{SCRATCH}/{sf_tag(sf_dir)}/nation_csv"
     load_table(spark, sf_dir, "nation").write.mode("overwrite").option("header", True).csv(path)
     back = spark.read.schema("n_nationkey int, n_name string, n_regionkey int").option(
         "header", True
@@ -66,7 +63,7 @@ def q_csv_scan(spark, sf_dir):
 )
 def q_json_scan(spark, sf_dir):
     """JSON-lines sink + scan round trip (explicit schema on read)."""
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/orders_json"
+    path = f"{SCRATCH}/{sf_tag(sf_dir)}/orders_json"
     (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 10 == 0)
@@ -94,7 +91,7 @@ def q_json_scan(spark, sf_dir):
 def q_orc_scan(spark, sf_dir):
     """ORC sink + scan round trip (columnar format #2), then a broadcast
     dim join — correctness = parquet-derived oracle."""
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/supplier_orc"
+    path = f"{SCRATCH}/{sf_tag(sf_dir)}/supplier_orc"
     load_table(spark, sf_dir, "supplier").write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     nat = load_table(spark, sf_dir, "nation")
@@ -122,7 +119,7 @@ def q_partitioned_scan(spark, sf_dir):
     is the difference between scanning 1/3 of the table and all of it;
     the pruning itself is asserted on the physical plan in
     tests/test_sinks.py."""
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/orders_part"
+    path = f"{SCRATCH}/{sf_tag(sf_dir)}/orders_part"
     load_table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
         "o_orderstatus"
     ).parquet(path)
@@ -155,7 +152,7 @@ def q_clustered_scan(spark, sf_dir):
     The hive-partition complement for high-cardinality ordering keys where
     one-directory-per-value would explode. Clustering quality (disjoint
     file spans) is asserted in tests/test_sinks.py."""
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/lineitem_clustered"
+    path = f"{SCRATCH}/{sf_tag(sf_dir)}/lineitem_clustered"
     li = load_table(spark, sf_dir, "lineitem")
     (
         li.repartitionByRange(8, "l_shipdate")
@@ -199,7 +196,7 @@ def q_zorder_scan(spark, sf_dir):
     asserted in tests/test_sinks.py."""
     from bearly_spark.operators.layout import zorder_write
 
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/lineitem_zorder"
+    path = f"{SCRATCH}/{sf_tag(sf_dir)}/lineitem_zorder"
     li = load_table(spark, sf_dir, "lineitem")
     zorder_write(li, path, ["l_partkey", "l_suppkey"], bits=16, num_files=8)
     back = spark.read.parquet(path)
@@ -227,7 +224,7 @@ def q_xml_scan(spark, sf_dir):
     in-core): write supplier as <row> elements, read back with an
     explicit schema (no inference job), aggregate. Completes the
     file-format family: parquet/CSV/JSON/ORC/text/binary/XML."""
-    path = f"{_SCRATCH}/{_sf_tag(sf_dir)}/supplier_xml"
+    path = f"{SCRATCH}/{sf_tag(sf_dir)}/supplier_xml"
     (
         load_table(spark, sf_dir, "supplier")
         .write.mode("overwrite")

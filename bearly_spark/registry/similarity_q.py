@@ -27,9 +27,9 @@ from bearly_spark.producers import produce_array, produce_stream
 from bearly_spark.sources.tables import events_with_timestamp, load_table
 
 from bearly_spark.registry._core import ORACLE, QUERIES, register  # noqa: F401
+from bearly_spark.cache import derived_dir
 from bearly_spark.registry._shared import (  # noqa: F401
     _minhash_doc_pairs_sql,
-    _scratch_index,
 )
 
 
@@ -273,10 +273,10 @@ def q_ann_index_query(spark, sf_dir):
     from bearly_spark.streaming.ann_index import ann_query_over_index, upsert_index_batch
 
     emb = load_table(spark, sf_dir, "embeddings")
-    index_dir = _scratch_index(
+    index_dir, _ = derived_dir(
         sf_dir,
-        "ann-index-v2",
-        "embeddings",
+        "ann-index",
+        [f"{sf_dir}/embeddings.parquet"],
         lambda d: upsert_index_batch(emb, 0, d, nbits=56, bands=8),
     )
     return ann_query_over_index(
@@ -329,10 +329,10 @@ def q_dedup_index_query(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    index_dir = _scratch_index(
+    index_dir, _ = derived_dir(
         sf_dir,
-        "dedup-index-v2",
-        "documents",
+        "dedup-index",
+        [f"{sf_dir}/documents.parquet"],
         lambda d: upsert_dedup_index_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, d),
     )
     return near_dups_against_index(
@@ -976,13 +976,14 @@ def q_ivfpq_residual_query(spark, sf_dir):
     from bearly_spark.streaming.ivf_index import build_ivfpq_index, ivfpq_index_query
 
     emb = load_table(spark, sf_dir, "embeddings")
-    index_dir = _scratch_index(
-        sf_dir,
-        "ivfpq-res-index-v1",
-        "embeddings",
-        lambda d: build_ivfpq_index(
+
+    def build(d: str) -> None:  # drop the returned fit: marker meta is JSON
+        build_ivfpq_index(
             emb, d, n_cells=64, m=16, ksub=16, sample_by="id", encoding="residual"
-        ),
+        )
+
+    index_dir, _ = derived_dir(
+        sf_dir, "ivfpq-res-index", [f"{sf_dir}/embeddings.parquet"], build
     )
     return ivfpq_index_query(
         spark, index_dir, emb.filter(F.col("vec_id") < 5), k=10, n_probe=16, rerank=100
@@ -1006,13 +1007,12 @@ def q_ivfpq_index_query(spark, sf_dir):
     from bearly_spark.streaming.ivf_index import build_ivfpq_index, ivfpq_index_query
 
     emb = load_table(spark, sf_dir, "embeddings")
-    index_dir = _scratch_index(
-        sf_dir,
-        "ivfpq-index-v1",
-        "embeddings",
-        lambda d: build_ivfpq_index(
-            emb, d, n_cells=64, m=16, ksub=16, sample_by="id"
-        ),
+
+    def build(d: str) -> None:  # drop the returned fit: marker meta is JSON
+        build_ivfpq_index(emb, d, n_cells=64, m=16, ksub=16, sample_by="id")
+
+    index_dir, _ = derived_dir(
+        sf_dir, "ivfpq-index", [f"{sf_dir}/embeddings.parquet"], build
     )
     return ivfpq_index_query(
         spark, index_dir, emb.filter(F.col("vec_id") < 5), k=10, n_probe=16, rerank=100
@@ -1060,11 +1060,12 @@ def q_ivf_index_query(spark, sf_dir):
     from bearly_spark.streaming.ivf_index import build_ivf_index, ivf_index_query
 
     emb = load_table(spark, sf_dir, "embeddings")
-    index_dir = _scratch_index(
-        sf_dir,
-        "ivf-index-v1",
-        "embeddings",
-        lambda d: build_ivf_index(emb, d, n_cells=64, sample_by="id"),
+
+    def build(d: str) -> None:  # drop the returned fit: marker meta is JSON
+        build_ivf_index(emb, d, n_cells=64, sample_by="id")
+
+    index_dir, _ = derived_dir(
+        sf_dir, "ivf-index", [f"{sf_dir}/embeddings.parquet"], build
     )
     return ivf_index_query(
         spark, index_dir, emb.filter(F.col("vec_id") < 5), k=10, n_probe=16

@@ -27,8 +27,8 @@ from bearly_spark.producers import produce_array, produce_stream
 from bearly_spark.sources.tables import events_with_timestamp, load_table
 
 from bearly_spark.registry._core import ORACLE, QUERIES, register  # noqa: F401
+from bearly_spark.cache import derived_dir
 from bearly_spark.registry._shared import (  # noqa: F401
-    _scratch_index,
     quantile_cuts_sql,
 )
 
@@ -190,7 +190,7 @@ def q_rfm_segments(spark, sf_dir):
     no single-task sort) over the (small)
     per-customer aggregate, then a broadcast 1-row cutpoint frame into
     a map-only score expression — Θ(customers) end to end. The three
-    1-row cut frames ride the shared mtime-keyed cache (round 12)."""
+    1-row cut frames ride the shared fixture-keyed cache (round 12)."""
     from bearly_spark.operators.aggregate import bucket_assign
     from bearly_spark.registry._shared import cached_percentiles
 
@@ -277,7 +277,7 @@ def q_drift_report(spark, sf_dir):
     contributions — PSI's ln is deliberately not emitted: libm ln can
     differ in the last ulp between engines). The ML-ops
     drift-detection face of the DQ family. The BEFORE decile cutpoints
-    ride the shared mtime-keyed cache (round 12) — repeated monitoring
+    ride the shared fixture-keyed cache (round 12) — repeated monitoring
     runs re-bucket without re-fitting the snapshot deciles."""
     from bearly_spark.operators.quality import drift_report
     from bearly_spark.registry._shared import cached_percentiles
@@ -661,7 +661,7 @@ def q_cms_index_query(spark, sf_dir):
         upsert_cms_batch(od.filter(F.col("o_orderkey") % 2 == 0), 0, d, "o_custkey")
         upsert_cms_batch(od.filter(F.col("o_orderkey") % 2 == 1), 1, d, "o_custkey")
 
-    index_dir = _scratch_index(sf_dir, "cms-index", "orders", build)
+    index_dir, _ = derived_dir(sf_dir, "cms-index", [f"{sf_dir}/orders.parquet"], build)
     sketch = read_cms(spark, index_dir)
     true_top = (
         od.groupBy("o_custkey")

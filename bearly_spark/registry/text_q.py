@@ -26,6 +26,7 @@ from bearly_spark.operators.aggregate import grouped_agg, sum_int64
 from bearly_spark.producers import produce_array, produce_stream
 from bearly_spark.sources.tables import events_with_timestamp, load_table
 
+from bearly_spark.cache import derived_dir, memo
 from bearly_spark.registry._core import ORACLE, QUERIES, register  # noqa: F401
 from bearly_spark.registry._shared import (  # noqa: F401
     _BM25_QUERIES,
@@ -37,7 +38,6 @@ from bearly_spark.registry._shared import (  # noqa: F401
     _STOP_HITS,
     _TOKS,
     _bm25_multi_oracle,
-    _scratch_index,
 )
 
 _LANG_CASE = (
@@ -199,10 +199,10 @@ def q_bm25_index_search(spark, sf_dir):
     from bearly_spark.streaming.bm25_index import bm25_query_index, upsert_bm25_batch
 
     docs = load_table(spark, sf_dir, "documents")
-    index_dir = _scratch_index(
+    index_dir, _ = derived_dir(
         sf_dir,
-        "bm25-index-v1",
-        "documents",
+        "bm25-index",
+        [f"{sf_dir}/documents.parquet"],
         lambda d: upsert_bm25_batch(docs, 0, d),
     )
     return bm25_query_index(spark, index_dir, _BM25_QUERY, k=10)
@@ -518,32 +518,17 @@ s{r} AS (SELECT word, freq,
     return ",\n".join(parts)
 
 
-#: Learned merge tables per (documents.parquet mtime) — bpe_merges and
-#: bpe_segment share one driver-coordinated fit per fixture (the same
-#: amortization as the percentile/fit caches; the table is axis-sized:
-#: _BPE_MERGES dict rows).
-_BPE_CACHE: dict[tuple, list[dict]] = {}
-
-
 def _bpe_merges_cached(spark, sf_dir: str) -> list[dict]:
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(src)
-        key = (src, st.st_mtime, st.st_size, _BPE_MERGES)
-    except OSError:
-        key = None
-    if key is not None and key in _BPE_CACHE:
-        return _BPE_CACHE[key]
-    merges = T.bpe_learn(
-        load_table(spark, sf_dir, "documents"), "text", n_merges=_BPE_MERGES
+    """The learned merge table, memoized per documents fixture:
+    bpe_merges and bpe_segment share one driver-coordinated fit (the
+    table is axis-sized: _BPE_MERGES dict rows)."""
+    return memo(
+        [f"{sf_dir}/documents.parquet"],
+        ("bpe-merges", _BPE_MERGES),
+        lambda: T.bpe_learn(
+            load_table(spark, sf_dir, "documents"), "text", n_merges=_BPE_MERGES
+        ),
     )
-    if key is not None:
-        if len(_BPE_CACHE) > 32:
-            _BPE_CACHE.clear()
-        _BPE_CACHE[key] = merges
-    return merges
 
 
 @register(
@@ -566,7 +551,7 @@ def q_bpe_merges(spark, sf_dir):
     replace — the corpus itself is scanned exactly once for word
     frequencies, which is what makes the construction viable at
     100 TB (vocab << corpus). The twin unrolls the identical rounds;
-    the merge table is served from the mtime-keyed fit cache shared
+    the merge table is served from the fixture-keyed fit cache shared
     with ``bpe_segment_documents``."""
     from bearly_spark.registry._shared import _values_frame
     from pyspark.sql.types import (
@@ -651,7 +636,7 @@ def q_bpe_vocabulary(spark, sf_dir):
     vocabulary you'd actually ship beside the merge table.
     Deterministic ties (freq DESC, symbol ASC); symbols explode off the
     distinct-word frame (Theta(vocab)), one wordcount shuffle +
-    TakeOrdered. Shares the mtime-keyed merge-table cache."""
+    TakeOrdered. Shares the fixture-keyed merge-table cache."""
     docs = load_table(spark, sf_dir, "documents")
     return T.bpe_symbol_inventory(
         docs, "text", _bpe_merges_cached(spark, sf_dir), top_v=50
@@ -706,7 +691,7 @@ def q_bpe_encode(spark, sf_dir):
     training. Corpus cost: one tokenize + two broadcast joins + a
     per-document cumulative window; merges never touch the corpus
     (Theta(vocab) replaces on the distinct-word frame). Shares the
-    mtime-keyed merge-table fit cache."""
+    fixture-keyed merge-table fit cache."""
     docs = load_table(spark, sf_dir, "documents")
     return T.bpe_encode(
         docs, "doc_id", "text", _bpe_merges_cached(spark, sf_dir), max_tokens=40
@@ -752,7 +737,7 @@ def q_pack_bpe(spark, sf_dir):
     long words split into many subwords). Same scale shape as both
     parents: Θ(vocab) merge replays, one tokenize + broadcast join for
     the counts, a per-lang (per-shard) window for the packing. Shares
-    the mtime-keyed merge-table fit cache."""
+    the fixture-keyed merge-table fit cache."""
     from pyspark.sql import Window as SW
 
     docs = load_table(spark, sf_dir, "documents")

@@ -55,8 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
+from bearly_spark.cache import memo
 from bearly_spark.operators import clustering as C
-from bearly_spark.streaming.ivf_index import _model_cached
 
 #: Compacted base partition id; micro-batch ids are >= 0 so a base dir
 #: never collides with a replayed batch (same scheme as the siblings).
@@ -162,7 +162,7 @@ def read_frozen_centroids(spark: SparkSession, index_dir: str) -> list[list[int]
         rows = spark.read.parquet(f"{index_dir}/centroids").orderBy("cell").collect()
         return [list(r.cq) for r in rows]
 
-    return _model_cached(index_dir, "centroids", load)
+    return memo([f"{index_dir}/centroids"], "semdedup-centroids", load)
 
 
 def _read_members(

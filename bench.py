@@ -22,7 +22,6 @@ import json
 import math
 import os
 import re
-import shutil
 import sys
 import time
 from pathlib import Path
@@ -317,29 +316,32 @@ def _prepare_layout(sf_dir: str) -> str:
     if not plan:
         return sf_dir
 
-    prep = Path(__file__).parent / ".scratch" / f"benchprep-{src.name}"
-    marker = prep / "_PREPARED"
-    newest_src = max(t.stat().st_mtime for t in entries)
-    if marker.exists() and marker.stat().st_mtime > newest_src:
-        return str(prep)
-    shutil.rmtree(prep, ignore_errors=True)
-    prep.mkdir(parents=True)
-    for t in entries:
-        if t.name in plan:
-            tab = pq.read_table(t)
-            out = prep / t.name
-            out.mkdir()
-            n = min(32, max(4, math.ceil(tab.num_rows / _PREP_ROWS_PER_FILE)))
-            step = math.ceil(tab.num_rows / n)
-            for i in range(n):
-                chunk = tab.slice(i * step, step)
-                if chunk.num_rows:
-                    pq.write_table(chunk, out / f"part-{i:05d}.parquet")
-        else:
-            os.symlink(t, prep / t.name)
-    marker.touch()
-    print(f"bench-prep: multi-file rewrite of {plan} at {prep}", file=sys.stderr)
-    return str(prep)
+    from bearly_spark.cache import derived_dir
+
+    # the prepared dir keeps a basename of its own, so the registry's
+    # scratch entries for it stay apart from the raw fixture's
+    name = f"benchprep-{src.name}"
+
+    def build(out: str) -> None:
+        prep = Path(out) / name
+        prep.mkdir(parents=True)
+        for t in entries:
+            if t.name in plan:
+                tab = pq.read_table(t)
+                out_t = prep / t.name
+                out_t.mkdir()
+                n = min(32, max(4, math.ceil(tab.num_rows / _PREP_ROWS_PER_FILE)))
+                step = math.ceil(tab.num_rows / n)
+                for i in range(n):
+                    chunk = tab.slice(i * step, step)
+                    if chunk.num_rows:
+                        pq.write_table(chunk, out_t / f"part-{i:05d}.parquet")
+            else:
+                os.symlink(t, prep / t.name)
+        print(f"bench-prep: multi-file rewrite of {plan} for {sf_dir}", file=sys.stderr)
+
+    out, _ = derived_dir(sf_dir, "benchprep", entries, build)
+    return os.path.join(out, name)
 
 
 def main() -> None:

@@ -1,16 +1,18 @@
 """Round-12 shared-cutpoint cache (``_shared.cached_percentiles``) and
 the hier-fit registry-cache generality guard (r11 verdict #6).
 
-The cache serves the exact_percentiles RESULT from an mtime-keyed map
-as a pure-JVM VALUES LocalRelation — values must be bit-identical to
-the direct call, wide results must stay distributed/uncached, and the
-literal-frame builder must round-trip every compared-surface cell type.
+The cache serves the exact_percentiles RESULT from the fixture-keyed
+``cache.memo`` store as a pure-JVM VALUES LocalRelation — values must be
+bit-identical to the direct call, wide results must stay
+distributed/uncached, and the literal-frame builder must round-trip
+every compared-surface cell type.
 """
 
 import math
 
 import pytest
 
+from bearly_spark import cache
 from bearly_spark.registry import _shared
 
 
@@ -82,14 +84,14 @@ def test_cached_percentiles_wide_result_stays_distributed(
     from bearly_spark.sources.tables import load_table
 
     monkeypatch.setattr(_shared, "_PCTL_CACHE_MAX_ROWS", 1)
-    before = dict(_shared._PCTL_CACHE)
+    before = dict(cache._MEMO)
     res = _shared.cached_percentiles(
         spark, sf_dir, ["lineitem"], "test-too-wide",
         lambda: load_table(spark, sf_dir, "lineitem"),
         ["l_returnflag"], "l_extendedprice", (0.25,), names=["p25"], scale=2,
     )
     # 3 groups > max_rows=1: nothing new cached, values still correct
-    assert dict(_shared._PCTL_CACHE) == before
+    assert dict(cache._MEMO) == before
     direct = {
         r["l_returnflag"]: r["p25"]
         for r in _quartiles_direct(spark, sf_dir).select(
@@ -143,10 +145,10 @@ def test_hier_fit_cache_guard_keeps_wide_fits_distributed(
     from bearly_spark.sources.tables import load_table
 
     monkeypatch.setattr(clustering_q, "_HIER_CACHE_MAX_CELLS", 1)
-    before = dict(clustering_q._HIER_CACHE)
+    before = dict(cache._MEMO)
     emb = load_table(spark, sf_dir, "embeddings")
     coarse, fine = clustering_q._fitted_hier(emb, sf_dir, "test-guard")
     # k1*k2 = 16 > 1: nothing cached, the fine frame is the operator's
     # own distributed output (not a literal rebuild)
-    assert dict(clustering_q._HIER_CACHE) == before
+    assert dict(cache._MEMO) == before
     assert fine.count() > 0

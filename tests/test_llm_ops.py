@@ -1363,15 +1363,16 @@ def test_negative_samples_contract(spark):
 
 
 def test_scratch_index_mtime_invalidation(tmp_path):
-    """The shared derived-frame cache (_scratch_index) rebuilds iff the
-    source parquet is newer than the _BUILT marker: two calls -> one
-    build; touching the source -> rebuild. (The contract every cached
-    frame relies on: co-order/bipartite edges, minhash clusters,
+    """The shared on-disk derived-frame cache (``cache.derived_dir``)
+    rebuilds iff the source parquet's signature changed: two calls ->
+    one build; touching the source -> rebuild. (The contract every
+    cached frame relies on: co-order/bipartite edges, minhash clusters,
     dup-span report, ANN/BM25 indexes.)"""
     import os
+    import shutil
     import time
 
-    from bearly_spark.registry._shared import _scratch_index
+    from bearly_spark.cache import SCRATCH, derived_dir
 
     sf = tmp_path / "sfX"
     sf.mkdir()
@@ -1383,26 +1384,19 @@ def test_scratch_index_mtime_invalidation(tmp_path):
         os.makedirs(d)
         builds.append(d)
 
-    import shutil
-    from pathlib import Path
-
     try:
-        p1 = _scratch_index(str(sf), "test-cache-v1", "documents", build)
-        p2 = _scratch_index(str(sf), "test-cache-v1", "documents", build)
+        p1, _ = derived_dir(str(sf), "test-cache-v1", [str(src)], build)
+        p2, _ = derived_dir(str(sf), "test-cache-v1", [str(src)], build)
         assert p1 == p2 and len(builds) == 1
         time.sleep(0.05)
         now = time.time() + 1
         os.utime(src, (now, now))  # simulate fixture regeneration
-        _scratch_index(str(sf), "test-cache-v1", "documents", build)
+        derived_dir(str(sf), "test-cache-v1", [str(src)], build)
         assert len(builds) == 2
     finally:
-        # always remove the repo-level scratch entry: a stale marker
-        # keyed on the sf-dir BASENAME would mask the rebuild on a
-        # future run of this very test (review catch, round 7)
-        shutil.rmtree(
-            Path(__file__).resolve().parent.parent / ".scratch" / "test-cache-v1-sfX",
-            ignore_errors=True,
-        )
+        # always remove the repo-level scratch entry: it is keyed on the
+        # sf-dir BASENAME, so a later run of this very test shares it
+        shutil.rmtree(os.path.join(SCRATCH, "test-cache-v1-sfX"), ignore_errors=True)
 
 
 def test_c4_rules_planted(spark):

@@ -68,3 +68,28 @@ def test_label_propagation_many_rounds_stays_exact(spark):
         for r in label_propagation(edges, rounds=10).collect()
     }
     assert a == b and set(a) == {1, 2, 3, 10, 11, 12}
+
+
+def test_make_big_sf_int32_keys_stay_disjoint(spark, tmp_path, monkeypatch):
+    """The 10x fixture builder shifts replica keys by a 1e8 stride: a
+    fixture storing keys as int32 must not wrap at factor >= 23
+    (ADVICE r14), so shifted keys are always cast to long."""
+    import importlib.util
+    from pathlib import Path
+
+    spec = importlib.util.spec_from_file_location(
+        "make_big_sf", Path(__file__).resolve().parent.parent / "tools" / "make_big_sf.py"
+    )
+    mbs = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mbs)
+    monkeypatch.setattr(mbs, "_SHIFTS", {"orders": {"o_orderkey": 100_000_000}})
+    monkeypatch.setattr(mbs, "_COPY_ONLY", [])
+    src, out = tmp_path / "src", tmp_path / "out"
+    spark.createDataFrame([(1,), (2,), (3,)], "o_orderkey int").write.parquet(
+        str(src / "orders.parquet")
+    )
+    mbs.build(spark, 23, str(src), str(out))
+    big = spark.read.parquet(str(out / "orders.parquet"))
+    assert big.schema["o_orderkey"].dataType.simpleString() == "bigint"
+    keys = sorted(r[0] for r in big.collect())
+    assert keys == sorted(i * 100_000_000 + k for i in range(23) for k in (1, 2, 3))

@@ -50,7 +50,8 @@ def build(spark, factor: int, src: str, out: str) -> None:
         for i in range(factor):
             r = df
             for col, stride in shifts.items():
-                r = r.withColumn(col, (F.col(col) + F.lit(i * stride)).cast(df.schema[col].dataType))
+                # always long: int32 keys would wrap from factor >= 23
+                r = r.withColumn(col, (F.col(col).cast("long") + F.lit(i * stride)))
             reps.append(r)
         big = reps[0]
         for r in reps[1:]:
