@@ -532,7 +532,7 @@ def _global_order_statistics(
 #: Below this many rows per group (on average) the grouped selection
 #: path yields to the rank-window form (round-11 size gate; see
 #: _few_group_order_statistics). Measured crossover on local[32] with
-#: 3 groups (tools/grouped_selection_probe.py sweep, PLANS.md r11):
+#: 3 groups (PLANS.md "Grouped-percentile size gate" sweep):
 #: window wins 1.07s vs 1.75s at 125k rows/group, selection wins
 #: 1.95s vs 2.96s at 500k and 13.4s vs 57.2s at 8M — the cutoff sits
 #: between, and routing a borderline input to selection only costs
@@ -623,8 +623,8 @@ def _few_group_order_statistics(
     # holds under ~half a million rows, a one-task-per-group window
     # sort is a sub-second operation and the selection machinery's 2-3
     # extra fixed-cost passes are pure constant loss (measured 2.7x on
-    # the 3-group sf0.1 percentiles — tools/grouped_selection_probe.py
-    # pins selection at 0.75x the window form until ~8M rows/group).
+    # the 3-group sf0.1 percentiles — PLANS.md "Round-10 probe" has
+    # selection at 0.75x the window form until ~8M rows/group).
     # Past the threshold the window form's single-task sorts grow
     # without bound while selection stays scan-shaped — the 100x-scale
     # regime this path exists for. Values are identical either way

@@ -579,7 +579,7 @@ def simhash_dedup_pairs(
     set, signatures included, before filtering; at 64× adversarial
     duplicate mass that materialized hundreds of millions of pre-filter
     pairs in the dedup exchange and thrashed GC. Caught by the 256×
-    scaling probe, tools/scaling_probe.py --docs-only.)
+    scaling probe: PLANS.md "Round-3 adversarial probe".)
 
     **Duplicate-mass invariance** (round 3, same design as the minhash
     and winnowing paths): documents first collapse into groups by exact

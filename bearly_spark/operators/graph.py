@@ -20,10 +20,18 @@ Scale design (same contract as the components loop):
   materialization can ride inside the NEXT round's broadcast build
   instead of paying a separate eager job + Θ(nodes) write per round
   (10x-scale best-of-3: LPA eager 8.88s / fused-no-pin 9.33s / lazy
-  7.23s; PPR 3.36 / 3.18 / 2.58). BFS keeps its EAGER per-round pins —
+  7.23s; PPR 3.36 / 3.18 / 2.58). The LAST round pins eagerly
+  (``_run_rounds``), so the loop runs inside the operator while its
+  persisted edge/degree/node frames serve it, and they are released on
+  return. BFS keeps its EAGER per-round pins —
   its visited/frontier frames feed the next round twice and its
   left_anti join consumes the frontier before any broadcast would
   materialize it;
+- one skeleton: PageRank is personalized PageRank with every node
+  seeded (one kernel, ``_ranks``); the rank and label loops share
+  ``_run_rounds``; all four iterative loops share one edge-pin prologue
+  (``_pin_edges``) and one broadcast cutover (``BROADCAST_NODES_MAX``),
+  and LPA/BFS one symmetric closure (``_symmetric_edges``);
 - iteration count is FIXED (power iteration converges geometrically;
   curation uses a handful of iterations), so wall-clock is
   iterations × one-shuffle, independent of graph diameter.
@@ -47,16 +55,98 @@ import pyspark.sql.functions as F
 
 from pyspark.sql import DataFrame
 
+# Broadcast-regime cutover (node count) for the rank, label and BFS
+# loops. Under it the Θ(nodes) rank/label/frontier vectors broadcast and
+# the edge list pins on the loop's OUTPUT key, so no edge row re-shuffles
+# across rounds; past it the edge list pins on the INPUT key and each
+# round pays the one inherent Θ(edges) node-keyed shuffle.
+BROADCAST_NODES_MAX = 2_000_000
+
+
 def _pin_round(df: DataFrame) -> DataFrame:
     """Per-round lineage pin for the rank/label loops: a LAZY local
     checkpoint. Truncation is mandatory (an un-pinned round-i broadcast
     subtree re-executes every earlier round — Θ(rounds²)); laziness
     folds the materialization into the next round's broadcast build, so
     no per-round driver job is launched (module docstring has the
-    measured three-way comparison). The pinned blocks live on
+    measured three-way comparison; ``_run_rounds`` pins only its last
+    round eagerly). The pinned blocks live on
     executor-local storage — the standard localCheckpoint contract:
     executor loss mid-query fails the job instead of recomputing."""
     return df.localCheckpoint(eager=False)
+
+
+def _run_rounds(state: DataFrame, rounds: int, step) -> DataFrame:
+    """The fixed-round loop skeleton of the rank and label loops:
+    ``state = step(state)`` ``rounds`` times, each round pinned by
+    :func:`_pin_round` except the LAST, which checkpoints EAGERLY. The
+    whole loop thus runs here, while the caller's persisted edge /
+    degree / node frames are alive and serve it, and the caller may
+    release them on return: the result reads only the final
+    checkpoint, never the released caches."""
+    for r in range(1, rounds + 1):
+        state = step(state)
+        state = state.localCheckpoint(eager=True) if r == rounds else _pin_round(state)
+    return state
+
+
+def _pin_edges(raw: DataFrame, out_key: str, in_key: str, node_frame):
+    """The edge-pin prologue of the rank, label and BFS loops.
+
+    Persists ``raw`` hash-partitioned on ``out_key`` — the
+    broadcast-regime layout, chosen OPTIMISTICALLY so the raw edge
+    construction is scanned exactly once — then counts
+    ``node_frame(edges)`` to pick the regime. Past
+    :data:`BROADCAST_NODES_MAX` nodes the cached edges are re-laid-out
+    on ``in_key`` (from the cache, not the source).
+
+    The partition COUNT is explicit: a count-less ``repartition(key)``
+    is a REPARTITION_BY_COL hint that AQE byte-coalesces to 1-2 tasks
+    on MB-scale inputs, serializing every per-round join (measured on
+    the sf0.1 co-order graph: rounds ~3s → ~1s each once pinned); a
+    user-specified count survives AQE.
+
+    Returns ``(edges, nodes, n_nodes, bcast, n_parts)``; the caller
+    unpersists ``edges``, and ``nodes`` when ``node_frame`` persisted it.
+    """
+    n_parts = raw.sparkSession.sparkContext.defaultParallelism
+    e = raw.repartition(n_parts, out_key).persist()
+    nodes = node_frame(e)
+    n_nodes = nodes.count()
+    bcast = n_nodes <= BROADCAST_NODES_MAX
+    if not bcast:
+        e_in = e.repartition(n_parts, in_key).persist()
+        e_in.count()
+        e.unpersist()
+        e = e_in
+    return e, nodes, n_nodes, bcast, n_parts
+
+
+def _symmetric_edges(
+    edges: DataFrame, src_col: str, dst_col: str, canonical: bool
+) -> DataFrame:
+    """Symmetric closure (u, v) of an undirected edge list, for LPA and
+    BFS. Canonicalizes BEFORE mirroring: distinct on the |E| canonical
+    list, then a shuffle-free union with the flipped copy (disjoint by
+    construction except self-loops, excluded from the flip) — the naive
+    mirror-then-distinct re-shuffles 2|E| rows for nothing.
+    ``canonical=True`` (caller guarantees u<v exactly-once, no loops —
+    e.g. the cached co-order list) skips the Θ(|E|) distinct shuffle."""
+    e = edges.select(
+        F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v")
+    )
+    ee = (
+        e
+        if canonical
+        else e.select(
+            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+        ).distinct()
+    )
+    return ee.union(
+        ee.where(F.col("u") != F.col("v")).select(
+            F.col("v").alias("u"), F.col("u").alias("v")
+        )
+    )
 
 
 def pagerank(
@@ -65,12 +155,16 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_nodes_max: int = 2_000_000,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list. For an
     undirected graph pass the symmetrized edges. Returns (node, rank)
     for every node that appears as a source (with ≥ 1 out-edge —
     see the module docstring's dangling-node contract).
+
+    PageRank is personalized PageRank with EVERY node seeded: with
+    ``|S| = n`` and ``is_seed ≡ true`` the PPR recurrence below reduces
+    term for term to the uniform one, so both run one kernel
+    (``_ranks``) and return bit-identical ranks.
 
     Determinism (round 8): the ENTIRE iteration runs in exact integer
     picoranks (10⁻¹² units) — no IEEE arithmetic anywhere until the
@@ -90,7 +184,7 @@ def pagerank(
     recurrence, so every intermediate rank vector is bit-identical.
 
     Plan shape (round 9, two regimes by node count — the LPA design):
-    under ``broadcast_nodes_max`` nodes the edge list pins partitioned
+    under ``BROADCAST_NODES_MAX`` nodes the edge list pins partitioned
     on DST (the contribution stream's output key) and each iteration
     broadcast-joins the Θ(nodes) rank/degree vectors onto it — the
     contribution groupBy inherits HashPartitioning(dst) and the damped
@@ -98,113 +192,150 @@ def pagerank(
     ever re-shuffles. Past the cutover the edge list pins on SRC and
     each iteration pays the one inherent Θ(edges) dst-keyed shuffle
     into the contribution sum."""
+    return _ranks(edges, None, iterations, damping, src_col, dst_col)
+
+
+def personalized_pagerank(
+    edges: DataFrame,
+    seeds: DataFrame,
+    iterations: int = 3,
+    damping: float = 0.85,
+    src_col: str = "src",
+    dst_col: str = "dst",
+) -> DataFrame:
+    """Personalized PageRank: the restart mass concentrates on a SEED
+    set instead of spreading uniformly — "importance as seen from
+    these nodes", the relatedness/recommendation face of PageRank
+    (related items from a seed basket, domain authority relative to
+    trusted seeds, TrustRank-style propagation). ``seeds`` is a
+    one-column ``node`` frame; rank_{t+1}(v) = (1−d)·p(v) + d·Σ
+    contributions with p = uniform over seeds, r0 = p.
+
+    Same kernel, plan shape and round-8 exact-integer picorank
+    recurrence as :func:`pagerank` (PPR's restart arithmetic lands
+    EXACTLY on 10dp decimal boundaries — observed at sf0.01 with plain
+    ROUND: 0.0011315211 vs 0.001131521 — and the round-7 audit showed
+    even fixed-order float forms 1-ulp-fragile across DuckDB builds):
+
+        R₀      = is_seed ? halfup(10¹²/|S|) : 0
+        c(edge) = halfup(R(src)/deg(src))                  [pico]
+        R'      = 100·halfup(([seed]·(dd−dn)·10¹² + dn·Σc·|S|)
+                             / (100·dd·|S|))
+
+    all in integral division (``rounding.rational_micro``); the only
+    IEEE op is the final ``pico/10¹²`` emission of identical integers.
+    Nodes unreachable from the seeds report rank 0 — absence of
+    relatedness is a value, not a missing row."""
+    return _ranks(edges, seeds, iterations, damping, src_col, dst_col)
+
+
+def _ranks(edges, seeds, iterations, damping, src_col, dst_col) -> DataFrame:
+    """The one PageRank kernel: personalized PageRank over ``seeds``, or
+    over every node when ``seeds`` is None. The all-seed case skips the
+    seed join and its count (``|S| = n`` is the degree count) and pins
+    its node frame only in the broadcast regime, where the damped
+    update joins it co-partitioned with the contribution sums."""
     from fractions import Fraction
 
     from bearly_spark.operators.rounding import rational_micro
-    # EXPLICIT partition count: count-less repartition("src") is a
-    # REPARTITION_BY_COL hint that AQE byte-coalesces to 1-2 tasks on
-    # MB-scale inputs, serializing every per-iteration contribution
-    # join (the measured LPA/BFS collapse, round 6); a user-specified
-    # count survives AQE.
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    e_raw = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    # persist OPTIMISTICALLY in the broadcast-regime layout (dst) so the
-    # raw edge construction is scanned exactly once; the rare
-    # past-cutover path re-lays-out from the cache, not the source
-    e = e_raw.repartition(n_parts, "dst").persist()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    n = deg.count()  # pins e + deg; also the broadcast-regime decision
-    bcast = n <= broadcast_nodes_max
-    if not bcast:
-        e_src = e.repartition(n_parts, "src").persist()
-        e_src.count()
-        e.unpersist()
-        e = e_src
-    dfr = Fraction(damping).limit_denominator(1000)
-    dn, dd = dfr.numerator, dfr.denominator
-    dec = "decimal(38,0)"
 
-    # r0 is a projection of the PERSISTED degree frame — no pin needed
-    # (recompute is a cache read; the old eager checkpoint was one
-    # extra job + Θ(nodes) local write for nothing)
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        rational_micro(F.lit(1), F.lit(n), 12).alias("_pico"),
+    e, deg, n, bcast, n_parts = _pin_edges(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        "dst",
+        "src",
+        lambda by_dst: by_dst.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist(),
     )
-    nodes = deg.select(F.col("src").alias("node"))
-    if bcast:
-        nodes = nodes.repartition(n_parts, "node").persist()
-        nodes.count()
-    # NOT degree-annotated (round 14, measured): joining deg onto the
-    # edge list once outside the loop looked like a saved per-iteration
-    # join, but in the broadcast regime the deg join is a cheap
-    # Θ(nodes)-broadcast probe while the annotation costs an extra
-    # Θ(edges) materialization plus a wider cached edge row read every
-    # iteration — 10x-scale best-of-3 measured the annotated form
-    # SLOWER (pagerank 2.61s plain vs 3.94s annotated, both lazy-pinned)
-    pinned = [e, deg] + ([nodes] if bcast else [])
+    pinned = [e, deg]
+    ids = deg.select(F.col("src").alias("node"))
     try:
-        ranks = _pagerank_iterate(
-            ranks, nodes, e, deg, iterations, bcast, n, dn, dd, dec
+        if seeds is None:
+            nodes, s_count = ids, n
+            if bcast:
+                nodes = ids.repartition(n_parts, "node").persist()
+                pinned.append(nodes)
+                nodes.count()
+        else:
+            sd = seeds.select(F.col("node").cast("long").alias("node")).distinct()
+            # ONE materialization of the node/seed frame, persisted
+            # directly in the update-join layout; s_count pins it
+            nodes = (
+                ids.join(sd.withColumn("_s", F.lit(1)), "node", "left")
+                .select("node", F.col("_s").isNotNull().alias("is_seed"))
+                .repartition(n_parts, "node")
+                .persist()
+            )
+            pinned.append(nodes)
+            s_count = nodes.filter("is_seed").count()
+            if s_count == 0:
+                raise ValueError("personalized_pagerank: no seed appears in the graph")
+
+        def seeded(value, zero):
+            # value on seed rows, zero elsewhere; every node is a seed
+            # when seeds is None, so the value needs no CASE at all
+            if seeds is None:
+                return value
+            return F.when(F.col("is_seed"), value).otherwise(zero)
+
+        dfr = Fraction(damping).limit_denominator(1000)
+        dn, dd = dfr.numerator, dfr.denominator
+        dec = "decimal(38,0)"
+        # r0 is a projection of a persisted frame — no pin needed
+        # (recompute is a cache read)
+        ranks = (ids if seeds is None else nodes).select(
+            "node",
+            seeded(rational_micro(F.lit(1), F.lit(s_count), 12), F.lit(0)).alias("_pico"),
+        )
+        s38 = F.coalesce(F.col("_s"), F.lit(0)).cast(dec)
+        num = seeded(
+            F.lit((dd - dn) * 10**12).cast(dec), F.lit(0).cast(dec)
+        ) + F.lit(dn).cast(dec) * s38 * F.lit(s_count).cast(dec)
+        den = F.lit(100 * dd).cast(dec) * F.lit(s_count).cast(dec)
+
+        def step(ranks):
+            # per-EDGE halfup contribution in plain LONG arithmetic (the
+            # hot path — Θ(edges)/round): picoranks sum to ~10¹², so
+            # 2·R + deg ≤ ~2·10¹² at ANY corpus scale — no DECIMAL
+            # needed (rational_micro's DECIMAL(38,0) chain measured
+            # +~10% on the bench graph trio); the Θ(nodes) damped update
+            # keeps DECIMAL for the dn·S·n blow-up. deg is NOT annotated
+            # onto the edge list (round 14, measured): in the broadcast
+            # regime its join is a cheap Θ(nodes) probe, while the
+            # annotation costs an extra Θ(edges) materialization plus a
+            # wider cached edge row every iteration (10x-scale
+            # best-of-3: pagerank 2.61s plain vs 3.94s annotated).
+            rv = ranks.withColumnRenamed("node", "src")
+            dv = deg
+            if bcast:
+                rv, dv = F.broadcast(rv), F.broadcast(dv)
+            contrib = (
+                e.join(rv, "src")
+                .join(dv, "src")
+                .select(
+                    F.col("dst").alias("node"),
+                    F.call_function(
+                        "div",
+                        F.lit(2).cast("long") * F.col("_pico") + F.col("deg"),
+                        F.lit(2).cast("long") * F.col("deg"),
+                    ).alias("w"),
+                )
+            )
+            agg = contrib.groupBy("node").agg(F.sum("w").alias("_s"))
+            # left-join back onto the FULL node set: a node with
+            # out-edges but no in-edges (possible on non-symmetric
+            # graphs) must keep its base rank and stay in the vector —
+            # grouping only the contribution stream would silently drop
+            # it AND its out-edges from every later iteration
+            return nodes.join(agg, "node", "left").select(
+                "node", (rational_micro(num, den, 0) * F.lit(100)).alias("_pico")
+            )
+
+        ranks = _run_rounds(ranks, iterations, step)
+        return ranks.select(
+            "node", (F.col("_pico").cast("double") / F.lit(1e12)).alias("rank")
         )
     finally:
-        # release the pinned edge/degree/node frames even when an
-        # iteration raises mid-loop (matches personalized_pagerank /
-        # label_propagation, which already unpersist in a finally)
         for df_ in pinned:
             df_.unpersist()
-    return ranks.select(
-        "node", (F.col("_pico").cast("double") / F.lit(1e12)).alias("rank")
-    )
-
-
-def _pagerank_iterate(ranks, nodes, e, deg, iterations, bcast, n, dn, dd, dec):
-    """The pagerank power-iteration loop, factored out so the caller can
-    wrap it in try/finally around the pinned frames."""
-    from bearly_spark.operators.rounding import rational_micro
-
-    for it in range(iterations):
-        # per-EDGE halfup contribution in plain LONG arithmetic (the
-        # hot path — Θ(edges)/round): picoranks sum to ~10¹², so
-        # 2·R + deg ≤ ~2·10¹² at ANY corpus scale — no DECIMAL needed
-        # (rational_micro's DECIMAL(38,0) chain measured +~10% on the
-        # bench graph trio); the Θ(nodes) damped update below keeps
-        # DECIMAL for the dn·S·n blow-up.
-        rv = ranks.withColumnRenamed("node", "src")
-        dv = deg
-        if bcast:
-            rv, dv = F.broadcast(rv), F.broadcast(dv)
-        contrib = (
-            e.join(rv, "src")
-            .join(dv, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.call_function(
-                    "div",
-                    F.lit(2).cast("long") * F.col("_pico") + F.col("deg"),
-                    F.lit(2).cast("long") * F.col("deg"),
-                ).alias("w"),
-            )
-        )
-        agg = contrib.groupBy("node").agg(F.sum("w").alias("_s"))
-        # left-join back onto the FULL node set: a node with out-edges
-        # but no in-edges (possible on non-symmetric graphs) must keep
-        # its base rank and stay in the vector — grouping only the
-        # contribution stream would silently drop it AND its out-edges
-        # from every later iteration (review catch, round 6)
-        s38 = F.coalesce(F.col("_s"), F.lit(0)).cast(dec)
-        num = (
-            F.lit((dd - dn) * 10**12).cast(dec)
-            + F.lit(dn).cast(dec) * s38 * F.lit(n).cast(dec)
-        )
-        den = F.lit(100 * dd).cast(dec) * F.lit(n).cast(dec)
-        ranks = _pin_round(
-            nodes.join(agg, "node", "left").select(
-                "node",
-                (rational_micro(num, den, 0) * F.lit(100)).alias("_pico"),
-            )
-        )
-    return ranks
 
 
 def triangle_counts(
@@ -371,7 +502,6 @@ def label_propagation(
     dst_col: str = "dst",
     rounds: int = 4,
     canonical: bool = False,
-    broadcast_nodes_max: int = 2_000_000,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation: labels
     start as node ids; each round every node adopts the most frequent
@@ -386,7 +516,7 @@ def label_propagation(
     same). Returns (node, community) for every node with ≥ 1 edge.
 
     Scale shape (round 9, two regimes by node count): when the label
-    vector fits a broadcast (≤ ``broadcast_nodes_max`` nodes — the
+    vector fits a broadcast (≤ ``BROADCAST_NODES_MAX`` nodes — the
     co-order part graph, entity graphs, most dimension-derived graphs),
     the symmetric edge list is pinned partitioned on the OUTPUT key
     ``u`` and every round is a broadcast-hash join + two
@@ -402,75 +532,42 @@ def label_propagation(
     through its broadcast subtree — but the materialization rides
     inside the next round's broadcast build instead of a separate
     eager job per round (10x-scale: eager 8.88s / no-pin 9.33s /
-    lazy 7.23s)."""
-    e = edges.select(
-        F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v")
-    )
-    # explicit partition COUNT: REPARTITION_BY_COL without a number is
-    # AQE-coalescible, and a ~20 MB edge list coalesces to 1-2 tasks --
-    # which then serializes every per-round join/expansion; a
-    # user-specified count is preserved by AQE (measured on the sf0.1
-    # co-order graph: rounds go from ~3s to ~1s each)
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    # canonicalize BEFORE mirroring: distinct on the |E| canonical list,
-    # then a shuffle-free union with the flipped copy (disjoint by
-    # construction except self-loops, excluded from the flip) — the
-    # naive mirror-then-distinct re-shuffles 2|E| rows for nothing.
-    # canonical=True (caller guarantees u<v exactly-once, no loops —
-    # e.g. the cached co-order list) skips the Θ(|E|) distinct shuffle.
-    ee = (
-        e
-        if canonical
-        else e.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        ).distinct()
-    )
-    sym_raw = ee.union(
-        ee.where(F.col("u") != F.col("v")).select(
-            F.col("v").alias("u"), F.col("u").alias("v")
-        )
-    )
-    sym = sym_raw.repartition(n_parts, "u").persist()
-    labels = (
-        sym.select(F.col("u").alias("node"))
+    lazy 7.23s); only the last round pins eagerly (``_run_rounds``)."""
+    sym, labels, _, bcast, n_parts = _pin_edges(
+        _symmetric_edges(edges, src_col, dst_col, canonical),
+        "u",
+        "v",
+        lambda sym: sym.select(F.col("u").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("label"))
+        .select("node", F.col("node").alias("label")),
     )
-    n_nodes = labels.count()  # materializes sym; regime decision
-    bcast = n_nodes <= broadcast_nodes_max
-    if not bcast:
-        sym_v = sym.repartition(n_parts, "v").persist()
-        sym_v.count()
-        sym.unpersist()
-        sym = sym_v
+
+    def step(labels):
+        joined = sym.join(
+            F.broadcast(labels) if bcast else labels,
+            sym["v"] == labels["node"],
+        ).select(F.col("u").alias("node"), "label")
+        if not bcast:
+            # explicit node-keyed repartition: HashPartitioning(node)
+            # satisfies the (node, label) grouping AND the per-node
+            # argmax agg, so the round costs ONE pinned shuffle — without
+            # it AQE coalesces the count shuffle to a single task that
+            # sorts ~|edges| rows (measured sf0.1: rounds 3.5s -> ~1s)
+            joined = joined.repartition(n_parts, "node")
+        nb = joined.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
+        # argmax as a hash agg, not a sort window: max_by over the
+        # (count, -label) struct = most-frequent label, min-label ties —
+        # (c, -label) is unique per node (labels are distinct after the
+        # groupBy), so the result is fully deterministic and the
+        # per-round partition sort disappears from the plan
+        return nb.groupBy("node").agg(
+            F.max_by(
+                "label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))
+            ).alias("label")
+        )
+
     try:
-        for it in range(rounds):
-            joined = sym.join(
-                F.broadcast(labels) if bcast else labels,
-                sym["v"] == labels["node"],
-            ).select(F.col("u").alias("node"), "label")
-            if not bcast:
-                # explicit node-keyed repartition: HashPartitioning(node)
-                # satisfies the (node, label) grouping AND the per-node
-                # argmax agg, so the round costs ONE pinned 32-way
-                # shuffle — without it AQE coalesces the count shuffle
-                # to a single task that sorts ~|edges| rows (measured
-                # sf0.1: rounds 3.5s -> ~1s)
-                joined = joined.repartition(n_parts, "node")
-            nb = joined.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
-            # argmax as a hash agg, not a sort window: max_by over the
-            # (count, -label) struct = most-frequent label, min-label
-            # ties — (c, -label) is unique per node (labels are distinct
-            # after the groupBy), so the result is fully deterministic
-            # and the per-round partition sort disappears from the plan
-            labels = _pin_round(
-                nb.groupBy("node").agg(
-                    F.max_by(
-                        "label",
-                        F.struct(F.col("c"), (-F.col("label")).alias("nl")),
-                    ).alias("label")
-                )
-            )
+        labels = _run_rounds(labels, rounds, step)
         return labels.select("node", F.col("label").alias("community"))
     finally:
         sym.unpersist()
@@ -483,7 +580,6 @@ def bfs_levels(
     dst_col: str = "dst",
     rounds: int = 3,
     canonical: bool = False,
-    broadcast_nodes_max: int = 2_000_000,
 ) -> DataFrame:
     """Multi-source BFS shortest-path levels: hop distance from a seed
     set (a one-column ``node`` frame) over the undirected edge list,
@@ -502,46 +598,17 @@ def bfs_levels(
     round is Θ(edges touching the frontier), never corpus-quadratic.
 
     Round 9, two regimes by node count (the LPA design): under
-    ``broadcast_nodes_max`` nodes the edge list pins on the OUTPUT key
+    ``BROADCAST_NODES_MAX`` nodes the edge list pins on the OUTPUT key
     ``u`` and each round broadcast-joins the frontier and anti-joins
     the visited vector (both ≤ Θ(nodes)) — the expansion's distinct
     inherits HashPartitioning(u), so no touched-edge row ever shuffles.
     Past the cutover the v-pinned shuffle form remains."""
-    e = edges.select(
-        F.col(src_col).cast("long").alias("u"), F.col(dst_col).cast("long").alias("v")
+    sym, _, _, bcast, n_parts = _pin_edges(
+        _symmetric_edges(edges, src_col, dst_col, canonical),
+        "u",
+        "v",
+        lambda sym: sym.select("u").distinct(),
     )
-    # explicit partition COUNT: REPARTITION_BY_COL without a number is
-    # AQE-coalescible, and a ~20 MB edge list coalesces to 1-2 tasks --
-    # which then serializes every per-round join/expansion; a
-    # user-specified count is preserved by AQE (measured on the sf0.1
-    # co-order graph: rounds go from ~3s to ~1s each)
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    # canonicalize BEFORE mirroring: distinct on the |E| canonical list,
-    # then a shuffle-free union with the flipped copy (disjoint by
-    # construction except self-loops, excluded from the flip) — the
-    # naive mirror-then-distinct re-shuffles 2|E| rows for nothing.
-    # canonical=True (caller guarantees u<v exactly-once, no loops —
-    # e.g. the cached co-order list) skips the Θ(|E|) distinct shuffle.
-    ee = (
-        e
-        if canonical
-        else e.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        ).distinct()
-    )
-    sym_raw = ee.union(
-        ee.where(F.col("u") != F.col("v")).select(
-            F.col("v").alias("u"), F.col("u").alias("v")
-        )
-    )
-    sym = sym_raw.repartition(n_parts, "u").persist()
-    n_nodes = sym.select("u").distinct().count()  # from the cache
-    bcast = n_nodes <= broadcast_nodes_max
-    if not bcast:
-        sym_v = sym.repartition(n_parts, "v").persist()
-        sym_v.count()
-        sym.unpersist()
-        sym = sym_v
     try:
         visited = (
             seeds.select(F.col("node").cast("long").alias("node"))
@@ -576,130 +643,3 @@ def bfs_levels(
         return visited
     finally:
         sym.unpersist()
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    broadcast_nodes_max: int = 2_000_000,
-) -> DataFrame:
-    """Personalized PageRank: the restart mass concentrates on a SEED
-    set instead of spreading uniformly — "importance as seen from
-    these nodes", the relatedness/recommendation face of PageRank
-    (related items from a seed basket, domain authority relative to
-    trusted seeds, TrustRank-style propagation). ``seeds`` is a
-    one-column ``node`` frame; rank_{t+1}(v) = (1−d)·p(v) + d·Σ
-    contributions with p = uniform over seeds, r0 = p.
-
-    Same execution shape as :func:`pagerank`: edges pinned partitioned
-    on src (only the Θ(nodes) rank vector moves per iteration), lineage
-    lazily pinned per round (``_pin_round``) — and the same round-8 exact-integer
-    picorank recurrence (PPR's restart arithmetic lands EXACTLY on
-    10dp decimal boundaries — observed at sf0.01 with plain ROUND:
-    0.0011315211 vs 0.001131521 — and the round-7 audit showed even
-    fixed-order float forms 1-ulp-fragile across DuckDB builds):
-
-        R₀      = is_seed ? halfup(10¹²/|S|) : 0
-        c(edge) = halfup(R(src)/deg(src))                  [pico]
-        R'      = 100·halfup(([seed]·(dd−dn)·10¹² + dn·Σc·|S|)
-                             / (100·dd·|S|))
-
-    all in integral division (``rounding.rational_micro``); the only
-    IEEE op is the final ``pico/10¹²`` emission of identical integers.
-    Nodes unreachable from the seeds report rank 0 — absence of
-    relatedness is a value, not a missing row."""
-    from fractions import Fraction
-
-    from bearly_spark.operators.rounding import rational_micro
-    # explicit partition count — same AQE-coalesce guard as pagerank;
-    # same round-9 two-regime plan shape: under the broadcast cutover
-    # the edge list pins on DST and the rank/degree vectors broadcast,
-    # so no edge row ever re-shuffles across iterations
-    n_parts = edges.sparkSession.sparkContext.defaultParallelism
-    e_raw = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    # optimistic broadcast-regime layout — one scan of the raw edges
-    e = e_raw.repartition(n_parts, "dst").persist()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    n_nodes = deg.count()
-    bcast = n_nodes <= broadcast_nodes_max
-    if not bcast:
-        e_src = e.repartition(n_parts, "src").persist()
-        e_src.count()
-        e.unpersist()
-        e = e_src
-    nodes = None
-    try:
-        sd = seeds.select(F.col("node").cast("long").alias("node")).distinct()
-        # ONE materialization of the node/seed frame (round 14): the old
-        # eager localCheckpoint followed by a bcast-regime
-        # repartition+persist wrote Θ(nodes) twice back to back; persist
-        # directly in the update-join layout and let s_count pin it
-        nodes = (
-            deg.select(F.col("src").alias("node"))
-            .join(sd.withColumn("_s", F.lit(1)), "node", "left")
-            .select("node", F.col("_s").isNotNull().alias("is_seed"))
-            .repartition(n_parts, "node")
-            .persist()
-        )
-        s_count = nodes.filter("is_seed").count()
-        if s_count == 0:
-            raise ValueError("personalized_pagerank: no seed appears in the graph")
-        dfr = Fraction(damping).limit_denominator(1000)
-        dn, dd = dfr.numerator, dfr.denominator
-        dec = "decimal(38,0)"
-        # r0 is a projection of the pinned node frame — no pin needed
-        # (same reasoning as pagerank's r0)
-        ranks = nodes.select(
-            "node",
-            F.when(
-                F.col("is_seed"), rational_micro(F.lit(1), F.lit(s_count), 12)
-            )
-            .otherwise(F.lit(0))
-            .alias("_pico"),
-        )
-        for it in range(iterations):
-            # LONG fast path for the Θ(edges) contribution — see
-            # pagerank's in-loop note (picoranks bound 2·R+deg ≤ 2·10¹²)
-            rv = ranks.withColumnRenamed("node", "src")
-            dv = deg
-            if bcast:
-                rv, dv = F.broadcast(rv), F.broadcast(dv)
-            contrib = (
-                e.join(rv, "src")
-                .join(dv, "src")
-                .select(
-                    F.col("dst").alias("node"),
-                    F.call_function(
-                        "div",
-                        F.lit(2).cast("long") * F.col("_pico") + F.col("deg"),
-                        F.lit(2).cast("long") * F.col("deg"),
-                    ).alias("w"),
-                )
-            )
-            agg = contrib.groupBy("node").agg(F.sum("w").alias("_s"))
-            s38 = F.coalesce(F.col("_s"), F.lit(0)).cast(dec)
-            num = (
-                F.when(
-                    F.col("is_seed"), F.lit((dd - dn) * 10**12).cast(dec)
-                ).otherwise(F.lit(0).cast(dec))
-                + F.lit(dn).cast(dec) * s38 * F.lit(s_count).cast(dec)
-            )
-            den = F.lit(100 * dd).cast(dec) * F.lit(s_count).cast(dec)
-            ranks = _pin_round(
-                nodes.join(agg, "node", "left").select(
-                    "node",
-                    (rational_micro(num, den, 0) * F.lit(100)).alias("_pico"),
-                )
-            )
-        return ranks.select(
-            "node", (F.col("_pico").cast("double") / F.lit(1e12)).alias("rank")
-        )
-    finally:
-        e.unpersist()
-        deg.unpersist()
-        if nodes is not None:
-            nodes.unpersist()

@@ -709,7 +709,7 @@ def _kmeans_fit(mat: np.ndarray, n_cells: int, seed: int = 42, iters: int = 10) 
       assignments vs float64 — irrelevant to an approximate index
       (recall tests are threshold-based) and still fully deterministic
       given (seed, sample), which is what the oracle-twin contract
-      needs. Both changes measured in ``tools/kmeans_fit_bench.py``;
+      needs. Both changes measured: PLANS.md "Round-5 k-means fit";
       empty cells keep their previous centroid, as before."""
     rng = np.random.RandomState(seed)
     x2 = (mat**2).sum(axis=1)

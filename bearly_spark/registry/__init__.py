@@ -116,8 +116,6 @@ PREFIX_ORDER = [
     "embedding_near_dup",
     "embedding_ann_ivf",
     # ---- first-ever seats: the whole remaining seatable backlog ----
-    # relational / scalar shapes
-    "crosstab_orders",
     # text block
     "bigram_quality_documents",
     "vocabulary_documents",
@@ -183,6 +181,10 @@ PREFIX_ORDER = [
     "label_communities_parts",
     "ppr_supplier_part",
     "pagerank_supplier_part",
+    # ---- emission path rewritten with the one graph-loop skeleton
+    # (shared edge-pin prologue + symmetric closure). Slot from
+    # crosstab_orders, green in r12-r14 (tools/seat_history.py).
+    "bfs_part_coorder",
     # (lang_id_distribution and rollup_orders also wait for r13 — the
     # text family holds seven greener r11/r12 seats, and rollup held an
     # r01 green on an unchanged code path; their slots went to

@@ -1,32 +1,12 @@
-"""Graph analytics over the part co-order projection: PageRank, personalized PageRank, BFS, triangles, clustering coefficient, label propagation.
-
-Split from the original flat registry.py by tools/split_registry.py
-(chunks keep original line order, so comments stay with their
-statements and helpers precede their consumers).
-"""
+"""Graph analytics over the part co-order projection: PageRank, personalized PageRank, BFS, triangles, clustering coefficient, label propagation."""
 
 from __future__ import annotations
 
-import datetime
-import math
-from collections.abc import Callable
-
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
 
-from bearly_spark.operators import dedup as D
-from bearly_spark.operators import maintenance as MT
-from bearly_spark.operators import multimodal as M
-from bearly_spark.operators import relational as R
-from bearly_spark.operators import rounding as _R
-from bearly_spark.operators import similarity as S
-from bearly_spark.operators import text as T
-from bearly_spark.operators import windows as W
-from bearly_spark.operators.aggregate import grouped_agg, sum_int64
-from bearly_spark.producers import produce_array, produce_stream
-from bearly_spark.sources.tables import events_with_timestamp, load_table
+from bearly_spark.sources.tables import load_table
 
-from bearly_spark.registry._core import ORACLE, QUERIES, register  # noqa: F401
+from bearly_spark.registry._core import register
 from bearly_spark.cache import derived_dir
 
 

@@ -552,7 +552,7 @@ def compact_dedup_index(
     pushed bucket-IN filter then skips non-probed row groups via
     min/max stats — the lever that keeps the per-batch detect scan
     Θ(buckets probed) instead of Θ(index) as the index grows (round-4
-    verdict #2; measured in ``tools/dedup_index_probe.py``).
+    verdict #2; measured: PLANS.md "Round-4 dedup-at-ingest probe").
 
     Same crash-safety sequencing as ``ann_index.compact_lsh_index``:
     each dataset's snapshot is written to a hidden ``.compacting`` dir

@@ -43,9 +43,24 @@ def test_graph_round_pin_truncates_lineage_lazily(spark):
     pinned = _pin_round(df)
     plan = pinned._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan or "ExistingRDD" in plan
+    assert not pinned._jdf.queryExecution().analyzed().rdd().isCheckpointed()
     assert sorted(r["label"] for r in pinned.collect()) == [
         0, 2, 4, 6, 8, 10, 12, 14
     ]
+
+
+def test_graph_loop_pins_last_round_eagerly(spark):
+    """The rank/label loop skeleton checkpoints its LAST round eagerly,
+    so the whole loop has run before the operator releases the
+    edge/degree/node frames it persisted: the returned frame reads a
+    materialized checkpoint, never the released caches."""
+    from bearly_spark.operators.graph import _run_rounds
+
+    out = _run_rounds(
+        spark.range(4), 3, lambda df: df.select((F.col("id") + 1).alias("id"))
+    )
+    assert out._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+    assert sorted(r["id"] for r in out.collect()) == [3, 4, 5, 6]
 
 
 def test_label_propagation_many_rounds_stays_exact(spark):

@@ -479,16 +479,19 @@ def test_expectations_report_edge_semantics(spark):
     assert [(r["rule"], r["violations"]) for r in rep2] == [("comp", 1)]
 
 
+def _star_edges(spark):
+    """Symmetrized star: hub 0, leaves 1..4."""
+    star = [(0, i) for i in range(1, 5)]
+    return spark.createDataFrame(star + [(b, a) for a, b in star], "src long, dst long")
+
+
 def test_pagerank_star_graph_semantics(spark):
     """PageRank on a symmetrized star (hub 0 — leaves 1..4): the hub
     must strictly dominate, leaves tie exactly; ranks sum to ~1; a
     second run is identical (determinism contract)."""
     from bearly_spark.operators.graph import pagerank
 
-    star = [(0, i) for i in range(1, 5)]
-    edges = spark.createDataFrame(
-        star + [(b, a) for a, b in star], "src long, dst long"
-    )
+    edges = _star_edges(spark)
     got = {r["node"]: r["rank"] for r in pagerank(edges, iterations=3).collect()}
     assert set(got) == {0, 1, 2, 3, 4}
     leaves = {got[i] for i in range(1, 5)}
@@ -1159,6 +1162,69 @@ def test_personalized_pagerank_seed_bias(spark):
         personalized_pagerank(
             edges, spark.createDataFrame([(99,)], "node int"), iterations=1
         )
+
+
+def test_pagerank_is_all_seed_personalized_pagerank(spark):
+    """PageRank is personalized PageRank seeded at every source node,
+    bit for bit: on the symmetric star and on the non-symmetric graph
+    whose node 3 has out-edges only."""
+    from bearly_spark.operators.graph import pagerank, personalized_pagerank
+
+    for edges in (
+        _star_edges(spark),
+        spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src long, dst long"),
+    ):
+        every = edges.select(F.col("src").alias("node")).distinct()
+        pr = {r["node"]: r["rank"] for r in pagerank(edges, iterations=3).collect()}
+        ppr = {
+            r["node"]: r["rank"]
+            for r in personalized_pagerank(edges, every, iterations=3).collect()
+        }
+        assert pr == ppr
+
+
+def test_graph_loops_past_broadcast_cutover_match_default_regime(spark, monkeypatch):
+    """With the broadcast cutover at 0 nodes every graph loop takes the
+    past-cutover regime (edges pinned on the input key, one node-keyed
+    shuffle per round) and must return exactly the default regime's
+    rows."""
+    from bearly_spark.operators import graph
+
+    barbell = spark.createDataFrame(
+        [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
+        + [(a, b) for a in range(10, 14) for b in range(10, 14) if a < b]
+        + [(4, 10)],
+        "src long, dst long",
+    )
+    tri = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (3, 1), (10, 11), (11, 10)],
+        "src long, dst long",
+    )
+    path = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "src long, dst long"
+    )
+    seed1 = spark.createDataFrame([(1,)], "node long")
+    runs = [
+        lambda: graph.pagerank(_star_edges(spark), iterations=3),
+        lambda: graph.personalized_pagerank(tri, seed1, iterations=4),
+        lambda: graph.label_propagation(barbell, rounds=4),
+        lambda: graph.bfs_levels(path, seed1, rounds=3),
+    ]
+    default = [sorted(tuple(r) for r in run().collect()) for run in runs]
+
+    regimes = []
+    pin_edges = graph._pin_edges
+
+    def recording_pin_edges(*args):
+        pinned = pin_edges(*args)
+        regimes.append(pinned[3])
+        return pinned
+
+    monkeypatch.setattr(graph, "BROADCAST_NODES_MAX", 0)
+    monkeypatch.setattr(graph, "_pin_edges", recording_pin_edges)
+    past = [sorted(tuple(r) for r in run().collect()) for run in runs]
+    assert regimes == [False] * 4
+    assert past == default
 
 
 def test_kaplan_meier_hand_computed(spark):
