@@ -35,6 +35,13 @@ def from_arrow(spark: SparkSession, obj: Any) -> DataFrame:
     return spark.createDataFrame(table)
 
 
+def write_arrow_parquet(spark: SparkSession, table: pa.Table, path: str) -> None:
+    """Write a small driver-held Arrow table as one parquet file under
+    ``path`` (overwrite). The batches go to the JVM as Arrow, so no
+    Python worker job runs, unlike ``createDataFrame`` over a row list."""
+    from_arrow(spark, table).coalesce(1).write.mode("overwrite").parquet(path)
+
+
 def to_arrow(df: DataFrame) -> pa.Table:
     """Egress a DataFrame as a pyarrow Table exposing ``__arrow_c_stream__``
     (O5, ``bearly_ext.cc:92-110``)."""

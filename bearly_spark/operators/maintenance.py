@@ -50,6 +50,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 from bearly_spark.operators.layout import exchange_dirs
+from bearly_spark.sources.tables import read_parquet
 
 
 def _local_path(file_uri: str) -> Path:
@@ -148,7 +149,7 @@ def _cow_rewrite(
     # session swapped the files underneath (stale listings read deleted
     # snapshots and fail with FILE_NOT_EXIST)
     spark.catalog.refreshByPath(str(root))
-    target = spark.read.parquet(str(root))
+    target = read_parquet(spark, str(root))
     cols = target.columns
 
     # broadcast guard: a takedown list broadcasts; a crawl-refresh
@@ -414,7 +415,7 @@ def scd2_apply_table(
     lets a 100 TB dimension history absorb daily change feeds. Same
     semantics as :func:`scd2_apply` (equivalence-tested), same atomic
     snapshot swap as every merge. Returns the merge stats dict."""
-    history = spark.read.parquet(path)
+    history = read_parquet(spark, path)
     _, closed, fresh = _scd2_parts(
         history, changes, keys, attrs, change_ts_col, valid_from_col, valid_to_col
     )
@@ -535,7 +536,7 @@ def incremental_rollup(
         F.count(F.lit(1)).alias(count_col),
         *[F.sum(F.col(c)).alias(f"sum_{c}") for c in sum_cols],
     )
-    stored = spark.read.parquet(rollup_path)
+    stored = read_parquet(spark, rollup_path)
     scols = [count_col] + [f"sum_{c}" for c in sum_cols]
     # only the AFFECTED stored groups participate: semi-filter the (big)
     # rollup by the delta's keys first — broadcast the small side — then

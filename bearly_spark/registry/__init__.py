@@ -118,7 +118,6 @@ PREFIX_ORDER = [
     # ---- first-ever seats: the whole remaining seatable backlog ----
     # text block
     "bigram_quality_documents",
-    "vocabulary_documents",
     # curation splits / caps / decontamination
     "decontaminate_bm25_documents",
     "cluster_aware_split_documents",
@@ -185,6 +184,11 @@ PREFIX_ORDER = [
     # (shared edge-pin prologue + symmetric closure). Slot from
     # crosstab_orders, green in r12-r14 (tools/seat_history.py).
     "bfs_part_coorder",
+    # ---- emission path changed: the semantic index is built on the
+    # shared base-table fit and writes its model and stats from Arrow.
+    # Slot from vocabulary_documents, green in r12-r14
+    # (tools/seat_history.py).
+    "semdedup_index_query",
     # (lang_id_distribution and rollup_orders also wait for r13 — the
     # text family holds seven greener r11/r12 seats, and rollup held an
     # r01 green on an unchanged code path; their slots went to

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from bearly_spark.operators import dedup as D
 from bearly_spark.operators import rounding as _R
 from bearly_spark.operators import text as T
-from bearly_spark.sources.tables import load_table
+from bearly_spark.sources.tables import load_table, read_parquet
 
 from bearly_spark.cache import derived_dir, memo
 from bearly_spark.registry._core import register
@@ -281,7 +281,7 @@ def _dup_spans_cached(spark, sf_dir):
             load_table(spark, sf_dir, "documents"), "doc_id", "text", k=30, min_len=60
         ).write.parquet(d),
     )
-    return spark.read.parquet(span_dir)
+    return read_parquet(spark, span_dir)
 
 
 def _minhash_clusters_cached(spark, sf_dir):
@@ -302,7 +302,7 @@ def _minhash_clusters_cached(spark, sf_dir):
             load_table(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.8
         ).write.parquet(d),
     )
-    return spark.read.parquet(cluster_dir)
+    return read_parquet(spark, cluster_dir)
 
 
 # ===================================================================

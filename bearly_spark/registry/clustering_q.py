@@ -491,16 +491,19 @@ def q_semdedup_multiprobe(spark, sf_dir):
 def _semdedup_scratch(spark, sf_dir: str) -> str:
     """Build (once per fixture) the shared scratch semantic index:
     frozen centroids fit on the base table, three id-ordered ingests,
-    the planted exact copies arriving last. Both index queries read it."""
+    the planted exact copies arriving last. Both index queries read it.
+    The frozen geometry is the shared base-table fit (the twins'
+    ``fit_src="embeddings"``), so a build after a batch query fits nothing."""
     from bearly_spark.streaming import semdedup_index as SI
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    copies = emb.filter(F.col("vec_id") < 20).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(100000)
-    )
-
     def build(index_dir: str) -> None:
-        SI.build_semdedup_index(emb, index_dir, k=_K, iters=_ITERS)
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        copies = emb.filter(F.col("vec_id") < 20).withColumn(
+            "vec_id", F.col("vec_id") + F.lit(100000)
+        )
+        SI.build_semdedup_index(
+            emb, index_dir, centroids=_fitted_centroids(emb, sf_dir, "base-raw")
+        )
         SI.upsert_semdedup_batch(emb.filter(F.col("vec_id") < 150), 0, index_dir)
         SI.upsert_semdedup_batch(
             emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 300)),

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from bearly_spark.sources.tables import load_table
+from bearly_spark.sources.tables import load_table, read_parquet
 
 from bearly_spark.registry._core import register
 from bearly_spark.cache import derived_dir
@@ -121,7 +121,7 @@ def _coorder_edges(spark, sf_dir):
         [f"{sf_dir}/lineitem.parquet"],
         lambda d: _build_coorder_edges(spark, sf_dir).write.parquet(d),
     )
-    return spark.read.parquet(edge_dir)
+    return read_parquet(spark, edge_dir)
 
 
 def _bipartite_edges(spark, sf_dir):
@@ -144,7 +144,7 @@ def _bipartite_edges(spark, sf_dir):
         .distinct()
         .write.parquet(d),
     )
-    return spark.read.parquet(edge_dir)
+    return read_parquet(spark, edge_dir)
 
 
 

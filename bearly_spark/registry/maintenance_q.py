@@ -8,7 +8,7 @@ import pyspark.sql.functions as F
 
 from bearly_spark.operators import maintenance as MT
 from bearly_spark.sources import txlog as TXL
-from bearly_spark.sources.tables import load_table
+from bearly_spark.sources.tables import load_table, read_parquet
 
 from bearly_spark.cache import SCRATCH, derived_dir, sf_tag
 from bearly_spark.registry._core import register
@@ -218,7 +218,7 @@ def q_merge_upsert(spark, sf_dir):
     )
     MT.merge_into(spark, work, upd.unionByName(ins), ["o_orderkey"])
     return (
-        spark.read.parquet(work)
+        read_parquet(spark, work)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -388,7 +388,7 @@ def q_incremental_rollup(spark, sf_dir):
         keys,
         ["o_totalprice"],
     )
-    return spark.read.parquet(work).select(
+    return read_parquet(spark, work).select(
         *keys,
         F.col("n").cast("bigint").alias("n"),
         F.col("sum_o_totalprice").cast("double").alias("total_price"),
@@ -768,7 +768,7 @@ def q_txlog_merge(spark, sf_dir):
         zone = (y * 10000 + 301, y * 10000 + 331)
         month = TXL.read_table(spark, path, where={"o_datekey": zone})
         mx = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
+            read_parquet(spark, f"{sf_dir}/orders.parquet")
             .agg(F.max("o_orderkey"))
             .collect()[0][0]
         )
@@ -962,7 +962,7 @@ def q_txlog_dv_merge(spark, sf_dir):
             "o_totalprice", F.col("o_totalprice") + F.lit(100.0)
         )
         mx = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
+            read_parquet(spark, f"{sf_dir}/orders.parquet")
             .agg(F.max("o_orderkey"))
             .collect()[0][0]
         )

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from bearly_spark.sources.tables import load_table
+from bearly_spark.sources.tables import load_table, read_parquet
 
 from bearly_spark.cache import SCRATCH, sf_tag
 from bearly_spark.registry._core import register
@@ -102,7 +102,7 @@ def q_partitioned_scan(spark, sf_dir):
     load_table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
         "o_orderstatus"
     ).parquet(path)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.filter(F.col("o_orderstatus") == "O")
         .groupBy("o_orderpriority")
@@ -139,7 +139,7 @@ def q_clustered_scan(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(path)
     )
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.filter(
             (F.col("l_shipdate") >= F.lit("1995-03-01").cast("timestamp"))
@@ -178,7 +178,7 @@ def q_zorder_scan(spark, sf_dir):
     path = f"{SCRATCH}/{sf_tag(sf_dir)}/lineitem_zorder"
     li = load_table(spark, sf_dir, "lineitem")
     zorder_write(li, path, ["l_partkey", "l_suppkey"], bits=16, num_files=8)
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return (
         back.filter((F.col("l_partkey") <= 5000) & (F.col("l_suppkey") <= 250))
         .agg(

@@ -6,6 +6,9 @@ columns into the scan (verify with ``df.explain``: ``PushedFilters`` /
 change are ``spark.sql.files.maxPartitionBytes`` and the partition layout
 of the table directory.
 
+Every parquet read in the package goes through :func:`read_parquet`, which
+infers a source's schema once per file signature instead of once per read.
+
 Special case: ``events.ts``. The driver fixture has shipped it both as
 parquet ``TIMESTAMP(NANOS)`` (which Spark 4 can only read as raw int64 via
 ``spark.sql.legacy.parquet.nanosAsLong``) and as ``TIMESTAMP(MICROS)``
@@ -26,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType
 
+from bearly_spark.cache import memo
 from bearly_spark.session import apply_runtime_confs
 
 TABLE_NAMES = [
@@ -42,6 +46,47 @@ TABLE_NAMES = [
 ]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Every session conf that Spark 4.1's parquet schema inference reads:
+#: footer conversion (the first six), footer choice and schema merge (the
+#: next four) and partition discovery (the last five; ``caseSensitive``
+#: also serves it). An unchanged file set with equal values of these has
+#: the same inferred schema.
+PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.sources.validatePartitionColumns",
+    "spark.sql.files.ignoreInvalidPartitionPaths",
+    "spark.sql.session.timeZone",
+    "spark.sql.timestampType",
+)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job on a
+    repeat read. The inferred schema is memoized on the source's file
+    signature plus :data:`PARQUET_SCHEMA_CONFS` and handed back to the
+    reader, which then plans without touching a footer. A miss is the
+    plain read: a missing path or an empty directory raises exactly its
+    ``AnalysisException``, and nothing is stored."""
+    inferred = []
+
+    def infer():
+        inferred.append(spark.read.parquet(path))
+        return inferred[0].schema
+
+    confs = tuple(spark.conf.get(k) for k in PARQUET_SCHEMA_CONFS)
+    schema = memo([path], ("parquet-schema", confs), infer)
+    return inferred[0] if inferred else spark.read.schema(schema).parquet(path)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -61,7 +106,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
     return df

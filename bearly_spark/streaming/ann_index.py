@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from bearly_spark.operators.similarity import lsh_band_table, rerank_candidates
+from bearly_spark.sources.tables import read_parquet
 from bearly_spark.streaming.dedup_index import _pruned_scan
 
 import pyspark.sql.functions as F
@@ -148,7 +149,7 @@ def read_index(spark: SparkSession, index_dir: str, dedup: bool = False) -> Data
     by the candidate-level ``dropDuplicates([q_id, c_id])``, so paying a
     full index shuffle per query to de-dup rows the join dedups anyway
     would be pure overhead."""
-    idx = spark.read.parquet(index_dir).select("c_id", "band", "bkey")
+    idx = read_parquet(spark, index_dir).select("c_id", "band", "bkey")
     return idx.dropDuplicates(["c_id", "band", "bkey"]) if dedup else idx
 
 

@@ -37,6 +37,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.utils import AnalysisException
 
+from bearly_spark.sources.tables import read_parquet
+
 
 def _latest_state(
     spark: SparkSession, state_dir: str, before_batch: int, empty: DataFrame
@@ -46,7 +48,7 @@ def _latest_state(
     if not os.path.isdir(state_dir):
         return empty
     try:
-        df = spark.read.parquet(state_dir)
+        df = read_parquet(spark, state_dir)
     except AnalysisException as e:
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             return empty

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from bearly_spark.operators.text import word_tokens
+from bearly_spark.sources.tables import read_parquet
 from bearly_spark.streaming.dedup_index import _pruned_scan
 
 BASE_BATCH_ID = -1
@@ -143,7 +144,7 @@ def bm25_query_index(
     terms = list(dict.fromkeys(t.lower() for t in query.split()))
     k1p1, omb = k1 + 1.0, 1.0 - b
 
-    post = spark.read.parquet(f"{index_dir}/postings").select("id", "term", "tf")
+    post = read_parquet(spark, f"{index_dir}/postings").select("id", "term", "tf")
     if terms and len(terms) <= scan_prune_max_keys:
         post = _pruned_scan(post, "term", terms)
     else:
@@ -151,7 +152,7 @@ def bm25_query_index(
     tf = post.dropDuplicates(["id", "term"])  # crash-window duplicate tolerance
 
     stats = (
-        spark.read.parquet(f"{index_dir}/docstats")
+        read_parquet(spark, f"{index_dir}/docstats")
         .select("id", "dl")
         .dropDuplicates(["id"])
     )
@@ -208,13 +209,13 @@ def compact_bm25_index(
 
     _ROWS_PER_FILE = 8_000_000
     post_df = (
-        spark.read.parquet(str(post_root))
+        read_parquet(spark, str(post_root))
         .select("id", "term", "tf")
         .dropDuplicates(["id", "term"])
         .localCheckpoint(eager=True)
     )
     stats_df = (
-        spark.read.parquet(str(root / "docstats"))
+        read_parquet(spark, str(root / "docstats"))
         .select("id", "dl")
         .dropDuplicates(["id"])
         .localCheckpoint(eager=True)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from bearly_spark.operators.sketches import cms_build
+from bearly_spark.sources.tables import read_parquet
 
 
 def upsert_cms_batch(
@@ -56,7 +57,7 @@ def read_cms(spark: SparkSession, index_dir: str) -> DataFrame:
     exactly ``cms_build`` of everything ingested so far (additivity is
     the CMS contract that makes the streaming form lossless)."""
     return (
-        spark.read.parquet(f"{index_dir}/sketch")
+        read_parquet(spark, f"{index_dir}/sketch")
         .groupBy("row", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -137,4 +138,4 @@ def upsert_bloom_batch(
 
 def read_bloom(spark: SparkSession, index_dir: str) -> DataFrame:
     """The current filter: distinct set bits across all batch deltas."""
-    return spark.read.parquet(f"{index_dir}/bloom").select("bit").distinct()
+    return read_parquet(spark, f"{index_dir}/bloom").select("bit").distinct()

@@ -73,6 +73,7 @@ from bearly_spark.operators.dedup import (
     minhash_band_structs,
     minhash_signature,
 )
+from bearly_spark.sources.tables import read_parquet
 
 #: Write options applied to every ``bands/`` write (per-batch upserts
 #: and compaction): a bloom filter on the bucket key lets a pushed
@@ -242,7 +243,7 @@ def _read_part(spark: SparkSession, path: str, exclude_batch: int | None, empty:
     if not os.path.isdir(path):
         return empty
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     except AnalysisException as e:
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             return empty
@@ -581,19 +582,19 @@ def compact_dedup_index(
     new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
 
     id_col = [
-        c for c in spark.read.parquet(str(bands_root)).columns if c not in ("band", "bucket", "batch")
+        c for c in read_parquet(spark, str(bands_root)).columns if c not in ("band", "bucket", "batch")
     ][0]
     # Eager localCheckpoints sever lineage from the directories the loop
     # below deletes: a lazy/persisted plan would re-list them on cache
     # eviction and fail the counts write mid-sequence.
     bands_df = (
-        spark.read.parquet(str(bands_root))
+        read_parquet(spark, str(bands_root))
         .select(id_col, "band", "bucket")
         .dropDuplicates([id_col, "band", "bucket"])
         .localCheckpoint(eager=True)
     )
     chash_map = (
-        spark.read.parquet(str(root / "sets"))
+        read_parquet(spark, str(root / "sets"))
         .select(id_col, "hs", "chash")
         .dropDuplicates([id_col])
         .localCheckpoint(eager=True)

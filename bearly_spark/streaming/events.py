@@ -29,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from bearly_spark.session import apply_runtime_confs
-from bearly_spark.sources.tables import normalize_events_ts
+from bearly_spark.sources.tables import normalize_events_ts, read_parquet
 
 #: Canonical post-normalization schema: ``ts`` is int64 epoch-nanos.
 #: (Used by tests that synthesize their own micro-batch files; the
@@ -63,7 +63,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream starts empty and picks up files as they land."""
     apply_runtime_confs(spark)
     try:
-        schema = spark.read.parquet(sf_dir).schema
+        schema = read_parquet(spark, sf_dir).schema
     except Exception:  # empty dir / no parquet footers yet (AnalysisException)
         schema = EVENTS_SCHEMA
     raw = (

@@ -44,6 +44,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -51,11 +52,13 @@ from pyspark.sql.streaming import StreamingQuery
 import pyspark.sql.functions as F
 
 from bearly_spark.cache import memo
+from bearly_spark.interchange import write_arrow_parquet
 from bearly_spark.operators.similarity import (
     _kmeans_fit,
     make_cell_assign_udf,
     make_cosine_udf,
 )
+from bearly_spark.sources.tables import read_parquet
 
 #: Compacted-base id scheme shared with the sibling indexes.
 BASE_BATCH_ID = -1
@@ -72,13 +75,24 @@ _ROWS_PER_FILE = 4_000_000
 def _read_centroids(spark: SparkSession, index_dir: str) -> np.ndarray:
     def load():
         rows = (
-            spark.read.parquet(f"{index_dir}/centroids")
+            read_parquet(spark, f"{index_dir}/centroids")
             .orderBy("cell")
             .collect()
         )
         return np.asarray([r.c for r in rows], dtype=np.float64)
 
     return memo([f"{index_dir}/centroids"], "ivf-centroids", load)
+
+
+def _write_centroids(spark: SparkSession, C: np.ndarray, index_dir: str) -> None:
+    write_arrow_parquet(
+        spark,
+        pa.table({
+            "cell": pa.array(np.arange(len(C)), pa.int32()),
+            "c": pa.array(list(C), pa.list_(pa.float64())),
+        }),
+        f"{index_dir}/centroids",
+    )
 
 
 def build_ivf_index(
@@ -117,15 +131,7 @@ def build_ivf_index(
     C = _kmeans_fit(smat, n_cells, seed)
 
     spark = corpus.sparkSession
-    (
-        spark.createDataFrame(
-            [(int(j), [float(x) for x in C[j]]) for j in range(n_cells)],
-            "cell int, c array<double>",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/centroids")
-    )
+    _write_centroids(spark, C, index_dir)
     _write_cells(corpus, C, BASE_BATCH_ID, index_dir, id_col, vec_col)
     return C
 
@@ -233,7 +239,7 @@ def ivf_index_query(
     probes = spark.createDataFrame(probe_rows, "q_id long, cell int")
     probed_cells = sorted({c for _, c in probe_rows})
 
-    cells = spark.read.parquet(f"{index_dir}/cells").filter(
+    cells = read_parquet(spark, f"{index_dir}/cells").filter(
         F.col("cell").isin(probed_cells)
     )
     cos_udf = make_cosine_udf()
@@ -277,7 +283,7 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> int:
     new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
 
     idx = (
-        spark.read.parquet(str(root))
+        read_parquet(spark, str(root))
         .select("id", "vec", "cell")
         .dropDuplicates(["id", "cell"])
         .localCheckpoint(eager=True)
@@ -349,7 +355,7 @@ def _assign_cells_np(C: np.ndarray, mat: np.ndarray) -> np.ndarray:
 def _read_codebooks(spark: SparkSession, index_dir: str) -> np.ndarray:
     def load():
         rows = (
-            spark.read.parquet(f"{index_dir}/codebooks")
+            read_parquet(spark, f"{index_dir}/codebooks")
             .orderBy("j", "c")
             .collect()
         )
@@ -377,7 +383,7 @@ def _read_encoding(spark: SparkSession, index_dir: str) -> str:
     return memo(
         [f"{index_dir}/meta"],
         "ivf-encoding",
-        lambda: spark.read.parquet(f"{index_dir}/meta").collect()[0]["encoding"],
+        lambda: read_parquet(spark, f"{index_dir}/meta").collect()[0]["encoding"],
     )
 
 
@@ -497,33 +503,19 @@ def build_ivfpq_index(
     cb = pq_fit(fit_mat, m, ksub, seed)
 
     spark = corpus.sparkSession
-    (
-        spark.createDataFrame(
-            [(int(j), [float(x) for x in C[j]]) for j in range(n_cells)],
-            "cell int, c array<double>",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/centroids")
+    _write_centroids(spark, C, index_dir)
+    n_sub, n_code = cb.shape[:2]
+    write_arrow_parquet(
+        spark,
+        pa.table({
+            "j": pa.array(np.repeat(np.arange(n_sub), n_code), pa.int32()),
+            "c": pa.array(np.tile(np.arange(n_code), n_sub), pa.int32()),
+            "cv": pa.array(list(cb.reshape(n_sub * n_code, -1)), pa.list_(pa.float64())),
+        }),
+        f"{index_dir}/codebooks",
     )
-    (
-        spark.createDataFrame(
-            [
-                (int(j), int(c), [float(x) for x in cb[j, c]])
-                for j in range(cb.shape[0])
-                for c in range(cb.shape[1])
-            ],
-            "j int, c int, cv array<double>",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/codebooks")
-    )
-    (
-        spark.createDataFrame([(encoding,)], "encoding string")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/meta")
+    write_arrow_parquet(
+        spark, pa.table({"encoding": pa.array([encoding], pa.string())}), f"{index_dir}/meta"
     )
     _write_pq_parts(
         corpus, C, cb, BASE_BATCH_ID, index_dir, id_col, vec_col,
@@ -626,7 +618,7 @@ def ivfpq_index_query(
     probes = spark.createDataFrame(probe_rows, "q_id long, cell int")
     probed_cells = sorted({c for _, c in probe_rows})
 
-    cells = spark.read.parquet(f"{index_dir}/cells").filter(
+    cells = read_parquet(spark, f"{index_dir}/cells").filter(
         F.col("cell").isin(probed_cells)
     )
     scored_in = (
@@ -683,7 +675,7 @@ def ivfpq_index_query(
         .localCheckpoint(eager=False)
     )
 
-    vecs = spark.read.parquet(f"{index_dir}/vecs").select("id", "vec")
+    vecs = read_parquet(spark, f"{index_dir}/vecs").select("id", "vec")
     cand_ids = [
         r[0]
         for r in cand.select("id").distinct().limit(scan_prune_max_keys + 1).collect()
@@ -728,13 +720,13 @@ def compact_ivfpq_index(spark: SparkSession, index_dir: str) -> int:
     new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
 
     cells_df = (
-        spark.read.parquet(str(cells_root))
+        read_parquet(spark, str(cells_root))
         .select("id", "codes", "cell")
         .dropDuplicates(["id", "cell"])
         .localCheckpoint(eager=True)
     )
     vecs_df = (
-        spark.read.parquet(str(root / "vecs"))
+        read_parquet(spark, str(root / "vecs"))
         .select("id", "vec")
         .dropDuplicates(["id"])
         .localCheckpoint(eager=True)

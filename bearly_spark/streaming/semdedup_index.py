@@ -50,13 +50,16 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
 from bearly_spark.cache import memo
+from bearly_spark.interchange import from_arrow, to_arrow, write_arrow_parquet
 from bearly_spark.operators import clustering as C
+from bearly_spark.sources.tables import read_parquet
 
 #: Compacted base partition id; micro-batch ids are >= 0 so a base dir
 #: never collides with a replayed batch (same scheme as the siblings).
@@ -70,21 +73,29 @@ def build_semdedup_index(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
+    centroids: list[list[int]] | None = None,
 ) -> list[list[int]]:
     """Fit frozen centroids (seed = k lowest ids of ``fit_df``, then
     ``iters`` integer Lloyd steps) and write them. The index starts
     with NO members — the fit frame is model-only; ingest it as the
-    first micro-batch if its vectors should participate in dedup."""
-    cents = C.lloyd_fit(fit_df, id_col, vec_col, k, iters)
-    spark = fit_df.sparkSession
-    rows = [(i, list(map(int, cq))) for i, cq in enumerate(cents)]
-    (
-        spark.createDataFrame(rows, "cell int, cq array<long>")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/centroids")
+    first micro-batch if its vectors should participate in dedup.
+    ``centroids`` skips the fit (callers holding the same fit)."""
+    cents = (
+        C.lloyd_fit(fit_df, id_col, vec_col, k, iters) if centroids is None else centroids
     )
+    _write_centroids(fit_df.sparkSession, cents, index_dir)
     return cents
+
+
+def _write_centroids(spark: SparkSession, cents, index_dir: str) -> None:
+    write_arrow_parquet(
+        spark,
+        pa.table({
+            "cell": pa.array(range(len(cents)), pa.int32()),
+            "cq": pa.array([list(map(int, cq)) for cq in cents], pa.list_(pa.int64())),
+        }),
+        f"{index_dir}/centroids",
+    )
 
 
 def build_hier_semdedup_index(
@@ -109,13 +120,7 @@ def build_hier_semdedup_index(
         fit_df, id_col, vec_col, k1, k2, iters, fanout
     )
     spark = fit_df.sparkSession
-    rows = [(i, list(map(int, cq))) for i, cq in enumerate(coarse)]
-    (
-        spark.createDataFrame(rows, "cell int, cq array<long>")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/centroids")
-    )
+    _write_centroids(spark, coarse, index_dir)
     fine.coalesce(1).write.mode("overwrite").parquet(
         f"{index_dir}/fine_centroids"
     )
@@ -124,11 +129,13 @@ def build_hier_semdedup_index(
     # derives the same stride from a frozen frame, so stream and batch
     # agree on every packed cell label
     stride = (fine.agg(F.max("fine")).first()[0] or 0) + 1
-    (
-        spark.createDataFrame([(int(stride), int(fanout))], "k2 int, fanout int")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/hier_meta")
+    write_arrow_parquet(
+        spark,
+        pa.table({
+            "k2": pa.array([int(stride)], pa.int32()),
+            "fanout": pa.array([int(fanout)], pa.int32()),
+        }),
+        f"{index_dir}/hier_meta",
     )
 
 
@@ -143,8 +150,8 @@ def _assign_frozen(
         return C.assign_clusters(
             batch_df, cents, id_col, vec_col, emit_xq=True
         ).select(id_col, F.col("cluster").alias("cell"), "dist", "xq")
-    meta = spark.read.parquet(f"{index_dir}/hier_meta").first()
-    fine = spark.read.parquet(f"{index_dir}/fine_centroids")
+    meta = read_parquet(spark, f"{index_dir}/hier_meta").first()
+    fine = read_parquet(spark, f"{index_dir}/fine_centroids")
     return C.assign_hierarchical(
         batch_df, cents, fine, id_col, vec_col,
         k2=int(meta["k2"]), fanout=int(meta["fanout"]),
@@ -159,7 +166,7 @@ def read_frozen_centroids(spark: SparkSession, index_dir: str) -> list[list[int]
         )
 
     def load():
-        rows = spark.read.parquet(f"{index_dir}/centroids").orderBy("cell").collect()
+        rows = read_parquet(spark, f"{index_dir}/centroids").orderBy("cell").collect()
         return [list(r.cq) for r in rows]
 
     return memo([f"{index_dir}/centroids"], "semdedup-centroids", load)
@@ -175,7 +182,7 @@ def _read_members(
     if not os.path.isdir(path):
         return None
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     except AnalysisException as e:
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             return None
@@ -207,14 +214,12 @@ def upsert_semdedup_batch(
         raise ValueError(f"witness must be 'all' or 'kept', got {witness!r}")
     spark = batch_df.sparkSession
     assigned = _assign_frozen(spark, index_dir, batch_df, id_col, vec_col)
-    assigned = assigned.localCheckpoint(eager=True)  # one kernel pass, reused 4x
-    if assigned.isEmpty():
-        return  # empty batch writes NOTHING (the sibling's wedge lesson)
-    touched = sorted(r.cell for r in assigned.select("cell").distinct().collect())
+    assigned = assigned.localCheckpoint(eager=True)  # one kernel pass, reused 2x
     # exact-integer per-cell assignment stats (see the stats write below):
     # sum as DECIMAL(38,0) so corpus-scale batches cannot wrap int64;
-    # mean = truncating div (dists are non-negative, so trunc == floor)
-    assigned_stats = (
+    # mean = truncating div (dists are non-negative, so trunc == floor).
+    # At most k rows, collected once: they also name the touched cells.
+    assigned_stats = to_arrow(
         assigned.groupBy("cell")
         .agg(
             F.count("*").alias("n_vecs"),
@@ -229,6 +234,9 @@ def upsert_semdedup_batch(
             "max_dist",
         )
     )
+    if not assigned_stats.num_rows:
+        return  # empty batch writes NOTHING (the sibling's wedge lesson)
+    touched = sorted(assigned_stats["cell"].to_pylist())
 
     existing = _read_members(spark, index_dir, touched, exclude_batch=int(batch_id))
     new_rows = (
@@ -394,7 +402,8 @@ def upsert_semdedup_batch(
     # (the operational cue to refit + rebuild). Exact integers: count,
     # floored mean, max of the kernel's int64 distances.
     (
-        assigned_stats.coalesce(1)
+        from_arrow(spark, assigned_stats)
+        .coalesce(1)
         .withColumn("batch", F.lit(int(batch_id)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -405,7 +414,7 @@ def upsert_semdedup_batch(
 
 def semdedup_index_verdicts(spark: SparkSession, index_dir: str) -> DataFrame:
     """All per-batch verdicts: (id, cell, kept, cell_truncated, batch)."""
-    return spark.read.parquet(f"{index_dir}/verdicts")
+    return read_parquet(spark, f"{index_dir}/verdicts")
 
 
 def semdedup_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -415,7 +424,7 @@ def semdedup_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     build-time distribution and the geometry wants a refit+rebuild.
     sum_dist is a mergeable partial: re-aggregate across batches for
     any window."""
-    return spark.read.parquet(f"{index_dir}/stats")
+    return read_parquet(spark, f"{index_dir}/stats")
 
 
 def streaming_semdedup_index(
@@ -470,7 +479,7 @@ def compact_semdedup_index(
     new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
 
     snap = (
-        spark.read.parquet(str(root))
+        read_parquet(spark, str(root))
         .drop("batch")
         .dropDuplicates(["cell", id_col])
         .localCheckpoint(eager=True)  # sever lineage from dirs deleted below

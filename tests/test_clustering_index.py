@@ -2,6 +2,7 @@
 idempotence, witness-policy semantics, compaction invariance, and the
 cell-directory pruning contract."""
 
+import os
 import shutil
 import uuid
 
@@ -83,6 +84,22 @@ def test_replay_is_idempotent(spark, tmp_path):
     )
     assert again == first == [(1, True, 0), (2, False, 0)]
     assert spark.read.parquet(f"{idx}/members").count() == n_members
+    shutil.rmtree(idx)
+
+
+def test_empty_batch_writes_nothing(spark, tmp_path):
+    """An empty micro-batch writes no members, verdicts or stats
+    partition: neither before the first ingest nor after one."""
+    idx = _scratch(tmp_path, "semidx")
+    SI.build_semdedup_index(_emb(spark, [(0, A)]), idx, k=1, iters=0)
+    SI.upsert_semdedup_batch(_emb(spark, []), 0, idx)
+    assert sorted(os.listdir(idx)) == ["centroids"]
+    SI.upsert_semdedup_batch(_emb(spark, [(1, A)]), 1, idx)
+    SI.upsert_semdedup_batch(_emb(spark, []), 2, idx)
+    for table in ("members/cell=0", "verdicts", "stats"):
+        parts = sorted(d for d in os.listdir(f"{idx}/{table}") if d.startswith("batch="))
+        assert parts == ["batch=1"], table
+    assert [r.batch for r in SI.semdedup_index_stats(spark, idx).collect()] == [1]
     shutil.rmtree(idx)
 
 

@@ -84,6 +84,7 @@ def test_cached_percentiles_wide_result_stays_distributed(
     from bearly_spark.sources.tables import load_table
 
     monkeypatch.setattr(_shared, "_PCTL_CACHE_MAX_ROWS", 1)
+    load_table(spark, sf_dir, "lineitem")  # its schema entry lands before the snapshot
     before = dict(cache._MEMO)
     res = _shared.cached_percentiles(
         spark, sf_dir, ["lineitem"], "test-too-wide",
@@ -145,8 +146,8 @@ def test_hier_fit_cache_guard_keeps_wide_fits_distributed(
     from bearly_spark.sources.tables import load_table
 
     monkeypatch.setattr(clustering_q, "_HIER_CACHE_MAX_CELLS", 1)
+    emb = load_table(spark, sf_dir, "embeddings")  # its schema entry lands first
     before = dict(cache._MEMO)
-    emb = load_table(spark, sf_dir, "embeddings")
     coarse, fine = clustering_q._fitted_hier(emb, sf_dir, "test-guard")
     # k1*k2 = 16 > 1: nothing cached, the fine frame is the operator's
     # own distributed output (not a literal rebuild)
