@@ -1,18 +1,38 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, near-duplicate (MinHash, SimHash,
+winnowing), connected components, exact substring and line dedup,
+containment, entity matching and golden records.
 
 Design for 100 TB:
 - **Exact dedup** is a hash-shuffle on a 128-bit content hash — uniform by
   construction, so no skew; the shuffle payload is (hash, id), never the
   document bytes.
-- **MinHash LSH** turns the O(n²) near-dup problem into
-  sig-compute (map-only, JVM built-ins) → band explode (×b rows of
-  (band_hash, id)) → bucket self-join (shuffle on band hash) → exact
-  Jaccard verify on the candidate pairs only. Bucket sizes are the skew
-  risk: a degenerate band (e.g. empty docs) creates a quadratic bucket —
-  ``max_bucket`` caps it, the standard production guard.
+- **Near-dup detection is one filter-and-verify skeleton.** The MinHash,
+  SimHash and winnowing paths here, the block-hash path in
+  ``multimodal`` and the hyperplane-LSH path in ``similarity`` share it
+  and differ only in their signature stage and their exact verify (the
+  embedding path pairs vectors directly, so it runs steps 2-4 only):
+
+  1. :func:`_collapse_content` groups documents by exact content, so
+     every later stage runs once per DISTINCT content (duplicate-mass
+     invariance);
+  2. the family's signature stage hashes each representative into
+     buckets (MinHash bands, SimHash 16-bit chunks, winnowed prints,
+     payload block hashes, hyperplane bands);
+  3. :func:`_bucket_pairs` gathers every bucket in ONE groupBy pass,
+     drops buckets past the cap (a degenerate bucket, e.g. empty docs,
+     would expand quadratically — the standard production guard, loud
+     through an ``Observation``) and emits in-bucket pairs inline;
+  4. the family verifies each candidate exactly (Jaccard, ``bit_count``
+     Hamming, shared-print count, block Jaccard, cosine);
+  5. :func:`_doc_pairs` expands the verified group pairs back to
+     document pairs, or :func:`_cluster_labels` labels documents with
+     connected components over the group-pair graph.
 - **SimHash** uses one Arrow-batched pandas UDF for the 64-bit signature
   (bit-twiddling is awkward in SQL), then pure JVM banding + ``bit_count``
   Hamming verify.
+- **Connected components** turn pair evidence into clusters: label
+  propagation for near-clique dedup graphs, large-star/small-star
+  contraction for long chains.
 """
 
 from __future__ import annotations
@@ -51,10 +71,172 @@ def _observe_bucket_drops(
     )
 
 
-#: Round 13: the parallelism floor moved to ``text.ensure_parallelism``
-#: (the tokenize passes there need it too and ``dedup`` already imports
-#: from ``text``); this alias keeps the established local name.
-_ensure_parallelism = ensure_parallelism
+# ------------------------------------------------------ near-dup skeleton
+
+def _pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and materialize it at once. Each pinned table here
+    feeds several branches (members join, band explode, skew guard,
+    verify joins) that materialize concurrently under AQE; with a lazy
+    cache each racer would recompute the expensive stage against a cold
+    cache. The pin is never released: it lives for the session."""
+    df = df.persist()
+    df.count()
+    return df
+
+
+def _collapse_content(
+    df: DataFrame, id_col: str, content_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Collapse documents into exact-content groups: the first stage of
+    every near-dup family.
+
+    Returns (groups, members):
+    - groups: (_ckey, _gid, _gsize, content) one pinned row per distinct
+      content; ``_gid`` is the group's minimum id and stands in for the
+      whole group in every later stage;
+    - members: (id, _gid) document → group.
+
+    **Duplicate-mass invariance** (round 3): the ENTIRE expensive
+    pipeline — signature UDF, banding, exact verify — runs once per
+    distinct content. A corpus where every doc has C exact copies costs
+    the same discovery work as its deduplicated form; only the final
+    expansion back to doc pairs is quadratic in C, and that is the
+    answer's own size. Doc-level discovery pays C² times the pair
+    stream: measured 2.9e9 pre-aggregation rows for winnowing at C=64
+    on the sf0.1 documents (it never finished), and the old MinHash did
+    not finish in 590s at 256× (PLANS.md "Round-3 adversarial probe").
+    Within-group pairs are identical content, so they are emitted
+    directly (:func:`_doc_pairs`) and can never be lost to a bucket
+    cap, which now counts distinct contents: 1M copies of one page can
+    neither blow up a bucket nor evict the page from it.
+
+    Cost of the collapse: one linear content-keyed shuffle of the corpus
+    (partial aggregation merges same-partition duplicates before it
+    ships, so the shuffle shrinks toward distinct-content size exactly
+    when duplicate mass is high). Real crawl corpora are 30-60%
+    duplicates, which is why dedup exists at all — paying one linear
+    pass to make the quadratic-prone stages duplicate-invariant is the
+    right trade at 100 TB, and at small scale it costs two extra small
+    shuffles (measured ~0.5s at sf0.1).
+
+    The key is ``md5(content)``, and md5 of NULL is NULL, so NULL
+    contents gather into their own group that no real value can share.
+    An in-band sentinel such as ``coalesce(text, '\\x00null')`` merged
+    NULL rows with a real ``'\\x00null'`` value (round 6, for payloads).
+    The members join is null-safe, so NULL-content docs keep their
+    group; each family decides whether NULL content pairs.
+    """
+    keyed = df.select(F.col(id_col), F.col(content_col)).withColumn(
+        "_ckey", F.md5(F.col(content_col))
+    )
+    groups = _pin(
+        keyed.groupBy("_ckey").agg(
+            F.min(id_col).alias("_gid"),
+            F.count(F.lit(1)).alias("_gsize"),
+            F.first(content_col).alias(content_col),
+        )
+    )
+    k, g = keyed.alias("k"), groups.select("_ckey", "_gid").alias("g")
+    members = k.join(g, F.col("k._ckey").eqNullSafe(F.col("g._ckey"))).select(
+        F.col(f"k.{id_col}"), F.col("g._gid")
+    )
+    return groups, members
+
+
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    member: Column,
+    cap: int,
+    observation: Observation | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Candidate pairs of one banding stage, in one shuffle: a groupBy
+    over the bucket ``keys`` gathers each bucket's sorted ``member``
+    values as ``ids``, drops buckets outside [2, ``cap``] (near-identical
+    boilerplate that would go quadratic) and emits the in-bucket pairs
+    inline. This replaces the classic count-guard + semi-join +
+    self-join chain (4 passes over the exploded table); in-bucket pair
+    expansion is bounded by cap², and typical buckets hold 1-4 ids.
+
+    Returns (buckets, pairs): ``buckets`` is (keys..., ids) before the
+    cap filter, carrying the saturation metrics; ``pairs`` has one
+    struct column ``p`` of (id_a, id_b) with id_a < id_b in member
+    order (a struct member sorts by its leading field)."""
+    buckets = _observe_bucket_drops(
+        rows.groupBy(*keys).agg(F.array_sort(F.collect_list(member)).alias("ids")),
+        F.size("ids"),
+        cap,
+        observation,
+    )
+    ids = F.col("ids")
+    pair_structs = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, F.size(ids)),
+                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+            ),
+        )
+    )
+    pairs = buckets.filter((F.size(ids) >= 2) & (F.size(ids) <= cap)).select(
+        F.explode(pair_structs).alias("p")
+    )
+    return buckets, pairs
+
+
+def _doc_pairs(
+    members: DataFrame, rep_pairs: DataFrame, same: DataFrame, id_col: str, value: Column
+) -> DataFrame:
+    """Expand verified group pairs to document pairs, Θ(answer).
+
+    ``rep_pairs`` is (id_a, id_b, measure) over group ids: every member
+    of one group pairs with every member of the other. ``same`` holds
+    the ``_gid`` of each group whose members all pair with each other
+    (identical content), and ``value`` is the measure of those pairs —
+    a literal, or a column of ``same``. Returns (id_a, id_b, measure),
+    id_a < id_b."""
+    measure = rep_pairs.columns[2]
+
+    def member_ids(gid: str, alias: str) -> DataFrame:
+        return members.select(F.col("_gid").alias(gid), F.col(id_col).alias(alias))
+
+    cross = (
+        rep_pairs.join(member_ids("id_a", "_ia"), "id_a")
+        .join(member_ids("id_b", "_ib"), "id_b")
+        .select(
+            F.least("_ia", "_ib").alias("id_a"),
+            F.greatest("_ia", "_ib").alias("id_b"),
+            measure,
+        )
+    )
+    within = (
+        same.join(member_ids("_gid", "_ia"), "_gid")
+        .join(member_ids("_gid", "_ib"), "_gid")
+        .filter(F.col("_ia") < F.col("_ib"))
+        .select(F.col("_ia").alias("id_a"), F.col("_ib").alias("id_b"), value.alias(measure))
+    )
+    return cross.unionByName(within)
+
+
+def _cluster_labels(
+    members: DataFrame, rep_pairs: DataFrame, same: DataFrame, id_col: str
+) -> DataFrame:
+    """(id, cluster) labels, cluster = the minimum doc id in the
+    connected near-dup component: :func:`connected_components` over the
+    REPRESENTATIVE pair graph (Θ(distinct contents) nodes), plus each
+    ``same`` group with no cross-group edge as its own cluster, joined
+    through the group membership — one linear join, no within-group
+    pair is ever materialized. Docs in no cluster are absent."""
+    comp = connected_components(rep_pairs, "id_a", "id_b")
+    solo = (
+        same.select(F.col("_gid").alias("node"))
+        .join(comp.select("node"), "node", "left_anti")
+        .select("node", F.col("node").alias("component"))
+    )
+    allc = comp.unionByName(solo)
+    return members.join(allc, members["_gid"] == allc["node"]).select(
+        F.col(id_col), F.col("component").alias("cluster")
+    )
 
 
 # ---------------------------------------------------------------- exact
@@ -258,7 +440,7 @@ def minhash_signature(
         + [c.alias(n) for n, c in extra_cols.items()]
         + [udf(F.col(text_col)).alias("ms")]
     )
-    return _ensure_parallelism(df).select(*sel).select(
+    return ensure_parallelism(df).select(*sel).select(
         id_col, *extra_cols.keys(), "ms.hs", "ms.sig"
     )
 
@@ -284,10 +466,13 @@ def minhash_dedup_pairs(
     write it out) because three downstream branches consume it — the band
     explode, the bucket-size skew guard, and the verify join — and must
     not each recompute the shingling. Only (id, band, bucket) rows travel
-    through the explode + self-join shuffle; the shingle sets are joined
+    through the explode + bucket shuffle; the shingle sets are joined
     back for verification of the (small) candidate pair set, as hashed
     longs rather than strings. Jaccard over hashed shingles equals string
     Jaccard up to md5-derived 64-bit collisions (~n²/2⁶⁴, negligible).
+    Documents first collapse by exact text (:func:`_collapse_content`),
+    so the whole pipeline runs once per distinct text; within-group
+    pairs (identical texts) have Jaccard exactly 1.0 by definition.
 
     **Null-text docs never pair** (round-4 ADVICE): there is no content
     to compare, so null-text groups are excluded from both the signature
@@ -297,57 +482,14 @@ def minhash_dedup_pairs(
     identical single-shingle content (they always did).
 
     Returns (id_a, id_b, jaccard) with jaccard ≥ threshold, id_a < id_b.
-
-    **Duplicate-mass invariance** (round 3, same design as
-    ``winnow_overlap_pairs``): documents first collapse into groups by
-    exact text (md5), and the ENTIRE expensive pipeline — shingling UDF,
-    signature matrix, banding, Jaccard verify — runs once per distinct
-    text. A corpus where every doc has C exact copies costs the same
-    discovery work as its deduplicated form; only the final expansion
-    back to doc pairs is quadratic in C, and that is the answer's own
-    size. Within-group pairs (identical texts) have Jaccard exactly 1.0
-    by definition and are emitted directly — they can no longer be lost
-    to the degenerate-bucket cap, which now counts distinct contents.
-
-    Cost of the collapse: one linear content-keyed shuffle of the corpus
-    (partial aggregation merges same-partition duplicates before it
-    ships, so the shuffle shrinks toward distinct-content size exactly
-    when duplicate mass is high). Real crawl corpora are 30-60%
-    duplicates, which is why dedup exists at all — paying one linear
-    pass to make the quadratic-prone stages duplicate-invariant is the
-    right trade at 100 TB, and at small scale it costs two extra small
-    shuffles (measured ~0.5s at sf0.1).
     """
-    groups, members, rep_pairs = _minhash_group_stages(
-        df, id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket, observation
+    return _doc_pairs(
+        *_minhash_group_stages(
+            df, id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket, observation
+        ),
+        id_col,
+        F.lit(1.0),
     )
-    # expand representative pairs to doc pairs; add within-group pairs
-    # (identical texts, Jaccard exactly 1.0 by definition)
-    cross = (
-        rep_pairs.join(
-            members.select(F.col("_gid").alias("id_a"), F.col(id_col).alias("_ia")), "id_a"
-        )
-        .join(members.select(F.col("_gid").alias("id_b"), F.col(id_col).alias("_ib")), "id_b")
-        .select(
-            F.least("_ia", "_ib").alias("id_a"),
-            F.greatest("_ia", "_ib").alias("id_b"),
-            "jaccard",
-        )
-    )
-    same = (
-        groups.filter((F.col("_gsize") >= 2) & F.col(text_col).isNotNull())
-        .select("_gid")
-        .join(members.select("_gid", F.col(id_col).alias("_ia")), "_gid")
-        .join(members.select("_gid", F.col(id_col).alias("_ib")), "_gid")
-        .filter(F.col("_ia") < F.col("_ib"))
-        .select(
-            F.col("_ia").alias("id_a"),
-            F.col("_ib").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        .filter(F.lit(1.0) >= F.lit(threshold))
-    )
-    return cross.unionByName(same)
 
 
 def _minhash_group_stages(
@@ -365,37 +507,19 @@ def _minhash_group_stages(
     REPRESENTATIVE pairs: exact-text group collapse, signature + banding
     + Jaccard verify over one representative per distinct text.
 
-    Returns (groups, members, rep_pairs):
-    - groups: (_tkey, _gid, _gsize, text) one row per distinct text;
+    Returns (members, rep_pairs, same):
     - members: (id, _gid) doc → group assignment;
     - rep_pairs: (id_a=gid_a, id_b=gid_b, jaccard) verified pairs
-      BETWEEN groups (within-group pairs are definitionally 1.0 and are
-      materialized only by the pair-mode expansion).
+      BETWEEN groups;
+    - same: (_gid) non-null groups of >= 2 identical texts, whose
+      within-group pairs are definitionally 1.0.
 
     Shared by :func:`minhash_dedup_pairs` (quadratic within-group pair
     expansion — the answer's own size) and
     :func:`minhash_dup_clusters` (cluster labels; never materializes
     within-group pairs).
     """
-    rows_per_band = num_hashes // bands
-    fpk = df.select(F.col(id_col), F.col(text_col)).withColumn(
-        "_tkey", F.md5(F.coalesce(F.col(text_col), F.lit("\x00null")))
-    )
-    groups = (
-        fpk.groupBy("_tkey")
-        .agg(
-            F.min(id_col).alias("_gid"),
-            F.count(F.lit(1)).alias("_gsize"),
-            F.first(text_col).alias(text_col),
-        )
-        .persist()
-    )
-    groups.count()  # pin eagerly — members join + signature stage
-    members = (
-        fpk.select(F.col(id_col), "_tkey")
-        .join(groups.select("_tkey", "_gid"), "_tkey")
-        .select(F.col(id_col), "_gid")
-    )
+    groups, members = _collapse_content(df, id_col, text_col)
     # null-text groups carry no content to compare — exclude them from
     # the signature/banding stage entirely (their docs then never appear
     # in any pair), restoring the pre-collapse null-Jaccard-filtered
@@ -403,45 +527,15 @@ def _minhash_group_stages(
     reps = groups.filter(F.col(text_col).isNotNull()).select(
         F.col("_gid").alias(id_col), F.col(text_col)
     )
+    sig_df = _pin(minhash_signature(reps, id_col, text_col, num_hashes, shingle_n))
 
-    sig_df = minhash_signature(reps, id_col, text_col, num_hashes, shingle_n).persist()
-    # Pin the cache eagerly: the band explode, the skew guard, and the two
-    # verify joins materialize concurrently under AQE, and each racer would
-    # recompute the (expensive) signature stage against a cold cache.
-    sig_df.count()
-
+    rows_per_band = num_hashes // bands
     band_structs = minhash_band_structs(F.col("sig"), bands, rows_per_band)
     buckets = sig_df.select(F.col(id_col), F.explode(band_structs).alias("bb")).select(
         id_col, "bb.band", "bb.bucket"
     )
-
-    # One shuffle: gather each bucket's member ids, drop degenerate buckets
-    # (> max_bucket: near-identical boilerplate that would go quadratic),
-    # and emit in-bucket pairs inline. This replaces the classic
-    # count-guard + semi-join + self-join chain (4 passes over the 16n-row
-    # exploded table) with a single groupBy pass; in-bucket pair expansion
-    # is bounded by max_bucket², and typical buckets hold 1-4 ids.
-    ids_sorted = F.array_sort(F.collect_list(id_col))
-    bucket_ids = _observe_bucket_drops(
-        buckets.groupBy("band", "bucket").agg(ids_sorted.alias("ids")),
-        F.size("ids"),
-        max_bucket,
-        observation,
-    ).filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    cand = (
-        bucket_ids.select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    _, pairs = _bucket_pairs(buckets, ["band", "bucket"], F.col(id_col), max_bucket, observation)
+    cand = pairs.select("p.id_a", "p.id_b").dropDuplicates(["id_a", "id_b"])
     sets = sig_df.select(F.col(id_col), F.col("hs"))
     rep_pairs = (
         cand.join(sets.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a")), "id_a")
@@ -451,7 +545,10 @@ def _minhash_group_stages(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return groups, members, rep_pairs
+    same = groups.filter(
+        (F.col("_gsize") >= 2) & F.col(text_col).isNotNull() & (F.lit(1.0) >= F.lit(threshold))
+    ).select("_gid")
+    return members, rep_pairs, same
 
 
 def minhash_dup_clusters(
@@ -472,32 +569,18 @@ def minhash_dup_clusters(
     Where :func:`minhash_dedup_pairs` expands every within-group pair
     (quadratic in the exact-copy count C — at 256× duplicate mass that
     is the answer's own size, but most consumers want clusters, not
-    163M pair rows), this runs :func:`connected_components` over the
-    REPRESENTATIVE pair graph (Θ(distinct contents) nodes) and then
-    labels each doc through its group membership — one linear join, no
-    within-group pair materialization ever. Exactly equivalent to
-    components over the pair-mode output (equivalence-tested).
+    163M pair rows), this labels docs through :func:`_cluster_labels`:
+    components over the representative pair graph, never a
+    within-group pair. Groups with >= 2 identical non-null copies
+    cluster on their own even with no cross-group edge; null-text docs
+    get no label (round-4 ADVICE). Exactly equivalent to components
+    over the pair-mode output (equivalence-tested).
     """
-    groups, members, rep_pairs = _minhash_group_stages(
-        df, id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket, observation
-    )
-    comp = connected_components(rep_pairs, "id_a", "id_b")
-    # groups with >= 2 identical copies cluster on their own even with no
-    # cross-group edge (within-group Jaccard is definitionally 1.0);
-    # null-text groups excluded — no content, no pairing (round-4 ADVICE)
-    solo = (
-        groups.filter(
-            (F.col("_gsize") >= 2)
-            & F.col(text_col).isNotNull()
-            & (F.lit(1.0) >= F.lit(threshold))
-        )
-        .select(F.col("_gid").alias("node"))
-        .join(comp.select("node"), "node", "left_anti")
-        .select("node", F.col("node").alias("component"))
-    )
-    allc = comp.unionByName(solo)
-    return members.join(allc, members["_gid"] == allc["node"]).select(
-        F.col(id_col), F.col("component").alias("cluster")
+    return _cluster_labels(
+        *_minhash_group_stages(
+            df, id_col, text_col, num_hashes, bands, shingle_n, threshold, max_bucket, observation
+        ),
+        id_col,
     )
 
 
@@ -542,7 +625,7 @@ def _make_simhash_udf():
 
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, simhash) — signature compute is map-only."""
-    return _ensure_parallelism(df).select(
+    return ensure_parallelism(df).select(
         F.col(id_col), _make_simhash_udf()(F.col(text_col)).alias("simhash")
     )
 
@@ -581,40 +664,17 @@ def simhash_dedup_pairs(
     pairs in the dedup exchange and thrashed GC. Caught by the 256×
     scaling probe: PLANS.md "Round-3 adversarial probe".)
 
-    **Duplicate-mass invariance** (round 3, same design as the minhash
-    and winnowing paths): documents first collapse into groups by exact
-    text, the signature UDF + banding + verify run once per distinct
-    text, and doc pairs expand from representative pairs at the end.
-    Within-group pairs (identical texts → identical simhash) are emitted
-    directly with hamming 0; ``max_bucket`` caps now count distinct
-    contents, so duplicate mass can neither blow up the buckets nor
-    evict a page from them.
+    Documents first collapse by exact text (:func:`_collapse_content`);
+    within-group pairs (identical texts → identical simhash) are emitted
+    directly with hamming 0.
 
     The signature table is persisted: the banding pass and any downstream
     consumer would otherwise re-run the packing UDF over the corpus.
     """
-    fpk = df.select(F.col(id_col), F.col(text_col)).withColumn(
-        "_tkey", F.md5(F.coalesce(F.col(text_col), F.lit("\x00null")))
-    )
-    groups = (
-        fpk.groupBy("_tkey")
-        .agg(
-            F.min(id_col).alias("_gid"),
-            F.count(F.lit(1)).alias("_gsize"),
-            F.first(text_col).alias(text_col),
-        )
-        .persist()
-    )
-    groups.count()  # pin eagerly — members join + signature stage
-    members = (
-        fpk.select(F.col(id_col), "_tkey")
-        .join(groups.select("_tkey", "_gid"), "_tkey")
-        .select(F.col(id_col), "_gid")
-    )
+    groups, members = _collapse_content(df, id_col, text_col)
     reps = groups.select(F.col("_gid").alias(id_col), F.col(text_col))
 
-    sh = simhash(reps, id_col, text_col).persist()
-    sh.count()  # pin eagerly — see minhash_dedup_pairs
+    sh = _pin(simhash(reps, id_col, text_col))
     chunks = F.array(
         *[
             F.struct(
@@ -629,59 +689,19 @@ def simhash_dedup_pairs(
     exploded = sh.select(F.col(id_col), F.col("simhash"), F.explode(chunks).alias("cc")).select(
         id_col, "simhash", "cc.chunk", "cc.key"
     )
-    # struct sorts by leading field = id, so pairs come out id_a < id_b
-    gathered = F.array_sort(
-        F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh")))
-    )
-    bucket_members = _observe_bucket_drops(
-        exploded.groupBy("chunk", "key").agg(gathered.alias("ms")),
-        F.size("ms"),
-        max_bucket,
-        observation,
-    ).filter((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    member = F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh"))
+    _, pairs = _bucket_pairs(exploded, ["chunk", "key"], member, max_bucket, observation)
     rep_pairs = (
-        bucket_members.select(F.explode(pair_structs).alias("p"))
-        .select(
-            F.col("p.a.id").alias("id_a"),
-            F.col("p.b.id").alias("id_b"),
-            F.bit_count(F.col("p.a.sh").bitwiseXOR(F.col("p.b.sh"))).alias("hamming"),
+        pairs.select(
+            F.col("p.id_a.id").alias("id_a"),
+            F.col("p.id_b.id").alias("id_b"),
+            F.bit_count(F.col("p.id_a.sh").bitwiseXOR(F.col("p.id_b.sh"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    cross = (
-        rep_pairs.join(
-            members.select(F.col("_gid").alias("id_a"), F.col(id_col).alias("_ia")), "id_a"
-        )
-        .join(members.select(F.col("_gid").alias("id_b"), F.col(id_col).alias("_ib")), "id_b")
-        .select(
-            F.least("_ia", "_ib").alias("id_a"),
-            F.greatest("_ia", "_ib").alias("id_b"),
-            "hamming",
-        )
-    )
-    same = (
-        groups.filter(F.col("_gsize") >= 2)
-        .select("_gid")
-        .join(members.select("_gid", F.col(id_col).alias("_ia")), "_gid")
-        .join(members.select("_gid", F.col(id_col).alias("_ib")), "_gid")
-        .filter(F.col("_ia") < F.col("_ib"))
-        .select(
-            F.col("_ia").alias("id_a"),
-            F.col("_ib").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return cross.unionByName(same)
+    same = groups.filter(F.col("_gsize") >= 2).select("_gid")
+    return _doc_pairs(members, rep_pairs, same, id_col, F.lit(0).cast("int"))
 
 
 # ---------------------------------------------------- winnowing (rolling hash)
@@ -742,7 +762,7 @@ def winnow_fingerprints(
     df: DataFrame, id_col: str, text_col: str, k: int = 16, window: int = 8
 ) -> DataFrame:
     """(id, fingerprints array<long>) — rolling-hash winnowing sketch."""
-    return _ensure_parallelism(df).select(
+    return ensure_parallelism(df).select(
         F.col(id_col), _make_winnow_udf(k, window)(F.col(text_col)).alias("fingerprints")
     )
 
@@ -761,15 +781,10 @@ def winnow_overlap_pairs(
     near-dup/plagiarism detection — catches shared passages that token-set
     Jaccard dilutes away).
 
-    **Duplicate-mass-invariant design** (round 3): documents are first
-    collapsed into groups by their EXACT fingerprint set, and the whole
-    inverted-index + shared-print counting pipeline runs over one
-    representative per group. A corpus where every doc has C exact
-    copies costs the naive doc-level pipeline C² times the pair stream
-    (measured: 2.9e9 pre-aggregation rows at C=64 on the sf0.1
-    documents — it never finished); group-level discovery is invariant
-    to C, and the final expansion back to doc pairs is Θ(answer): the
-    answer itself is what's quadratic in C.
+    Documents are collapsed into groups by their EXACT fingerprint set
+    (:func:`_winnow_group_stages`), and the whole inverted-index +
+    shared-print counting pipeline runs over one representative per
+    group (duplicate-mass invariance, :func:`_collapse_content`).
 
     Semantics per pair (a, b), a<b:
     - different fingerprint sets → shared = #common prints whose
@@ -782,27 +797,11 @@ def winnow_overlap_pairs(
     (id_a, id_b, shared_prints). The DuckDB oracle twin mirrors this
     group-level computation exactly (registry _winnow_oracle).
     """
-    groups, members, rep_pairs, same_groups = _winnow_group_stages(
-        df, id_col, text_col, k, window, min_shared, max_posting, observation
+    return _doc_pairs(
+        *_winnow_group_stages(df, id_col, text_col, k, window, min_shared, max_posting, observation),
+        id_col,
+        F.col("shared_prints"),
     )
-    cross = (
-        rep_pairs.join(
-            members.select(F.col("gid").alias("gid_a"), F.col(id_col).alias("_ia")), "gid_a"
-        )
-        .join(members.select(F.col("gid").alias("gid_b"), F.col(id_col).alias("_ib")), "gid_b")
-        .select(
-            F.least("_ia", "_ib").alias("id_a"),
-            F.greatest("_ia", "_ib").alias("id_b"),
-            "shared_prints",
-        )
-    )
-    same = (
-        same_groups.join(members.select("gid", F.col(id_col).alias("_ia")), "gid")
-        .join(members.select("gid", F.col(id_col).alias("_ib")), "gid")
-        .filter(F.col("_ia") < F.col("_ib"))
-        .select(F.col("_ia").alias("id_a"), F.col("_ib").alias("id_b"), "shared_prints")
-    )
-    return cross.unionByName(same)
 
 
 def _winnow_group_stages(
@@ -814,87 +813,56 @@ def _winnow_group_stages(
     min_shared: int,
     max_posting: int,
     observation: Observation | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The duplicate-mass-invariant winnowing discovery pipeline up to
     REPRESENTATIVE pairs (shared by the pair- and cluster-mode outputs).
 
-    Returns (groups, members, rep_pairs, same_groups):
-    - groups: (fkey, gid, gsize, fps) one row per distinct fingerprint set;
-    - members: (id, gid) doc → group assignment;
-    - rep_pairs: (gid_a, gid_b, shared_prints) qualifying pairs BETWEEN
-      groups (capped-posting inverted index + shared-print count);
-    - same_groups: (gid, shared_prints) groups of >= 2 identical
-      fingerprint sets whose (cap-surviving) set size qualifies.
+    Returns (members, rep_pairs, same):
+    - members: (id, _gid) doc → fingerprint-set group assignment;
+    - rep_pairs: (id_a=gid_a, id_b=gid_b, shared_prints) qualifying
+      pairs BETWEEN groups (capped-posting inverted index + shared-print
+      count);
+    - same: (_gid, shared_prints) groups of >= 2 identical fingerprint
+      sets whose (cap-surviving) set size qualifies.
 
     TWO-LEVEL collapse (round 4): docs first collapse by exact text
-    (md5), the winnowing UDF runs once per DISTINCT text, and the
-    resulting fingerprint sets then collapse again into the fingerprint
-    groups. Fingerprints are a pure function of the text, so the output
-    is identical to fingerprinting every doc — but at 256× exact-copy
-    mass the UDF (the pipeline's Θ(total text bytes) stage) now costs
+    (:func:`_collapse_content`), the winnowing UDF runs once per
+    DISTINCT text, and the resulting fingerprint sets then collapse
+    again into the fingerprint groups, summing the text groups' sizes.
+    Fingerprints are a pure function of the text, so the output is
+    identical to fingerprinting every doc — but at 256× exact-copy mass
+    the UDF (the pipeline's Θ(total text bytes) stage) now costs
     Θ(distinct text bytes): the 256× probe dropped from 70s (UDF over
     1.28M docs) to ~8s. Same shape as ``_minhash_group_stages``.
     """
-    tkeyed = df.select(F.col(id_col), F.col(text_col)).withColumn(
-        "_tkey", F.md5(F.coalesce(F.col(text_col), F.lit("\x00null")))
-    )
-    tgroups = (
-        tkeyed.groupBy("_tkey")
-        .agg(
-            F.min(id_col).alias("_tgid"),
-            F.count(F.lit(1)).alias("_tsize"),
-            F.first(text_col).alias(text_col),
-        )
-        .persist()
-    )
-    tgroups.count()  # pin eagerly — fingerprint input + members join
-    treps = tgroups.select(F.col("_tgid").alias(id_col), F.col(text_col))
+    tgroups, tmembers = _collapse_content(df, id_col, text_col)
+    treps = tgroups.select(F.col("_gid").alias(id_col), F.col(text_col))
     fp = winnow_fingerprints(treps, id_col, text_col, k, window).select(
-        F.col(id_col).alias("_tgid"), F.array_sort("fingerprints").alias("fps")
+        F.col(id_col).alias("_gid"), F.array_sort("fingerprints").alias("fps")
     )
     # group key: the fingerprint set itself (md5 of the sorted longs —
     # collision-negligible, cheaper to shuffle than the array)
     fpk = fp.withColumn(
         "fkey", F.md5(F.concat_ws(",", F.transform(F.col("fps"), lambda x: x.cast("string"))))
-    ).join(tgroups.select("_tgid", "_tsize"), "_tgid")
-    groups = (
-        fpk.groupBy("fkey")
-        .agg(
-            F.min("_tgid").alias("gid"),
-            F.sum("_tsize").alias("gsize"),
+    ).join(tgroups.select("_gid", "_gsize"), "_gid")
+    groups = _pin(
+        fpk.groupBy("fkey").agg(
+            F.min("_gid").alias("_gid"),
+            F.sum("_gsize").alias("_gsize"),
             F.first("fps").alias("fps"),
         )
-        .persist()
     )
-    groups.count()  # pin eagerly — consumed by three branches below
     members = (
-        tkeyed.select(F.col(id_col), "_tkey")
-        .join(tgroups.select("_tkey", "_tgid"), "_tkey")
-        .join(fpk.select("_tgid", "fkey"), "_tgid")
-        .join(groups.select("fkey", "gid"), "fkey")
-        .select(F.col(id_col), "gid")
+        tmembers.join(fpk.select("_gid", "fkey"), "_gid")
+        .select(F.col(id_col), "fkey")
+        .join(groups.select("fkey", "_gid"), "fkey")
+        .select(F.col(id_col), "_gid")
     )
 
-    inv = groups.select("gid", F.explode("fps").alias("print"))
-    postings = _observe_bucket_drops(
-        inv.groupBy("print").agg(F.array_sort(F.collect_list("gid")).alias("gids")),
-        F.size("gids"),
-        max_posting,
-        observation,
-    )
-    ok = postings.filter((F.size("gids") >= 2) & (F.size("gids") <= max_posting))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("gids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("gids"), i + 2, F.size(F.col("gids"))),
-                lambda y: F.struct(x.alias("gid_a"), y.alias("gid_b")),
-            ),
-        )
-    )
+    inv = groups.select("_gid", F.explode("fps").alias("print"))
+    postings, pairs = _bucket_pairs(inv, ["print"], F.col("_gid"), max_posting, observation)
     rep_pairs = (
-        ok.select(F.explode(pair_structs).alias("p"))
-        .groupBy("p.gid_a", "p.gid_b")
+        pairs.groupBy("p.id_a", "p.id_b")
         .agg(F.count(F.lit(1)).alias("shared_prints"))
         .filter(F.col("shared_prints") >= min_shared)
     )
@@ -902,23 +870,23 @@ def _winnow_group_stages(
     # same-group qualification: every member pair shares the whole set
     # (minus capped-out prints); qualifies only with >= 2 members
     n_capped = (
-        postings.filter(F.size("gids") > max_posting)
-        .select(F.explode("gids").alias("gid"))
-        .groupBy("gid")
+        postings.filter(F.size("ids") > max_posting)
+        .select(F.explode("ids").alias("_gid"))
+        .groupBy("_gid")
         .agg(F.count(F.lit(1)).alias("n_capped"))
     )
-    same_groups = (
-        groups.filter(F.col("gsize") >= 2)
-        .join(n_capped, "gid", "left")
+    same = (
+        groups.filter(F.col("_gsize") >= 2)
+        .join(n_capped, "_gid", "left")
         .select(
-            "gid",
+            "_gid",
             (F.size("fps") - F.coalesce(F.col("n_capped"), F.lit(0)))
             .cast("long")
             .alias("shared_prints"),
         )
         .filter(F.col("shared_prints") >= min_shared)
     )
-    return groups, members, rep_pairs, same_groups
+    return members, rep_pairs, same
 
 
 def winnow_dup_clusters(
@@ -938,25 +906,16 @@ def winnow_dup_clusters(
     Motivation (round-3 verdict #2): at 256× duplicate mass the
     pair-mode output IS 163M rows (5000 groups × C(256,2) within-group
     pairs) — pure answer materialization that no consumer of dedup
-    clusters needs. This variant runs :func:`connected_components` over
-    the REPRESENTATIVE pair graph (Θ(distinct fingerprint sets) nodes)
-    and labels docs through group membership: the within-group quadratic
+    clusters needs. This variant labels docs through
+    :func:`_cluster_labels` over the REPRESENTATIVE pair graph
+    (Θ(distinct fingerprint sets) nodes): the within-group quadratic
     expansion never happens, so cost is invariant to exact-copy mass.
     Exactly equivalent to components over the pair-mode output
     (equivalence-tested in tests/test_llm_ops.py).
     """
-    groups, members, rep_pairs, same_groups = _winnow_group_stages(
-        df, id_col, text_col, k, window, min_shared, max_posting, observation
-    )
-    comp = connected_components(rep_pairs, "gid_a", "gid_b")
-    solo = (
-        same_groups.select(F.col("gid").alias("node"))
-        .join(comp.select("node"), "node", "left_anti")
-        .select("node", F.col("node").alias("component"))
-    )
-    allc = comp.unionByName(solo)
-    return members.join(allc, members["gid"] == allc["node"]).select(
-        F.col(id_col), F.col("component").alias("cluster")
+    return _cluster_labels(
+        *_winnow_group_stages(df, id_col, text_col, k, window, min_shared, max_posting, observation),
+        id_col,
     )
 
 
@@ -1393,7 +1352,7 @@ def entity_match_pairs(
             [F.col(f"d0.{c}").eqNullSafe(F.col(f"kk.{c}")) for c in block_cols],
             "left_semi",
         )
-    a = _ensure_parallelism(df).alias("a")
+    a = ensure_parallelism(df).alias("a")
     b = df.alias("b")
     cond = [F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}")) for c in block_cols]
     cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))

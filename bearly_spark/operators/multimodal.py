@@ -29,6 +29,9 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from bearly_spark.operators.dedup import _bucket_pairs, _collapse_content, _doc_pairs, _pin
+from bearly_spark.operators.text import ensure_parallelism
+
 #: Schema of the decode output — fixed and engine-visible so downstream
 #: operators can be planned without running the decoder.
 FEATURE_SCHEMA = (
@@ -423,8 +426,8 @@ def binary_near_dup_pairs(
     block hashing is sequence+substring+md5, discovery is an inverted
     index over block hashes).
 
-    Same scale skeleton as ``dedup.minhash_dedup_pairs`` (round-3
-    duplicate-mass-invariance design):
+    Same near-dup skeleton as the text family (``dedup`` module
+    docstring):
 
     - exact-copy collapse FIRST (md5 of the whole payload): the block
       stage and the pairwise discovery run once per DISTINCT payload;
@@ -452,65 +455,16 @@ def binary_near_dup_pairs(
 
     Returns (id_a, id_b, jaccard), id_a < id_b, jaccard ≥ threshold.
     """
-    from bearly_spark.operators.dedup import _observe_bucket_drops
-
-    # NULL payloads group under a NULL key (groupBy collects NULLs into
-    # one group) — structurally distinct from every real byte string, so
-    # no in-band sentinel value can ever collide with actual content
-    # (review catch, round 6: md5(coalesce(p, b'\\x00null')) merged NULL
-    # payloads with a real b'\\x00null' payload into one "exact" group)
-    from bearly_spark.operators.text import ensure_parallelism
-
-    ckey = F.md5(F.col(payload_col))
-    fpk = (
-        ensure_parallelism(df)
-        .select(F.col(id_col), F.col(payload_col))
-        .withColumn("_ckey", ckey)
-    )
-    groups = (
-        fpk.groupBy("_ckey")
-        .agg(
-            F.min(id_col).alias("_gid"),
-            F.count(F.lit(1)).alias("_gsize"),
-            F.first(payload_col).alias(payload_col),
-        )
-        .persist()
-    )
-    groups.count()  # pin eagerly: members join + block stage both consume it
-    members = (
-        fpk.select(F.col(id_col), "_ckey")
-        .join(groups.select("_ckey", "_gid"), "_ckey")
-        .select(F.col(id_col), "_gid")
-    )
+    groups, members = _collapse_content(ensure_parallelism(df), id_col, payload_col)
     reps = groups.filter(F.col(payload_col).isNotNull()).select(
         F.col("_gid").alias(id_col), F.col(payload_col)
     )
-
-    blocks = binary_block_table(reps, id_col, payload_col, block_bytes).persist()
-    blocks.count()  # consumed by sizes, postings, and the shared-count join
+    # consumed by sizes, postings, and the shared-count join
+    blocks = _pin(binary_block_table(reps, id_col, payload_col, block_bytes))
     sizes = blocks.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n"))
 
-    ids_sorted = F.array_sort(F.collect_list(id_col))
-    postings = _observe_bucket_drops(
-        blocks.groupBy("bh").agg(ids_sorted.alias("ids")),
-        F.size("ids"),
-        max_posting,
-        observation,
-    ).filter((F.size("ids") >= 2) & (F.size("ids") <= max_posting))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    shared = (
-        postings.select(F.explode(pair_structs).alias("p"))
-        .groupBy("p.id_a", "p.id_b")
-        .agg(F.count(F.lit(1)).alias("_shared"))
-    )
+    _, pairs = _bucket_pairs(blocks, ["bh"], F.col(id_col), max_posting, observation)
+    shared = pairs.groupBy("p.id_a", "p.id_b").agg(F.count(F.lit(1)).alias("_shared"))
     rep_pairs = (
         shared.join(sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na")), "id_a")
         .join(sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb")), "id_b")
@@ -523,29 +477,7 @@ def binary_near_dup_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-
-    cross = (
-        rep_pairs.join(
-            members.select(F.col("_gid").alias("id_a"), F.col(id_col).alias("_ia")), "id_a"
-        )
-        .join(members.select(F.col("_gid").alias("id_b"), F.col(id_col).alias("_ib")), "id_b")
-        .select(
-            F.least("_ia", "_ib").alias("id_a"),
-            F.greatest("_ia", "_ib").alias("id_b"),
-            "jaccard",
-        )
-    )
-    same = (
-        groups.filter((F.col("_gsize") >= 2) & F.col(payload_col).isNotNull())
-        .select("_gid")
-        .join(members.select("_gid", F.col(id_col).alias("_ia")), "_gid")
-        .join(members.select("_gid", F.col(id_col).alias("_ib")), "_gid")
-        .filter(F.col("_ia") < F.col("_ib"))
-        .select(
-            F.col("_ia").alias("id_a"),
-            F.col("_ib").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        .filter(F.lit(1.0) >= F.lit(threshold))
-    )
-    return cross.unionByName(same)
+    same = groups.filter(
+        (F.col("_gsize") >= 2) & F.col(payload_col).isNotNull() & (F.lit(1.0) >= F.lit(threshold))
+    ).select("_gid")
+    return _doc_pairs(members, rep_pairs, same, id_col, F.lit(1.0))

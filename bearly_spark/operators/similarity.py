@@ -29,6 +29,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, Window
 
+from bearly_spark.operators.dedup import _bucket_pairs, connected_components
+
 
 #: Driver-collect contract for the query-side ANN probes: these paths
 #: broadcast the QUERY SET from the driver (small queries vs huge
@@ -602,28 +604,8 @@ def embedding_near_dup_pairs(
         F.col(id_col),
         F.explode(_band_structs(sig_udf(F.col(vec_col)), bands, bits_per_band)).alias("bb"),
     ).select(id_col, "bb.band", "bb.bkey")
-    from bearly_spark.operators.dedup import _observe_bucket_drops
-
-    bucket_ids = _observe_bucket_drops(
-        ex.groupBy("band", "bkey").agg(F.array_sort(F.collect_list(id_col)).alias("ids")),
-        F.size("ids"),
-        max_bucket,
-        observation,
-    ).filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    cand = (
-        bucket_ids.select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    _, pairs = _bucket_pairs(ex, ["band", "bkey"], F.col(id_col), max_bucket, observation)
+    cand = pairs.select("p.id_a", "p.id_b").dropDuplicates(["id_a", "id_b"])
     vecs = df.select(F.col(id_col), F.col(vec_col))
     cos_udf = make_cosine_udf()
     return (
@@ -884,8 +866,6 @@ def embedding_dup_clusters(
     All parameters pass straight through to the pair stage, including
     the round-4 corpus-size auto-sizing and saturation observation.
     """
-    from bearly_spark.operators.dedup import connected_components
-
     pairs = embedding_near_dup_pairs(
         df,
         id_col,

@@ -129,14 +129,10 @@ PREFIX_ORDER = [
     "basket_rules_lineitem",
     # DQ block (zero driver coverage until now)
     "drift_report_orders",
-    "drift_categorical_orders",
     "skew_report_lineitem",
     "standardize_lineitem",
     # ---- new this round (seat the round they ship) ----
     "bpe_merges_documents",
-    "bpe_segment_documents",
-    "bpe_vocabulary_documents",
-    "pca_power_embeddings",
     "pca_project_embeddings",
     # commit-log table format (sources/txlog) — the object-store table
     # layer: versioned read, time travel, stats skipping, compaction,
@@ -163,11 +159,6 @@ PREFIX_ORDER = [
     "ann_recall_embeddings",
     "pack_bpe_documents",
     "embedding_ann_sq8",
-    # ---- re-certification: emission path changed this round ----
-    "percentiles_lineitem",
-    "nation_percentiles_lineitem",
-    "rfm_segments_customer",
-    "semdedup_index_stats_query",
     # ---- re-certification: r01-only records (pre-strict-gate) ----
     "set_except_custkeys",
     # ---- r14 carry-over: emission paths rewritten in round 14. Slots
@@ -189,6 +180,23 @@ PREFIX_ORDER = [
     # Slot from vocabulary_documents, green in r12-r14
     # (tools/seat_history.py).
     "semdedup_index_query",
+    # ---- emission path changed: the near-dup families run on one
+    # skeleton (content collapse keyed md5(content) with NULL as its own
+    # group, one bucket-pair expansion, one group-to-document expansion).
+    # Slots from seats green in r12-r14 (tools/seat_history.py): the four
+    # round-12 re-certifications (percentiles, nation_percentiles,
+    # rfm_segments, semdedup_index_stats), bpe_segment, bpe_vocabulary,
+    # pca_power and drift_categorical; each family keeps a seat.
+    # embedding_near_dup and cluster_aware_split_documents, which ride the
+    # same change, already hold seats above.
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "fingerprint_winnow_pairs",
+    "winnow_clusters_documents",
+    "dedup_clusters_minhash",
+    "dedup_components",
+    "binary_near_dup_documents",
+    "embedding_dup_clusters",
     # (lang_id_distribution and rollup_orders also wait for r13 — the
     # text family holds seven greener r11/r12 seats, and rollup held an
     # r01 green on an unchanged code path; their slots went to

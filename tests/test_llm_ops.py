@@ -521,12 +521,13 @@ def test_near_dup_saturation_metric_and_autosize(spark):
 
 
 def test_minhash_simhash_saturation_observed(spark):
-    """The banded text-dedup paths expose the same loud saturation metric
-    under partial saturation (the realistic regime: SOME buckets past the
-    cap while others still yield pairs — total pruning is covered by the
-    standalone banding_saturation_report above): a 4-way near-identical
-    cluster overflows a 2-sized cap (its pairs are lost and REPORTED),
-    while an independent near-dup pair in a small bucket still comes out."""
+    """The banded dedup paths (MinHash, SimHash, winnowing, block hashes)
+    expose the same loud saturation metric under partial saturation (the
+    realistic regime: SOME buckets past the cap while others still yield
+    pairs — total pruning is covered by the standalone
+    banding_saturation_report above): a 4-way near-identical cluster
+    overflows a 2-sized cap (its pairs are lost and REPORTED), while an
+    independent near-dup pair in a small bucket still comes out."""
     from pyspark.sql import Observation
 
     base = " ".join(f"tok{i}" for i in range(40))
@@ -561,6 +562,36 @@ def test_minhash_simhash_saturation_observed(spark):
     ).collect()
     assert any((r.id_a, r.id_b) == (20, 21) for r in got2)
     assert obs2.get["dropped_buckets"] > 0
+
+    # winnowing: four distinct docs around one shared passage put its
+    # prints in postings of 4 fingerprint groups, past a 2-cap, while an
+    # independent pair sharing another passage comes out of its 2-posting
+    passage = "the quick brown fox jumps over the lazy dog by the river bank " * 2
+    wrows = [(40 + i, passage + f"tail number {i} " * 3) for i in range(4)]
+    other_passage = "an entirely different passage about rolling hash fingerprints " * 2
+    wrows += [(50, other_passage + "end one"), (51, other_passage + "end two")]
+    obs3 = Observation("winnow_sat")
+    got3 = D.winnow_overlap_pairs(
+        spark.createDataFrame(wrows, ["doc_id", "text"]),
+        "doc_id", "text", min_shared=3, max_posting=2, observation=obs3,
+    ).collect()
+    assert any((r.id_a, r.id_b) == (50, 51) for r in got3)
+    assert not any(r.id_a >= 40 and r.id_b < 50 for r in got3)
+    assert obs3.get["dropped_buckets"] > 0
+
+    # block hashes: the boilerplate block shared by 12 payloads overflows
+    # the 8-cap (1 bucket, 12 ids), while an aligned tail edit still pairs
+    base = bytes(range(256))
+    brows = [(1, base), (2, base[:-8] + b"ZZZZZZZZ")]
+    brows += [(100 + i, b"SAMEBLK!" + bytes([i]) * 8) for i in range(12)]
+    obs4 = Observation("binary_sat")
+    got4 = M.binary_near_dup_pairs(
+        spark.createDataFrame(brows, "doc_id long, payload binary"),
+        block_bytes=8, threshold=0.5, max_posting=8, observation=obs4,
+    ).collect()
+    assert [(r.id_a, r.id_b) for r in got4] == [(1, 2)]
+    assert obs4.get["dropped_buckets"] >= 1
+    assert obs4.get["dropped_ids"] >= 12
 
 
 def _clusters_from_pairs(pairs_df, all_pairs_cols=("id_a", "id_b")):
@@ -616,7 +647,9 @@ def test_minhash_null_text_never_pairs_empty_string_still_does(spark):
     no content to compare and must not pair — neither within their group
     nor across groups — restoring the pre-collapse semantics where a null
     shingle array produced a filtered null Jaccard. Empty-STRING docs are
-    real (empty) content and pair as identical, as they always did."""
+    real (empty) content and pair as identical, as they always did.
+    NULL is its own content group: a real text equal to an in-band null
+    sentinel ('\\x00null') pairs with its copy, never with the nulls."""
     rows = [
         (0, None),
         (1, None),           # second null: would same-group-pair if not excluded
@@ -625,6 +658,8 @@ def test_minhash_null_text_never_pairs_empty_string_still_does(spark):
         (4, "   "),          # whitespace-only == empty token list, same shingle
         (5, "alpha beta gamma delta"),
         (6, "alpha beta gamma delta"),
+        (7, "\x00null"),     # real text equal to the old null sentinel
+        (8, "\x00null"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = {(r.id_a, r.id_b) for r in
@@ -632,18 +667,22 @@ def test_minhash_null_text_never_pairs_empty_string_still_does(spark):
     assert not any(0 in p or 1 in p for p in pairs), pairs  # nulls never pair
     assert (2, 3) in pairs and (2, 4) in pairs and (3, 4) in pairs
     assert (5, 6) in pairs
+    assert (7, 8) in pairs
 
     clusters = {r.doc_id: r.cluster for r in
                 D.minhash_dup_clusters(docs, "doc_id", "text", threshold=0.8).collect()}
     assert 0 not in clusters and 1 not in clusters
     assert clusters[2] == clusters[3] == clusters[4] == 2
     assert clusters[5] == clusters[6] == 5
+    assert clusters[7] == clusters[8] == 7
 
     # simhash's documented contract differs: null and empty both hash to
     # signature 0 — trivially identical empty content, Hamming 0
     spairs = {(r.id_a, r.id_b) for r in
               D.simhash_dedup_pairs(docs, "doc_id", "text", max_hamming=3).collect()}
     assert (0, 1) in spairs and (0, 2) in spairs and (2, 3) in spairs
+    assert (7, 8) in spairs
+    assert not {(0, 7), (0, 8), (1, 7), (1, 8)} & spairs
 
 
 def test_bm25_planted_relevance_ordering(spark):

@@ -3,6 +3,8 @@ net behind PLANS.md's audit claims. Plans are compiled (not executed),
 so this sweeps all queries cheaply.
 """
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -272,6 +274,51 @@ def test_aqe_skew_join_runtime_split(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# Executed-plan node counts of the near-dup queries at the test fixture
+# scale: (Exchange, BroadcastExchange, InMemoryTableScan,
+# BroadcastNestedLoopJoin, Python-UDF eval). Plans printed inside an
+# InMemoryRelation count too, so a moved or added pin shows up.
+NEAR_DUP_PLAN_SHAPES = {
+    "dedup_minhash_lsh": (30, 7, 14, 0, 6),
+    "dedup_simhash": (20, 6, 8, 0, 2),
+    "fingerprint_winnow_pairs": (110, 29, 47, 0, 18),
+    "winnow_clusters_documents": (40, 12, 18, 0, 7),
+    "dedup_components": (4, 0, 0, 0, 0),
+    "binary_near_dup_documents": (62, 8, 14, 0, 0),
+    "embedding_near_dup": (2, 2, 0, 0, 3),
+    "embedding_dup_clusters": (0, 0, 0, 0, 0),
+}
+
+_PLAN_NODE = re.compile(r"^[\s:+\-|]*(?:\*\(\d+\)\s*)?(\w+)")
+_PYTHON_EVAL = re.compile(r"^(?:ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|\w+InPandas)$")
+
+
+def _plan_shape(plan: str) -> tuple[int, ...]:
+    counts = dict.fromkeys(
+        ["Exchange", "BroadcastExchange", "InMemoryTableScan", "BroadcastNestedLoopJoin", "py"], 0
+    )
+    for line in plan.splitlines():
+        m = _PLAN_NODE.match(line)
+        if not m:
+            continue
+        node = m.group(1)
+        if node in counts:
+            counts[node] += 1
+        elif _PYTHON_EVAL.match(node):
+            counts["py"] += 1
+    return tuple(counts.values())
+
+
+def test_near_dup_plan_shapes(spark, sf_dir):
+    """The near-dup families share one skeleton (content collapse,
+    bucket-pair expansion, group-to-document expansion); its exchanges,
+    broadcasts, pinned scans and Python-UDF stages are pinned per query
+    so a refactor of the skeleton cannot silently add a shuffle or a
+    pin."""
+    got = {name: _plan_shape(_plan_of(spark, name, sf_dir)) for name in NEAR_DUP_PLAN_SHAPES}
+    assert got == NEAR_DUP_PLAN_SHAPES
 
 
 def test_prefix_order_is_the_driver_sample_contract():
