@@ -38,6 +38,7 @@ from bearly_spark.operators.rounding import (
     rational_micro,
     rational_round,
 )
+from bearly_spark.streaming.store import drain, write_batch
 
 
 def expectations_report(
@@ -118,8 +119,7 @@ def streaming_expectations(
 ):
     """The per-batch face of the validation gate: every micro-batch's
     expectations report lands under ``report_dir/batch=<id>`` —
-    idempotent via dynamic partition overwrite (the index family's
-    replay contract), so the report table is an append-only audit log
+    idempotent (the ``streaming.store`` replay contract), so the report table is an append-only audit log
     of data quality per ingest batch. Uniqueness here is WITHIN-batch
     (cross-batch uniqueness is a table-level invariant — run
     :func:`expectations_report` over the table, or enforce it
@@ -129,21 +129,9 @@ def streaming_expectations(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         rep = expectations_report(batch_df, row_rules, unique_keys)
-        (
-            rep.withColumn("batch", F.lit(int(batch_id)))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(report_dir)
-        )
+        write_batch(rep.coalesce(1), batch_id, report_dir)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(docs, checkpoint_dir, process)
 
 
 def _drift_terms() -> list[Column]:
@@ -358,8 +346,8 @@ def streaming_drift(
     shares computed ONCE at stream start from ``baseline`` and closed
     over — per-batch work is one map-only bucket assignment plus a
     B-row aggregate), and the per-batch drift report lands under
-    ``report_dir/batch=<id>`` — idempotent via dynamic partition
-    overwrite, so replays rewrite their own slice. The ML-ops
+    ``report_dir/batch=<id>`` — idempotent (the ``streaming.store``
+    replay contract), so replays rewrite their own slice. The ML-ops
     production shape: train-time distribution frozen, serving/ingest
     batches scored against it continuously.
 
@@ -420,21 +408,9 @@ def streaming_drift(
                 *_drift_terms(),
             )
         )
-        (
-            rep.withColumn("batch", F.lit(int(batch_id)))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(report_dir)
-        )
+        write_batch(rep.coalesce(1), batch_id, report_dir)
 
-    return (
-        data.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(data, checkpoint_dir, process)
 
 
 def winsorize(

@@ -30,6 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, Window
 
 from bearly_spark.operators.dedup import _bucket_pairs, connected_components
+from bearly_spark.streaming.store import drain, write_batch
 
 
 #: Driver-collect contract for the query-side ANN probes: these paths
@@ -1147,8 +1148,8 @@ def streaming_decontaminate(
     """Decontamination AT INGEST: every arriving micro-batch of vectors
     is scored against the (static, broadcastable) eval set with
     :func:`max_cosine_vs_set` and the per-vector verdicts land under
-    ``report_dir/batch=<id>`` — idempotent via dynamic partition
-    overwrite (the index family's replay contract), so the report table
+    ``report_dir/batch=<id>`` — idempotent (the ``streaming.store``
+    replay contract), so the report table
     is an append-only audit log of contamination per ingest batch and a
     replayed batch rewrites its own partition instead of duplicating.
 
@@ -1169,18 +1170,6 @@ def streaming_decontaminate(
         rep = batch_df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
             kernel, _COS_VS_SET_SCHEMA
         )
-        (
-            rep.withColumn("batch", F.lit(int(batch_id)))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(report_dir)
-        )
+        write_batch(rep.coalesce(1), batch_id, report_dir)
 
-    return (
-        vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(vectors, checkpoint_dir, process)

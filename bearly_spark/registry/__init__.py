@@ -122,14 +122,11 @@ PREFIX_ORDER = [
     "decontaminate_bm25_documents",
     "cluster_aware_split_documents",
     "decontaminate_embedding",
-    "cap_per_source_documents",
-    "negative_samples_documents",
     # clustering / mining tail
     "hier_prototypes_embeddings",
     "basket_rules_lineitem",
     # DQ block (zero driver coverage until now)
     "drift_report_orders",
-    "skew_report_lineitem",
     "standardize_lineitem",
     # ---- new this round (seat the round they ship) ----
     "bpe_merges_documents",
@@ -146,19 +143,13 @@ PREFIX_ORDER = [
     # cusum, top-k via topn_types_brand, broadcast joins via q5's plan
     # pin, outer joins via calendar_fill/scd2's outer shapes).
     "txlog_read_orders",
-    "txlog_time_travel_orders",
-    "txlog_skipping_orders",
     "txlog_compact_orders",
-    "txlog_changes_orders",
     "txlog_delete_orders",
     "txlog_merge_orders",
-    "txlog_dv_delete_orders",
     # tokenizer application + ANN quality eval + BPE packing capstone
     # (r12; slot accounting in the txlog comment above)
     "bpe_encode_documents",
     "ann_recall_embeddings",
-    "pack_bpe_documents",
-    "embedding_ann_sq8",
     # ---- re-certification: r01-only records (pre-strict-gate) ----
     "set_except_custkeys",
     # ---- r14 carry-over: emission paths rewritten in round 14. Slots
@@ -197,6 +188,23 @@ PREFIX_ORDER = [
     "dedup_components",
     "binary_near_dup_documents",
     "embedding_dup_clusters",
+    # ---- emission path changed: every ingest-time index writes, reads
+    # and compacts through one batch-partitioned store
+    # (streaming/store.py). Oldest last seat first. Slots from seats
+    # green in r12-r14 (tools/seat_history.py): txlog_time_travel,
+    # txlog_skipping, txlog_changes, txlog_dv_delete, pack_bpe,
+    # embedding_ann_sq8, negative_samples, skew_report and
+    # cap_per_source; each family keeps a seat. semdedup_index_query,
+    # which rides the same change, already holds a seat above.
+    "ivfpq_index_query",
+    "ann_index_query",
+    "bm25_index_search_documents",
+    "ivf_index_query",
+    "cms_index_query",
+    "ivfpq_residual_query",
+    "dedup_index_query",
+    "semdedup_hier_index_query",
+    "semdedup_index_stats_query",
     # (lang_id_distribution and rollup_orders also wait for r13 — the
     # text family holds seven greener r11/r12 seats, and rollup held an
     # r01 green on an unchanged code path; their slots went to

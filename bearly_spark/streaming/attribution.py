@@ -14,8 +14,8 @@ Each micro-batch:
    events ∪ batch) — intra-batch touches win over carried state
    exactly as they would in one global stream,
 3. writes attribution rows under ``attrib/batch=<id>`` and the new
-   state under ``state/batch=<id>`` (dynamic partition overwrite —
-   replays rewrite their own slices byte-for-byte).
+   state under ``state/batch=<id>`` (``streaming.store`` batch writes
+   — replays rewrite their own slices byte-for-byte).
 
 Ordered ingest (ts monotone across batches — the Kafka/file-drop
 shape) makes the union of per-batch outputs EQUAL the batch-mode
@@ -31,13 +31,10 @@ prune them with any retention sweep; the lever is noted, not silent.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.utils import AnalysisException
 
-from bearly_spark.sources.tables import read_parquet
+from bearly_spark.streaming.store import drain, read_batches, write_batch
 
 
 def _latest_state(
@@ -45,14 +42,9 @@ def _latest_state(
 ) -> DataFrame:
     """Latest state snapshot with batch id < ``before_batch`` (empty
     frame when none — first batch, or replay of the first)."""
-    if not os.path.isdir(state_dir):
+    df = read_batches(spark, state_dir)
+    if df is None:
         return empty
-    try:
-        df = read_parquet(spark, state_dir)
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return empty
-        raise
     df = df.filter(F.col("batch") < int(before_batch))
     mx = df.agg(F.max("batch")).collect()[0][0]
     if mx is None:
@@ -122,14 +114,7 @@ def streaming_attribution(
             .where(F.col(type_col) == conversion_type)
             .drop(type_col)
         )
-        (
-            attributed.withColumn("batch", F.lit(int(batch_id)))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(attrib_dir)
-        )
+        write_batch(attributed.coalesce(1), batch_id, attrib_dir)
 
         # new state: latest touch per key over (old state ∪ batch touches)
         touches = batch_df.where(is_touch).select(
@@ -146,18 +131,6 @@ def streaming_attribution(
             .where(F.col("rn") == 1)
             .drop("rn")
         )
-        (
-            new_state.withColumn("batch", F.lit(int(batch_id)))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(state_dir)
-        )
+        write_batch(new_state.coalesce(1), batch_id, state_dir)
 
-    return (
-        data.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(data, checkpoint_dir, process)

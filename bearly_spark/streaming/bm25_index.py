@@ -26,21 +26,16 @@ tiny docstats aggregate — so the registry entry shares the batch
 path's DuckDB twin verbatim, and an index-vs-inline equivalence test
 pins the two paths row-for-row.
 
-Maintenance model (the family contract): ``foreachBatch`` upserts are
-idempotent per batch id via dynamic partition overwrite; readers
-dedup (id, term)/(id) so the mid-compaction crash window is harmless;
-``compact_bm25_index`` folds batch partitions into a term-sorted,
-bloom-filtered base with row-group-bounded files. Document ids are
-APPEND-ONLY (one indexing batch per id — the same contract as the ANN
-and dedup indexes); revising a document's text is table maintenance:
+Maintenance model: the ``streaming.store`` contract (replay-idempotent
+batch writes, readers that dedup (id, term)/(id) so the compaction
+crash window is harmless, and a compaction that folds batch partitions
+into a term-sorted, bloom-filtered base). Document ids are APPEND-ONLY
+(one indexing batch per id — the same contract as the ANN and dedup
+indexes); revising a document's text is table maintenance:
 ``maintenance.merge_into`` on both datasets by id, or reindex.
 """
 
 from __future__ import annotations
-
-import math
-import shutil
-from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -48,11 +43,16 @@ from pyspark.sql.streaming import StreamingQuery
 
 from bearly_spark.operators.text import word_tokens
 from bearly_spark.sources.tables import read_parquet
-from bearly_spark.streaming.dedup_index import _pruned_scan
+from bearly_spark.streaming.store import Dataset, compact, drain, pruned_scan
 
-BASE_BATCH_ID = -1
-
-_POSTINGS_WRITE_OPTS = {"parquet.bloom.filter.enabled#term": "true"}
+_POSTINGS = Dataset(
+    "postings",
+    ("id", "term", "tf"),
+    keys=("id", "term"),
+    order=("term", "id"),
+    opts={"parquet.bloom.filter.enabled#term": "true"},
+)
+_DOCSTATS = Dataset("docstats", ("id", "dl"), keys=("id",), order=("id",))
 
 
 def upsert_bm25_batch(
@@ -69,32 +69,23 @@ def upsert_bm25_batch(
         F.col(id_col).alias("id"),
         F.explode(F.transform(word_tokens(F.col(text_col)), F.lower)).alias("term"),
     )
-    postings = (
+    _POSTINGS.write(
         toks.groupBy("id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
         .coalesce(1)
-        .sortWithinPartitions("term")
-        .withColumn("batch", F.lit(int(batch_id)))
+        .sortWithinPartitions("term"),
+        batch_id,
+        index_dir,
     )
-    w = postings.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    for k, v in _POSTINGS_WRITE_OPTS.items():
-        w = w.option(k, v)
-    w.partitionBy("batch").parquet(f"{index_dir}/postings")
-
     dl = toks.groupBy("id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = (
+    _DOCSTATS.write(
         batch_df.select(F.col(id_col).alias("id"))
         .dropDuplicates(["id"])
         .join(dl, "id", "left")
         .select("id", F.coalesce(F.col("dl"), F.lit(0)).alias("dl"))
-        .coalesce(1)
-        .withColumn("batch", F.lit(int(batch_id)))
-    )
-    (
-        stats.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{index_dir}/docstats")
+        .coalesce(1),
+        batch_id,
+        index_dir,
     )
 
 
@@ -106,17 +97,12 @@ def streaming_bm25_index(
     text_col: str = "text",
 ) -> StreamingQuery:
     """Maintain the inverted index at ingest; availableNow drains the
-    backlog and stops (swap for a continuous trigger in production)."""
+    backlog and stops."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         upsert_bm25_batch(batch_df, batch_id, index_dir, id_col, text_col)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(docs, checkpoint_dir, process)
 
 
 def bm25_query_index(
@@ -146,7 +132,7 @@ def bm25_query_index(
 
     post = read_parquet(spark, f"{index_dir}/postings").select("id", "term", "tf")
     if terms and len(terms) <= scan_prune_max_keys:
-        post = _pruned_scan(post, "term", terms)
+        post = pruned_scan(post, "term", terms)
     else:
         post = post.filter(F.col("term").isin(terms))
     tf = post.dropDuplicates(["id", "term"])  # crash-window duplicate tolerance
@@ -187,75 +173,9 @@ def bm25_query_index(
     )
 
 
-def compact_bm25_index(
-    spark: SparkSession, index_dir: str, row_group_bytes: int = 32 * 1024 * 1024
-) -> int:
+def compact_bm25_index(spark: SparkSession, index_dir: str) -> int:
     """Fold all batch partitions of both datasets into one term-sorted
     (postings) / id-sorted (docstats) base each, bounded row groups +
-    blooms, write → atomic rename → delete (the family's sequencing; a
-    crash mid-sequence leaves duplicates the query path dedups).
-    Returns the number of postings batch dirs folded."""
-    root = Path(index_dir)
-    post_root = root / "postings"
-    if not post_root.is_dir():
-        return 0
-    batch_dirs = [
-        d for d in post_root.iterdir() if d.is_dir() and d.name.startswith("batch=")
-    ]
-    if len(batch_dirs) <= 1:
-        return 0
-    batch_ids = [int(d.name.split("=", 1)[1]) for d in batch_dirs]
-    new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
-
-    _ROWS_PER_FILE = 8_000_000
-    post_df = (
-        read_parquet(spark, str(post_root))
-        .select("id", "term", "tf")
-        .dropDuplicates(["id", "term"])
-        .localCheckpoint(eager=True)
-    )
-    stats_df = (
-        read_parquet(spark, str(root / "docstats"))
-        .select("id", "dl")
-        .dropDuplicates(["id"])
-        .localCheckpoint(eager=True)
-    )
-    n_post_files = max(1, math.ceil(post_df.count() / _ROWS_PER_FILE))
-    n_stat_files = max(1, math.ceil(stats_df.count() / _ROWS_PER_FILE))
-    for name, df, opts in (
-        (
-            "postings",
-            (
-                post_df.coalesce(1)
-                if n_post_files <= 1
-                else post_df.repartitionByRange(n_post_files, "term", "id")
-            ).sortWithinPartitions("term", "id"),
-            _POSTINGS_WRITE_OPTS,
-        ),
-        (
-            "docstats",
-            (
-                stats_df.coalesce(1)
-                if n_stat_files <= 1
-                else stats_df.repartitionByRange(n_stat_files, "id")
-            ).sortWithinPartitions("id"),
-            {},
-        ),
-    ):
-        ds_root = root / name
-        tmp = ds_root / ".compacting"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        old = [
-            d for d in ds_root.iterdir() if d.is_dir() and d.name.startswith("batch=")
-        ]
-        writer = df.write.mode("overwrite").option(
-            "parquet.block.size", str(int(row_group_bytes))
-        )
-        for kk, vv in opts.items():
-            writer = writer.option(kk, vv)
-        writer.parquet(str(tmp))
-        tmp.rename(ds_root / f"batch={new_base}")
-        for d in old:
-            shutil.rmtree(d)
-    return len(batch_dirs)
+    blooms (``store.compact``). Returns the number of postings batch
+    dirs folded."""
+    return compact(spark, index_dir, [_POSTINGS, _DOCSTATS])

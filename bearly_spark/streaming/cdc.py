@@ -15,8 +15,8 @@ Replay safety (``foreachBatch`` is at-least-once): applying the same
 change batch twice is a NO-OP by construction — the second apply
 replaces each key's row with the identical row (upserts) or deletes an
 already-absent key — so no batch-id bookkeeping is needed, unlike the
-append-shaped index sinks (``ann_index``/``dedup_index``), whose
-idempotency comes from dynamic partition overwrite instead. A crash
+append-shaped index sinks, whose idempotency comes from the
+``streaming.store`` batch write instead. A crash
 mid-apply is covered by the atomic snapshot swap: the table is always
 exactly the pre-batch or post-batch state, never a mix.
 
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 
 from bearly_spark.operators.maintenance import _cow_rewrite
+from bearly_spark.streaming.store import drain
 
 
 def collapse_cdc_batch(
@@ -90,8 +91,7 @@ def cdc_apply_stream(
 ) -> StreamingQuery:
     """Start the CDC apply stream: per micro-batch, collapse the batch's
     change records and fold them into the parquet table at
-    ``table_path``. ``availableNow`` drains the backlog and stops (swap
-    for a continuous trigger in production)."""
+    ``table_path``. ``availableNow`` drains the backlog and stops."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.isEmpty():
@@ -105,12 +105,7 @@ def cdc_apply_stream(
                 partition_cols,
             )
 
-    return (
-        changes.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(changes, checkpoint_dir, process)
 
 
 def scd2_apply_stream(
@@ -145,9 +140,4 @@ def scd2_apply_stream(
                 partition_cols=partition_cols,
             )
 
-    return (
-        changes.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(changes, checkpoint_dir, process)

@@ -10,11 +10,9 @@ the near-dup pairs between the batch and everything indexed before it
 (plus within-batch pairs), so the union of the per-batch outputs equals
 the batch-mode answer over the full corpus (equivalence-tested).
 
-Same durability design as ``streaming.ann_index`` (the LSH ANN index):
+Replay, compaction and crash-window rules are the ``streaming.store``
+contract. Specific to this index:
 
-- ``foreachBatch`` is **at-least-once**, so every write is idempotent
-  per ``batch_id`` via dynamic partition overwrite — a replayed batch
-  rewrites exactly its own partitions;
 - the DETECT step excludes the current batch id from its index read
   (``batch <> <id>`` prunes whole partition directories), so a replay
   after a crash-after-upsert recomputes the identical dup set instead
@@ -58,13 +56,8 @@ batch path's null-never-pairs rule, enforced by filtering).
 
 from __future__ import annotations
 
-import math
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
 import pyspark.sql.functions as F
 
@@ -73,55 +66,58 @@ from bearly_spark.operators.dedup import (
     minhash_band_structs,
     minhash_signature,
 )
-from bearly_spark.sources.tables import read_parquet
-
-#: Write options applied to every ``bands/`` write (per-batch upserts
-#: and compaction): a bloom filter on the bucket key lets a pushed
-#: bucket-IN probe filter skip row groups even in unsorted per-batch
-#: dirs; compaction additionally sorts by bucket so min/max stats prune.
-_BANDS_WRITE_OPTS = {"parquet.bloom.filter.enabled#bucket": "true"}
-
-#: Max keys per pruned index scan: Spark pushes an IN filter to
-#: parquet as a nested OR chain, whose recursive evaluation overflows
-#: the task stack past ~2k values (measured in this container; 1024 is
-#: safe). 512 leaves 4x headroom; larger probe sets scan in chunks.
-_PRUNE_CHUNK = 512
+from bearly_spark.streaming.store import (
+    Dataset,
+    compact,
+    drain,
+    pruned_scan,
+    read_batches,
+    write_batch,
+)
 
 
-def _pruned_scan(df: DataFrame, col: str, keys: list) -> DataFrame:
-    """``df`` restricted to ``col IN keys``, scanned in disjoint
-    ``_PRUNE_CHUNK``-key unions so every chunk's IN filter is pushed to
-    parquet (row-group skip via stats/bloom) without the deep-OR stack
-    overflow a single huge pushed IN triggers. Chunks partition the key
-    list and the filter is an equality, so no row matches two chunks —
-    the union is duplicate-free by construction.
-
-    Raises the session's parquet IN-pushdown threshold to the chunk
-    size when below it (monotonic — the conf only selects pushdown
-    strategy, never results): past the threshold Spark degrades a
-    pushed IN to a min/max range, which random band/bucket keys span
-    entirely, silently disabling the skip."""
-    spark = df.sparkSession
-    thr = int(spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold", "10"))
-    if _PRUNE_CHUNK > thr:
-        spark.conf.set(
-            "spark.sql.parquet.pushdown.inFilterThreshold", str(_PRUNE_CHUNK + 1)
-        )
-    chunks = [keys[i : i + _PRUNE_CHUNK] for i in range(0, len(keys), _PRUNE_CHUNK)]
-    out = df.filter(F.col(col).isin(chunks[0]))
-    for c in chunks[1:]:
-        out = out.unionByName(df.filter(F.col(col).isin(c)))
-    return out
-
-
-def _sets_write_opts(id_col: str) -> dict[str, str]:
-    """Bloom filters on the two keys detect prunes the sets scan by:
-    candidate-pair ids (verify join) and content hashes (exact-copy
-    channel)."""
-    return {
-        f"parquet.bloom.filter.enabled#{id_col}": "true",
-        "parquet.bloom.filter.enabled#chash": "true",
-    }
+def _datasets(id_col: str) -> list[Dataset]:
+    """The index's three datasets. A bloom filter on the bucket key lets
+    a pushed bucket-IN probe filter skip row groups even in unsorted
+    per-batch dirs (compaction additionally sorts by bucket so min/max
+    stats prune). The sets blooms are on the two keys detect prunes the
+    sets scan by: candidate-pair ids (verify join) and content hashes
+    (exact-copy channel). ``counts`` compacts from the bands and sets
+    snapshots: exact per-bucket row counts and distinct-content HLLs."""
+    return [
+        Dataset(
+            "bands",
+            (id_col, "band", "bucket"),
+            keys=(id_col, "band", "bucket"),
+            parts=("batch", "band"),
+            order=("bucket",),
+            opts={"parquet.bloom.filter.enabled#bucket": "true"},
+        ),
+        Dataset(
+            "sets",
+            (id_col, "hs", "chash"),
+            keys=(id_col,),
+            order=(id_col,),
+            opts={
+                f"parquet.bloom.filter.enabled#{id_col}": "true",
+                "parquet.bloom.filter.enabled#chash": "true",
+            },
+        ),
+        Dataset(
+            "counts",
+            ("band", "bucket", "n", "chll"),
+            order=("band", "bucket"),
+            sort=False,
+            derive=lambda s: (
+                s["bands"].join(s["sets"].select(id_col, "chash"), id_col)
+                .groupBy("band", "bucket")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.hll_sketch_agg("chash").alias("chll"),
+                )
+            ),
+        ),
+    ]
 
 
 def minhash_band_table(
@@ -168,90 +164,41 @@ def upsert_dedup_index_batch(
     shingle_n: int = 3,
 ) -> None:
     """Idempotently index one micro-batch: bands (slim), shingle sets +
-    content hash, and bucket-count/HLL deltas, each dynamic-partition-
-    overwritten under ``batch=<id>`` so an at-least-once replay rewrites
-    its own slice.
-
-    An EMPTY banding table (every doc in the batch had null text) writes
-    NOTHING: Spark's dynamic overwrite of an empty frame creates a
-    data-less dataset root whose later ``spark.read.parquet`` throws
-    UNABLE_TO_INFER_SCHEMA on every subsequent batch, permanently
-    wedging the stream (round-4 ADVICE, verified empirically). Skipping
-    the writes is idempotent — a replayed empty batch skips again."""
+    content hash, and bucket-count/HLL deltas, each under ``batch=<id>``
+    so an at-least-once replay rewrites its own slice. An EMPTY banding
+    table (every doc in the batch had null text) writes NOTHING (the
+    store's empty-write rule)."""
+    bands_ds, sets_ds, counts_ds = _datasets(id_col)
     bt = minhash_band_table(
         batch_df, id_col, text_col, num_hashes, bands, shingle_n
     ).persist()
     try:
         if bt.count() == 0:  # pin: three writers below would each recompute the UDF
             return
-        # ONE file per (batch, band) dir, not one per shuffle partition:
-        # a micro-batch left at session parallelism writes ~32 files
-        # into each of 16 band dirs, and after a few hundred batches the
-        # detect scan is a file-listing storm (measured: 17s -> 186s
-        # per-batch detect by batch 7 of the dupmass probe). Micro-
-        # batches are small by definition; the repartition is one tiny
-        # shuffle and compaction keeps the long-run file count flat.
-        slim = (
+        bands_ds.write(
             bt.select(id_col, "band", "bucket")
             .repartition(bands, "band")
-            .sortWithinPartitions("band", "bucket")
-            .withColumn("batch", F.lit(int(batch_id)))
+            .sortWithinPartitions("band", "bucket"),
+            batch_id,
+            index_dir,
         )
-        w = slim.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        for k, v in _BANDS_WRITE_OPTS.items():
-            w = w.option(k, v)
-        w.partitionBy("batch", "band").parquet(f"{index_dir}/bands")
-        sets = (
-            bt.select(id_col, "hs", "chash")
-            .dropDuplicates([id_col])
-            .coalesce(1)
-            .withColumn("batch", F.lit(int(batch_id)))
+        sets_ds.write(
+            bt.select(id_col, "hs", "chash").dropDuplicates([id_col]).coalesce(1),
+            batch_id,
+            index_dir,
         )
-        sw = sets.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        for k, v in _sets_write_opts(id_col).items():
-            sw = sw.option(k, v)
-        sw.partitionBy("batch").parquet(f"{index_dir}/sets")
-        counts = (
+        counts_ds.write(
             bt.groupBy("band", "bucket")
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.hll_sketch_agg("chash").alias("chll"),
             )
-            .coalesce(1)
-            .withColumn("batch", F.lit(int(batch_id)))
-        )
-        (
-            counts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(f"{index_dir}/counts")
+            .coalesce(1),
+            batch_id,
+            index_dir,
         )
     finally:
         bt.unpersist()
-
-
-def _read_part(spark: SparkSession, path: str, exclude_batch: int | None, empty: DataFrame):
-    """Read one index dataset; a missing directory (no batch indexed
-    yet) OR a data-less one (root created but no parquet under any
-    ``batch=`` dir — e.g. an index written by a pre-round-5 build whose
-    empty batches still wrote) reads as an empty frame with the right
-    schema (derived from the current batch's own plan), so the very
-    first micro-batch flows through the same detect path as every
-    other."""
-    import os
-
-    if not os.path.isdir(path):
-        return empty
-    try:
-        df = read_parquet(spark, path)
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return empty
-        raise
-    if exclude_batch is not None:
-        # batch is a partition column: this prunes whole directories
-        df = df.filter(F.col("batch") != int(exclude_batch))
-    return df
 
 
 def near_dups_against_index(
@@ -293,7 +240,7 @@ def near_dups_against_index(
     scan as an IN filter: with the bloom filter every ``bands/`` write
     carries and the bucket-sorted layout compaction produces, parquet
     skips whole row groups and the detect scan reads Θ(buckets probed)
-    bytes, not Θ(index). The scan runs in ``_PRUNE_CHUNK``-key chunks
+    bytes, not Θ(index). The scan runs in ``store.pruned_scan`` chunks
     (disjoint, unioned) because a pushed IN becomes a nested OR chain
     that stack-overflows past ~2k values, and the session's parquet
     IN-pushdown threshold is raised to the chunk size (monotonic; it
@@ -322,11 +269,11 @@ def near_dups_against_index(
     bc = nb.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("n"), F.hll_sketch_agg("chash").alias("chll")
     )
-    ib = _read_part(
-        spark, f"{index_dir}/bands", exclude_batch, nb_slim.limit(0)
+    ib = read_batches(
+        spark, f"{index_dir}/bands", nb_slim.limit(0), exclude_batch
     ).select(id_col, "band", "bucket")
 
-    ic = _read_part(spark, f"{index_dir}/counts", exclude_batch, bc.limit(0)).select(
+    ic = read_batches(spark, f"{index_dir}/counts", bc.limit(0), exclude_batch).select(
         "band", "bucket", "n", "chll"
     )
     over = (
@@ -352,7 +299,7 @@ def near_dups_against_index(
             # pushable IN; cross-band key collisions are
             # md5-improbable and harmless (the join still matches
             # on band AND bucket)
-            ib = _pruned_scan(ib, "bucket", keys)
+            ib = pruned_scan(ib, "bucket", keys)
     cand = (
         ib.unionByName(nb_slim)
         .withColumnRenamed(id_col, "_other")
@@ -366,7 +313,7 @@ def near_dups_against_index(
     )
 
     nsets = nb.select(id_col, "hs", "chash").dropDuplicates([id_col])
-    isets = _read_part(spark, f"{index_dir}/sets", exclude_batch, nsets.limit(0)).select(
+    isets = read_batches(spark, f"{index_dir}/sets", nsets.limit(0), exclude_batch).select(
         id_col, "hs", "chash"
     )
     # The sets dataset is the BYTES-dominant index scan (hs arrays;
@@ -395,7 +342,7 @@ def near_dups_against_index(
         ]
         if len(cand_ids) <= scan_prune_max_keys:
             isets_verify = (
-                _pruned_scan(isets, id_col, cand_ids)
+                pruned_scan(isets, id_col, cand_ids)
                 if cand_ids
                 else isets.limit(0)
             )
@@ -407,7 +354,7 @@ def near_dups_against_index(
             .collect()
         ]
         if 0 < len(bchashes) <= scan_prune_max_keys:
-            isets_exact = _pruned_scan(isets, "chash", bchashes)
+            isets_exact = pruned_scan(isets, "chash", bchashes)
 
     sets_v = isets_verify.unionByName(nsets)
     sa = sets_v.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"))
@@ -465,7 +412,7 @@ def dedup_index_saturation_report(
     same contract as ``similarity.banding_saturation_report`` for the
     embedding-LSH family. Cost: one scan of the tiny counts dataset."""
     empty = spark.createDataFrame([], "band int, bucket string, n long, chll binary")
-    ic = _read_part(spark, f"{index_dir}/counts", None, empty).select(
+    ic = read_batches(spark, f"{index_dir}/counts", empty).select(
         "band", "bucket", "chll"
     )
     per = ic.groupBy("band", "bucket").agg(
@@ -497,7 +444,7 @@ def streaming_dedup_index(
     dups of the batch against everything indexed before it (writing
     (id_a, id_b, jaccard) under ``dups_dir/batch=<id>`` — idempotent),
     then UPSERT the batch into the index. availableNow drains the
-    backlog and stops (swap for a continuous trigger in production)."""
+    backlog and stops."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -514,160 +461,31 @@ def streaming_dedup_index(
             max_bucket,
             exclude_batch=batch_id,
         )
-        (
-            dups.withColumn("batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(dups_dir)
-        )
+        write_batch(dups, batch_id, dups_dir)
         upsert_dedup_index_batch(
             batch_df, batch_id, index_dir, id_col, text_col, num_hashes, bands, shingle_n
         )
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(docs, checkpoint_dir, process)
 
 
-#: First (largest) base-partition id for compacted rows; successive
-#: compactions count DOWN (-1, -2, ...). Micro-batch ids are >= 0, so a
-#: base id never collides with a replayed batch (same scheme as
-#: ``ann_index.BASE_BATCH_ID``).
-BASE_BATCH_ID = -1
-
-
-def compact_dedup_index(
-    spark: SparkSession, index_dir: str, row_group_bytes: int = 32 * 1024 * 1024
-) -> int:
+def compact_dedup_index(spark: SparkSession, index_dir: str) -> int:
     """Fold every batch partition of all three index datasets into one
-    new base partition each, then drop the folded directories. Returns
-    the number of batch partitions folded (counted on ``bands/``).
+    new base partition each (``store.compact``), then drop the folded
+    directories. Returns the number of batch partitions folded (counted
+    on ``bands/``).
 
     The compacted ``bands/`` base is SORTED by bucket within each band
-    partition and written in ``row_group_bytes`` row groups: together
-    with the bloom filter every bands write carries, a detect probe's
-    pushed bucket-IN filter then skips non-probed row groups via
-    min/max stats — the lever that keeps the per-batch detect scan
-    Θ(buckets probed) instead of Θ(index) as the index grows (round-4
-    verdict #2; measured: PLANS.md "Round-4 dedup-at-ingest probe").
-
-    Same crash-safety sequencing as ``ann_index.compact_lsh_index``:
-    each dataset's snapshot is written to a hidden ``.compacting`` dir
-    (invisible to Spark's file listing), atomically renamed to
-    ``batch=<next base id>``, and only then are the folded dirs removed.
-    A crash mid-sequence leaves duplicates on disk, never loss — and
-    every reader of this index is duplicate-tolerant: the candidate
-    join dedups (id_a, id_b) pairs, the sets read dedups on doc id, and
-    ``counts/`` holds HLL sketches whose union is duplicate-invariant
-    by construction (a stale copy of a batch re-unions the same content
-    hashes — cap totals stay EXACT through the crash window). Both
-    snapshots that feed later writes are ``localCheckpoint``ed eagerly
-    so no lineage references the batch dirs deleted mid-sequence
-    (round-4 ADVICE: a cache eviction between the bands delete and the
-    counts write recomputed from deleted paths)."""
-    root = Path(index_dir)
-    bands_root = root / "bands"
-    if not bands_root.is_dir():
+    partition: together with the bloom filter every bands write carries,
+    a detect probe's pushed bucket-IN filter then skips non-probed row
+    groups via min/max stats. Every reader of this index is
+    duplicate-tolerant through the crash window: the candidate join
+    dedups (id_a, id_b) pairs, the sets read dedups on doc id, and
+    ``counts/`` holds HLL sketches whose union is duplicate-invariant by
+    construction (a stale copy of a batch re-unions the same content
+    hashes — cap totals stay EXACT through the crash window)."""
+    live = read_batches(spark, f"{index_dir}/bands")
+    if live is None:
         return 0
-    batch_dirs = [
-        d for d in bands_root.iterdir() if d.is_dir() and d.name.startswith("batch=")
-    ]
-    if len(batch_dirs) <= 1:
-        return 0
-    batch_ids = [int(d.name.split("=", 1)[1]) for d in batch_dirs]
-    new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
-
-    id_col = [
-        c for c in read_parquet(spark, str(bands_root)).columns if c not in ("band", "bucket", "batch")
-    ][0]
-    # Eager localCheckpoints sever lineage from the directories the loop
-    # below deletes: a lazy/persisted plan would re-list them on cache
-    # eviction and fail the counts write mid-sequence.
-    bands_df = (
-        read_parquet(spark, str(bands_root))
-        .select(id_col, "band", "bucket")
-        .dropDuplicates([id_col, "band", "bucket"])
-        .localCheckpoint(eager=True)
-    )
-    chash_map = (
-        read_parquet(spark, str(root / "sets"))
-        .select(id_col, "hs", "chash")
-        .dropDuplicates([id_col])
-        .localCheckpoint(eager=True)
-    )
-    n_bands = max(bands_df.select("band").distinct().count(), 1)
-    # File counts scale with ROW counts (both snapshots are already
-    # materialized — the counts are metadata reads), so a 100 TB index
-    # compacts into bounded-size files instead of one monolith per
-    # dataset. repartitionByRange keeps a global (band, bucket) /
-    # (id) sort across files, so every file covers a CONTIGUOUS key
-    # range with tight min/max stats — the pruned-scan layout at any
-    # file count — and partitionBy("band") still splits band dirs (a
-    # range partition spanning two bands just writes into both).
-    _ROWS_PER_FILE = 4_000_000
-    n_band_files = max(n_bands, math.ceil(bands_df.count() / _ROWS_PER_FILE))
-    n_sets_files = max(1, math.ceil(chash_map.count() / _ROWS_PER_FILE))
-    counts_df = (
-        bands_df.join(chash_map.select(id_col, "chash"), id_col)
-        .groupBy("band", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.hll_sketch_agg("chash").alias("chll"),
-        )
-    )
-
-    bands_shaped = (
-        # one file per band dir while a band fits in one file;
-        # range-split past that (ranges then subdivide within bands)
-        bands_df.repartition(n_bands, "band")
-        if n_band_files <= n_bands
-        else bands_df.repartitionByRange(n_band_files, "band", "bucket")
-    )
-    for name, df, part_cols in (
-        (
-            "bands",
-            bands_shaped.sortWithinPartitions("band", "bucket"),
-            ["band"],
-        ),
-        (
-            "sets",
-            (
-                chash_map.coalesce(1)
-                if n_sets_files <= 1
-                else chash_map.repartitionByRange(n_sets_files, id_col)
-            ).sortWithinPartitions(id_col),
-            [],
-        ),
-        (
-            "counts",
-            counts_df.repartitionByRange(max(1, n_band_files // n_bands), "band", "bucket"),
-            [],
-        ),
-    ):
-        ds_root = root / name
-        tmp = ds_root / ".compacting"
-        if tmp.exists():
-            shutil.rmtree(tmp)  # stale from a crash; re-derivable
-        old = [
-            d for d in ds_root.iterdir() if d.is_dir() and d.name.startswith("batch=")
-        ]
-        writer = df.write.mode("overwrite")
-        if name == "bands":
-            writer = writer.option("parquet.block.size", str(int(row_group_bytes)))
-            for k, v in _BANDS_WRITE_OPTS.items():
-                writer = writer.option(k, v)
-        if name == "sets":
-            writer = writer.option("parquet.block.size", str(int(row_group_bytes)))
-            for k, v in _sets_write_opts(id_col).items():
-                writer = writer.option(k, v)
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(str(tmp))
-        tmp.rename(ds_root / f"batch={new_base}")
-        for d in old:
-            shutil.rmtree(d)
-    return len(batch_dirs)
+    id_col = [c for c in live.columns if c not in ("band", "bucket", "batch")][0]
+    return compact(spark, index_dir, _datasets(id_col))

@@ -17,18 +17,11 @@ build time — that is what makes at-ingest upserts possible (a new
 micro-batch is assigned against the stored centroids, no global
 re-fit) — and a corpus that drifts far from the fitted distribution
 degrades recall, not correctness. The remedy is a periodic
-``build_ivf_index`` refit-and-rebuild, which is why the index keeps
-the same batch-partitioned, idempotent, crash-safe-compaction layout
-as the other two indexes:
-
-- ``foreachBatch`` is at-least-once → every upsert is dynamic
-  partition overwrite under ``batch=<id>`` (a replay rewrites exactly
-  its own slice);
-- queries dedup candidates at the (q_id, c_id) level, so the
-  mid-compaction duplicate window is harmless;
-- compaction folds batch partitions into a ``batch=<base>`` dir with
-  file counts scaled to row counts, then drops the folded dirs
-  (write → atomic rename → delete, same sequencing as the siblings).
+``build_ivf_index`` refit-and-rebuild. Between rebuilds the index keeps
+the ``streaming.store`` contract: replay-idempotent batch writes,
+queries that dedup candidates at the (q_id, c_id) level (so the
+compaction crash window is harmless), and compaction into a
+``batch=<base>`` dir with file counts scaled to row counts.
 
 Layout under ``index_dir``:
 - ``cells/`` (batch, cell) -> (id, vec): the index proper;
@@ -39,8 +32,6 @@ Layout under ``index_dir``:
 from __future__ import annotations
 
 import math
-import shutil
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -59,11 +50,32 @@ from bearly_spark.operators.similarity import (
     make_cosine_udf,
 )
 from bearly_spark.sources.tables import read_parquet
+from bearly_spark.streaming.store import (
+    BASE_BATCH_ID,
+    ROWS_PER_FILE,
+    Dataset,
+    compact,
+    drain,
+    pruned_scan,
+)
 
-#: Compacted-base id scheme shared with the sibling indexes.
-BASE_BATCH_ID = -1
-
-_ROWS_PER_FILE = 4_000_000
+#: cells/: each id's vector (IVF) or PQ codes (IVF-PQ), partitioned by
+#: coarse cell under each batch.
+_IVF_CELLS = Dataset(
+    "cells",
+    ("id", "vec", "cell"),
+    keys=("id", "cell"),
+    parts=("batch", "cell"),
+    order=("id",),
+    sort=False,
+)
+_PQ_CELLS = _IVF_CELLS._replace(cols=("id", "codes", "cell"))
+#: IVF-PQ's raw vectors, id-sorted with an id bloom filter so the
+#: rerank read is a pruned point-lookup scan.
+_VECS = Dataset(
+    "vecs", ("id", "vec"), keys=("id",), order=("id",),
+    opts={"parquet.bloom.filter.enabled#id": "true"},
+)
 
 
 #: Each centroid/codebook/meta read is a full Spark job for a few KB —
@@ -146,23 +158,18 @@ def _write_cells(
 ) -> None:
     n_cells = len(C)
     cell_udf = make_cell_assign_udf(C)
-    assigned = (
+    _IVF_CELLS.write(
         df.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("vec"),
             cell_udf(F.col(vec_col)).alias("cell"),
         )
-        # bounded files per cell dir (the sibling indexes' hygiene rule):
-        # micro-batches and fixture-scale loads get one file per touched
-        # cell; hash partitioning by cell keeps each task writing few dirs
-        .repartition(max(1, min(n_cells, 64)), "cell")
-        .withColumn("batch", F.lit(int(batch_id)))
-    )
-    (
-        assigned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cell")
-        .parquet(f"{index_dir}/cells")
+        # bounded files per cell dir: micro-batches and fixture-scale
+        # loads get one file per touched cell; hash partitioning by cell
+        # keeps each task writing few dirs
+        .repartition(max(1, min(n_cells, 64)), "cell"),
+        batch_id,
+        index_dir,
     )
 
 
@@ -195,12 +202,7 @@ def streaming_ivf_index(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         upsert_ivf_batch(batch_df, batch_id, index_dir, id_col, vec_col)
 
-    return (
-        vectors.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(vectors, checkpoint_dir, upsert)
 
 
 def ivf_index_query(
@@ -269,40 +271,9 @@ def ivf_index_query(
 
 def compact_ivf_index(spark: SparkSession, index_dir: str) -> int:
     """Fold every ``cells/`` batch partition into one new base, file
-    counts scaled to rows (bounded-size files at any scale), then drop
-    the folded dirs — the siblings' write → atomic-rename → delete
-    sequencing, with the same crash posture: a crash mid-sequence
-    leaves duplicates the query path dedups. Returns folded dir count."""
-    root = Path(index_dir) / "cells"
-    if not root.is_dir():
-        return 0
-    batch_dirs = [d for d in root.iterdir() if d.is_dir() and d.name.startswith("batch=")]
-    if len(batch_dirs) <= 1:
-        return 0
-    batch_ids = [int(d.name.split("=", 1)[1]) for d in batch_dirs]
-    new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
-
-    idx = (
-        read_parquet(spark, str(root))
-        .select("id", "vec", "cell")
-        .dropDuplicates(["id", "cell"])
-        .localCheckpoint(eager=True)
-    )
-    n_cells = max(idx.select("cell").distinct().count(), 1)
-    n_files = max(min(n_cells, 64), math.ceil(idx.count() / _ROWS_PER_FILE))
-    tmp = root / ".compacting"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
-        idx.repartition(n_files, "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(str(tmp))
-    )
-    tmp.rename(root / f"batch={new_base}")
-    for d in batch_dirs:
-        shutil.rmtree(d)
-    return len(batch_dirs)
+    counts scaled to rows (``store.compact``), then drop the folded
+    dirs. Returns folded dir count."""
+    return compact(spark, index_dir, [_IVF_CELLS])
 
 
 # ------------------------------------------------------- IVF-PQ (round 6)
@@ -370,8 +341,6 @@ def _read_codebooks(spark: SparkSession, index_dir: str) -> np.ndarray:
     return memo([f"{index_dir}/codebooks"], "ivf-codebooks", load)
 
 
-_VEC_WRITE_OPTS = {"parquet.bloom.filter.enabled#id": "true"}
-
 
 def _read_encoding(spark: SparkSession, index_dir: str) -> str:
     """The index's PQ encoding ('flat' | 'residual') from ``meta/``;
@@ -434,26 +403,18 @@ def _write_pq_parts(
     ).select(
         "id", "vec", F.col("_e.cell").alias("cell"), F.col("_e.codes").alias("codes")
     ).localCheckpoint(eager=True)  # one UDF pass feeds both writers
-    (
-        base.select("id", "codes", "cell")
-        .repartition(max(1, min(n_cells, 64)), "cell")
-        .withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cell")
-        .parquet(f"{index_dir}/cells")
+    _PQ_CELLS.write(
+        base.select("id", "codes", "cell").repartition(max(1, min(n_cells, 64)), "cell"),
+        batch_id,
+        index_dir,
     )
-    w = (
+    _VECS.write(
         base.select("id", "vec")
-        .repartitionByRange(max(1, math.ceil(base.count() / _ROWS_PER_FILE)), "id")
-        .sortWithinPartitions("id")
-        .withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        .repartitionByRange(max(1, math.ceil(base.count() / ROWS_PER_FILE)), "id")
+        .sortWithinPartitions("id"),
+        batch_id,
+        index_dir,
     )
-    for k, v in _VEC_WRITE_OPTS.items():
-        w = w.option(k, v)
-    w.partitionBy("batch").parquet(f"{index_dir}/vecs")
 
 
 def build_ivfpq_index(
@@ -570,7 +531,7 @@ def ivfpq_index_query(
       (rounded-ADC, id) key, the ``pq_ann_topk`` TakeOrdered shape;
     - the rerank reads ≤ queries×rerank raw vectors through
       ``vecs/``'s id-sorted, bloom-filtered layout via chunked pushed
-      IN filters (``dedup_index._pruned_scan``) when the id set fits
+      IN filters (``store.pruned_scan``) when the id set fits
       ``scan_prune_max_keys``, else one full sidecar scan (a huge
       candidate set amortizes it).
 
@@ -578,8 +539,6 @@ def ivfpq_index_query(
     (q_id, id) level before scoring. Returns
     (query_id, neighbor_id, cosine_sim, rn), rn ≤ k."""
     import pandas as pd
-
-    from bearly_spark.streaming.dedup_index import _pruned_scan
 
     C = _read_centroids(spark, index_dir)
     cb = _read_codebooks(spark, index_dir)
@@ -681,7 +640,7 @@ def ivfpq_index_query(
         for r in cand.select("id").distinct().limit(scan_prune_max_keys + 1).collect()
     ]
     if 0 < len(cand_ids) <= scan_prune_max_keys:
-        vecs = _pruned_scan(vecs, "id", cand_ids)
+        vecs = pruned_scan(vecs, "id", cand_ids)
     vecs = vecs.dropDuplicates(["id"])  # replay/compaction duplicate tolerance
 
     cos_udf = make_cosine_udf()
@@ -703,62 +662,7 @@ def ivfpq_index_query(
 
 def compact_ivfpq_index(spark: SparkSession, index_dir: str) -> int:
     """Fold both datasets' batch partitions into one new base each
-    (cells/ repartitioned by cell, vecs/ id-range-sorted with its bloom
-    layout), write → atomic rename → delete, duplicates through the
-    crash window collapsing in the query path as usual. Returns the
-    number of cells/ batch dirs folded."""
-    root = Path(index_dir)
-    cells_root = root / "cells"
-    if not cells_root.is_dir():
-        return 0
-    batch_dirs = [
-        d for d in cells_root.iterdir() if d.is_dir() and d.name.startswith("batch=")
-    ]
-    if len(batch_dirs) <= 1:
-        return 0
-    batch_ids = [int(d.name.split("=", 1)[1]) for d in batch_dirs]
-    new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
-
-    cells_df = (
-        read_parquet(spark, str(cells_root))
-        .select("id", "codes", "cell")
-        .dropDuplicates(["id", "cell"])
-        .localCheckpoint(eager=True)
-    )
-    vecs_df = (
-        read_parquet(spark, str(root / "vecs"))
-        .select("id", "vec")
-        .dropDuplicates(["id"])
-        .localCheckpoint(eager=True)
-    )
-    n_cells = max(cells_df.select("cell").distinct().count(), 1)
-    n_cell_files = max(min(n_cells, 64), math.ceil(cells_df.count() / _ROWS_PER_FILE))
-    n_vec_files = max(1, math.ceil(vecs_df.count() / _ROWS_PER_FILE))
-    for name, df, part_cols, opts in (
-        ("cells", cells_df.repartition(n_cell_files, "cell"), ["cell"], {}),
-        (
-            "vecs",
-            (
-                vecs_df.coalesce(1)
-                if n_vec_files <= 1
-                else vecs_df.repartitionByRange(n_vec_files, "id")
-            ).sortWithinPartitions("id"),
-            [],
-            _VEC_WRITE_OPTS,
-        ),
-    ):
-        ds_root = root / name
-        tmp = ds_root / ".compacting"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        old = [d for d in ds_root.iterdir() if d.is_dir() and d.name.startswith("batch=")]
-        writer = df.write.mode("overwrite")
-        for k, v in opts.items():
-            writer = writer.option(k, v)
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(str(tmp))
-        tmp.rename(ds_root / f"batch={new_base}")
-        for d in old:
-            shutil.rmtree(d)
-    return len(batch_dirs)
+    (cells/ partitioned by cell, vecs/ id-range-sorted with its bloom
+    layout; ``store.compact``). Returns the number of cells/ batch dirs
+    folded."""
+    return compact(spark, index_dir, [_PQ_CELLS, _VECS])

@@ -14,13 +14,12 @@ the persisted IVF index (frozen model + cell-directory layout):
   previously-ingested members, flags the batch greedily (earlier
   ingested < earlier-in-batch id), and appends the batch's vectors
   under ``members/cell=<c>/batch=<id>`` plus its verdicts under
-  ``verdicts/batch=<id>`` — all dynamic-partition-overwrite, so an
+  ``verdicts/batch=<id>`` — ``streaming.store`` batch writes, so an
   at-least-once replay rewrites its own slice (idempotent);
 - ``compact_semdedup_index`` folds member batch dirs into a fresh base
-  (write -> atomic rename -> delete; crash leaves duplicates, never
-  loss — and the probe kernel is duplicate-tolerant: a duplicated
-  member id changes no verdict because identical vectors witness
-  identically).
+  per cell (``store.compact``); the probe kernel is duplicate-tolerant
+  through the crash window: a duplicated member id changes no verdict
+  because identical vectors witness identically.
 
 Exactness: members store the QUANTIZED grid vectors (array<long>), so
 the cosine threshold test at probe time is the operator family's exact
@@ -42,11 +41,7 @@ pair work is Sigma(touched cell^2) with the operator family's cap.
 
 from __future__ import annotations
 
-import math
 import os
-import shutil
-from collections.abc import Iterator
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -54,16 +49,32 @@ import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
 from bearly_spark.cache import memo
 from bearly_spark.interchange import from_arrow, to_arrow, write_arrow_parquet
 from bearly_spark.operators import clustering as C
 from bearly_spark.sources.tables import read_parquet
+from bearly_spark.streaming.store import (
+    Dataset,
+    compact,
+    drain,
+    folded,
+    read_batches,
+    write_batch,
+)
 
-#: Compacted base partition id; micro-batch ids are >= 0 so a base dir
-#: never collides with a replayed batch (same scheme as the siblings).
-BASE_BATCH_ID = -1
+
+def _members(id_col: str) -> Dataset:
+    """members/: quantized vectors, cell-first so a probe's cell filter
+    prunes every batch of the untouched cells."""
+    return Dataset(
+        "members",
+        (id_col, "xq", "kept", "cell"),
+        keys=("cell", id_col),
+        parts=("cell", "batch"),
+        order=(id_col,),
+        sort=False,
+    )
 
 
 def build_semdedup_index(
@@ -178,19 +189,8 @@ def _read_members(
     """Members of the touched cells only — ``cell`` is the FIRST
     partition level, so this filter prunes whole directories; a replay
     additionally excludes its own batch dirs."""
-    path = f"{index_dir}/members"
-    if not os.path.isdir(path):
-        return None
-    try:
-        df = read_parquet(spark, path)
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return None
-        raise
-    df = df.filter(F.col("cell").isin([int(c) for c in cells]))
-    if exclude_batch is not None:
-        df = df.filter(F.col("batch") != int(exclude_batch))
-    return df
+    df = read_batches(spark, f"{index_dir}/members", exclude_batch=exclude_batch)
+    return None if df is None else df.filter(F.col("cell").isin([int(c) for c in cells]))
 
 
 def upsert_semdedup_batch(
@@ -206,12 +206,17 @@ def upsert_semdedup_batch(
     """Flag one micro-batch against everything ingested before it and
     append it to the index. Idempotent under replay: reads exclude
     ``batch=<batch_id>`` and both writes dynamic-overwrite their own
-    partitions, so running the same batch twice converges."""
+    partitions, so running the same batch twice converges. A replay of
+    a batch that compaction has already folded into the members base
+    writes nothing: the base holds the batch's own vectors, which would
+    witness against themselves and flag the whole batch."""
     num, den = tau
     if not (0 < num <= den):
         raise ValueError(f"tau must be a rational in (0, 1], got {tau}")
     if witness not in ("all", "kept"):
         raise ValueError(f"witness must be 'all' or 'kept', got {witness!r}")
+    if int(batch_id) in folded(_members(id_col).path(index_dir)):
+        return
     spark = batch_df.sparkSession
     assigned = _assign_frozen(spark, index_dir, batch_df, id_col, vec_col)
     assigned = assigned.localCheckpoint(eager=True)  # one kernel pass, reused 2x
@@ -379,37 +384,18 @@ def upsert_semdedup_batch(
     members = verdicts.select(id_col, "cell", "xq", "kept")
     if use_kept_only:
         members = members.filter(F.col("kept"))
-    (
-        members.repartition(len(touched), "cell")
-        .withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "batch")
-        .parquet(f"{index_dir}/members")
-    )
-    (
-        verdicts.select(id_col, "cell", "kept", "cell_truncated")
-        .coalesce(1)
-        .withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{index_dir}/verdicts")
+    _members(id_col).write(members.repartition(len(touched), "cell"), batch_id, index_dir)
+    write_batch(
+        verdicts.select(id_col, "cell", "kept", "cell_truncated").coalesce(1),
+        batch_id,
+        f"{index_dir}/verdicts",
     )
     # per-batch per-cell assignment stats — the drift signal for the
     # FROZEN geometry: when arriving data wanders off the build-time
     # distribution, mean distance-to-centroid rises batch over batch
     # (the operational cue to refit + rebuild). Exact integers: count,
     # floored mean, max of the kernel's int64 distances.
-    (
-        from_arrow(spark, assigned_stats)
-        .coalesce(1)
-        .withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{index_dir}/stats")
-    )
+    write_batch(from_arrow(spark, assigned_stats).coalesce(1), batch_id, f"{index_dir}/stats")
 
 
 def semdedup_index_verdicts(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -438,77 +424,21 @@ def streaming_semdedup_index(
     max_cell: int = C.MAX_SEMDEDUP_CELL,
 ) -> StreamingQuery:
     """Start the semantic-dedup-at-ingest stream (availableNow drains
-    the backlog and stops; swap the trigger in production). The index
-    must already be built (frozen centroids present)."""
+    the backlog and stops). The index must already be built (frozen
+    centroids present)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         upsert_semdedup_batch(
             batch_df, batch_id, index_dir, id_col, vec_col, tau, witness, max_cell
         )
 
-    return (
-        vecs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(vecs, checkpoint_dir, process)
 
 
 def compact_semdedup_index(
     spark: SparkSession, index_dir: str, id_col: str = "vec_id"
 ) -> int:
-    """Fold every ``members/cell=*/batch=*`` dir into one new base
-    batch per cell; verdicts stay per-batch (they ARE the audit log).
-    write -> atomic rename -> delete, so a crash leaves duplicate
-    members, never loss — and the probe kernel dedups member ids, so
-    verdicts are unchanged through the crash window. Returns the number
-    of batch dirs folded."""
-    root = Path(index_dir) / "members"
-    if not root.is_dir():
-        return 0
-    cell_dirs = [d for d in root.iterdir() if d.is_dir() and d.name.startswith("cell=")]
-    batch_dirs = [
-        b
-        for c in cell_dirs
-        for b in c.iterdir()
-        if b.is_dir() and b.name.startswith("batch=")
-    ]
-    if len(batch_dirs) <= len(cell_dirs):
-        return 0
-    batch_ids = [int(b.name.split("=", 1)[1]) for b in batch_dirs]
-    new_base = min(BASE_BATCH_ID, min(batch_ids) - 1)
-
-    snap = (
-        read_parquet(spark, str(root))
-        .drop("batch")
-        .dropDuplicates(["cell", id_col])
-        .localCheckpoint(eager=True)  # sever lineage from dirs deleted below
-    )
-    n_cells = max(len(cell_dirs), 1)
-    _ROWS_PER_FILE = 4_000_000
-    n_files = max(n_cells, math.ceil(snap.count() / _ROWS_PER_FILE))
-    shaped = (
-        snap.repartition(n_cells, "cell")
-        if n_files <= n_cells
-        else snap.repartitionByRange(n_files, "cell", id_col)
-    )
-    tmp = Path(index_dir) / ".compacting-members"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    (
-        shaped.withColumn("batch", F.lit(int(new_base)))
-        .write.mode("overwrite")
-        .partitionBy("cell", "batch")
-        .parquet(str(tmp))
-    )
-    # atomic per-cell renames: move each cell's new base dir into place
-    for c in [d for d in tmp.iterdir() if d.is_dir() and d.name.startswith("cell=")]:
-        dest_cell = root / c.name
-        dest_cell.mkdir(parents=True, exist_ok=True)
-        src = c / f"batch={new_base}"
-        if src.is_dir():
-            os.rename(src, dest_cell / f"batch={new_base}")
-    shutil.rmtree(tmp)
-    for b in batch_dirs:
-        shutil.rmtree(b)
-    return len(batch_dirs)
+    """Fold every ``members/cell=*/batch=*`` dir into one new base batch
+    per cell (``store.compact``); verdicts stay per-batch (they ARE the
+    audit log). Returns the number of batch dirs folded."""
+    return compact(spark, index_dir, [_members(id_col)])

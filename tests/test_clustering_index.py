@@ -150,6 +150,15 @@ def test_compaction_preserves_members_and_future_verdicts(spark, tmp_path):
         for r in spark.read.parquet(f"{idx}/members").collect()
     )
     assert after == before
+    # replaying an already-folded batch changes no verdict (its own
+    # folded vectors must not witness against it)
+    logged = sorted(
+        tuple(r) for r in SI.semdedup_index_verdicts(spark, idx).collect()
+    )
+    SI.upsert_semdedup_batch(_emb(spark, [(1, A)]), 0, idx)
+    assert sorted(
+        tuple(r) for r in SI.semdedup_index_verdicts(spark, idx).collect()
+    ) == logged
     # post-compaction ingest still sees the folded witnesses
     SI.upsert_semdedup_batch(_emb(spark, [(3, Ch)]), 2, idx)
     got = {

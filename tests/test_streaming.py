@@ -586,6 +586,7 @@ def test_lsh_index_crash_mid_compaction_reader_no_dup_or_loss(
     import pyspark.sql.functions as F
 
     import bearly_spark.streaming.ann_index as AI
+    import bearly_spark.streaming.store as store
     from bearly_spark.sources.tables import load_table
 
     idx = str(tmp_path_factory.mktemp("annidx_crash") / "index")
@@ -599,7 +600,7 @@ def test_lsh_index_crash_mid_compaction_reader_no_dup_or_loss(
     assert len(before) == n * 8  # bands=8, one key per band
 
     # crash injection: suppress the folded-dir deletion (step 3)
-    monkeypatch.setattr(AI.shutil, "rmtree", lambda *a, **k: None)
+    monkeypatch.setattr(store.shutil, "rmtree", lambda *a, **k: None)
     assert AI.compact_lsh_index(spark, idx) == 2
     monkeypatch.undo()
 
@@ -736,6 +737,7 @@ def test_dedup_index_compaction_equivalence_and_crash_window(
     import pyspark.sql.functions as F
 
     import bearly_spark.streaming.dedup_index as DI
+    import bearly_spark.streaming.store as store
     from bearly_spark.sources.tables import load_table
 
     idx = str(tmp_path_factory.mktemp("dedupidx_compact") / "index")
@@ -768,7 +770,7 @@ def test_dedup_index_compaction_equivalence_and_crash_window(
     assert after_ingest == before  # probing its own indexed copy is excluded
 
     # crash injection: suppress folded-dir deletion -> duplicates on disk
-    monkeypatch.setattr(DI.shutil, "rmtree", lambda *a, **k: None)
+    monkeypatch.setattr(store.shutil, "rmtree", lambda *a, **k: None)
     assert DI.compact_dedup_index(spark, idx) == 2
     monkeypatch.undo()
     mid = key(DI.near_dups_against_index(spark, idx, probe, exclude_batch=2))
@@ -1637,11 +1639,14 @@ def test_streaming_attribution_equals_batch_and_replays(
     assert sorted(map(tuple, again)) == sorted(map(tuple, want))
 
 
-def test_cms_ingest_stream_equals_batch_and_replay(spark, tmp_path, sf_dir):
+def test_cms_ingest_stream_equals_batch_and_replay(spark, tmp_path, sf_dir, monkeypatch):
     """The streamed sketch (per-batch deltas summed) equals the
     batch-built sketch exactly (counter additivity); replaying a batch
     id overwrites its own partition (no double count); compaction
-    collapses history without changing the totals."""
+    collapses history without changing the totals — and the summing
+    reader stays exact through every compaction hazard: a replay of an
+    already-folded batch, a failed compaction write, and the window
+    between publishing a base and deleting the folded dirs."""
     import shutil
 
     import pyspark.sql.functions as F
@@ -1693,8 +1698,44 @@ def test_cms_ingest_stream_equals_batch_and_replay(spark, tmp_path, sf_dir):
     compact_cms_index(spark, index_dir)
     from pathlib import Path
 
-    dirs = list((Path(index_dir) / "sketch").glob("batch=*"))
+    sketch = Path(index_dir) / "sketch"
+    dirs = list(sketch.glob("batch=*"))
     assert len(dirs) == 1
+    assert totals(read_cms(spark, index_dir)) == batch
+
+    # replay batch 0 AFTER compaction: the base already holds it, so the
+    # rewritten batch=0 partition must not count a second time (nor
+    # overwrite the base)
+    upsert_cms_batch(b0, 0, index_dir, "o_custkey")
+    assert totals(read_cms(spark, index_dir)) == batch
+
+    # a failure in the compaction write leaves the store as it was
+    from pyspark.sql import DataFrameWriter
+
+    def fail(*a, **k):
+        raise RuntimeError("injected compaction write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        compact_cms_index(spark, index_dir)
+    monkeypatch.undo()
+    assert totals(read_cms(spark, index_dir)) == batch
+
+    # crash between publishing the new base and deleting the folded
+    # dirs: every folded partition is still on disk next to the base
+    import bearly_spark.streaming.store as store
+
+    before = sorted(d.name for d in sketch.glob("batch=*"))
+    monkeypatch.setattr(store.shutil, "rmtree", lambda *a, **k: None)
+    compact_cms_index(spark, index_dir)
+    monkeypatch.undo()
+    window = sorted(d.name for d in sketch.glob("batch=*"))
+    assert set(before) < set(window) and len(window) == len(before) + 1
+    assert totals(read_cms(spark, index_dir)) == batch
+
+    # the next compaction heals: one base, same totals
+    compact_cms_index(spark, index_dir)
+    assert len(list(sketch.glob("batch=*"))) == 1
     assert totals(read_cms(spark, index_dir)) == batch
 
 
@@ -1727,3 +1768,116 @@ def test_bloom_ingest_equals_batch_and_replay(spark, tmp_path, sf_dir):
         for r in bloom_probe(bloom_build(od, "o_custkey"), cust, "c_custkey").collect()
     }
     assert via_index == via_batch
+
+
+def _index_case(spark, sf_dir, idx, kind):
+    """Build a two-batch ``kind`` index at ``idx``; return its compactor,
+    its dataset names and a function computing its query answers."""
+    import shutil
+
+    from bearly_spark.sources.tables import load_table
+
+    if kind == "bm25":
+        import bearly_spark.streaming.bm25_index as BI
+
+        docs = load_table(spark, sf_dir, "documents")
+        BI.upsert_bm25_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, idx)
+        BI.upsert_bm25_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, idx)
+        answer = lambda: [
+            tuple(r)
+            for r in BI.bm25_query_index(
+                spark, idx, "spark shuffle partition data", k=10
+            ).collect()
+        ]
+        return BI.compact_bm25_index, ("postings", "docstats"), answer
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    n = emb.count()
+    queries = emb.filter(F.col("vec_id") < 3)
+    shifted = emb.select((F.col("vec_id") + n).alias("vec_id"), "embedding")
+    if kind in ("ivf", "ivfpq"):
+        import bearly_spark.streaming.ivf_index as IVF
+
+        if kind == "ivf":
+            IVF.build_ivf_index(emb, idx, n_cells=24, sample_by="id")
+            IVF.upsert_ivf_batch(shifted, 0, idx)
+            query, compact, names = IVF.ivf_index_query, IVF.compact_ivf_index, ("cells",)
+        else:
+            IVF.build_ivfpq_index(emb, idx, n_cells=24, m=16, ksub=16, sample_by="id")
+            IVF.upsert_ivfpq_batch(shifted, 0, idx)
+            query, compact = IVF.ivfpq_index_query, IVF.compact_ivfpq_index
+            names = ("cells", "vecs")
+        answer = lambda: sorted(
+            tuple(r) for r in query(spark, idx, queries, k=10, n_probe=6).collect()
+        )
+        return compact, names, answer
+
+    from bearly_spark.streaming import semdedup_index as SI
+
+    SI.build_semdedup_index(emb, idx, k=8, iters=1)
+    SI.upsert_semdedup_batch(emb.filter(F.col("vec_id") < 250), 0, idx)
+    SI.upsert_semdedup_batch(emb.filter(F.col("vec_id") >= 250), 1, idx)
+    probe = shifted.filter(F.col("vec_id") < n + 40)
+
+    def answer():
+        # the verdicts a probe batch gets against this index, flagged in
+        # a copy so the index under test is never written
+        copy = f"{idx}-probe"
+        shutil.rmtree(copy, ignore_errors=True)
+        shutil.copytree(idx, copy)
+        SI.upsert_semdedup_batch(probe, 9, copy)
+        got = sorted(
+            (r.vec_id, r.cell, r.kept)
+            for r in SI.semdedup_index_verdicts(spark, copy)
+            .filter(F.col("batch") == 9)
+            .collect()
+        )
+        shutil.rmtree(copy)
+        return got
+
+    return SI.compact_semdedup_index, ("members",), answer
+
+
+@pytest.mark.parametrize("kind", ["bm25", "ivf", "ivfpq", "semdedup"])
+def test_compaction_crash_window_keeps_answers_and_heals(
+    spark, sf_dir, tmp_path, monkeypatch, kind
+):
+    """Every index's compaction, crashed after publishing its new base
+    and before deleting the folded dirs, leaves each folded dir on disk
+    beside the base: the query answers must be unchanged inside that
+    window, and the next compaction must heal it to one base per
+    partition with the same answers."""
+    from pathlib import Path
+
+    import bearly_spark.streaming.store as store
+
+    idx = str(tmp_path / "index")
+    compact, names, answer = _index_case(spark, sf_dir, idx, kind)
+
+    def batch_dirs():
+        return {
+            name: sorted(d for d in Path(idx, name).rglob("batch=*") if d.is_dir())
+            for name in names
+        }
+
+    before_dirs = batch_dirs()
+    before = answer()
+    assert before
+
+    monkeypatch.setattr(store.shutil, "rmtree", lambda *a, **k: None)
+    assert compact(spark, idx) == len(before_dirs[names[0]])
+    monkeypatch.undo()
+    window_dirs = batch_dirs()
+    for name in names:
+        parents = {d.parent for d in before_dirs[name]}
+        new = set(window_dirs[name]) - set(before_dirs[name])
+        assert set(before_dirs[name]) < set(window_dirs[name])
+        assert {d.parent for d in new} == parents and len(new) == len(parents)
+    assert answer() == before
+
+    assert compact(spark, idx) == len(window_dirs[names[0]])
+    for name, dirs in batch_dirs().items():
+        assert len(dirs) == len({d.parent for d in dirs}), name
+        assert all(int(d.name.split("=")[1]) < 0 for d in dirs), name
+    assert answer() == before
+    assert compact(spark, idx) == 0

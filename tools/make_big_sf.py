@@ -28,6 +28,8 @@ import sys
 
 import pyspark.sql.functions as F
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 # key shifts per replica: generous strides keep replica key spaces
 # disjoint at any supported factor (<= 100)
 _SHIFTS = {
