@@ -26,7 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from bearly_spark.operators.similarity import lsh_band_table, rerank_candidates
 from bearly_spark.sources.tables import read_parquet
-from bearly_spark.streaming.store import Dataset, compact, drain, pruned_scan
+from bearly_spark.streaming.store import Dataset, compact, distinct, drain, pruned_scan
 
 import pyspark.sql.functions as F
 
@@ -36,8 +36,7 @@ import pyspark.sql.functions as F
 #: too) — the same layout contract as the dedup index's bands dataset.
 _INDEX = Dataset(
     "",
-    ("c_id", "band", "bkey"),
-    keys=("c_id", "band", "bkey"),
+    distinct(("c_id", "band", "bkey")),
     parts=("batch", "band"),
     order=("bkey",),
     opts={"parquet.bloom.filter.enabled#bkey": "true"},

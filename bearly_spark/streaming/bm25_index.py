@@ -43,16 +43,15 @@ from pyspark.sql.streaming import StreamingQuery
 
 from bearly_spark.operators.text import word_tokens
 from bearly_spark.sources.tables import read_parquet
-from bearly_spark.streaming.store import Dataset, compact, drain, pruned_scan
+from bearly_spark.streaming.store import Dataset, compact, distinct, drain, pruned_scan
 
 _POSTINGS = Dataset(
     "postings",
-    ("id", "term", "tf"),
-    keys=("id", "term"),
+    distinct(("id", "term", "tf"), ("id", "term")),
     order=("term", "id"),
     opts={"parquet.bloom.filter.enabled#term": "true"},
 )
-_DOCSTATS = Dataset("docstats", ("id", "dl"), keys=("id",), order=("id",))
+_DOCSTATS = Dataset("docstats", distinct(("id", "dl"), ("id",)), order=("id",))
 
 
 def upsert_bm25_batch(

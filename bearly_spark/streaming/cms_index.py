@@ -41,8 +41,10 @@ def _sum_counters(deltas: DataFrame) -> DataFrame:
 
 
 _SKETCH = Dataset(
-    "sketch", ("row", "bucket", "cnt"), order=("row", "bucket"), sort=False,
-    fold=_sum_counters,
+    "sketch",
+    lambda read, _: _sum_counters(read()),
+    order=("row", "bucket"),
+    sort=False,
 )
 
 
@@ -66,7 +68,8 @@ def read_cms(spark: SparkSession, index_dir: str) -> DataFrame:
     """The current sketch: elementwise sum of all live batch deltas —
     exactly ``cms_build`` of everything ingested so far (additivity is
     the CMS contract that makes the streaming form lossless)."""
-    return _sum_counters(read_batches(spark, _SKETCH.path(index_dir)))
+    empty = spark.createDataFrame([], "row int, bucket int, cnt long")
+    return _sum_counters(read_batches(spark, _SKETCH.path(index_dir), empty))
 
 
 def compact_cms_index(spark: SparkSession, index_dir: str) -> None:

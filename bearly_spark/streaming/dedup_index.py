@@ -69,6 +69,7 @@ from bearly_spark.operators.dedup import (
 from bearly_spark.streaming.store import (
     Dataset,
     compact,
+    distinct,
     drain,
     pruned_scan,
     read_batches,
@@ -87,16 +88,14 @@ def _datasets(id_col: str) -> list[Dataset]:
     return [
         Dataset(
             "bands",
-            (id_col, "band", "bucket"),
-            keys=(id_col, "band", "bucket"),
+            distinct((id_col, "band", "bucket")),
             parts=("batch", "band"),
             order=("bucket",),
             opts={"parquet.bloom.filter.enabled#bucket": "true"},
         ),
         Dataset(
             "sets",
-            (id_col, "hs", "chash"),
-            keys=(id_col,),
+            distinct((id_col, "hs", "chash"), (id_col,)),
             order=(id_col,),
             opts={
                 f"parquet.bloom.filter.enabled#{id_col}": "true",
@@ -105,10 +104,7 @@ def _datasets(id_col: str) -> list[Dataset]:
         ),
         Dataset(
             "counts",
-            ("band", "bucket", "n", "chll"),
-            order=("band", "bucket"),
-            sort=False,
-            derive=lambda s: (
+            lambda _, s: (
                 s["bands"].join(s["sets"].select(id_col, "chash"), id_col)
                 .groupBy("band", "bucket")
                 .agg(
@@ -116,6 +112,8 @@ def _datasets(id_col: str) -> list[Dataset]:
                     F.hll_sketch_agg("chash").alias("chll"),
                 )
             ),
+            order=("band", "bucket"),
+            sort=False,
         ),
     ]
 

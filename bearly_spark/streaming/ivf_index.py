@@ -55,6 +55,7 @@ from bearly_spark.streaming.store import (
     ROWS_PER_FILE,
     Dataset,
     compact,
+    distinct,
     drain,
     pruned_scan,
 )
@@ -63,17 +64,18 @@ from bearly_spark.streaming.store import (
 #: coarse cell under each batch.
 _IVF_CELLS = Dataset(
     "cells",
-    ("id", "vec", "cell"),
-    keys=("id", "cell"),
+    distinct(("id", "vec", "cell"), ("id", "cell")),
     parts=("batch", "cell"),
     order=("id",),
     sort=False,
 )
-_PQ_CELLS = _IVF_CELLS._replace(cols=("id", "codes", "cell"))
+_PQ_CELLS = _IVF_CELLS._replace(
+    snapshot=distinct(("id", "codes", "cell"), ("id", "cell"))
+)
 #: IVF-PQ's raw vectors, id-sorted with an id bloom filter so the
 #: rerank read is a pruned point-lookup scan.
 _VECS = Dataset(
-    "vecs", ("id", "vec"), keys=("id",), order=("id",),
+    "vecs", distinct(("id", "vec"), ("id",)), order=("id",),
     opts={"parquet.bloom.filter.enabled#id": "true"},
 )
 

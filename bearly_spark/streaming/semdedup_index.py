@@ -57,6 +57,7 @@ from bearly_spark.sources.tables import read_parquet
 from bearly_spark.streaming.store import (
     Dataset,
     compact,
+    distinct,
     drain,
     folded,
     read_batches,
@@ -69,8 +70,7 @@ def _members(id_col: str) -> Dataset:
     prunes every batch of the untouched cells."""
     return Dataset(
         "members",
-        (id_col, "xq", "kept", "cell"),
-        keys=("cell", id_col),
+        distinct((id_col, "xq", "kept", "cell"), ("cell", id_col)),
         parts=("cell", "batch"),
         order=(id_col,),
         sort=False,
@@ -215,7 +215,7 @@ def upsert_semdedup_batch(
         raise ValueError(f"tau must be a rational in (0, 1], got {tau}")
     if witness not in ("all", "kept"):
         raise ValueError(f"witness must be 'all' or 'kept', got {witness!r}")
-    if int(batch_id) in folded(_members(id_col).path(index_dir)):
+    if folded(_members(id_col).path(index_dir), int(batch_id)):
         return
     spark = batch_df.sparkSession
     assigned = _assign_frozen(spark, index_dir, batch_df, id_col, vec_col)

@@ -51,16 +51,24 @@ folded directories.
   removed first; it is re-derivable); (2) each ``batch=<base>`` leaf is
   renamed into place, which is atomic per leaf; (3) only then are the
   folded directories deleted. A crash before (2) changes nothing.
-  Between (2) and (3) the dataset holds every row twice, never none.
+  From (2) on the dataset holds every row at least once, never none:
+  a published base beside its folded dirs holds their rows twice, and
+  a cell-first dataset (one leaf per cell) may be published for some
+  cells and not yet for the others.
 - Readers that dedup (the candidate joins, the sets/postings/docstats
   reads, HLL counts whose union is duplicate-invariant, the semantic
   kernel's member dedup) absorb that window. A summing reader
-  (``cms_index.read_cms``) cannot, so each base records the ids it
-  folded, cumulatively, in a ``_folded`` JSON file that Spark's listing
-  skips; :func:`read_batches` drops those partitions, which also keeps
-  a replay of an already-folded batch out of every read. A writer whose
-  output depends on the index (the semantic-dedup verdicts) checks
-  :func:`folded` and skips such a replay.
+  (``cms_index.read_cms``) cannot, so each base leaf records the batch
+  ids it folded, cumulatively, in a ``_folded`` JSON file (inclusive id
+  spans) that Spark's listing skips. The marker speaks only for its
+  siblings: :func:`read_batches` drops a ``batch=`` dir when a base in
+  the same parent dir (the same cell of a cell-first dataset) lists its
+  id, so a cell whose base never arrived keeps its own dirs. The filter
+  names only dirs still on disk, so outside a crash window or a replay
+  of a folded batch it is empty and the read is unchanged. Dropping
+  them also keeps a replay of an already-folded batch out of every
+  read. A writer whose output depends on the index (the semantic-dedup
+  verdicts) checks :func:`folded` and skips such a replay.
 - Every snapshot is ``localCheckpoint``ed eagerly before the first
   delete, so no lineage references a deleted directory (round-4 ADVICE:
   a cache eviction between the bands delete and the counts write
@@ -117,16 +125,28 @@ _PRUNE_CHUNK = 512
 _FOLDED = "_folded"
 
 
+#: How a dataset's compacted rows are built: called with a thunk that
+#: reads the dataset's live rows and with the snapshots of the datasets
+#: compacted before it, by name.
+Snapshot = Callable[[Callable[[], DataFrame], dict[str, DataFrame]], DataFrame]
+
+
+def distinct(
+    cols: tuple[str, ...], keys: tuple[str, ...] | None = None
+) -> Snapshot:
+    """Snapshot: the live rows' ``cols``, one row per ``keys`` (default:
+    all of ``cols``), so replays and crash-window copies collapse."""
+    return lambda read, _: read().select(*cols).dropDuplicates(list(keys or cols))
+
+
 class Dataset(NamedTuple):
     """One batch-partitioned dataset under an index root: the layout
-    its per-batch writes use and the rules its compaction follows."""
+    its per-batch writes use and how its compaction builds a base."""
 
     #: dir under the index root ("" for the root itself)
     name: str
-    #: snapshot columns, in write order
-    cols: tuple[str, ...]
-    #: duplicate rows (replays, crash windows) collapse on these keys
-    keys: tuple[str, ...] = ()
+    #: the rows a compaction folds this dataset's batches into
+    snapshot: Snapshot
     #: ``partitionBy`` columns; ``batch`` may sit at any level
     parts: tuple[str, ...] = ("batch",)
     #: range keys after the non-batch partition columns
@@ -135,11 +155,6 @@ class Dataset(NamedTuple):
     opts: dict[str, str] = {}
     #: sort each compacted file on the range keys
     sort: bool = True
-    #: live rows -> snapshot, in place of the dedup on ``keys``
-    fold: Callable[[DataFrame], DataFrame] | None = None
-    #: snapshot from the earlier datasets' snapshots, by name, in place
-    #: of a read of this dataset
-    derive: Callable[[dict[str, DataFrame]], DataFrame] | None = None
 
     def path(self, root: str) -> str:
         return f"{root}/{self.name}" if self.name else root
@@ -183,38 +198,77 @@ def drain(
     )
 
 
-def _leaves(root: Path) -> list[tuple[str, ...]]:
-    """Relative paths of the leaf partition dirs under ``root``
-    (hidden dirs skipped, as Spark's listing skips them)."""
-    if not root.is_dir():
+def _subdirs(d: Path) -> list[Path]:
+    """Partition dirs directly under ``d`` (hidden dirs skipped, as
+    Spark's listing skips them)."""
+    if not d.is_dir():
         return []
-    subs = sorted(
-        d.name for d in root.iterdir()
-        if d.is_dir() and "=" in d.name and d.name[0] not in "._"
-    )
-    return [(s, *rest) for s in subs for rest in _leaves(root / s) or [()]]
+    with os.scandir(d) as it:
+        names = [
+            e.name for e in it
+            if e.is_dir() and "=" in e.name and e.name[0] not in "._"
+        ]
+    return [d / n for n in sorted(names)]
 
 
-def _batch_dirs(root: Path) -> list[Path]:
-    """Every ``batch=`` dir under ``root``, at whatever partition level."""
-    return sorted({
-        root.joinpath(*leaf[: i + 1])
-        for leaf in _leaves(root)
-        for i, p in enumerate(leaf)
-        if p.startswith("batch=")
-    })
+def _leaves(root: Path) -> list[tuple[str, ...]]:
+    """Relative paths of the leaf partition dirs under ``root``."""
+    return [
+        (d.name, *rest) for d in _subdirs(root) for rest in _leaves(d) or [()]
+    ]
+
+
+def _scopes(root: Path) -> dict[Path, list[Path]]:
+    """Every ``batch=`` dir under ``root``, grouped by its parent dir:
+    the root for a batch-first layout, each cell for a cell-first one.
+    The walk stops at ``batch=`` dirs, so it lists one dir per batch
+    partition, not every leaf below it."""
+    out: dict[Path, list[Path]] = {}
+    for d in _subdirs(root):
+        if d.name.startswith("batch="):
+            out.setdefault(root, []).append(d)
+        else:
+            out.update(_scopes(d))
+    return out
 
 
 def _batch_id(d: Path) -> int:
     return int(d.name.split("=", 1)[1])
 
 
-def folded(path: str) -> set[int]:
-    """Batch ids a compacted base of the dataset at ``path`` holds."""
-    return {
-        i for d in _batch_dirs(Path(path)) if (d / _FOLDED).is_file()
-        for i in json.loads((d / _FOLDED).read_text())
-    }
+def _spans(pairs) -> list[list[int]]:
+    """The inclusive ``[lo, hi]`` id ``pairs``, merged and sorted."""
+    out: list[list[int]] = []
+    for lo, hi in sorted(pairs):
+        if out and lo <= out[-1][1] + 1:
+            out[-1][1] = max(out[-1][1], hi)
+        else:
+            out.append([lo, hi])
+    return out
+
+
+def _marker(dirs: list[Path]) -> list[list[int]]:
+    """Id spans the bases among ``dirs`` (siblings) have folded."""
+    return _spans(
+        s for d in dirs if _batch_id(d) < 0 and (d / _FOLDED).is_file()
+        for s in json.loads((d / _FOLDED).read_text())
+    )
+
+
+def _hidden(dirs: list[Path]) -> list[int]:
+    """Ids of the sibling ``dirs`` a base among them has folded."""
+    spans = _marker(dirs)
+    return [i for i in map(_batch_id, dirs) if any(lo <= i <= hi for lo, hi in spans)]
+
+
+def folded(path: str, batch_id: int) -> bool:
+    """Whether a compacted base of the dataset at ``path`` holds batch
+    ``batch_id``."""
+    return any(
+        lo <= batch_id <= hi
+        for dirs in _scopes(Path(path)).values()
+        for lo, hi in _marker(dirs)
+    )
 
 
 def read_batches(
@@ -225,7 +279,7 @@ def read_batches(
 ) -> DataFrame | None:
     """The live rows of the dataset at ``path``: ``empty`` when the root
     is missing or holds no parquet yet; otherwise every batch partition
-    except those a base has folded and ``exclude_batch``."""
+    except ``exclude_batch`` and those a sibling base has folded."""
     if not os.path.isdir(path):
         return empty
     try:
@@ -234,9 +288,16 @@ def read_batches(
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             return empty
         raise
-    done = folded(path)
-    if done:
-        df = df.filter(~F.col("batch").isin(sorted(done)))
+    root = Path(path)
+    for parent, dirs in _scopes(root).items():
+        ids = _hidden(dirs)
+        if ids:
+            # batch and the parent's partition values: prunes directories
+            cond = F.col("batch").isin(ids)
+            for part in parent.relative_to(root).parts:
+                col, value = part.split("=", 1)
+                cond &= F.col(col).cast("string") == value
+            df = df.filter(~cond)
     if exclude_batch is not None:
         # batch is a partition column: this prunes whole directories
         df = df.filter(F.col("batch") != int(exclude_batch))
@@ -275,26 +336,23 @@ def compact(spark: SparkSession, root: str, datasets: list[Dataset]) -> int:
     windows). Returns the number of batch dirs folded in the first
     dataset; 0 when every partition already holds a single batch."""
     roots = [Path(d.path(root)) for d in datasets]
-    dirs = [_batch_dirs(r) for r in roots]
-    if all(len(b) <= len({d.parent for d in b}) for b in dirs):
+    scopes = [_scopes(r) for r in roots]
+    if all(len(dirs) <= 1 for s in scopes for dirs in s.values()):
         return 0
-    base = min([BASE_BATCH_ID] + [_batch_id(d) - 1 for b in dirs for d in b])
+    base = min(
+        [BASE_BATCH_ID]
+        + [_batch_id(d) - 1 for s in scopes for dirs in s.values() for d in dirs]
+    )
 
     snaps: dict[str, DataFrame] = {}
-    for ds, r, b in zip(datasets, roots, dirs):
-        if ds.derive is not None:
-            snap = ds.derive(snaps)
-        elif not b:
-            continue
-        elif ds.fold is not None:
-            snap = ds.fold(read_batches(spark, str(r)))
-        else:
-            snap = read_batches(spark, str(r)).select(*ds.cols).dropDuplicates(list(ds.keys))
-        # eager: no lineage may read a directory deleted below
-        snaps[ds.name] = snap.localCheckpoint(eager=True)
+    for ds, r, s in zip(datasets, roots, scopes):
+        if s:
+            snap = ds.snapshot(lambda: read_batches(spark, str(r)), snaps)
+            # eager: no lineage may read a directory deleted below
+            snaps[ds.name] = snap.localCheckpoint(eager=True)
 
-    for ds, r, b in zip(datasets, roots, dirs):
-        if ds.name not in snaps:
+    for ds, r, s in zip(datasets, roots, scopes):
+        if not s:
             continue
         snap = snaps[ds.name]
         split = [p for p in ds.parts if p != "batch"]
@@ -320,13 +378,18 @@ def compact(spark: SparkSession, root: str, datasets: list[Dataset]) -> int:
             .partitionBy(*ds.parts)
             .parquet(str(tmp))
         )
-        marker = json.dumps(sorted({_batch_id(d) for d in b} | folded(str(r))))
-        for leaf in _batch_dirs(tmp):
-            (leaf / _FOLDED).write_text(marker)
-            dest = r / leaf.relative_to(tmp)
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            leaf.rename(dest)
+        # each leaf's marker names only its own siblings' ids, so a
+        # crash between two leaf renames hides nothing unpublished
+        for parent, leaves in _scopes(tmp).items():
+            dirs = s[r / parent.relative_to(tmp)]
+            marker = _spans([[i, i] for i in map(_batch_id, dirs)] + _marker(dirs))
+            for leaf in leaves:
+                (leaf / _FOLDED).write_text(json.dumps(marker))
+                dest = r / leaf.relative_to(tmp)
+                dest.parent.mkdir(parents=True, exist_ok=True)
+                leaf.rename(dest)
         shutil.rmtree(tmp)
-        for d in b:
-            shutil.rmtree(d)
-    return len(dirs[0])
+        for dirs in s.values():
+            for d in dirs:
+                shutil.rmtree(d)
+    return sum(map(len, scopes[0].values()))

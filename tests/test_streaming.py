@@ -1703,6 +1703,9 @@ def test_cms_ingest_stream_equals_batch_and_replay(spark, tmp_path, sf_dir, monk
     assert len(dirs) == 1
     assert totals(read_cms(spark, index_dir)) == batch
 
+    # a sketch that has not been written yet reads as zero counters
+    assert read_cms(spark, str(base / "unwritten")).count() == 0
+
     # replay batch 0 AFTER compaction: the base already holds it, so the
     # rewritten batch=0 partition must not count a second time (nor
     # overwrite the base)
@@ -1881,3 +1884,47 @@ def test_compaction_crash_window_keeps_answers_and_heals(
         assert all(int(d.name.split("=")[1]) < 0 for d in dirs), name
     assert answer() == before
     assert compact(spark, idx) == 0
+
+
+def test_cell_first_compaction_crash_between_leaf_renames_keeps_answers_and_heals(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The semantic-dedup members are cell-first
+    (``cell=<c>/batch=<b>``), so a compaction publishes one base leaf
+    per cell. A crash after the first leaf's rename leaves one cell
+    compacted and every other cell on its per-batch dirs: each base's
+    folded-batch marker must hide only its own cell's dirs, so no
+    member goes missing, and the next compaction heals every cell."""
+    from pathlib import Path
+
+    idx = str(tmp_path / "index")
+    compact, names, answer = _index_case(spark, sf_dir, idx, "semdedup")
+    members = Path(idx, "members")
+    before = answer()
+    before_rows = spark.read.parquet(str(members)).count()
+    cells = sorted(d.name for d in members.glob("cell=*"))
+    assert before and len(cells) > 1
+
+    renames = []
+    real_rename = Path.rename
+
+    def rename_once(self, target):
+        if renames:
+            raise RuntimeError("injected crash between leaf renames")
+        renames.append(target)
+        return real_rename(self, target)
+
+    monkeypatch.setattr(Path, "rename", rename_once)
+    with pytest.raises(RuntimeError, match="injected"):
+        compact(spark, idx)
+    monkeypatch.undo()
+    published = {d.parent.name for d in members.glob("cell=*/batch=-*")}
+    assert published == {Path(renames[0]).parent.name}
+    assert answer() == before
+
+    assert compact(spark, idx) > 0
+    for cell in cells:
+        dirs = list((members / cell).glob("batch=*"))
+        assert len(dirs) == 1 and dirs[0].name.startswith("batch=-"), cell
+    assert spark.read.parquet(str(members)).count() == before_rows
+    assert answer() == before
