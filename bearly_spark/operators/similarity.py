@@ -45,7 +45,7 @@ def collect_query_rows(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    max_queries: int = MAX_DRIVER_QUERIES,
+    max_queries: int | None = None,
     what: str = "query set",
 ):
     """Collect the (id, vector) query rows under the driver-collect
@@ -54,7 +54,10 @@ def collect_query_rows(
     job), and a query frame past the cap raises with a pointer at the
     banded-join / persisted-index forms that handle query sets at
     scale (``streaming.ann_index.ann_query_over_index``, the LSH
-    band-join path)."""
+    band-join path). ``max_queries`` defaults to
+    :data:`MAX_DRIVER_QUERIES`, read at call time."""
+    if max_queries is None:
+        max_queries = MAX_DRIVER_QUERIES
     rows = (
         queries.select(F.col(id_col), F.col(vec_col))
         .limit(max_queries + 1)
@@ -94,9 +97,31 @@ def cosine(a: Column, b: Column, norm_a: Column | None = None, norm_b: Column | 
     return dot(a, b) / (na * nb)
 
 
-def _vec_matrix(series: pd.Series) -> np.ndarray:
-    """Stack an Arrow list<float> column into an (n, dim) float64 matrix."""
-    return np.asarray([np.asarray(v, dtype=np.float64) for v in series])
+def _vec_matrix(series, dtype=np.float64) -> np.ndarray:
+    """Stack an Arrow list column (or a list of vectors) into an (n, dim)
+    matrix, float64 unless ``dtype`` says otherwise. The rows stack in
+    their own dtype and the matrix converts once, which gives the same
+    values as converting each row (float32 → float64 and int32 → int64
+    are exact) without a temporary array per row."""
+    return np.asarray([np.asarray(v) for v in series], dtype=dtype)
+
+
+def _norms(mat: np.ndarray) -> np.ndarray:
+    """Row L2 norms, zero rows read as 1 (a zero vector's cosine is 0)."""
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0] = 1.0
+    return norms
+
+
+def _query_matrix(qrows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(ids, float64 matrix, norms) of collected (id, vector) rows."""
+    qmat = _vec_matrix([r[1] for r in qrows])
+    return np.asarray([r[0] for r in qrows], dtype=np.int64), qmat, _norms(qmat)
+
+
+def _cosine_matrix(mat: np.ndarray, qmat: np.ndarray, qnorm: np.ndarray) -> np.ndarray:
+    """6dp-rounded cosine of every (row, query) pair: one BLAS matmul."""
+    return np.round((mat @ qmat.T) / (_norms(mat)[:, None] * qnorm[None, :]), 6)
 
 
 def make_cosine_udf():
@@ -112,6 +137,73 @@ def make_cosine_udf():
         return pd.Series(num / den)
 
     return _cos
+
+
+# ------------------------------------------------- the shared top-k stages
+#
+# Every vector top-k path has one shape: a partition-local top-n per
+# query under the GLOBAL ordering key (so the global top-n survives the
+# local cut), one window over what is left, and — where candidates come
+# from an approximate structure — one exact-cosine rerank tail. Rows
+# between the stages are (q_id, c_id, score).
+
+_SCORED = "q_id long, c_id long, score double"
+
+
+def _rank(scored: DataFrame, n: int, desc: bool = True) -> DataFrame:
+    """Per-query top-``n`` of (q_id, c_id, score) rows by (score, c_id),
+    numbered ``rn``."""
+    key = F.desc("score") if desc else F.asc("score")
+    w = Window.partitionBy("q_id").orderBy(key, F.asc("c_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
+
+
+def _scan_topn(rows: DataFrame, score, n: int, desc: bool = True) -> DataFrame:
+    """Partition-local, then global top-``n``: ``score(pdf)`` yields one
+    ``(q_id, ids, scores)`` triple per query for each non-empty Arrow
+    batch of ``rows``; the batch keeps each query's ``n`` best rows by
+    (score, id) — ``np.lexsort``, the window's own key — and one
+    :func:`_rank` window ranks the survivors. Θ(q·n) rows leave a
+    partition instead of Θ(q·N)."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            frames = []
+            for qid, ids, s in score(pdf):
+                sel = np.lexsort((ids, -s if desc else s))[:n]
+                frames.append(pd.DataFrame({"q_id": qid, "c_id": ids[sel], "score": s[sel]}))
+            if frames:
+                yield pd.concat(frames)
+
+    return _rank(rows.mapInPandas(kernel, _SCORED), n, desc)
+
+
+def _neighbors(ranked: DataFrame) -> DataFrame:
+    """The public top-k row shape (query_id, neighbor_id, cosine_sim, rn)."""
+    return ranked.select(
+        F.col("q_id").alias("query_id"),
+        F.col("c_id").alias("neighbor_id"),
+        F.col("score").alias("cosine_sim"),
+        "rn",
+    )
+
+
+def _exact_topk(
+    cand: DataFrame, queries: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """The exact tail of every pruned path: ``cand`` holds (q_id, c_id,
+    c_vec); the query vectors broadcast, each candidate gets its exact
+    6dp cosine and one window keeps the top ``k`` by (cosine_sim desc,
+    neighbor_id). Returned similarities are exact; only recall is
+    approximate."""
+    cos_udf = make_cosine_udf()
+    qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
+    scored = cand.join(F.broadcast(qv), "q_id").select(
+        "q_id", "c_id", F.round(cos_udf(F.col("q_vec"), F.col("c_vec")), 6).alias("score")
+    )
+    return _neighbors(_rank(scored, k))
 
 
 def brute_force_topk(
@@ -131,42 +223,16 @@ def brute_force_topk(
     the batch scores), so the final rank window is over a k·partitions
     bounded set — the corpus itself never shuffles.
     """
-    qrows = collect_query_rows(queries, id_col, vec_col)
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
+    qids, qmat, qnorm = _query_matrix(collect_query_rows(queries, id_col, vec_col))
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
-            mat = _vec_matrix(pdf.iloc[:, 1])
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            sims = np.round((mat @ qmat.T) / (norms[:, None] * qnorm[None, :]), 6)
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qids)):
-                col = sims[:, j]
-                keep = ids != qids[j]  # exclude self-match
-                cand_idx = np.nonzero(keep)[0]
-                if len(cand_idx) > k:
-                    # top-k by (sim desc, id asc): lexsort on (id, -sim)
-                    order = np.lexsort((ids[cand_idx], -col[cand_idx]))[:k]
-                    cand_idx = cand_idx[order]
-                out_q.extend([qids[j]] * len(cand_idx))
-                out_n.extend(ids[cand_idx].tolist())
-                out_s.extend(col[cand_idx].tolist())
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cosine_sim": out_s})
+    def score(pdf: pd.DataFrame):
+        ids = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
+        sims = _cosine_matrix(_vec_matrix(pdf.iloc[:, 1]), qmat, qnorm)
+        for j, qid in enumerate(qids):
+            keep = ids != qid  # exclude self-match
+            yield qid, ids[keep], sims[keep, j]
 
-    scored = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        score, "query_id long, neighbor_id long, cosine_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rn")
-    )
+    return _neighbors(_scan_topn(corpus.select(F.col(id_col), F.col(vec_col)), score, k))
 
 
 def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> np.ndarray:
@@ -308,26 +374,10 @@ def rerank_candidates(
     k: int = 10,
 ) -> DataFrame:
     """Exact-cosine verify + per-query top-k over a (q_id, c_id) candidate
-    set (the shared tail of every blocked ANN variant). Queries broadcast;
-    the corpus joins by id so only candidate vectors are scored."""
-    cos_udf = make_cosine_udf()
-    scored = (
-        cand.join(
-            F.broadcast(
-                queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-            ),
-            "q_id",
-        )
-        .join(corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")), "c_id")
-        .withColumn("cosine_sim", F.round(cos_udf(F.col("q_vec"), F.col("c_vec")), 6))
-        .select(F.col("q_id").alias("query_id"), F.col("c_id").alias("neighbor_id"), "cosine_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rn")
-    )
+    set whose vectors live in ``corpus``: the corpus joins by id so only
+    candidate vectors are scored, then :func:`_exact_topk` ranks them."""
+    vecs = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
+    return _exact_topk(cand.join(vecs, "c_id"), queries, id_col, vec_col, k)
 
 
 def sq8_code_table(
@@ -381,50 +431,28 @@ def sq8_ann_topk(
     with IVF cells exactly like PQ does (``ivfpq_index_query``) — the
     cells prune, the codes cut the scanned bytes, the rerank touches
     Θ(candidates) full vectors."""
-    codes = sq8_code_table(corpus, id_col, vec_col)
-    qrows = (
-        sq8_code_table(queries, id_col, vec_col)
-        .select(id_col, "sq_scale", "sq_codes")
-        .collect()
+    # the query codes ride in one struct column through the bounded collect
+    qcodes = sq8_code_table(queries, id_col, vec_col).select(
+        id_col, F.struct("sq_scale", "sq_codes").alias("sq")
     )
+    qrows = collect_query_rows(qcodes, id_col, "sq")
     qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.asarray([r[2] for r in qrows], dtype=np.int64)
-    qsc = np.asarray([r[1] for r in qrows], dtype=np.float64)
+    qmat = np.asarray([r[1].sq_codes for r in qrows], dtype=np.int64)
+    qsc = np.asarray([r[1].sq_scale for r in qrows], dtype=np.float64)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
-            csc = pdf.iloc[:, 1].to_numpy(dtype=np.float64)
-            cmat = np.asarray(
-                [np.asarray(v, dtype=np.int64) for v in pdf.iloc[:, 2]]
-            )
-            dots = (cmat @ qmat.T).astype(np.float64)
-            # operation order pinned to the twin's
-            # ((dot * q_scale) * c_scale) / 16129.0
-            approx = np.round(
-                ((dots * qsc[None, :]) * csc[:, None]) / 16129.0, 6
-            )
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(qids)):
-                col = approx[:, j]
-                cand_idx = np.nonzero(ids != qids[j])[0]
-                if len(cand_idx) > rerank:
-                    order = np.lexsort((ids[cand_idx], -col[cand_idx]))[:rerank]
-                    cand_idx = cand_idx[order]
-                out_q.extend([qids[j]] * len(cand_idx))
-                out_n.extend(ids[cand_idx].tolist())
-                out_s.extend(col[cand_idx].tolist())
-            yield pd.DataFrame(
-                {"q_id": out_q, "c_id": out_n, "approx": out_s}
-            )
+    def score(pdf: pd.DataFrame):
+        ids = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
+        csc = pdf.iloc[:, 1].to_numpy(dtype=np.float64)
+        dots = (_vec_matrix(pdf.iloc[:, 2], np.int64) @ qmat.T).astype(np.float64)
+        # operation order pinned to the twin's
+        # ((dot * q_scale) * c_scale) / 16129.0
+        approx = np.round(((dots * qsc[None, :]) * csc[:, None]) / 16129.0, 6)
+        for j, qid in enumerate(qids):
+            keep = ids != qid
+            yield qid, ids[keep], approx[keep, j]
 
-    scored = codes.mapInPandas(score, "q_id long, c_id long, approx double")
-    w = Window.partitionBy("q_id").orderBy(F.desc("approx"), F.asc("c_id"))
-    cand = (
-        scored.withColumn("arn", F.row_number().over(w))
-        .filter(F.col("arn") <= rerank)
-        .select("q_id", "c_id")
-    )
+    codes = sq8_code_table(corpus, id_col, vec_col)
+    cand = _scan_topn(codes, score, rerank).select("q_id", "c_id")
     return rerank_candidates(cand, corpus, queries, id_col, vec_col, k=k)
 
 
@@ -484,68 +512,32 @@ def lsh_ann_topk(
     if nbits is None:
         n = n_vectors if n_vectors is not None else _corpus_size(corpus, id_col)
         nbits = auto_banding(n, bands=bands, target_bucket=target_bucket)
-    planes = _hyperplanes(dim, nbits, seed)
+    pt = _hyperplanes(dim, nbits, seed).T.copy()
     bpb = nbits // bands
     band_w = (np.uint64(1) << np.arange(bpb, dtype=np.uint64)).astype(np.float64)
 
-    qrows = collect_query_rows(queries, id_col, vec_col)
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
-    qbits = (qmat @ planes.T) >= 0  # (nq, nbits)
-    qkeys = np.stack(
-        [
-            (qbits[:, j * bpb : (j + 1) * bpb] @ band_w).astype(np.int64)
-            for j in range(bands)
-        ],
-        axis=1,
-    )  # (nq, bands)
+    def band_keys(mat: np.ndarray) -> np.ndarray:  # (n, bands)
+        bits = (mat @ pt) >= 0  # (n, nbits)
+        return np.stack(
+            [(bits[:, j * bpb : (j + 1) * bpb] @ band_w).astype(np.int64) for j in range(bands)],
+            axis=1,
+        )
 
-    pt = planes.T.copy()
+    qids, qmat, qnorm = _query_matrix(collect_query_rows(queries, id_col, vec_col))
+    qkeys = band_keys(qmat)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
-            mat = _vec_matrix(pdf.iloc[:, 1])
-            bits = (mat @ pt) >= 0  # (n, nbits)
-            ckeys = np.stack(
-                [
-                    (bits[:, j * bpb : (j + 1) * bpb] @ band_w).astype(np.int64)
-                    for j in range(bands)
-                ],
-                axis=1,
-            )  # (n, bands)
-            # candidate iff min over bands of hamming(ckey, qkey) <= probe
-            ham = _popcount64(ckeys[:, None, :] ^ qkeys[None, :, :])  # (n, nq, bands)
-            cand = (ham <= probe).any(axis=2)  # (n, nq)
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                idx = np.nonzero(cand[:, qi] & (ids != qids[qi]))[0]
-                if not len(idx):
-                    continue
-                sims = np.round(
-                    (mat[idx] @ qmat[qi]) / (norms[idx] * qnorm[qi]), 6
-                )
-                if len(idx) > k:
-                    order = np.lexsort((ids[idx], -sims))[:k]
-                    idx, sims = idx[order], sims[order]
-                out_q.extend([qids[qi]] * len(idx))
-                out_n.extend(ids[idx].tolist())
-                out_s.extend(sims.tolist())
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cosine_sim": out_s})
+    def score(pdf: pd.DataFrame):
+        ids = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
+        mat = _vec_matrix(pdf.iloc[:, 1])
+        # candidate iff min over bands of hamming(ckey, qkey) <= probe
+        ham = _popcount64(band_keys(mat)[:, None, :] ^ qkeys[None, :, :])  # (n, nq, bands)
+        cand = (ham <= probe).any(axis=2)  # (n, nq)
+        norms = _norms(mat)
+        for qi, qid in enumerate(qids):
+            idx = np.nonzero(cand[:, qi] & (ids != qid))[0]
+            yield qid, ids[idx], np.round((mat[idx] @ qmat[qi]) / (norms[idx] * qnorm[qi]), 6)
 
-    scored = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        score, "query_id long, neighbor_id long, cosine_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rn")
-    )
+    return _neighbors(_scan_topn(corpus.select(F.col(id_col), F.col(vec_col)), score, k))
 
 
 def embedding_near_dup_pairs(
@@ -723,17 +715,78 @@ def _kmeans_fit(mat: np.ndarray, n_cells: int, seed: int = 42, iters: int = 10) 
     return C
 
 
+def _fit_sample(
+    corpus: DataFrame, id_col: str, vec_col: str, sample_size: int, seed: int, sample_by: str
+) -> np.ndarray:
+    """The bounded driver-side sample every IVF and PQ fit runs on, as a
+    float64 matrix: the first ``sample_size`` vectors by xxhash64(id,
+    seed) (``sample_by="hash"``, a deterministic uniform draw) or by id
+    (``"id"``, the order the DuckDB twins replay). Spark runs the
+    orderBy+limit as TakeOrderedAndProject: one pass, no full sort."""
+    if sample_by not in ("hash", "id"):
+        raise ValueError(f"sample_by must be 'hash' or 'id': {sample_by}")
+    order = (
+        F.col(id_col).cast("long")
+        if sample_by == "id"
+        else F.xxhash64(F.col(id_col), F.lit(seed))
+    )
+    sample = (
+        corpus.select(F.col(vec_col).alias("_v"), order.alias("_h"))
+        .orderBy("_h")
+        .limit(sample_size)
+        .select("_v")
+        .collect()
+    )
+    return _vec_matrix([r[0] for r in sample])
+
+
+def _ivf_fit(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_cells: int | None,
+    sample_size: int,
+    seed: int,
+    sample_by: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(centroids, fit sample) of an IVF model. ``n_cells=None`` sizes
+    the model to the corpus: ``clamp(round(√N), 4, 4096)`` cells over the
+    :func:`_corpus_size` estimate."""
+    smat = _fit_sample(corpus, id_col, vec_col, sample_size, seed, sample_by)
+    if n_cells is None:
+        n = _corpus_size(corpus, id_col)
+        n_cells = int(min(4096, max(4, round(math.sqrt(max(n, 1))))))
+    return _kmeans_fit(smat, n_cells, seed), smat
+
+
+def _nearest(C: np.ndarray, mat: np.ndarray) -> np.ndarray:
+    """Nearest row of ``C`` for each row of ``mat``: argmin ||x−c||² =
+    argmin (c² − 2x·c), one matmul; ties go to the lowest index (numpy
+    argmin's first hit, the rule the SQL twins spell ORDER BY d, id)."""
+    return ((C**2).sum(axis=1)[None, :] - 2.0 * (mat @ C.T)).argmin(axis=1)
+
+
+def _probe_cells(spark, C: np.ndarray, qrows, n_probe: int | None):
+    """Each query's ``n_probe`` nearest cells (default ``max(4, n_cells
+    // 16)``) by c² − 2C·q. The sort is stable: equidistant cells resolve
+    to the LOWEST cell id, the tie rule the DuckDB twin spells as ORDER
+    BY d, cell. Returns the (q_id, cell) rows and their frame."""
+    if n_probe is None:
+        n_probe = max(4, len(C) // 16)
+    c2 = (C**2).sum(axis=1)
+    rows = []
+    for r in qrows:
+        d = c2 - 2.0 * (C @ np.asarray(r[1], dtype=np.float64))
+        rows.extend((int(r[0]), int(cell)) for cell in np.argsort(d, kind="stable")[:n_probe])
+    return rows, spark.createDataFrame(rows, "q_id long, cell int")
+
+
 def make_cell_assign_udf(centroids: np.ndarray):
     """vector -> nearest-centroid cell id (batch matmul per Arrow batch)."""
-    C = centroids.copy()
-    c2 = (C**2).sum(axis=1)
 
     @F.pandas_udf("int")
     def _cell(vecs: pd.Series) -> pd.Series:
-        mat = _vec_matrix(vecs)
-        # argmin ||x-c||² = argmin (c² - 2x·c)
-        d = c2[None, :] - 2.0 * (mat @ C.T)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
+        return pd.Series(_nearest(centroids, _vec_matrix(vecs)).astype(np.int32))
 
     return _cell
 
@@ -784,60 +837,15 @@ def ivf_ann_topk(
     ids are uncorrelated with content, or the sample bias warning above
     applies.
     """
-    if n_cells is None:
-        n = corpus.agg(F.approx_count_distinct(id_col)).collect()[0][0]
-        n_cells = int(min(4096, max(4, round(math.sqrt(max(n, 1))))))
-    if n_probe is None:
-        n_probe = max(4, n_cells // 16)
-    order = (
-        F.col(id_col).cast("long")
-        if sample_by == "id"
-        else F.xxhash64(F.col(id_col), F.lit(seed))
-    )
-    sample = (
-        corpus.select(F.col(vec_col).alias("_v"), order.alias("_h"))
-        .orderBy("_h")
-        .limit(sample_size)
-        .select("_v")
-        .collect()
-    )
-    smat = np.asarray([np.asarray(r[0], dtype=np.float64) for r in sample])
-    C = _kmeans_fit(smat, n_cells, seed)
-
+    C, _ = _ivf_fit(corpus, id_col, vec_col, n_cells, sample_size, seed, sample_by)
     cell_udf = make_cell_assign_udf(C)
-    corpus_cells = corpus.select(
+    cells = corpus.select(
         F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"), cell_udf(F.col(vec_col)).alias("cell")
     )
-
     qrows = collect_query_rows(queries, id_col, vec_col)
-    c2 = (C**2).sum(axis=1)
-    probe_rows = []
-    for r in qrows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        d = c2 - 2.0 * (C @ qv)
-        # stable sort: equidistant cells resolve to the LOWEST cell id,
-        # the tie rule the DuckDB twin spells as ORDER BY d, cell
-        for cell in np.argsort(d, kind="stable")[:n_probe]:
-            probe_rows.append((int(r[0]), int(cell)))
-    probes = corpus.sparkSession.createDataFrame(probe_rows, "q_id long, cell int")
-
-    cos_udf = make_cosine_udf()
-    cand = (
-        corpus_cells.join(F.broadcast(probes), "cell")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .join(
-            F.broadcast(queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))),
-            "q_id",
-        )
-        .withColumn("cosine_sim", F.round(cos_udf(F.col("q_vec"), F.col("c_vec")), 6))
-        .select(F.col("q_id").alias("query_id"), F.col("c_id").alias("neighbor_id"), "cosine_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rn")
-    )
+    _, probes = _probe_cells(corpus.sparkSession, C, qrows, n_probe)
+    cand = cells.join(F.broadcast(probes), "cell").filter(F.col("q_id") != F.col("c_id"))
+    return _exact_topk(cand, queries, id_col, vec_col, k)
 
 
 def embedding_dup_clusters(
@@ -905,24 +913,46 @@ def pq_fit(mat: np.ndarray, m: int, ksub: int, seed: int = 42, iters: int = 10) 
     )
 
 
+def _pq_codes(cb: np.ndarray, mat: np.ndarray) -> np.ndarray:
+    """(n, m) int32 PQ codes: each row's nearest sub-centroid
+    (:func:`_nearest`) in each of the ``m`` contiguous subspaces."""
+    m, _, dsub = cb.shape
+    codes = np.empty((len(mat), m), dtype=np.int32)
+    for j in range(m):
+        codes[:, j] = _nearest(cb[j], mat[:, j * dsub : (j + 1) * dsub])
+    return codes
+
+
+def _adc_lut(cb: np.ndarray, qv: np.ndarray) -> np.ndarray:
+    """One query's (m, ksub) ADC term table — the asymmetric trick: the
+    query stays exact, only the corpus side is quantized. Computed
+    EXACTLY like the SQL twins: term(j, c) = c² − 2·(q_j · cb[j][c]) +
+    q_j², float64 throughout."""
+    m, ksub, dsub = cb.shape
+    cb2 = (cb**2).sum(axis=2)
+    lut = np.empty((m, ksub), dtype=np.float64)
+    for j in range(m):
+        qj = qv[j * dsub : (j + 1) * dsub]
+        lut[j] = cb2[j] - 2.0 * (cb[j] @ qj) + (qj @ qj)
+    return lut
+
+
+def _adc(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """6dp-rounded asymmetric distance of each code row against one LUT,
+    summed over subspaces in j order (the twins' ordered addition up to
+    ulp, then rounded)."""
+    return np.round(lut[np.arange(len(lut))[None, :], codes].sum(axis=1), 6)
+
+
 def make_pq_encode_udf(codebooks: np.ndarray):
     """vector -> m uint8 codes (nearest sub-centroid per subspace; ties
     to the LOWEST code — numpy argmin's first-hit rule, the same rule
     the SQL twin spells as ORDER BY d, code). One batch matmul per
     subspace per Arrow batch."""
-    cb = codebooks.copy()
-    m, ksub, dsub = cb.shape
-    c2 = (cb**2).sum(axis=2)  # (m, ksub)
 
     @F.pandas_udf("array<int>")
     def _encode(vecs: pd.Series) -> pd.Series:
-        mat = _vec_matrix(vecs)
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            d = c2[j][None, :] - 2.0 * (sub @ cb[j].T)
-            codes[:, j] = d.argmin(axis=1)
-        return pd.Series(list(codes))
+        return pd.Series(list(_pq_codes(codebooks, _vec_matrix(vecs))))
 
     return _encode
 
@@ -973,89 +1003,24 @@ def pq_ann_topk(
 
     Returns (query_id, neighbor_id, cosine_sim, rn), rn ≤ k.
     """
-    if sample_by not in ("hash", "id"):
-        raise ValueError(f"sample_by must be 'hash' or 'id': {sample_by}")
-    order = (
-        F.col(id_col).cast("long")
-        if sample_by == "id"
-        else F.xxhash64(F.col(id_col), F.lit(seed))
-    )
-    sample = (
-        corpus.select(F.col(vec_col).alias("_v"), order.alias("_h"))
-        .orderBy("_h")
-        .limit(sample_size)
-        .select("_v")
-        .collect()
-    )
-    smat = np.asarray([np.asarray(r[0], dtype=np.float64) for r in sample])
+    smat = _fit_sample(corpus, id_col, vec_col, sample_size, seed, sample_by)
     cb = pq_fit(smat, m, ksub, seed)
-    ksub_, dsub = cb.shape[1], cb.shape[2]
-    c2 = (cb**2).sum(axis=2)  # (m, ksub)
-
     enc = make_pq_encode_udf(cb)
     codes = corpus.select(F.col(id_col).alias("c_id"), enc(F.col(vec_col)).alias("codes"))
+    luts = [
+        (int(r[0]), _adc_lut(cb, np.asarray(r[1], dtype=np.float64)))
+        for r in collect_query_rows(queries, id_col, vec_col)
+    ]
 
-    qrows = collect_query_rows(queries, id_col, vec_col)
-    q_ids = np.asarray([int(r[0]) for r in qrows])
-    # per-query LUT of ADC terms, computed EXACTLY like the SQL twin:
-    # term(q, j, c) = c2 - 2·(q_j · C[j][c]) + q_j²  (float64 throughout)
-    luts = np.empty((len(qrows), cb.shape[0], ksub_), dtype=np.float64)
-    for qi, r in enumerate(qrows):
-        qv = np.asarray(r[1], dtype=np.float64)
-        for j in range(cb.shape[0]):
-            qj = qv[j * dsub : (j + 1) * dsub]
-            luts[qi, j] = c2[j] - 2.0 * (cb[j] @ qj) + (qj @ qj)
+    def score(pdf: pd.DataFrame):
+        ids = pdf["c_id"].to_numpy()
+        cmat = _vec_matrix(pdf["codes"], np.int64)
+        for qid, lut in luts:
+            keep = ids != qid  # self-match excluded BEFORE the cut
+            yield qid, ids[keep], _adc(lut, cmat[keep])
 
-    out_schema = "q_id long, c_id long, adc double"
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cmat_all = np.asarray([np.asarray(c) for c in pdf["codes"]], dtype=np.int64)
-            ids_all = pdf["c_id"].to_numpy()
-            frames = []
-            for qi in range(len(q_ids)):
-                mask = ids_all != q_ids[qi]  # self-match excluded BEFORE the cut
-                ids, cmat = ids_all[mask], cmat_all[mask]
-                if not len(ids):
-                    continue
-                # sum over subspaces in j order (sequential — matches the
-                # twin's ordered 8-term addition up to ulp, then rounded)
-                adc = luts[qi, np.arange(cmat.shape[1])[None, :], cmat].sum(axis=1)
-                take = min(rerank, len(ids))
-                # partition-local top-`rerank` BY THE GLOBAL ORDERING KEY
-                # (rounded adc, id): global top survives local pruning
-                adc_r = np.round(adc, 6)
-                sel = np.lexsort((ids, adc_r))[:take]
-                frames.append(
-                    pd.DataFrame(
-                        {"q_id": q_ids[qi], "c_id": ids[sel], "adc": adc_r[sel]}
-                    )
-                )
-            if frames:
-                yield pd.concat(frames)
-
-    scored = codes.mapInPandas(score, schema=out_schema)
-    w_adc = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("c_id"))
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(w_adc))
-        .filter(F.col("_rn") <= rerank)
-        .select("q_id", "c_id")
-    )
-
-    cos_udf = make_cosine_udf()
-    qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    cvec = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
-    w_cos = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        cand.join(cvec, "c_id")
-        .join(F.broadcast(qv), "q_id")
-        .withColumn("cosine_sim", F.round(cos_udf(F.col("q_vec"), F.col("c_vec")), 6))
-        .select(F.col("q_id").alias("query_id"), F.col("c_id").alias("neighbor_id"), "cosine_sim")
-        .withColumn("rn", F.row_number().over(w_cos))
-        .filter(F.col("rn") <= k)
-    )
+    cand = _scan_topn(codes, score, rerank, desc=False).select("q_id", "c_id")
+    return rerank_candidates(cand, corpus, queries, id_col, vec_col, k)
 
 
 def max_cosine_vs_set(
@@ -1107,19 +1072,13 @@ def _cosine_vs_set_kernel(eval_set, id_col, vec_col, threshold):
                                what="eval set")
     if not qrows:
         raise ValueError("eval_set is empty: nothing to decontaminate against")
-    qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
+    qids, qmat, qnorm = _query_matrix(qrows)
     thr = float(threshold)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
-            mat = _vec_matrix(pdf.iloc[:, 1])
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            sims = np.round((mat @ qmat.T) / (norms[:, None] * qnorm[None, :]), 6)
+            sims = _cosine_matrix(_vec_matrix(pdf.iloc[:, 1]), qmat, qnorm)
             mx = sims.max(axis=1)
             # lowest eval id among the argmax ties
             tie = np.where(sims == mx[:, None], qids[None, :], np.iinfo(np.int64).max)

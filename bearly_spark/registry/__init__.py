@@ -109,7 +109,6 @@ PREFIX_ORDER = [
     "sum_produce_stream",
     "q1_pricing_summary",
     # r11 reds, oracle emission cast to BIGINT (verdict #1)
-    "q12_late_shipment_priority",
     "outliers_iqr_lineitem",
     "substring_dedup_clean_documents",
     # stale no_oracle records from r01/r02 (verdict #3)
@@ -119,7 +118,6 @@ PREFIX_ORDER = [
     # text block
     "bigram_quality_documents",
     # curation splits / caps / decontamination
-    "decontaminate_bm25_documents",
     "cluster_aware_split_documents",
     "decontaminate_embedding",
     # clustering / mining tail
@@ -127,9 +125,7 @@ PREFIX_ORDER = [
     "basket_rules_lineitem",
     # DQ block (zero driver coverage until now)
     "drift_report_orders",
-    "standardize_lineitem",
     # ---- new this round (seat the round they ship) ----
-    "bpe_merges_documents",
     "pca_project_embeddings",
     # commit-log table format (sources/txlog) — the object-store table
     # layer: versioned read, time travel, stats skipping, compaction,
@@ -143,8 +139,6 @@ PREFIX_ORDER = [
     # cusum, top-k via topn_types_brand, broadcast joins via q5's plan
     # pin, outer joins via calendar_fill/scd2's outer shapes).
     "txlog_read_orders",
-    "txlog_compact_orders",
-    "txlog_delete_orders",
     "txlog_merge_orders",
     # tokenizer application + ANN quality eval + BPE packing capstone
     # (r12; slot accounting in the txlog comment above)
@@ -205,6 +199,21 @@ PREFIX_ORDER = [
     "dedup_index_query",
     "semdedup_hier_index_query",
     "semdedup_index_stats_query",
+    # ---- emission path changed: the vector top-k paths share one
+    # skeleton (fit sample, probe ranker, PQ coder, ADC scorer,
+    # partition-local top-n, exact-cosine rerank tail). Slots from seats
+    # green in r12-r14 (tools/seat_history.py): q12_late_shipment_priority,
+    # standardize_lineitem, decontaminate_bm25_documents,
+    # bpe_merges_documents, txlog_compact_orders and txlog_delete_orders;
+    # each family keeps a seat. embedding_ann_ivf, ann_recall_embeddings,
+    # decontaminate_embedding and the four index queries above ride the
+    # same change on their standing seats.
+    "embedding_topk_cosine",
+    "hashed_embedding_topk",
+    "chunk_embedding_topk",
+    "embedding_ann_lsh",
+    "embedding_ann_pq",
+    "embedding_ann_sq8",
     # (lang_id_distribution and rollup_orders also wait for r13 — the
     # text family holds seven greener r11/r12 seats, and rollup held an
     # r01 green on an unchanged code path; their slots went to

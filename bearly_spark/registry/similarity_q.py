@@ -844,8 +844,7 @@ def _ivfpq_residual_oracle() -> str:
     import duckdb
     import numpy as np
 
-    from bearly_spark.operators.similarity import _kmeans_fit, pq_fit
-    from bearly_spark.streaming.ivf_index import _assign_cells_np
+    from bearly_spark.operators.similarity import _kmeans_fit, _nearest, pq_fit
 
     n_cells, n_probe, m, ksub, rerank, k = 64, 16, 16, 16, 100, 10
     sf_dir = os.environ.get("BEARLY_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -857,7 +856,7 @@ def _ivfpq_residual_oracle() -> str:
     con.close()
     mat = np.asarray([r[0] for r in rows[:100_000]], dtype=np.float64)
     C = _kmeans_fit(mat, n_cells, seed=42)
-    cb = pq_fit(mat - C[_assign_cells_np(C, mat)], m, ksub, seed=42)
+    cb = pq_fit(mat - C[_nearest(C, mat)], m, ksub, seed=42)
     cc2 = (C**2).sum(axis=1)
     cb2 = (cb**2).sum(axis=2)
     dim = mat.shape[1]

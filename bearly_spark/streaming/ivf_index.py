@@ -45,9 +45,18 @@ import pyspark.sql.functions as F
 from bearly_spark.cache import memo
 from bearly_spark.interchange import write_arrow_parquet
 from bearly_spark.operators.similarity import (
-    _kmeans_fit,
+    _adc,
+    _adc_lut,
+    _exact_topk,
+    _ivf_fit,
+    _nearest,
+    _pq_codes,
+    _probe_cells,
+    _scan_topn,
+    _vec_matrix,
+    collect_query_rows,
     make_cell_assign_udf,
-    make_cosine_udf,
+    pq_fit,
 )
 from bearly_spark.sources.tables import read_parquet
 from bearly_spark.streaming.store import (
@@ -126,26 +135,8 @@ def build_ivf_index(
     the index. The initial load lands under ``batch=-1`` (a compacted
     base, so ``compact_ivf_index`` after later upserts folds into -2,
     -3, ...). Returns the fitted centroid matrix."""
-    if n_cells is None:
-        n = corpus.agg(F.approx_count_distinct(id_col)).collect()[0][0]
-        n_cells = int(min(4096, max(4, round(math.sqrt(max(n, 1))))))
-    order = (
-        F.col(id_col).cast("long")
-        if sample_by == "id"
-        else F.xxhash64(F.col(id_col), F.lit(seed))
-    )
-    sample = (
-        corpus.select(F.col(vec_col).alias("_v"), order.alias("_h"))
-        .orderBy("_h")
-        .limit(sample_size)
-        .select("_v")
-        .collect()
-    )
-    smat = np.asarray([np.asarray(r[0], dtype=np.float64) for r in sample])
-    C = _kmeans_fit(smat, n_cells, seed)
-
-    spark = corpus.sparkSession
-    _write_centroids(spark, C, index_dir)
+    C, _ = _ivf_fit(corpus, id_col, vec_col, n_cells, sample_size, seed, sample_by)
+    _write_centroids(corpus.sparkSession, C, index_dir)
     _write_cells(corpus, C, BASE_BATCH_ID, index_dir, id_col, vec_col)
     return C
 
@@ -158,7 +149,6 @@ def _write_cells(
     id_col: str,
     vec_col: str,
 ) -> None:
-    n_cells = len(C)
     cell_udf = make_cell_assign_udf(C)
     _IVF_CELLS.write(
         df.select(
@@ -169,7 +159,7 @@ def _write_cells(
         # bounded files per cell dir: micro-batches and fixture-scale
         # loads get one file per touched cell; hash partitioning by cell
         # keeps each task writing few dirs
-        .repartition(max(1, min(n_cells, 64)), "cell"),
+        .repartition(max(1, min(len(C), 64)), "cell"),
         batch_id,
         index_dir,
     )
@@ -227,47 +217,26 @@ def ivf_index_query(
     directories, so a probe touches ~n_probe/n_cells of the index
     bytes at any index size. Vectors ride in the index rows, so the
     rerank needs no join back to a corpus table."""
-    C = _read_centroids(spark, index_dir)
-    if n_probe is None:
-        n_probe = max(4, len(C) // 16)
-    c2 = (C**2).sum(axis=1)
-    from bearly_spark.operators.similarity import collect_query_rows
-
     qrows = collect_query_rows(queries, id_col, vec_col)
-    probe_rows = []
-    for r in qrows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        d = c2 - 2.0 * (C @ qv)
-        for cell in np.argsort(d, kind="stable")[:n_probe]:
-            probe_rows.append((int(r[0]), int(cell)))
-    probes = spark.createDataFrame(probe_rows, "q_id long, cell int")
-    probed_cells = sorted({c for _, c in probe_rows})
+    _, cand = _probe_index(spark, index_dir, _read_centroids(spark, index_dir), qrows, n_probe)
+    cand = cand.select("q_id", F.col("id").alias("c_id"), F.col("vec").alias("c_vec"))
+    return _exact_topk(cand, queries, id_col, vec_col, k)
 
+
+def _probe_index(spark: SparkSession, index_dir: str, C: np.ndarray, qrows, n_probe: int | None):
+    """The probe stage of both index queries: each query's probed
+    ``cells/`` rows, (cell, id, ..., q_id), self-pairs excluded. The
+    ``cell IN (...)`` filter prunes whole cell directories at planning
+    time. Returns the (q_id, cell) probe rows too."""
+    rows, probes = _probe_cells(spark, C, qrows, n_probe)
     cells = read_parquet(spark, f"{index_dir}/cells").filter(
-        F.col("cell").isin(probed_cells)
+        F.col("cell").isin(sorted({c for _, c in rows}))
     )
-    cos_udf = make_cosine_udf()
-    cand = (
+    return rows, (
         cells.join(F.broadcast(probes), "cell")
         .filter(F.col("q_id") != F.col("id"))
         # index duplicates (replay windows, mid-compaction) collapse here
         .dropDuplicates(["q_id", "id"])
-        .join(
-            F.broadcast(
-                queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-            ),
-            "q_id",
-        )
-        .withColumn("cosine_sim", F.round(cos_udf(F.col("q_vec"), F.col("vec")), 6))
-        .select(F.col("q_id").alias("query_id"), F.col("id").alias("neighbor_id"), "cosine_sim")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rn")
     )
 
 
@@ -318,13 +287,6 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> int:
 #   and the scan/rerank shapes are unchanged.
 
 
-def _assign_cells_np(C: np.ndarray, mat: np.ndarray) -> np.ndarray:
-    """Driver-side twin of ``make_cell_assign_udf``'s arithmetic (same
-    argmin(c² − 2x·C) form, first-hit ties) for fitting residuals."""
-    c2 = (C**2).sum(axis=1)
-    return (c2[None, :] - 2.0 * (mat @ C.T)).argmin(axis=1)
-
-
 def _read_codebooks(spark: SparkSession, index_dir: str) -> np.ndarray:
     def load():
         rows = (
@@ -363,25 +325,13 @@ def make_ivfpq_encode_udf(C: np.ndarray, cb: np.ndarray, residual: bool):
     assignment, then per-subspace PQ codes of the raw vector (flat) or
     of vector − cell centroid (residual). Ties to the lowest index on
     both levels — the SQL twins' ORDER BY rule."""
-    Cc = C.copy()
-    cbc = cb.copy()
-    m, ksub, dsub = cbc.shape
-    cc2 = (Cc**2).sum(axis=1)
-    cb2 = (cbc**2).sum(axis=2)
 
     @F.pandas_udf("struct<cell:int, codes:array<int>>")
     def _enc(vecs: pd.Series) -> pd.DataFrame:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        cells = (cc2[None, :] - 2.0 * (mat @ Cc.T)).argmin(axis=1)
-        base = mat - Cc[cells] if residual else mat
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            sub = base[:, j * dsub : (j + 1) * dsub]
-            d = cb2[j][None, :] - 2.0 * (sub @ cbc[j].T)
-            codes[:, j] = d.argmin(axis=1)
-        return pd.DataFrame(
-            {"cell": cells.astype(np.int32), "codes": list(codes)}
-        )
+        mat = _vec_matrix(vecs)
+        cells = _nearest(C, mat)
+        codes = _pq_codes(cb, mat - C[cells] if residual else mat)
+        return pd.DataFrame({"cell": cells.astype(np.int32), "codes": list(codes)})
 
     return _enc
 
@@ -396,7 +346,6 @@ def _write_pq_parts(
     vec_col: str,
     residual: bool = False,
 ) -> None:
-    n_cells = len(C)
     enc = make_ivfpq_encode_udf(C, cb, residual)
     base = df.select(
         F.col(id_col).alias("id"),
@@ -406,7 +355,7 @@ def _write_pq_parts(
         "id", "vec", F.col("_e.cell").alias("cell"), F.col("_e.codes").alias("codes")
     ).localCheckpoint(eager=True)  # one UDF pass feeds both writers
     _PQ_CELLS.write(
-        base.select("id", "codes", "cell").repartition(max(1, min(n_cells, 64)), "cell"),
+        base.select("id", "codes", "cell").repartition(max(1, min(len(C), 64)), "cell"),
         batch_id,
         index_dir,
     )
@@ -441,28 +390,10 @@ def build_ivfpq_index(
     budget (module docstring has the measured recall delta). The choice
     is recorded in ``meta/`` so upserts/queries follow it automatically.
     Returns (centroids, codebooks)."""
-    from bearly_spark.operators.similarity import pq_fit
-
     if encoding not in ("flat", "residual"):
         raise ValueError(f"encoding must be 'flat' or 'residual': {encoding}")
-    if n_cells is None:
-        n = corpus.agg(F.approx_count_distinct(id_col)).collect()[0][0]
-        n_cells = int(min(4096, max(4, round(math.sqrt(max(n, 1))))))
-    order = (
-        F.col(id_col).cast("long")
-        if sample_by == "id"
-        else F.xxhash64(F.col(id_col), F.lit(seed))
-    )
-    sample = (
-        corpus.select(F.col(vec_col).alias("_v"), order.alias("_h"))
-        .orderBy("_h")
-        .limit(sample_size)
-        .select("_v")
-        .collect()
-    )
-    smat = np.asarray([np.asarray(r[0], dtype=np.float64) for r in sample])
-    C = _kmeans_fit(smat, n_cells, seed)
-    fit_mat = smat - C[_assign_cells_np(C, smat)] if encoding == "residual" else smat
+    C, smat = _ivf_fit(corpus, id_col, vec_col, n_cells, sample_size, seed, sample_by)
+    fit_mat = smat - C[_nearest(C, smat)] if encoding == "residual" else smat
     cb = pq_fit(fit_mat, m, ksub, seed)
 
     spark = corpus.sparkSession
@@ -540,96 +471,39 @@ def ivfpq_index_query(
     Index duplicates (replay windows, mid-compaction) collapse at the
     (q_id, id) level before scoring. Returns
     (query_id, neighbor_id, cosine_sim, rn), rn ≤ k."""
-    import pandas as pd
-
     C = _read_centroids(spark, index_dir)
     cb = _read_codebooks(spark, index_dir)
     residual = _read_encoding(spark, index_dir) == "residual"
-    if n_probe is None:
-        n_probe = max(4, len(C) // 16)
-    mm, ksub, dsub = cb.shape
-    c2 = (C**2).sum(axis=1)
-    cb2 = (cb**2).sum(axis=2)
-
-    def _lut(qv: np.ndarray) -> np.ndarray:
-        lut = np.empty((mm, ksub), dtype=np.float64)
-        for j in range(mm):
-            qj = qv[j * dsub : (j + 1) * dsub]
-            lut[j] = cb2[j] - 2.0 * (cb[j] @ qj) + (qj @ qj)
-        return lut
-
-    from bearly_spark.operators.similarity import collect_query_rows
-
     qrows = collect_query_rows(queries, id_col, vec_col)
-    probe_rows, luts = [], {}
-    for r in qrows:
-        qid = int(r[0])
-        qv = np.asarray(r[1], dtype=np.float64)
-        d = c2 - 2.0 * (C @ qv)
-        probed = [int(c) for c in np.argsort(d, kind="stable")[:n_probe]]
-        probe_rows.extend((qid, c) for c in probed)
-        if residual:
-            # the asymmetric trick per CELL: the query residual w.r.t.
-            # each probed cell gets its own term table — n_probe small
-            # LUT builds per query, still Θ(model) driver work
-            for c in probed:
-                luts[(qid, c)] = _lut(qv - C[c])
-        else:
-            luts[qid] = _lut(qv)
-    probes = spark.createDataFrame(probe_rows, "q_id long, cell int")
-    probed_cells = sorted({c for _, c in probe_rows})
-
-    cells = read_parquet(spark, f"{index_dir}/cells").filter(
-        F.col("cell").isin(probed_cells)
+    probe_rows, cand = _probe_index(spark, index_dir, C, qrows, n_probe)
+    qv = {int(r[0]): np.asarray(r[1], dtype=np.float64) for r in qrows}
+    # residual codes: the asymmetric trick per CELL — the query residual
+    # w.r.t. each probed cell gets its own term table, n_probe small LUT
+    # builds per query, still Θ(model) driver work
+    luts = (
+        {(q, c): _adc_lut(cb, qv[q] - C[c]) for q, c in probe_rows}
+        if residual
+        else {q: _adc_lut(cb, v) for q, v in qv.items()}
     )
-    scored_in = (
-        cells.join(F.broadcast(probes), "cell")
-        .filter(F.col("q_id") != F.col("id"))
-        .dropDuplicates(["q_id", "id"])
-        .select("q_id", "id", "cell", "codes")
-    )
+    lut_keys = ["q_id", "cell"] if residual else "q_id"
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cmat = np.asarray([np.asarray(c) for c in pdf["codes"]], dtype=np.int64)
-            ids = pdf["id"].to_numpy()
-            qs = pdf["q_id"].to_numpy()
-            cls = pdf["cell"].to_numpy()
-            frames = []
-            for qid in np.unique(qs):
-                msk = qs == qid
-                if residual:
-                    adc = np.empty(int(msk.sum()), dtype=np.float64)
-                    sub_cells = cls[msk]
-                    sub_codes = cmat[msk]
-                    for c in np.unique(sub_cells):
-                        cm = sub_cells == c
-                        adc[cm] = luts[(int(qid), int(c))][
-                            np.arange(mm)[None, :], sub_codes[cm]
-                        ].sum(axis=1)
-                else:
-                    adc = luts[int(qid)][np.arange(mm)[None, :], cmat[msk]].sum(axis=1)
-                adc_r = np.round(adc, 6)
-                take = min(rerank, msk.sum())
-                sel = np.lexsort((ids[msk], adc_r))[:take]
-                frames.append(
-                    pd.DataFrame(
-                        {"q_id": qid, "id": ids[msk][sel], "adc": adc_r[sel]}
-                    )
-                )
-            if frames:
-                yield pd.concat(frames)
+    def score(pdf: pd.DataFrame):
+        ids, qs = pdf["c_id"].to_numpy(), pdf["q_id"].to_numpy()
+        codes = _vec_matrix(pdf["codes"], np.int64)
+        adc = np.empty(len(pdf), dtype=np.float64)
+        for key, idx in pdf.groupby(lut_keys).indices.items():
+            adc[idx] = _adc(luts[key], codes[idx])
+        for qid in np.unique(qs):
+            yield qid, ids[qs == qid], adc[qs == qid]
 
-    from pyspark.sql import Window
-
-    scored = scored_in.mapInPandas(score, schema="q_id long, id long, adc double")
-    w_adc = Window.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("id"))
     cand = (
-        scored.withColumn("_rn", F.row_number().over(w_adc))
-        .filter(F.col("_rn") <= rerank)
-        .select("q_id", "id")
+        _scan_topn(
+            cand.select("q_id", F.col("id").alias("c_id"), "cell", "codes"),
+            score,
+            rerank,
+            desc=False,
+        )
+        .select("q_id", "c_id")
         # consumed by the id collect AND the rerank; LAZY pin (r14) —
         # the cand_ids collect right below materializes it, so the old
         # eager form paid one extra driver job for nothing
@@ -639,27 +513,13 @@ def ivfpq_index_query(
     vecs = read_parquet(spark, f"{index_dir}/vecs").select("id", "vec")
     cand_ids = [
         r[0]
-        for r in cand.select("id").distinct().limit(scan_prune_max_keys + 1).collect()
+        for r in cand.select("c_id").distinct().limit(scan_prune_max_keys + 1).collect()
     ]
     if 0 < len(cand_ids) <= scan_prune_max_keys:
         vecs = pruned_scan(vecs, "id", cand_ids)
     vecs = vecs.dropDuplicates(["id"])  # replay/compaction duplicate tolerance
-
-    cos_udf = make_cosine_udf()
-    qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.join(vecs, "id")
-        .join(F.broadcast(qv), "q_id")
-        .withColumn("cosine_sim", F.round(cos_udf(F.col("q_vec"), F.col("vec")), 6))
-        .select(
-            F.col("q_id").alias("query_id"), F.col("id").alias("neighbor_id"), "cosine_sim"
-        )
-        .withColumn("rn", F.row_number().over(w_cos))
-        .filter(F.col("rn") <= k)
-    )
+    vecs = vecs.select(F.col("id").alias("c_id"), F.col("vec").alias("c_vec"))
+    return _exact_topk(cand.join(vecs, "c_id"), queries, id_col, vec_col, k)
 
 
 def compact_ivfpq_index(spark: SparkSession, index_dir: str) -> int:

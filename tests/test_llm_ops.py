@@ -15,6 +15,7 @@ from bearly_spark.operators import dedup as D
 from bearly_spark.operators import multimodal as M
 from bearly_spark.operators import similarity as S
 from bearly_spark.sources.tables import load_table
+from bearly_spark.streaming import ivf_index as IVF
 
 
 @pytest.fixture(scope="module")
@@ -406,6 +407,46 @@ def test_query_collect_contract_guard(spark):
         S.collect_query_rows(qs, "vec_id", "embedding", max_queries=10)
     rows = S.collect_query_rows(qs, "vec_id", "embedding", max_queries=11)
     assert len(rows) == 11
+
+
+def _tiny_vectors(spark, n):
+    return spark.range(0, n).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[(F.col("id") * j + 1).cast("double") for j in range(4)]).alias("embedding"),
+    )
+
+
+@pytest.mark.parametrize(
+    "fit",
+    [
+        lambda emb, d: S.ivf_ann_topk(emb, emb, n_cells=4, sample_by="ID"),
+        lambda emb, d: S.pq_ann_topk(emb, emb, m=2, ksub=4, sample_by="ID"),
+        lambda emb, d: IVF.build_ivf_index(emb, d, n_cells=4, sample_by="ID"),
+        lambda emb, d: IVF.build_ivfpq_index(emb, d, n_cells=4, m=2, ksub=4, sample_by="ID"),
+    ],
+    ids=["ivf_ann_topk", "pq_ann_topk", "build_ivf_index", "build_ivfpq_index"],
+)
+def test_fit_entry_points_reject_unknown_sample_by(spark, tmp_path, fit):
+    """Every IVF/PQ fit draws its sample through one stage, which accepts
+    only 'hash' and 'id' — a typo must raise, not silently fit the hash
+    sample."""
+    with pytest.raises(ValueError, match="sample_by must be 'hash' or 'id'"):
+        fit(_tiny_vectors(spark, 32), str(tmp_path / "index"))
+
+
+def test_probe_paths_share_the_driver_collect_bound(spark, monkeypatch):
+    """SQ8 collects its query codes under the same bound as every other
+    probe path, read at call time: lowering ``MAX_DRIVER_QUERIES`` makes
+    ``sq8_ann_topk`` and ``ivf_ann_topk`` refuse the same query frame
+    with the same error."""
+    emb = _tiny_vectors(spark, 32)
+    queries = emb.filter(F.col("vec_id") < 3)
+    monkeypatch.setattr(S, "MAX_DRIVER_QUERIES", 2)
+    with pytest.raises(ValueError, match="driver-collect contract") as sq8:
+        S.sq8_ann_topk(emb, queries)
+    with pytest.raises(ValueError, match="driver-collect contract") as ivf:
+        S.ivf_ann_topk(emb, queries, n_cells=4)
+    assert str(sq8.value) == str(ivf.value)
 
 
 def test_decode_features_custom_decoder_plumbing(spark):

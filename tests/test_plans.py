@@ -321,6 +321,33 @@ def test_near_dup_plan_shapes(spark, sf_dir):
     assert got == NEAR_DUP_PLAN_SHAPES
 
 
+# The same counts for the vector top-k queries, which share one skeleton:
+# partition-local top-n, one global rank window and one exact-cosine
+# rerank tail, fed by inline or persisted-index IVF/PQ/SQ8/LSH stages.
+ANN_PLAN_SHAPES = {
+    "embedding_topk_cosine": (1, 0, 0, 0, 1),
+    "hashed_embedding_topk": (4, 1, 0, 0, 1),
+    "chunk_embedding_topk": (6, 1, 0, 0, 1),
+    "embedding_ann_lsh": (1, 0, 0, 0, 1),
+    "embedding_ann_ivf": (1, 2, 0, 0, 3),
+    "ann_recall_embeddings": (3, 3, 0, 0, 4),
+    "embedding_ann_pq": (2, 2, 0, 0, 3),
+    "embedding_ann_sq8": (2, 2, 0, 0, 2),
+    "ann_index_query": (2, 3, 0, 0, 2),
+    "ivf_index_query": (2, 2, 0, 0, 1),
+    "ivfpq_index_query": (3, 2, 0, 0, 1),
+    "ivfpq_residual_query": (3, 2, 0, 0, 1),
+}
+
+
+def test_ann_plan_shapes(spark, sf_dir):
+    """A change to the shared top-k stages (fit sample, probe ranker, PQ
+    coder, ADC scorer, rerank tail) cannot silently add a shuffle, a
+    broadcast, a pin or a Python-UDF stage to any vector top-k query."""
+    got = {name: _plan_shape(_plan_of(spark, name, sf_dir)) for name in ANN_PLAN_SHAPES}
+    assert got == ANN_PLAN_SHAPES
+
+
 def test_prefix_order_is_the_driver_sample_contract():
     """The driver's correctness sample records the FIRST 50 entries of
     the ``queries()`` dict — pin that PREFIX_ORDER has exactly 50

@@ -900,6 +900,32 @@ def test_ivf_index_build_query_upsert_compact(spark, sf_dir, tmp_path_factory):
     assert IVF.compact_ivf_index(spark, idx) == 0
 
 
+def test_flat_ivfpq_index_probing_every_cell_equals_inline_pq(spark, sf_dir, tmp_path_factory):
+    """The two PQ paths share one fit sample, one PQ coder, one ADC
+    scorer and one exact rerank: a flat IVF-PQ index probed at every
+    cell scans every code, so its answer must be exactly the one-shot
+    ``pq_ann_topk`` at the same codebook point."""
+    import pyspark.sql.functions as F
+
+    import bearly_spark.streaming.ivf_index as IVF
+    from bearly_spark.operators.similarity import pq_ann_topk
+    from bearly_spark.sources.tables import load_table
+
+    idx = str(tmp_path_factory.mktemp("ivfpq_flat") / "index")
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    key = lambda rows: sorted(
+        (r.query_id, r.neighbor_id, r.cosine_sim, r.rn) for r in rows
+    )
+
+    IVF.build_ivfpq_index(emb, idx, n_cells=8, m=16, ksub=16, sample_by="id")
+    via_index = IVF.ivfpq_index_query(spark, idx, queries, k=10, n_probe=8, rerank=100)
+    inline = pq_ann_topk(emb, queries, k=10, m=16, ksub=16, rerank=100, sample_by="id")
+    got = key(via_index.collect())
+    assert len(got) == 50
+    assert got == key(inline.collect())
+
+
 def test_dedup_index_heals_dataless_roots_and_empty_report(
     spark, sf_dir, tmp_path_factory
 ):
