@@ -27,7 +27,10 @@ Scale notes:
 
 from __future__ import annotations
 
+import shutil
 from collections.abc import Sequence
+from contextlib import contextmanager
+from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -121,6 +124,37 @@ def exchange_dirs(a, b) -> bool:
     return r == 0
 
 
+@contextmanager
+def dir_swap(root: str | Path, kind: str):
+    """Replace the directory ``root`` with a tree built beside it, in one
+    swap. On entry a fallback swap that crashed between its two renames
+    is healed (``.old-<name>`` moves back to ``root``) and a stale
+    staging dir is removed; the body builds the new tree at the yielded
+    ``.<kind>-<name>`` path. On a normal exit, and only if the body made
+    that dir, it replaces ``root``: one :func:`exchange_dirs` call, or
+    where that is unavailable the two-rename fallback (a brief window
+    with no ``root``, healed on the next entry). An exception leaves
+    ``root`` untouched."""
+    root = Path(root)
+    old = root.parent / f".old-{root.name}"
+    staging = root.parent / f".{kind}-{root.name}"
+    if not root.exists() and old.exists():
+        old.rename(root)
+    if staging.exists():
+        shutil.rmtree(staging)
+    yield staging
+    if not staging.exists():
+        return
+    if exchange_dirs(staging, root):
+        shutil.rmtree(staging)  # staging now holds the replaced tree
+    else:
+        if old.exists():
+            shutil.rmtree(old)
+        root.rename(old)
+        staging.rename(root)
+        shutil.rmtree(old)
+
+
 def compact_parquet_dir(
     spark,
     path: str,
@@ -162,45 +196,27 @@ def compact_parquet_dir(
     compaction per table at a time.
     """
     import math
-    import shutil
-    from pathlib import Path
 
     root = Path(path)
-    tmp = root.parent / f".compacting-{root.name}"
-    old = root.parent / f".old-{root.name}"
-    if not root.exists() and old.exists():
-        old.rename(root)  # heal a fallback-path crash between the renames
-    if tmp.exists():
-        shutil.rmtree(tmp)
+    with dir_swap(root, "compacting") as tmp:
+        if not root.exists():
+            return 0
+        data_files = [p for p in root.rglob("*.parquet") if not p.name.startswith(("_", "."))]
+        if not data_files:
+            return 0  # empty table dir: spark.read.parquet would throw
+        total_bytes = sum(p.stat().st_size for p in data_files)
+        df = spark.read.option("basePath", str(root)).parquet(str(root))
 
-    if not root.exists():
-        return 0
-    data_files = [p for p in root.rglob("*.parquet") if not p.name.startswith(("_", "."))]
-    if not data_files:
-        return 0  # empty table dir: spark.read.parquet would throw
-    total_bytes = sum(p.stat().st_size for p in data_files)
-    df = spark.read.option("basePath", str(root)).parquet(str(root))
-
-    n = max(1, math.ceil(total_bytes / target_file_bytes))
-    if partition_cols:
-        # repartition by the partition key so each output dir is written
-        # by few tasks (AQE coalesces the tiny ones)
-        writer = (
-            df.repartition(n, *[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-        )
-    else:
-        writer = df.repartition(n).write.mode("overwrite")
-    writer.parquet(str(tmp))
-
-    if exchange_dirs(tmp, root):
-        shutil.rmtree(tmp)  # tmp now holds the replaced files
-    else:
-        # non-atomic fallback: brief no-directory window, crash-healed above
-        if old.exists():
-            shutil.rmtree(old)
-        root.rename(old)
-        tmp.rename(root)
-        shutil.rmtree(old)
+        n = max(1, math.ceil(total_bytes / target_file_bytes))
+        if partition_cols:
+            # repartition by the partition key so each output dir is written
+            # by few tasks (AQE coalesces the tiny ones)
+            writer = (
+                df.repartition(n, *[F.col(c) for c in partition_cols])
+                .write.mode("overwrite")
+                .partitionBy(*partition_cols)
+            )
+        else:
+            writer = df.repartition(n).write.mode("overwrite")
+        writer.parquet(str(tmp))
     return len([p for p in root.rglob("*.parquet") if not p.name.startswith(("_", "."))])

@@ -49,8 +49,8 @@ from urllib.parse import urlparse
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
-from bearly_spark.operators.layout import exchange_dirs
-from bearly_spark.sources.tables import read_parquet
+from bearly_spark.operators.layout import dir_swap
+from bearly_spark.sources.tables import broadcast_keys, read_parquet
 
 
 def _local_path(file_uri: str) -> Path:
@@ -75,7 +75,6 @@ def merge_into(
     keys: list[str],
     when_matched: str = "update",
     partition_cols: list[str] | None = None,
-    broadcast_max_rows: int = 4_000_000,
 ) -> dict:
     """MERGE ``source`` into the parquet table at ``path`` by ``keys``.
 
@@ -94,17 +93,16 @@ def merge_into(
 
     Scale shape: the delta's distinct keys broadcast into one semi-join
     over the target scan (reading only key + ``_metadata.file_path`` —
-    column-pruned), producing the TOUCHED file list — GUARDED: a delta
-    with more than ``broadcast_max_rows`` distinct keys (a bulk
-    crawl-refresh, not a takedown list) takes a shuffle join instead of
-    an oversized driver broadcast (same guard as
-    ``streaming/dedup_index.near_dups_against_index``); only those files'
-    rows are re-read and rewritten. Untouched files are hard-linked
-    into a staging snapshot (same filesystem ⇒ O(1) per file, no data
-    copy), the merged rows are written beside them, and the staging dir
-    atomically replaces the table via ``layout.exchange_dirs`` (same
-    fallback + healing contract as ``compact_parquet_dir``). A merge
-    that matches nothing rewrites nothing.
+    column-pruned), producing the TOUCHED file list — GUARDED by
+    ``tables.broadcast_keys``: a bulk delta (a crawl refresh, not a
+    takedown list) takes a shuffle join instead of an oversized driver
+    broadcast; only those files' rows are re-read and rewritten.
+    Untouched files are hard-linked into a staging snapshot (same
+    filesystem ⇒ O(1) per file, no data copy), the merged rows are
+    written beside them, and the staging dir atomically replaces the
+    table through ``layout.dir_swap`` (the same swap and healing
+    contract as ``compact_parquet_dir``). A merge that matches nothing
+    rewrites nothing.
 
     Returns ``{"files_total", "files_rewritten", "rows_written"}`` —
     ``rows_written`` (rows in the rewritten slice, counted free via
@@ -116,15 +114,7 @@ def merge_into(
         raise ValueError(f"source has multiple rows for one {keys} key")
     src_keys = source.select(*keys).dropDuplicates()
     new_rows = None if when_matched == "delete" else source
-    return _cow_rewrite(
-        spark,
-        path,
-        keys,
-        src_keys,
-        new_rows,
-        partition_cols,
-        broadcast_max_rows=broadcast_max_rows,
-    )
+    return _cow_rewrite(spark, path, keys, src_keys, new_rows, partition_cols)
 
 
 def _cow_rewrite(
@@ -134,7 +124,6 @@ def _cow_rewrite(
     src_keys: DataFrame,
     new_rows: DataFrame | None,
     partition_cols: list[str] | None = None,
-    broadcast_max_rows: int = 4_000_000,
 ) -> dict:
     """Copy-on-write core shared by :func:`merge_into` and the CDC batch
     apply (``streaming.cdc``): drop every target row whose key is in
@@ -142,79 +131,58 @@ def _cow_rewrite(
     that contain a matched key and hard-linking the rest into an
     atomically-swapped snapshot."""
     root = Path(path).resolve()
-    old = root.parent / f".old-{root.name}"
-    if not root.exists() and old.exists():
-        old.rename(root)  # heal a fallback-path crash (compact_parquet_dir contract)
-    # drop any cached file listing for this path: a prior merge in the same
-    # session swapped the files underneath (stale listings read deleted
-    # snapshots and fail with FILE_NOT_EXIST)
-    spark.catalog.refreshByPath(str(root))
-    target = read_parquet(spark, str(root))
-    cols = target.columns
+    with dir_swap(root, "merging") as staging:
+        # drop any cached file listing for this path: a prior merge in the
+        # same session swapped the files underneath (stale listings read
+        # deleted snapshots and fail with FILE_NOT_EXIST)
+        spark.catalog.refreshByPath(str(root))
+        target = read_parquet(spark, str(root))
+        cols = target.columns
+        src_keys = broadcast_keys(src_keys)
 
-    # broadcast guard: a takedown list broadcasts; a crawl-refresh
-    # delta past the threshold would OOM the driver — count once
-    # (Θ(delta) scan, localCheckpoint pins it against recomputation in
-    # the two joins below) and fall back to a shuffle join
-    src_keys = src_keys.localCheckpoint(eager=False)
-    if src_keys.count() <= broadcast_max_rows:
-        src_keys = F.broadcast(src_keys)
+        files_total = _data_files(root)
+        touched_rows = (
+            target.withColumn("_file", F.col("_metadata.file_path"))
+            .join(src_keys, keys, "left_semi")
+            .select("_file")
+            .distinct()
+            .collect()
+        )
+        touched_uris = sorted(r[0] for r in touched_rows)
+        touched = {_local_path(u).resolve() for u in touched_uris}
 
-    files_total = _data_files(root)
-    touched_rows = (
-        target.withColumn("_file", F.col("_metadata.file_path"))
-        .join(src_keys, keys, "left_semi")
-        .select("_file")
-        .distinct()
-        .collect()
-    )
-    touched_uris = sorted(r[0] for r in touched_rows)
-    touched = {_local_path(u).resolve() for u in touched_uris}
+        # rows of touched files that keep their identity (key not in source)
+        kept = (
+            target.withColumn("_file", F.col("_metadata.file_path"))
+            .filter(F.col("_file").isin(touched_uris) if touched_uris else F.lit(False))
+            .join(src_keys, keys, "left_anti")
+            .select(*cols)
+        )
+        merged = kept if new_rows is None else kept.unionByName(new_rows.select(*cols))
 
-    # rows of touched files that keep their identity (key not in source)
-    kept = (
-        target.withColumn("_file", F.col("_metadata.file_path"))
-        .filter(F.col("_file").isin(touched_uris) if touched_uris else F.lit(False))
-        .join(src_keys, keys, "left_anti")
-        .select(*cols)
-    )
-    merged = kept if new_rows is None else kept.unionByName(new_rows.select(*cols))
+        staging.mkdir()
+        for f in files_total:
+            if f.resolve() in touched:
+                continue
+            dst = staging / f.relative_to(root)
+            dst.parent.mkdir(parents=True, exist_ok=True)
+            os.link(f, dst)
 
-    staging = root.parent / f".merging-{root.name}"
-    if staging.exists():
-        shutil.rmtree(staging)
-    staging.mkdir()
-    for f in files_total:
-        if f.resolve() in touched:
-            continue
-        dst = staging / f.relative_to(root)
-        dst.parent.mkdir(parents=True, exist_ok=True)
-        os.link(f, dst)
-
-    obs = Observation()
-    out = staging / ".merge-out"
-    writer = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-    if partition_cols:
-        writer.write.partitionBy(*partition_cols).parquet(str(out))
-    else:
-        writer.write.parquet(str(out))
-    rows_written = int(obs.get["rows"])
-    # graft the freshly-written data files into the snapshot tree (names
-    # are task-UUID-unique — no collision with the linked originals)
-    for f in _data_files(out):
-        dst = staging / f.relative_to(out)
-        dst.parent.mkdir(parents=True, exist_ok=True)
-        f.rename(dst)
-    shutil.rmtree(out)
-
-    if exchange_dirs(staging, root):
-        shutil.rmtree(staging)  # staging now holds the replaced files
-    else:  # two-rename fallback: brief no-dir window, healed on re-entry
-        if old.exists():
-            shutil.rmtree(old)
-        root.rename(old)
-        staging.rename(root)
-        shutil.rmtree(old)
+        obs = Observation()
+        out = staging / ".merge-out"
+        writer = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
+        if partition_cols:
+            writer.write.partitionBy(*partition_cols).parquet(str(out))
+        else:
+            writer.write.parquet(str(out))
+        rows_written = int(obs.get["rows"])
+        # graft the freshly-written data files into the snapshot tree (names
+        # are task-UUID-unique — no collision with the linked originals)
+        for f in _data_files(out):
+            dst = staging / f.relative_to(out)
+            dst.parent.mkdir(parents=True, exist_ok=True)
+            f.rename(dst)
+        shutil.rmtree(out)
     spark.catalog.refreshByPath(str(root))  # new snapshot for same-session readers
     return {
         "files_total": len(files_total),
@@ -268,25 +236,14 @@ def restore_table(spark: SparkSession, path: str, version: int) -> None:
     src = root.parent / f".history-{root.name}" / f"v{version}"
     if not src.is_dir():
         raise ValueError(f"no snapshot v{version} for {path}")
-    staging = root.parent / f".restoring-{root.name}"
-    if staging.exists():
-        shutil.rmtree(staging)
-    staging.mkdir()
-    for f in sorted(src.rglob("*")):
-        if f.is_dir():
-            continue
-        dst = staging / f.relative_to(src)
-        dst.parent.mkdir(parents=True, exist_ok=True)
-        os.link(f, dst)
-    old = root.parent / f".old-{root.name}"
-    if exchange_dirs(staging, root):
-        shutil.rmtree(staging)
-    else:
-        if old.exists():
-            shutil.rmtree(old)
-        root.rename(old)
-        staging.rename(root)
-        shutil.rmtree(old)
+    with dir_swap(root, "restoring") as staging:
+        staging.mkdir()
+        for f in sorted(src.rglob("*")):
+            if f.is_dir():
+                continue
+            dst = staging / f.relative_to(src)
+            dst.parent.mkdir(parents=True, exist_ok=True)
+            os.link(f, dst)
     spark.catalog.refreshByPath(str(root))
 
 

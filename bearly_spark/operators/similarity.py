@@ -113,9 +113,10 @@ def _norms(mat: np.ndarray) -> np.ndarray:
     return norms
 
 
-def _query_matrix(qrows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(ids, float64 matrix, norms) of collected (id, vector) rows."""
-    qmat = _vec_matrix([r[1] for r in qrows])
+def _query_matrix(qrows, dim: int = 0) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(ids, float64 matrix, norms) of collected (id, vector) rows; no
+    rows give a (0, ``dim``) matrix."""
+    qmat = _vec_matrix([r[1] for r in qrows]) if qrows else np.empty((0, dim))
     return np.asarray([r[0] for r in qrows], dtype=np.int64), qmat, _norms(qmat)
 
 
@@ -158,13 +159,16 @@ def _rank(scored: DataFrame, n: int, desc: bool = True) -> DataFrame:
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
 
 
-def _scan_topn(rows: DataFrame, score, n: int, desc: bool = True) -> DataFrame:
+def _scan_topn(rows: DataFrame, queries, score, n: int, desc: bool = True) -> DataFrame:
     """Partition-local, then global top-``n``: ``score(pdf)`` yields one
     ``(q_id, ids, scores)`` triple per query for each non-empty Arrow
     batch of ``rows``; the batch keeps each query's ``n`` best rows by
     (score, id) — ``np.lexsort``, the window's own key — and one
     :func:`_rank` window ranks the survivors. Θ(q·n) rows leave a
-    partition instead of Θ(q·N)."""
+    partition instead of Θ(q·N). ``queries`` is the collected query
+    set; when it is empty no row is scored and the result is empty."""
+    if not len(queries):
+        rows = rows.limit(0)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -232,7 +236,7 @@ def brute_force_topk(
             keep = ids != qid  # exclude self-match
             yield qid, ids[keep], sims[keep, j]
 
-    return _neighbors(_scan_topn(corpus.select(F.col(id_col), F.col(vec_col)), score, k))
+    return _neighbors(_scan_topn(corpus.select(F.col(id_col), F.col(vec_col)), qids, score, k))
 
 
 def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> np.ndarray:
@@ -452,7 +456,7 @@ def sq8_ann_topk(
             yield qid, ids[keep], approx[keep, j]
 
     codes = sq8_code_table(corpus, id_col, vec_col)
-    cand = _scan_topn(codes, score, rerank).select("q_id", "c_id")
+    cand = _scan_topn(codes, qids, score, rerank).select("q_id", "c_id")
     return rerank_candidates(cand, corpus, queries, id_col, vec_col, k=k)
 
 
@@ -523,7 +527,7 @@ def lsh_ann_topk(
             axis=1,
         )
 
-    qids, qmat, qnorm = _query_matrix(collect_query_rows(queries, id_col, vec_col))
+    qids, qmat, qnorm = _query_matrix(collect_query_rows(queries, id_col, vec_col), dim)
     qkeys = band_keys(qmat)
 
     def score(pdf: pd.DataFrame):
@@ -537,7 +541,7 @@ def lsh_ann_topk(
             idx = np.nonzero(cand[:, qi] & (ids != qid))[0]
             yield qid, ids[idx], np.round((mat[idx] @ qmat[qi]) / (norms[idx] * qnorm[qi]), 6)
 
-    return _neighbors(_scan_topn(corpus.select(F.col(id_col), F.col(vec_col)), score, k))
+    return _neighbors(_scan_topn(corpus.select(F.col(id_col), F.col(vec_col)), qids, score, k))
 
 
 def embedding_near_dup_pairs(
@@ -1019,7 +1023,7 @@ def pq_ann_topk(
             keep = ids != qid  # self-match excluded BEFORE the cut
             yield qid, ids[keep], _adc(lut, cmat[keep])
 
-    cand = _scan_topn(codes, score, rerank, desc=False).select("q_id", "c_id")
+    cand = _scan_topn(codes, luts, score, rerank, desc=False).select("q_id", "c_id")
     return rerank_candidates(cand, corpus, queries, id_col, vec_col, k)
 
 

@@ -109,19 +109,15 @@ PREFIX_ORDER = [
     "sum_produce_stream",
     "q1_pricing_summary",
     # r11 reds, oracle emission cast to BIGINT (verdict #1)
-    "outliers_iqr_lineitem",
     "substring_dedup_clean_documents",
     # stale no_oracle records from r01/r02 (verdict #3)
     "embedding_near_dup",
     "embedding_ann_ivf",
     # ---- first-ever seats: the whole remaining seatable backlog ----
-    # text block
-    "bigram_quality_documents",
     # curation splits / caps / decontamination
     "cluster_aware_split_documents",
     "decontaminate_embedding",
     # clustering / mining tail
-    "hier_prototypes_embeddings",
     "basket_rules_lineitem",
     # DQ block (zero driver coverage until now)
     "drift_report_orders",
@@ -214,6 +210,20 @@ PREFIX_ORDER = [
     "embedding_ann_lsh",
     "embedding_ann_pq",
     "embedding_ann_sq8",
+    # ---- emission path changed: the commit-log table replays its log
+    # through one fold step and runs every DELETE/MERGE on one DML
+    # skeleton (sources/txlog.py); merge_upsert and incremental_rollup
+    # share the key broadcast guard and directory swap. Never-seated
+    # first. Slots from seats green in r12-r14 (tools/seat_history.py):
+    # outliers_iqr_lineitem, bigram_quality_documents and
+    # hier_prototypes_embeddings; each family keeps a seat (DQ via
+    # drift_report, text via bpe_encode, clustering via pca_project).
+    # txlog_read_orders and txlog_merge_orders ride on their standing
+    # seats; txlog_dv_delete_orders, txlog_changes_orders,
+    # merge_upsert_orders and incremental_rollup_orders wait for a slot.
+    "txlog_dv_merge_orders",
+    "txlog_partitioned_scan_orders",
+    "txlog_delete_orders",
     # (lang_id_distribution and rollup_orders also wait for r13 — the
     # text family holds seven greener r11/r12 seats, and rollup held an
     # r01 green on an unchanged code path; their slots went to

@@ -47,6 +47,9 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: Most delta keys a key join broadcasts (:func:`broadcast_keys`).
+BROADCAST_KEYS_MAX = 4_000_000
+
 #: Every session conf that Spark 4.1's parquet schema inference reads:
 #: footer conversion (the first six), footer choice and schema merge (the
 #: next four) and partition discovery (the last five; ``caseSensitive``
@@ -87,6 +90,17 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     confs = tuple(spark.conf.get(k) for k in PARQUET_SCHEMA_CONFS)
     schema = memo([path], ("parquet-schema", confs), infer)
     return inferred[0] if inferred else spark.read.schema(schema).parquet(path)
+
+
+def broadcast_keys(keys: DataFrame) -> DataFrame:
+    """The key side of a MERGE's key join, broadcast while it is small.
+    ``keys`` is pinned (a lazy ``localCheckpoint``, so the count and the
+    joins after it read it once) and counted once; it broadcasts while
+    it holds at most :data:`BROADCAST_KEYS_MAX` rows (read at call time).
+    A bulk delta past that takes a shuffle join instead of an oversized
+    driver broadcast."""
+    keys = keys.localCheckpoint(eager=False)
+    return F.broadcast(keys) if keys.count() <= BROADCAST_KEYS_MAX else keys
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -23,10 +23,31 @@ on plain parquet, Spark-first:
 - **Time travel for free** — a read at version ``v`` replays commits
   ``<= v``; old data files are never modified, only de-referenced, so
   every historical version stays readable until :func:`vacuum`.
-- **O(1)-amortized log replay** — every ``_CHECKPOINT_EVERY``-th commit
-  also writes a checkpoint (the materialized live-file set), so replay
-  reads at most one checkpoint + ``_CHECKPOINT_EVERY`` commits, not the
-  whole history (Delta's ``_last_checkpoint`` pattern).
+- **One replay, one fold step** — a version's state (live files,
+  active deletion vectors, batch tags, head commit) is a fold: the
+  newest checkpoint at or before it, then each later commit applied
+  once by :meth:`_Snapshot.apply`. Every ``_CHECKPOINT_EVERY``-th commit
+  writes a checkpoint of that state, so :func:`_replay` reads at most
+  one checkpoint + ``_CHECKPOINT_EVERY`` commits, not the whole history
+  (Delta's ``_last_checkpoint`` pattern). Range walks
+  (:func:`read_changes`, :func:`vacuum`) replay once at the start of
+  the range and fold each later commit with the same step; code that
+  needs only a commit's schema or partition columns reads that one
+  commit file (:func:`_head`).
+- **Row-level DML: {delete by range, upsert by key} × {copy-on-write,
+  deletion vector}** — :func:`delete_where`, :func:`delete_where_dv`,
+  :func:`merge_into_table` and :func:`merge_into_table_dv` are the four
+  cells of one skeleton (:func:`_dml`): one prologue (table check,
+  stats-pruned plan of the zone, schema; merges also check the delta's
+  schema and zone), one match step (the NULL-safe range filter for a
+  delete, a key anti/semi join for an upsert behind the key broadcast
+  guard) and one write tail — a CoW rewrite of the touched files, or a
+  DV file of the matched (file, position) pairs that readers anti-join
+  (merge-on-read) until :func:`compact` materializes and retires it. A
+  range's rows with NULL in a predicate column never match. Every DML
+  commit pins the version it read and raises :class:`TxConflict` if
+  anything committed in between. A CoW delete that touches no file and
+  a DV delete that masks no row commit nothing; merges always commit.
 - **Partition columns** — ``write_table(..., partition_by=[...])``
   lands files under hive-style value directories, records each file's
   typed partition values in its log add-entry, and planning prunes on
@@ -63,11 +84,14 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass, field
 from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from bearly_spark.sources.tables import broadcast_keys
 
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
@@ -140,10 +164,18 @@ def _versions(root: Path) -> list[int]:
     )
 
 
-def latest_version(path: str) -> int:
+def latest_version(path: str | Path) -> int:
     """Highest committed version (0 = never created)."""
     vs = _versions(_root(path))
     return vs[-1] if vs else 0
+
+
+def _existing_version(root: Path, path: str) -> int:
+    """The latest version of a table that must exist (raises if not)."""
+    current = latest_version(root)
+    if not current:
+        raise ValueError(f"no table at {path}")
+    return current
 
 
 def _read_json(p: Path) -> dict:
@@ -151,55 +183,62 @@ def _read_json(p: Path) -> dict:
         return json.load(f)
 
 
-def _live_at(root: Path, version: int) -> tuple[dict[str, dict], dict, list[str]]:
-    """ONE replay of the log up to ``version`` serving the whole read
-    path: returns (live files keyed by relative path, the commit dict
-    at ``version``, the active deletion-vector files). Starts from the
-    newest checkpoint <= version, so replay work is bounded by
-    ``_CHECKPOINT_EVERY`` commits regardless of table age. A pre-DV
-    checkpoint (no ``dv`` key) forces the dv replay back to the log
-    head — correct, and only possible for checkpoints written before
-    the feature existed."""
+def _schema(schema_json: str) -> StructType:
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _head(root: Path, version: int | None = None) -> dict:
+    """The commit at ``version`` (default: the latest): one file read and
+    no replay, for callers that need only its schema or partition
+    columns."""
+    v = latest_version(root) if version is None else version
+    if not _commit_file(root, v).is_file():
+        raise ValueError(f"no version {v} in {root}")
+    return _read_json(_commit_file(root, v))
+
+
+@dataclass
+class _Snapshot:
+    """The table at one version, as the replay folds it: live files keyed
+    by relative path, active deletion-vector files, the batch-tag map
+    (tag -> version) and the head commit. A checkpoint stores the first
+    three."""
+
+    live: dict = field(default_factory=dict)
+    dv: list = field(default_factory=list)
+    tags: dict = field(default_factory=dict)
+    commit: dict | None = None
+
+    def apply(self, v: int, c: dict) -> None:
+        """The one fold step: commit ``c`` (version ``v``) on top."""
+        for rel in c.get("remove", []):
+            self.live.pop(rel, None)
+        for entry in c.get("add", []):
+            self.live[entry["path"]] = entry
+        if c.get("dv_remove_all"):
+            self.dv = []
+        self.dv.extend(c.get("dv_add", []))
+        if c.get("batch_tag") is not None:
+            self.tags[c["batch_tag"]] = v
+        self.commit = c
+
+
+def _replay(root: Path, version: int) -> _Snapshot:
+    """The table at ``version``: the newest checkpoint at or before it,
+    then each later commit through :meth:`_Snapshot.apply` — at most
+    ``_CHECKPOINT_EVERY`` file reads whatever the table's age."""
     vs = _versions(root)
     if version not in vs:
         raise ValueError(f"no version {version} in {root} (have {vs or 'none'})")
-    log = _log_path(root)
-    chks = sorted(
-        int(p.stem.split("-")[1])
-        for p in log.iterdir()
-        if p.name.startswith("chk-") and p.suffix == ".json"
-    )
-    start_chk = max((c for c in chks if c <= version), default=None)
-    live: dict[str, dict] = {}
-    dvs: list[str] = []
-    dv_replay_from = vs[0] if vs else 1
-    if start_chk is not None:
-        payload = _read_json(_checkpoint_file(root, start_chk))
-        live = dict(payload["live"])
-        replay_from = start_chk + 1
-        if "dv" in payload:
-            dvs = list(payload["dv"])
-            dv_replay_from = replay_from
-    else:
-        replay_from = vs[0]
-    last = None
+    chks = (int(p.stem[4:]) for p in _log_path(root).glob("chk-*.json"))
+    start = max((c for c in chks if c <= version), default=0)
+    snap = _Snapshot(**_read_json(_checkpoint_file(root, start))) if start else _Snapshot()
     for v in vs:
-        if v > version:
-            break
-        last = v
-        if v < min(replay_from, dv_replay_from):
-            continue
-        c = _read_json(_commit_file(root, v))
-        if v >= replay_from:
-            for rel in c.get("remove", []):
-                live.pop(rel, None)
-            for entry in c.get("add", []):
-                live[entry["path"]] = entry
-        if v >= dv_replay_from:
-            if c.get("dv_remove_all"):
-                dvs = []
-            dvs.extend(c.get("dv_add", []))
-    return live, _read_json(_commit_file(root, last)), dvs
+        if start < v <= version:
+            snap.apply(v, _read_json(_commit_file(root, v)))
+    if snap.commit is None:  # the checkpoint is at ``version`` itself
+        snap.commit = _read_json(_commit_file(root, version))
+    return snap
 
 
 def _version_at_ts(root: Path, as_of_ts) -> int:
@@ -240,49 +279,6 @@ def _version_at_ts(root: Path, as_of_ts) -> int:
             f"(first commit ts={first})"
         )
     return ans
-
-
-def _schema_at(root: Path, version: int) -> StructType:
-    _, commit, _ = _live_at(root, version)
-    return StructType.fromJson(json.loads(commit["schema"]))
-
-
-def _dv_at(root: Path, version: int) -> list[str]:
-    """Active deletion-vector files at ``version`` (thin view over the
-    single :func:`_live_at` replay — kept for callers that only need
-    the dv list)."""
-    return _live_at(root, version)[2]
-
-
-def _tags_at(root: Path, version: int) -> dict[str, int]:
-    """batch_tag -> version for every tagged commit <= ``version``,
-    resolved like the live set: the newest checkpoint's accumulated tag
-    map plus the commits after it — so the streaming-ingest replay
-    check reads O(checkpoint cadence) files, not O(table age)."""
-    vs = _versions(root)
-    log = _log_path(root)
-    chks = sorted(
-        int(p.stem.split("-")[1])
-        for p in log.iterdir()
-        if p.name.startswith("chk-") and p.suffix == ".json"
-    )
-    tags: dict[str, int] = {}
-    replay_from = vs[0] if vs else 1
-    for c in (c for c in sorted(chks, reverse=True) if c <= version):
-        payload = _read_json(_checkpoint_file(root, c))
-        if "tags" in payload:  # older checkpoints predate the tag map
-            tags = dict(payload["tags"])
-            replay_from = c + 1
-            break
-    for v in vs:
-        if v > version:
-            break
-        if v < replay_from:
-            continue
-        tag = _read_json(_commit_file(root, v)).get("batch_tag")
-        if tag is not None:
-            tags[tag] = v
-    return tags
 
 
 # -------------------------------------------------------------------
@@ -458,7 +454,7 @@ def _commit(
     pre-write check races the (slow) data write, and an interleaved
     overwrite could change the table schema under it."""
     for _ in range(retries):
-        current = max(_versions(root), default=0)
+        current = latest_version(root)
         if expected_version is not None and current != expected_version:
             raise TxConflict(
                 f"table advanced to v{current} (expected v{expected_version})"
@@ -480,19 +476,16 @@ def _commit(
             # recomputed per retry: a concurrent evolve append may have
             # added other columns; the committed schema is the union
             payload["schema"] = _check_evolution(
-                _schema_at(root, current), evolve_schema
+                _schema(_head(root, current)["schema"]), evolve_schema
             ).json()
         elif check_append_schema and current:
-            _check_schema(
-                _schema_at(root, current),
-                StructType.fromJson(json.loads(schema_json)),
-            )
+            _check_schema(_schema(_head(root, current)["schema"]), _schema(schema_json))
         if _atomic_create(_commit_file(root, v), payload):
             if v % _CHECKPOINT_EVERY == 0:
-                live, _, dvs = _live_at(root, v)
+                snap = _replay(root, v)
                 _atomic_create(
                     _checkpoint_file(root, v),
-                    {"live": live, "tags": _tags_at(root, v), "dv": dvs},
+                    {"live": snap.live, "tags": snap.tags, "dv": snap.dv},
                 )
             return v
         if expected_version is not None:
@@ -583,10 +576,10 @@ def write_table(
     root.mkdir(parents=True, exist_ok=True)
     stats_cols = list(stats_cols or [])
     evolving = merge_schema and mode == "append"
-    current = max(_versions(root), default=0)
+    current = latest_version(root)
     if current and mode == "append":
-        _, existing_commit, _ = _live_at(root, current)
-        existing = StructType.fromJson(json.loads(existing_commit["schema"]))
+        existing_commit = _head(root, current)
+        existing = _schema(existing_commit["schema"])
         if evolving:
             _check_evolution(existing, parts[0].schema)  # pre-write check
         else:
@@ -612,8 +605,7 @@ def write_table(
     expected = None
     if mode == "overwrite":
         if current:
-            live, _, _ = _live_at(root, current)
-            remove = sorted(live)
+            remove = sorted(_replay(root, current).live)
         expected = current
     extra: dict = {"partition_cols": pcols}
     if mode == "overwrite":
@@ -651,11 +643,9 @@ def compact(
     contiguous partition values, and the rewrite lands back under the
     value directories — compaction never un-partitions a table."""
     root = _root(path)
-    current = max(_versions(root), default=0)
-    if not current:
-        raise ValueError(f"no table at {path}")
-    live, commit, _ = _live_at(root, current)
-    pcols = _table_partition_cols(commit)
+    current = _existing_version(root, path)
+    snap = _replay(root, current)
+    pcols = _table_partition_cols(snap.commit)
     df = read_table(spark, path, version=current)
     cluster = [*pcols, *(order_by or [])]
     df = (
@@ -671,7 +661,7 @@ def compact(
         "compact",
         df.schema.json(),
         add,
-        sorted(live),
+        sorted(snap.live),
         expected_version=current,
         # the rewrite read every mask through read_table, so compaction
         # MATERIALIZES all deletion vectors and retires them
@@ -729,14 +719,13 @@ def _plan(
     paths, total live file count, the commit dict at the version —
     which carries the schema — and the active deletion-vector files,
     so readers never replay twice)."""
-    v = version if version is not None else max(_versions(root), default=0)
-    live, commit, dvs = _live_at(root, v)
+    snap = _replay(root, latest_version(root) if version is None else version)
     survivors = sorted(
         rel
-        for rel, entry in live.items()
+        for rel, entry in snap.live.items()
         if all(_overlaps(entry, c, lo, hi) for c, (lo, hi) in (where or {}).items())
     )
-    return survivors, len(live), commit, dvs
+    return survivors, len(snap.live), snap.commit, snap.dv
 
 
 def plan_files(
@@ -846,7 +835,7 @@ def read_table(
         raise ValueError(
             f"version {v} of {path} references vacuumed files: {missing[:3]}"
         )
-    schema = StructType.fromJson(json.loads(commit["schema"]))
+    schema = _schema(commit["schema"])
     if not files:
         df = spark.createDataFrame([], schema)
     else:
@@ -881,126 +870,114 @@ def history(path: str) -> list[dict]:
     return out
 
 
+def _write_dv(root: Path, hits: DataFrame | None) -> tuple[list[str], int, int]:
+    """Write the (file name, row position) pairs of ``hits`` as
+    deletion-vector files under the data dir. Returns (relative paths,
+    masked rows from the footers, files masked). A DV that masks nothing
+    is unlinked again and reads as ``([], 0, 0)``."""
+    import pyarrow.parquet as pq
+
+    if hits is None:
+        return [], 0, 0
+    pairs = hits.select(F.col("__fname").alias("fname"), F.col("__pos").alias("pos"))
+    rels = [e["path"] for e in _write_data_files(pairs, root, [], prefix="dv-")]
+    masks = [pq.read_table(str(root / rel), columns=["fname"]) for rel in rels]
+    rows = sum(t.num_rows for t in masks)
+    if not rows:
+        for rel in rels:
+            (root / rel).unlink(missing_ok=True)
+        return [], 0, 0
+    files = {f for t in masks for f in t.column("fname").to_pylist()}
+    return rels, rows, len(files)
+
+
+def _dml(
+    spark: SparkSession,
+    path: str,
+    op: str,
+    zone: dict | None,
+    stats_cols: list[str] | None = None,
+    delta: DataFrame | None = None,
+    key_cols: list[str] | None = None,
+) -> tuple[int, dict]:
+    """The one DML skeleton (see the module docstring): delete by the
+    ``zone`` ranges, or upsert ``delta`` by ``key_cols`` inside the
+    ``zone`` files, written copy-on-write or as a deletion vector
+    (``op`` ``delete``/``merge`` vs ``dv_delete``/``merge_dv``)."""
+    dv = op in ("dv_delete", "merge_dv")
+    root = _root(path)
+    current = _existing_version(root, path)
+    touched, total, commit, dvs = _plan(root, current, zone)
+    schema = _schema(commit["schema"])
+    if delta is not None:
+        _check_schema(schema, delta.schema)
+        _check_zone(delta, zone)
+    # the match step keeps the hit rows for a DV, the other rows for CoW
+    rows = None
+    if touched:
+        old = _read_masked(spark, root, touched, schema, dvs, with_pos=dv)
+        if delta is None:
+            hit = F.coalesce(_range_cond(zone), F.lit(False))
+            rows = old.filter(hit if dv else ~hit)
+        else:
+            keys = broadcast_keys(delta.select(*key_cols))
+            rows = old.join(keys, key_cols, "left_semi" if dv else "left_anti")
+    pcols = _table_partition_cols(commit)
+    extra: dict = {"partition_cols": pcols}
+    if dv:  # mask the hit rows; an upsert appends its delta
+        masks, n_rows, n_files = _write_dv(root, rows)
+        if masks:
+            extra["dv_add"] = masks
+        written, remove, changed = delta, [], n_rows > 0
+    else:  # rewrite the touched files' other rows, plus an upsert's delta
+        written = delta if rows is None else rows if delta is None else rows.unionByName(delta)
+        remove, changed = sorted(touched), bool(touched)
+    add = (
+        []
+        if written is None
+        else _write_data_files(written, root, list(stats_cols or []), partition_by=pcols)
+    )
+    n_add = sum(e["rows"] for e in add)
+    if dv:
+        stats = {"files_masked": n_files, "files_total": total, "rows_masked": n_rows}
+        if delta is not None:
+            stats["rows_inserted"] = n_add
+    else:
+        rows_key = "rows_kept" if delta is None else "rows_written"
+        stats = {"files_rewritten": len(touched), "files_total": total, rows_key: n_add}
+    # a delete that changes nothing commits nothing; an upsert always commits
+    if delta is None and not changed:
+        return current, stats
+    v = _commit(root, op, commit["schema"], add, remove, expected_version=current, extra=extra)
+    return v, stats
+
+
 def delete_where(
     spark: SparkSession,
     path: str,
     where: dict,
     stats_cols: list[str] | None = None,
 ) -> tuple[int, dict]:
-    """Row-level DELETE as a copy-on-write commit with STATS-PRUNED
-    rewrite: only the files whose logged min/max can contain a matching
-    row are read and rewritten (minus the matching rows); every other
-    file rides along untouched — Θ(affected files), never Θ(table),
-    the property that makes takedown/opt-out deletes viable at 100 TB
-    when the table is clustered on the predicate column (compact with
-    ``order_by`` produces exactly that layout). ``where`` is the same
-    conjunctive range-predicate dict the readers use; rows with NULL in
-    a predicate column never match and are KEPT. Returns
-    ``(version, stats)`` with files_rewritten/files_total/rows_kept;
-    a delete that touches no file commits nothing. Conflicts with any
-    interleaved commit (its remove-set would be stale)."""
-    root = _root(path)
-    current = max(_versions(root), default=0)
-    if not current:
-        raise ValueError(f"no table at {path}")
-    touched, total, commit, dvs = _plan(root, current, where)
-    if not touched:
-        return current, {
-            "files_rewritten": 0,
-            "files_total": total,
-            "rows_kept": 0,
-        }
-    schema = StructType.fromJson(json.loads(commit["schema"]))
-    pcols = _table_partition_cols(commit)
-    df = _read_masked(spark, root, touched, schema, dvs)
-    kept = df.filter(~F.coalesce(_range_cond(where), F.lit(False)))
-    add = _write_data_files(
-        kept, root, list(stats_cols or []), partition_by=pcols
-    )
-    v = _commit(
-        root,
-        "delete",
-        commit["schema"],
-        add,
-        sorted(touched),
-        expected_version=current,
-        extra={"partition_cols": pcols},
-    )
-    return v, {
-        "files_rewritten": len(touched),
-        "files_total": total,
-        "rows_kept": sum(e["rows"] for e in add),
-    }
-
-
-def _write_dv_files(df: DataFrame, root: Path) -> tuple[list[str], int]:
-    """Persist a (fname, pos) frame as deletion-vector files under the
-    data dir via the shared staging protocol; returns (relative paths,
-    masked-row count from the footers — no extra count job)."""
-    entries = _write_data_files(df, root, [], prefix="dv-")
-    return [e["path"] for e in entries], sum(e["rows"] for e in entries)
+    """DELETE the rows inside the ``where`` ranges, copy-on-write: the
+    files whose stats can hold a match are rewritten without it and the
+    rest ride along, so the cost is Θ(affected files) — small when the
+    table is clustered on the predicate column (``compact`` with
+    ``order_by``). Returns ``(version, stats)`` with
+    files_rewritten/files_total/rows_kept; touching no file commits
+    nothing."""
+    return _dml(spark, path, "delete", where, stats_cols)
 
 
 def delete_where_dv(
     spark: SparkSession, path: str, where: dict
 ) -> tuple[int, dict]:
-    """Row-level DELETE as a DELETION VECTOR (merge-on-read, Delta's
-    DV mechanism): instead of rewriting the touched files, the matching
-    rows' (file, position) pairs are written as a small DV file and the
-    commit just references it — Θ(matched rows) written instead of
-    Θ(touched files) rewritten, the right trade when deletes are small
-    and frequent (takedown queues). Readers anti-join the masks via the
-    parquet row index; :func:`compact` later materializes and retires
-    every mask. Same predicate semantics as :func:`delete_where`
-    (conjunctive ranges, NULLs never match); stats pruning bounds which
-    files are even scanned for matches. Conflicts with any interleaved
-    commit."""
-    root = _root(path)
-    current = max(_versions(root), default=0)
-    if not current:
-        raise ValueError(f"no table at {path}")
-    touched, total, commit, dvs = _plan(root, current, where)
-    if not touched:
-        return current, {"files_masked": 0, "files_total": total, "rows_masked": 0}
-    schema = StructType.fromJson(json.loads(commit["schema"]))
-    df = _read_masked(spark, root, touched, schema, dvs, with_pos=True)
-    matches = df.filter(F.coalesce(_range_cond(where), F.lit(False))).select(
-        F.col("__fname").alias("fname"), F.col("__pos").alias("pos")
-    )
-    rels, rows = _write_dv_files(matches, root)
-    if rows == 0:
-        for rel in rels:
-            (root / rel).unlink(missing_ok=True)
-        return current, {
-            "files_masked": 0,
-            "files_total": total,
-            "rows_masked": 0,
-        }
-    v = _commit(
-        root,
-        "dv_delete",
-        commit["schema"],
-        [],
-        [],
-        expected_version=current,
-        extra={"dv_add": rels, "partition_cols": _table_partition_cols(commit)},
-    )
-    # count the files that actually contributed masks (stats pruning
-    # may touch files whose range overlaps but holds no matching row)
-    import pyarrow.parquet as pq
-
-    masked_files: set[str] = set()
-    for rel in rels:
-        masked_files.update(
-            pq.read_table(str(root / rel), columns=["fname"])
-            .column("fname")
-            .to_pylist()
-        )
-    return v, {
-        "files_masked": len(masked_files),
-        "files_total": total,
-        "rows_masked": rows,
-    }
+    """DELETE the rows inside the ``where`` ranges as a deletion vector:
+    their (file, position) pairs land in a small DV file and the commit
+    references it — Θ(matched rows) written, the right trade for small,
+    frequent deletes (takedown queues). Returns ``(version, stats)`` with
+    files_masked/files_total/rows_masked; masking 0 rows commits
+    nothing."""
+    return _dml(spark, path, "dv_delete", where)
 
 
 def _check_zone(delta: DataFrame, prune: dict | None) -> None:
@@ -1033,16 +1010,12 @@ def merge_into_table(
     key_cols: list[str],
     prune: dict | None = None,
     stats_cols: list[str] | None = None,
-    broadcast_max_rows: int = 4_000_000,
 ) -> tuple[int, dict]:
-    """UPSERT (Delta-style MERGE) as one copy-on-write commit: delta
-    rows replace same-key table rows and unmatched delta rows insert.
-    ``prune`` is the zone contract that keeps the rewrite Θ(affected
-    files): the same range-predicate dict the readers use, promising
-    every delta row lies inside it — VERIFIED against the delta (one
-    small aggregate; a delta row outside the zone, or NULL in a zone
-    column, raises rather than silently surviving the merge), then
-    used to stats-prune which table files can hold a match.
+    """UPSERT ``delta`` by ``key_cols``, copy-on-write: delta rows replace
+    same-key rows and unmatched delta rows insert. ``prune`` promises
+    every delta row lies inside those ranges (verified against the
+    delta; an outside or NULL zone value raises) and limits the rewrite
+    to the files whose stats overlap it.
 
     THE ZONE CONTRACT IS STRONGER THAN THE DELTA CHECK CAN VERIFY: it
     also requires that no EXISTING row with a delta key lies outside
@@ -1055,47 +1028,9 @@ def merge_into_table(
     pass ``prune=None`` — every file is rewritten (keys like order ids
     are usually uncorrelated with file layout — the honest default).
 
-    Delta must carry the table schema and distinct keys (same contract
-    as ``maintenance.merge_into``). The delta-key side of the anti-join
-    broadcasts only while it holds at most ``broadcast_max_rows`` rows
-    (counted once); a bulk delta falls back to a shuffle join instead
-    of an oversized driver broadcast. Conflicts with any interleaved
-    commit."""
-    root = _root(path)
-    current = max(_versions(root), default=0)
-    if not current:
-        raise ValueError(f"no table at {path}")
-    touched, total, commit, dvs = _plan(root, current, prune)
-    schema = StructType.fromJson(json.loads(commit["schema"]))
-    _check_schema(schema, delta.schema)
-    _check_zone(delta, prune)
-    if touched:
-        old = _read_masked(spark, root, touched, schema, dvs)
-        keys = delta.select(*key_cols).localCheckpoint(eager=False)
-        if keys.count() <= broadcast_max_rows:
-            keys = F.broadcast(keys)
-        kept = old.join(keys, key_cols, "left_anti")
-        new_data = kept.unionByName(delta)
-    else:
-        new_data = delta
-    pcols = _table_partition_cols(commit)
-    add = _write_data_files(
-        new_data, root, list(stats_cols or []), partition_by=pcols
-    )
-    v = _commit(
-        root,
-        "merge",
-        commit["schema"],
-        add,
-        sorted(touched),
-        expected_version=current,
-        extra={"partition_cols": pcols},
-    )
-    return v, {
-        "files_rewritten": len(touched),
-        "files_total": total,
-        "rows_written": sum(e["rows"] for e in add),
-    }
+    Returns ``(version, stats)`` with files_rewritten/files_total/
+    rows_written; always commits."""
+    return _dml(spark, path, "merge", prune, stats_cols, delta, key_cols)
 
 
 def merge_into_table_dv(
@@ -1105,81 +1040,17 @@ def merge_into_table_dv(
     key_cols: list[str],
     prune: dict | None = None,
     stats_cols: list[str] | None = None,
-    broadcast_max_rows: int = 4_000_000,
 ) -> tuple[int, dict]:
-    """UPSERT as MERGE-ON-READ (deletion-vector backed): the matched
-    table rows' (file, position) pairs land in a small DV file, the
-    delta appends as new files, and ONE commit publishes both — cost
-    Θ(matched + delta) WRITTEN, never Θ(touched files) rewritten. This
-    is the scattered-key regime ``merge_into_table`` is honest about
-    degrading on (keys uncorrelated with file layout ⇒ full rewrite):
-    a crawl refresh whose keys hit every file masks a handful of rows
-    per file instead of rewriting the table. The read side pays the
-    standard merge-on-read anti-join until :func:`compact`
-    materializes and retires the masks.
-
-    Same contracts as :func:`merge_into_table`: delta carries the
-    table schema and distinct keys; ``prune`` is the verified zone
-    bounding which files are even SCANNED for matches (including the
-    zone-stability caveat documented there); the delta-key broadcast
-    is guarded at ``broadcast_max_rows``. Conflicts with any
-    interleaved commit. Returns ``(version, stats)`` with
-    files_masked/files_total/rows_masked/rows_inserted."""
-    root = _root(path)
-    current = max(_versions(root), default=0)
-    if not current:
-        raise ValueError(f"no table at {path}")
-    touched, total, commit, dvs = _plan(root, current, prune)
-    schema = StructType.fromJson(json.loads(commit["schema"]))
-    _check_schema(schema, delta.schema)
-    _check_zone(delta, prune)
-    pcols = _table_partition_cols(commit)
-    dv_rels: list[str] = []
-    rows_masked = 0
-    if touched:
-        old = _read_masked(spark, root, touched, schema, dvs, with_pos=True)
-        keys = delta.select(*key_cols).localCheckpoint(eager=False)
-        if keys.count() <= broadcast_max_rows:
-            keys = F.broadcast(keys)
-        matches = old.join(keys, key_cols, "left_semi").select(
-            F.col("__fname").alias("fname"), F.col("__pos").alias("pos")
-        )
-        dv_rels, rows_masked = _write_dv_files(matches, root)
-        if rows_masked == 0:
-            for rel in dv_rels:
-                (root / rel).unlink(missing_ok=True)
-            dv_rels = []
-    add = _write_data_files(
-        delta, root, list(stats_cols or []), partition_by=pcols
-    )
-    extra: dict = {"partition_cols": pcols}
-    if dv_rels:
-        extra["dv_add"] = dv_rels
-    v = _commit(
-        root,
-        "merge_dv",
-        commit["schema"],
-        add,
-        [],
-        expected_version=current,
-        extra=extra,
-    )
-    masked_files: set[str] = set()
-    if dv_rels:
-        import pyarrow.parquet as pq
-
-        for rel in dv_rels:
-            masked_files.update(
-                pq.read_table(str(root / rel), columns=["fname"])
-                .column("fname")
-                .to_pylist()
-            )
-    return v, {
-        "files_masked": len(masked_files),
-        "files_total": total,
-        "rows_masked": rows_masked,
-        "rows_inserted": sum(e["rows"] for e in add),
-    }
+    """UPSERT as merge-on-read: the matched rows' (file, position) pairs
+    land in a DV file, the delta appends as new files, and one commit
+    publishes both — Θ(matched + delta) written. This is the regime
+    :func:`merge_into_table` degrades in (keys scattered over every
+    file): a crawl refresh masks a few rows per file instead of
+    rewriting the table. ``prune`` bounds which files are scanned for
+    matches, under the contract documented there. Returns
+    ``(version, stats)`` with files_masked/files_total/rows_masked/
+    rows_inserted; always commits."""
+    return _dml(spark, path, "merge_dv", prune, stats_cols, delta, key_cols)
 
 
 def read_changes(
@@ -1211,125 +1082,85 @@ def read_changes(
     to consume it."""
     root = _root(path)
     vs = _versions(root)
-    hi = to_version if to_version is not None else (vs[-1] if vs else 0)
-    hi = min(hi, vs[-1]) if vs else 0
+    hi = min(vs[-1] if to_version is None else to_version, vs[-1]) if vs else 0
     picked = [v for v in vs if from_version < v <= hi]
     if not picked and from_version not in (*vs, 0):
         raise ValueError(f"no version {from_version} in {root}")
-    schema = _schema_at(root, hi) if vs else None
-    schema_fields = (
-        {(f.name, f.dataType) for f in schema.fields} if schema else None
-    )
+    if not vs:
+        raise ValueError(f"no table at {path}")
+    commits = [(v, _read_json(_commit_file(root, v))) for v in picked]
+    schema = _schema((commits[-1][1] if commits else _head(root, hi))["schema"])
+    schema_fields = {(f.name, f.dataType) for f in schema.fields}
 
-    def _guard_schema(commit: dict, v: int) -> None:
-        # additive-subset check: every column the commit wrote must
-        # exist in the feed schema with an identical type (NULL-fill
-        # of later columns is then sound); anything else is a real
-        # schema change the feed cannot represent
-        got = StructType.fromJson(json.loads(commit["schema"]))
-        if not {(f.name, f.dataType) for f in got.fields} <= schema_fields:
-            raise ValueError(
-                f"change feed spans an incompatible schema change at v{v} "
-                f"({got.simpleString()} vs {schema.simpleString()}); "
-                "split the range there"
-            )
+    def _fits(commit: dict) -> bool:
+        # additive subset: every column the commit wrote exists in the
+        # feed schema with an identical type, so NULL-filling the later
+        # columns is sound; anything else the feed cannot represent
+        got = _schema(commit["schema"])
+        return {(f.name, f.dataType) for f in got.fields} <= schema_fields
 
-    def _dv_mask_chunk(c: dict, v: int, live_at_v: dict):
-        # the masked rows themselves ARE a delete feed: read the
-        # masked positions back out of the (still live) data files
-        dv_rels = c.get("dv_add", [])
-        if not dv_rels:
-            return None
-        dv = _dv_frame(spark, root, dv_rels)
-        fnames = sorted(
-            r["fname"] for r in dv.select("fname").distinct().collect()
-        )
-        # resolve masked file names to their full relative paths via
-        # the live set (a partitioned file lives under value dirs)
-        by_name = {rel.rsplit("/", 1)[-1]: rel for rel in live_at_v}
-        rels = [by_name.get(n, f"{_DATA_DIR}/{n}") for n in fnames]
+    def _read(rels: list[str], v: int, dv: list[str], with_pos: bool = False):
         missing = [rel for rel in rels if not (root / rel).is_file()]
         if missing:
             raise ValueError(
                 f"changes of v{v} reference vacuumed files: {missing[:3]}"
             )
-        base = _read_masked(spark, root, rels, schema, [], with_pos=True)
-        rows = base.join(
-            dv.select(
-                F.col("fname").alias("__fname"),
-                F.col("pos").alias("__pos"),
-            ),
-            ["__fname", "__pos"],
-            "left_semi",
-        ).drop("__fname", "__pos")
-        return rows.withColumn(
-            "_change_version", F.lit(v).cast("int")
-        ).withColumn("_change_type", F.lit("delete"))
+        return _read_masked(spark, root, rels, schema, dv, with_pos=with_pos)
 
+    def _tag(df: DataFrame, v: int, change_type: str) -> DataFrame:
+        return df.withColumn("_change_version", F.lit(v).cast("int")).withColumn(
+            "_change_type", F.lit(change_type)
+        )
+
+    # one replay to the start of the range, then one fold step per commit
+    snap = _replay(root, from_version) if commits and from_version in vs else _Snapshot()
     chunks = []
-    prev_commit = None
-    for v in picked:
-        c = _read_json(_commit_file(root, v))
+    for v, c in commits:
+        prev, dv_prev = snap.commit, list(snap.dv)
+        snap.apply(v, c)
         op = c["operation"]
         if op == "compact":
-            prev_commit = c
             continue
-        if op in ("dv_delete", "merge_dv"):
-            # merge-on-read DML: the commit's deletion vector is the
-            # delete side; a merge_dv's added files fall through to
-            # the insert side below
-            _guard_schema(c, v)
-            live_at_v, _, _ = _live_at(root, v)
-            mask_chunk = _dv_mask_chunk(c, v, live_at_v)
-            if mask_chunk is not None:
-                chunks.append(mask_chunk)
-            if op == "dv_delete":
-                prev_commit = c
-                continue
-        _guard_schema(c, v)
+        if not _fits(c):
+            raise ValueError(
+                f"change feed spans an incompatible schema change at v{v} "
+                f"({_schema(c['schema']).simpleString()} vs "
+                f"{schema.simpleString()}); split the range there"
+            )
+        if c.get("dv_add"):
+            # merge-on-read DML: the masked rows ARE the delete side, read
+            # back out of the (still live) data files; a masked file name
+            # resolves to its relative path through the live set (a
+            # partitioned file lives under value dirs)
+            dv = _dv_frame(spark, root, c["dv_add"])
+            names = sorted(r["fname"] for r in dv.select("fname").distinct().collect())
+            by_name = {rel.rsplit("/", 1)[-1]: rel for rel in snap.live}
+            rels = [by_name.get(n, f"{_DATA_DIR}/{n}") for n in names]
+            masks = dv.select(F.col("fname").alias("__fname"), F.col("pos").alias("__pos"))
+            rows = _read(rels, v, [], with_pos=True).join(
+                masks, ["__fname", "__pos"], "left_semi"
+            )
+            chunks.append(_tag(rows.drop("__fname", "__pos"), v, "delete"))
         sides = [("insert", [e["path"] for e in c.get("add", [])])]
         if op in ("overwrite", "delete", "merge"):
             # the removed files were written under the PREVIOUS schema
-            if prev_commit is None and v - 1 in vs:
-                _, prev_commit, _ = _live_at(root, v - 1)
-            if prev_commit is not None:
-                old = StructType.fromJson(json.loads(prev_commit["schema"]))
-                if not {
-                    (f.name, f.dataType) for f in old.fields
-                } <= schema_fields:
-                    raise ValueError(
-                        f"v{v} overwrote the table with an incompatible "
-                        f"schema; its delete feed ({old.simpleString()}) "
-                        f"cannot be represented under "
-                        f"{schema.simpleString()} — use "
-                        f"read_table(version={v - 1}) for the removed rows"
-                    )
-            sides.append(("delete", list(c.get("remove", []))))
-        prev_commit = c
-        for change_type, rels in sides:
-            if not rels:
-                continue
-            missing = [rel for rel in rels if not (root / rel).is_file()]
-            if missing:
+            if prev is not None and not _fits(prev):
                 raise ValueError(
-                    f"changes of v{v} reference vacuumed files: {missing[:3]}"
+                    f"v{v} overwrote the table with an incompatible "
+                    f"schema; its delete feed "
+                    f"({_schema(prev['schema']).simpleString()}) cannot be "
+                    f"represented under {schema.simpleString()} — use "
+                    f"read_table(version={v - 1}) for the removed rows"
                 )
-            # removed files read through the DVs active just BEFORE the
-            # commit: a row already masked by a dv_delete was emitted as
-            # a delete back then and must not be emitted a second time
-            dv_prev = (
-                _live_at(root, v - 1)[2]
-                if change_type == "delete" and v - 1 in vs
-                else []
-            )
-            chunks.append(
-                _read_masked(spark, root, rels, schema, dv_prev)
-                .withColumn("_change_version", F.lit(v).cast("int"))
-                .withColumn("_change_type", F.lit(change_type))
-            )
+            # read through the DVs active just BEFORE the commit: a row a
+            # dv_delete already masked was emitted as a delete back then
+            sides.append(("delete", list(c.get("remove", []))))
+        chunks.extend(
+            _tag(_read(rels, v, dv_prev if change_type == "delete" else []), v, change_type)
+            for change_type, rels in sides
+            if rels
+        )
     if not chunks:
-        if schema is None:
-            raise ValueError(f"no table at {path}")
         return (
             spark.createDataFrame([], schema)
             .withColumn("_change_version", F.lit(0).cast("int"))
@@ -1362,10 +1193,9 @@ def append_stream(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         tag = f"{app_id}-{batch_id}"
         root = _root(path)
-        if _log_path(root).is_dir():
-            vs = _versions(root)
-            if vs and tag in _tags_at(root, vs[-1]):
-                return
+        current = latest_version(root)
+        if current and tag in _replay(root, current).tags:
+            return
         write_table(batch_df, path, stats_cols=stats_cols, batch_tag=tag)
 
     return changes.writeStream.foreachBatch(process)
@@ -1391,11 +1221,13 @@ def vacuum(
     vs = [v for v in _versions(root) if v >= keep_from_version]
     if not vs:
         raise ValueError(f"keep_from_version={keep_from_version} retains no versions")
-    referenced: set[str] = set()
-    for v in vs:
-        live, _, dvs = _live_at(root, v)
-        referenced.update(live)
-        referenced.update(dvs)  # active deletion vectors
+    # one replay to the oldest kept version, then one fold step per
+    # later commit; live files and active deletion vectors both count
+    snap = _replay(root, vs[0])
+    referenced = {*snap.live, *snap.dv}
+    for v in vs[1:]:
+        snap.apply(v, _read_json(_commit_file(root, v)))
+        referenced.update(snap.live, snap.dv)
     data_dir = root / _DATA_DIR
     cutoff = time.time() - min_age_seconds
     deleted = []
@@ -1489,7 +1321,7 @@ def _make_datasource_class():
             from pyspark.sql.pandas.types import to_arrow_schema
 
             declared = to_arrow_schema(
-                StructType.fromJson(json.loads(partition.schema_json))
+                _schema(partition.schema_json)
             )
             if tab.schema.names != declared.names:
                 arrays = []
@@ -1528,14 +1360,11 @@ def _make_datasource_class():
             import pyarrow.parquet as pq
 
             root = _root(self.path)
-            v = (
-                self.version
-                if self.version is not None
-                else max(_versions(root), default=0)
+            snap = _replay(
+                root, latest_version(root) if self.version is None else self.version
             )
-            live, _, dvs = _live_at(root, v)
             masked: dict[str, list[int]] = {}
-            for rel in dvs:
+            for rel in snap.dv:
                 tab = pq.read_table(str(root / rel))
                 for fname, pos in zip(
                     tab.column("fname").to_pylist(),
@@ -1549,7 +1378,7 @@ def _make_datasource_class():
                     self.schema_json,
                     entry.get("partition"),
                 )
-                for rel, entry in sorted(live.items())
+                for rel, entry in sorted(snap.live.items())
             ] or [_FilePartition("")]
 
         def read(self, partition):
@@ -1583,7 +1412,7 @@ def _make_datasource_class():
 
         def latestOffset(self):
             root = _root(self.path)
-            return {"version": max(_versions(root), default=self.start - 1)}
+            return {"version": latest_version(root) or self.start - 1}
 
         def partitions(self, start, end):
             root = _root(self.path)
@@ -1603,7 +1432,7 @@ def _make_datasource_class():
                         "added files — duplicates of rewritten rows "
                         "included, per the versioned-source contract)"
                     )
-                got = StructType.fromJson(json.loads(c["schema"]))
+                got = _schema(c["schema"])
                 if _schema_fields(got) != self.declared:
                     raise ValueError(
                         f"v{v} changed the table schema "
@@ -1638,11 +1467,8 @@ def _make_datasource_class():
             return "txlog"
 
         def schema(self):
-            root = _root(self.options["path"])
             version = _resolve_version_option(self.options["path"], self.options)
-            if version is None:
-                version = max(_versions(root), default=0)
-            return _schema_at(root, version)
+            return _schema(_head(_root(self.options["path"]), version)["schema"])
 
         def reader(self, schema):
             return TxLogReader(self.options, schema)

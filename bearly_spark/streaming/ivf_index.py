@@ -499,6 +499,7 @@ def ivfpq_index_query(
     cand = (
         _scan_topn(
             cand.select("q_id", F.col("id").alias("c_id"), "cell", "codes"),
+            qrows,
             score,
             rerank,
             desc=False,

@@ -434,6 +434,27 @@ def test_fit_entry_points_reject_unknown_sample_by(spark, tmp_path, fit):
         fit(_tiny_vectors(spark, 32), str(tmp_path / "index"))
 
 
+@pytest.mark.parametrize(
+    "topk",
+    [
+        lambda emb, q: S.brute_force_topk(emb, q, k=3),
+        lambda emb, q: S.lsh_ann_topk(emb, q, k=3, dim=4, nbits=6),
+        lambda emb, q: S.ivf_ann_topk(emb, q, k=3, n_cells=4, sample_by="id"),
+        lambda emb, q: S.pq_ann_topk(emb, q, k=3, m=2, ksub=4, sample_by="id"),
+        lambda emb, q: S.sq8_ann_topk(emb, q, k=3),
+    ],
+    ids=["brute_force_topk", "lsh_ann_topk", "ivf_ann_topk", "pq_ann_topk", "sq8_ann_topk"],
+)
+def test_topk_paths_return_empty_for_no_queries(spark, topk):
+    """An empty query frame yields an empty result with the usual
+    (query_id, neighbor_id, cosine_sim, rn) schema on every top-k path,
+    both while the query is built and when it runs."""
+    emb = _tiny_vectors(spark, 32)
+    out = topk(emb, emb.filter(F.col("vec_id") < 0))
+    assert out.columns == ["query_id", "neighbor_id", "cosine_sim", "rn"]
+    assert out.collect() == []
+
+
 def test_probe_paths_share_the_driver_collect_bound(spark, monkeypatch):
     """SQ8 collects its query codes under the same bound as every other
     probe path, read at call time: lowering ``MAX_DRIVER_QUERIES`` makes

@@ -521,12 +521,13 @@ def test_merge_into_delete_and_insert_only(spark, sf_dir, tmp_path_factory):
 
 
 def test_merge_into_over_broadcast_threshold_takes_shuffle_path(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, monkeypatch
 ):
     """Same guard on the snapshot-tree MERGE: a delta past
-    ``broadcast_max_rows`` drops the broadcast hint and still produces
+    ``BROADCAST_KEYS_MAX`` drops the broadcast hint and still produces
     the identical merged table."""
     from bearly_spark.operators.maintenance import merge_into
+    from bearly_spark.sources import tables
 
     root = tmp_path_factory.mktemp("merge_guard") / "t"
     spark.range(0, 40).select(
@@ -535,7 +536,8 @@ def test_merge_into_over_broadcast_threshold_takes_shuffle_path(
     src = spark.range(10, 30).select(
         F.col("id").alias("k"), (F.col("id") * 100).alias("v")
     )
-    stats = merge_into(spark, str(root), src, ["k"], broadcast_max_rows=5)
+    monkeypatch.setattr(tables, "BROADCAST_KEYS_MAX", 5)
+    stats = merge_into(spark, str(root), src, ["k"])
     assert stats["files_rewritten"] >= 1
     got = {r["k"]: r["v"] for r in spark.read.parquet(str(root)).collect()}
     assert len(got) == 40
@@ -623,6 +625,25 @@ def test_snapshot_restore_roundtrip_zero_copy(spark, sf_dir, tmp_path_factory):
 
     with _pytest.raises(ValueError, match="no snapshot"):
         restore_table(spark, str(root), 99)
+
+
+def test_restore_heals_a_half_finished_swap(spark, tmp_path_factory):
+    """A fallback swap that crashed between its two renames leaves the
+    table at ``.old-<name>`` and no table dir; restore heals that first
+    and then swaps the snapshot in, like every other swap."""
+    from bearly_spark.operators.maintenance import restore_table, snapshot_table
+
+    root = tmp_path_factory.mktemp("half_swap") / "t"
+    spark.range(0, 10).coalesce(1).write.parquet(str(root))
+    snapshot_table(str(root))
+    spark.range(10, 13).coalesce(1).write.mode("append").parquet(str(root))
+    old = root.parent / f".old-{root.name}"
+    root.rename(old)  # the crash window: no root, the tree at .old-
+    restore_table(spark, str(root), 1)
+    got = sorted(r["id"] for r in spark.read.parquet(str(root)).collect())
+    assert got == list(range(10))
+    assert not old.exists()
+    assert not (root.parent / f".restoring-{root.name}").exists()
 
 
 def test_scd2_apply_table_equals_full_rewrite(spark, sf_dir, tmp_path_factory):

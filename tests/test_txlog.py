@@ -13,6 +13,7 @@ import pytest
 
 import pyspark.sql.functions as F
 
+from bearly_spark.sources import tables
 from bearly_spark.sources import txlog as TX
 
 
@@ -247,12 +248,12 @@ def test_checkpoint_replay_matches_full_replay(spark, table):
         TX.write_table(_rows(spark, lo * 5, lo * 5 + 5).coalesce(1), table)
     root = TX._root(table)
     assert TX._checkpoint_file(root, 10).is_file()
-    live_fast, _, _ = TX._live_at(root, 12)
+    live_fast = TX._replay(root, 12).live
     # force a full replay by reading with no checkpoint available
     chk = TX._checkpoint_file(root, 10)
     payload = json.loads(chk.read_text())
     chk.unlink()
-    live_full, _, _ = TX._live_at(root, 12)
+    live_full = TX._replay(root, 12).live
     assert live_fast == live_full
     assert set(payload["live"]) <= set(live_full)
     assert _collect(TX.read_table(spark, table)) == _collect(_rows(spark, 0, 60))
@@ -452,10 +453,10 @@ def test_tag_map_rides_checkpoints(spark, table):
         )
     root = TX._root(table)
     assert TX._checkpoint_file(root, 10).is_file()
-    tags = TX._tags_at(root, 12)
+    tags = TX._replay(root, 12).tags
     assert tags == {f"app-{i}": i + 1 for i in range(12)}
     # version-bounded view excludes later tags
-    assert "app-11" not in TX._tags_at(root, 11)
+    assert "app-11" not in TX._replay(root, 11).tags
 
 
 def test_append_stream_distinct_app_ids_do_not_collide(
@@ -590,8 +591,8 @@ def test_merge_upserts_with_pruned_rewrite(spark, table):
     assert len(_collect(TX.read_table(spark, table, version=4))) == 200
 
 
-def test_merge_over_broadcast_threshold_takes_shuffle_path(spark, table):
-    """A delta past ``broadcast_max_rows`` must not be force-broadcast:
+def test_merge_over_broadcast_threshold_takes_shuffle_path(spark, table, monkeypatch):
+    """A delta past ``BROADCAST_KEYS_MAX`` must not be force-broadcast:
     the guard drops the hint (shuffle/AQE path) and the merged table is
     identical to the broadcast path's result."""
     TX.write_table(_rows(spark, 0, 40).coalesce(1), table, stats_cols=["k"])
@@ -600,9 +601,8 @@ def test_merge_over_broadcast_threshold_takes_shuffle_path(spark, table):
         (F.col("id") * 100).alias("v"),
         F.lit("m").alias("cat"),
     )
-    v, stats = TX.merge_into_table(
-        spark, table, delta, ["k"], broadcast_max_rows=5
-    )
+    monkeypatch.setattr(tables, "BROADCAST_KEYS_MAX", 5)
+    v, stats = TX.merge_into_table(spark, table, delta, ["k"])
     assert v == 2 and stats["files_rewritten"] == 1
     got = {r["k"]: (r["v"], r["cat"]) for r in TX.read_table(spark, table).collect()}
     assert len(got) == 40
@@ -793,10 +793,10 @@ def test_compact_materializes_and_retires_dvs(spark, table):
     TX.write_table(_rows(spark, 0, 10).coalesce(1), table, stats_cols=["k"])
     TX.delete_where_dv(spark, table, {"k": (2, 4)})
     root = TX._root(table)
-    assert TX._dv_at(root, TX.latest_version(table))
+    assert TX._replay(root, TX.latest_version(table)).dv
     before = _collect(TX.read_table(spark, table))
     TX.compact(spark, table, target_files=1, stats_cols=["k"])
-    assert TX._dv_at(root, TX.latest_version(table)) == []
+    assert TX._replay(root, TX.latest_version(table)).dv == []
     assert _collect(TX.read_table(spark, table)) == before
     # vacuum now reclaims the retired DV file along with the old data
     deleted = TX.vacuum(table, keep_from_version=3, min_age_seconds=0)
@@ -892,7 +892,7 @@ def test_overwrite_retires_deletion_vectors(spark, table):
     TX.delete_where_dv(spark, table, {"k": (1, 2)})
     TX.write_table(_rows(spark, 100, 102, cat="b"), table, mode="overwrite")
     root = TX._root(table)
-    assert TX._dv_at(root, TX.latest_version(table)) == []
+    assert TX._replay(root, TX.latest_version(table)).dv == []
     # the retired DV file is reclaimable once only post-overwrite
     # versions are retained
     deleted = TX.vacuum(table, keep_from_version=3, min_age_seconds=0)
@@ -976,7 +976,8 @@ def test_partitioned_write_layout_and_read(spark, table):
     root = TX._root(table)
     files = sorted(p.relative_to(root) for p in root.glob("data/*/*.parquet"))
     assert files and all(p.parts[1] in ("cat=a", "cat=b") for p in files)
-    live, commit, _ = TX._live_at(root, 1)
+    snap = TX._replay(root, 1)
+    live, commit = snap.live, snap.commit
     assert TX._table_partition_cols(commit) == ["cat"]
     assert {e["partition"]["cat"] for e in live.values()} == {"a", "b"}
     df = TX.read_table(spark, table)
@@ -1014,7 +1015,7 @@ def test_partitioned_append_inherits_and_rejects_repartition(spark, table):
     TX.write_table(_prows(spark, 0, 4), table, partition_by=["cat"])
     TX.write_table(_prows(spark, 4, 8), table)  # inherits cat-partitioning
     root = TX._root(table)
-    _, commit, _ = TX._live_at(root, 2)
+    commit = TX._replay(root, 2).commit
     assert TX._table_partition_cols(commit) == ["cat"]
     assert _pcollect(TX.read_table(spark, table)) == _pcollect(
         _prows(spark, 0, 8)
@@ -1038,7 +1039,8 @@ def test_partitioned_compact_keeps_layout_and_data(spark, table):
     before = _pcollect(TX.read_table(spark, table))
     v = TX.compact(spark, table, target_files=2, stats_cols=["k"], order_by=["k"])
     root = TX._root(table)
-    live, commit, _ = TX._live_at(root, v)
+    snap = TX._replay(root, v)
+    live, commit = snap.live, snap.commit
     assert TX._table_partition_cols(commit) == ["cat"]
     assert all(e["partition"]["cat"] in ("a", "b") for e in live.values())
     assert _pcollect(TX.read_table(spark, table)) == before
@@ -1060,7 +1062,8 @@ def test_partitioned_delete_and_merge_keep_layout(spark, table):
     )
     assert 0 < stats["files_rewritten"] < stats["files_total"]
     root = TX._root(table)
-    live, commit, _ = TX._live_at(root, TX.latest_version(table))
+    snap = TX._replay(root, TX.latest_version(table))
+    live, commit = snap.live, snap.commit
     assert all("cat=" in rel for rel in live)  # rewrite stayed partitioned
     expect = [
         (k, "a" if k % 2 == 0 else "b", k * 10)
@@ -1074,7 +1077,8 @@ def test_partitioned_delete_and_merge_keep_layout(spark, table):
         spark, table, delta, ["k"], prune={"cat": ("a", "a")},
         stats_cols=["k"],
     )
-    live, commit, _ = TX._live_at(root, TX.latest_version(table))
+    snap = TX._replay(root, TX.latest_version(table))
+    live, commit = snap.live, snap.commit
     assert TX._table_partition_cols(commit) == ["cat"]
     assert all("cat=" in rel for rel in live)
     got = {r["k"]: r["v"] for r in TX.read_table(spark, table).collect()}
@@ -1111,7 +1115,7 @@ def test_partitioned_overwrite_may_repartition(spark, table):
         _prows(spark, 0, 6), table, mode="overwrite", partition_by=[]
     )
     root = TX._root(table)
-    _, commit, _ = TX._live_at(root, 2)
+    commit = TX._replay(root, 2).commit
     assert TX._table_partition_cols(commit) == []
     assert _pcollect(TX.read_table(spark, table)) == _pcollect(
         _prows(spark, 0, 6)
@@ -1147,12 +1151,13 @@ def test_merge_dv_equals_cow_merge_and_survives_compact(spark, table):
     assert stats_dv["rows_masked"] == 15  # multiples of 7 in [0,100)
     assert stats_dv["rows_inserted"] == delta.count()
     assert stats_cow["files_rewritten"] == 2  # the honest CoW contrast
-    live, _, dvs = TX._live_at(TX._root(table), v_dv)
+    snap = TX._replay(TX._root(table), v_dv)
+    live, dvs = snap.live, snap.dv
     assert len(dvs) >= 1
     # compact materializes the masks and retires them; data unchanged
     before = _collect(TX.read_table(spark, table))
     TX.compact(spark, table, target_files=1, stats_cols=["k"])
-    _, _, dvs_after = TX._live_at(TX._root(table), TX.latest_version(table))
+    dvs_after = TX._replay(TX._root(table), TX.latest_version(table)).dv
     assert dvs_after == []
     assert _collect(TX.read_table(spark, table)) == before
 
@@ -1170,7 +1175,7 @@ def test_merge_dv_insert_only_and_zone_contract(spark, table):
         "rows_masked": 0,
         "rows_inserted": 3,
     }
-    _, _, dvs = TX._live_at(TX._root(table), v)
+    dvs = TX._replay(TX._root(table), v).dv
     assert dvs == []
     assert len(_collect(TX.read_table(spark, table))) == 13
     # zone violations raise exactly like the CoW form
@@ -1204,23 +1209,138 @@ def test_merge_dv_on_partitioned_table_keeps_layout(spark, table):
     )
     v, stats = TX.merge_into_table_dv(spark, table, delta, ["k"])
     assert stats["rows_masked"] == 1 and stats["rows_inserted"] == 2
-    live, commit, _ = TX._live_at(TX._root(table), v)
+    snap = TX._replay(TX._root(table), v)
+    live, commit = snap.live, snap.commit
     assert TX._table_partition_cols(commit) == ["cat"]
     assert all("cat=" in rel for rel in live)  # delta landed partitioned
     got = {r["k"]: (r["cat"], r["v"]) for r in TX.read_table(spark, table).collect()}
     assert got[2] == ("a", 999) and got[21] == ("b", 210) and len(got) == 21
 
 
-def test_merge_dv_over_broadcast_threshold_same_result(spark, table):
+def test_merge_dv_over_broadcast_threshold_same_result(spark, table, monkeypatch):
     TX.write_table(_rows(spark, 0, 40).coalesce(1), table, stats_cols=["k"])
     delta = spark.range(10, 30).select(
         F.col("id").alias("k"),
         (F.col("id") * 100).alias("v"),
         F.lit("m").alias("cat"),
     )
-    v, stats = TX.merge_into_table_dv(
-        spark, table, delta, ["k"], broadcast_max_rows=5
-    )
+    monkeypatch.setattr(tables, "BROADCAST_KEYS_MAX", 5)
+    v, stats = TX.merge_into_table_dv(spark, table, delta, ["k"])
     assert stats["rows_masked"] == 20
     got = {r["k"]: r["v"] for r in TX.read_table(spark, table).collect()}
     assert len(got) == 40 and got[10] == 1000 and got[9] == 90
+
+
+# ---------------------------------------------- one replay, one DML skeleton
+
+
+def test_range_walks_replay_once_then_fold_each_commit(spark, table, monkeypatch):
+    """``read_changes`` and ``vacuum`` over 12 DML commits across a
+    checkpoint read one replay's files (a checkpoint plus fewer than
+    ``_CHECKPOINT_EVERY`` commits) plus one commit file per version in
+    their range — never a replay per commit."""
+    TX.write_table(_rows(spark, 0, 40).coalesce(1), table, stats_cols=["k"])
+    for i in range(12):
+        k, upsert = 2 * i, _rows(spark, 2 * i, 2 * i + 1, cat="m")
+        if i % 4 == 0:
+            TX.delete_where(spark, table, {"k": (k, k)}, stats_cols=["k"])
+        elif i % 4 == 1:
+            TX.delete_where_dv(spark, table, {"k": (k, k)})
+        elif i % 4 == 2:
+            TX.merge_into_table(spark, table, upsert, ["k"], stats_cols=["k"])
+        else:
+            TX.merge_into_table_dv(spark, table, upsert, ["k"], stats_cols=["k"])
+    root = TX._root(table)
+    assert TX.latest_version(table) == 13
+    assert TX._checkpoint_file(root, 10).is_file()
+    reads = []
+    real = TX._read_json
+    monkeypatch.setattr(TX, "_read_json", lambda p: reads.append(p) or real(p))
+    feed = TX.read_changes(spark, table, 1)
+    assert len(reads) <= TX._CHECKPOINT_EVERY + (13 - 1)
+    reads.clear()
+    TX.vacuum(table, keep_from_version=2)
+    assert len(reads) <= TX._CHECKPOINT_EVERY + (13 - 2)
+    monkeypatch.undo()
+    counts = {r[0]: r[1] for r in feed.groupBy("_change_type").count().collect()}
+    net = counts.get("insert", 0) - counts.get("delete", 0)
+    assert net == TX.read_table(spark, table).count() - 40
+
+
+def _even_rows(spark, lo, hi):
+    """(k, v, cat) rows for even k in [lo, hi); cat 'a' where 4 | k."""
+    return spark.range(lo, hi, 2).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10).alias("v"),
+        F.when(F.col("id") % 4 == 0, "a").otherwise("b").alias("cat"),
+    )
+
+
+#: (entry point, call) -> (operation or None when nothing commits, adds,
+#: removes, dv_add logged, returned stats, dv- files on disk), for a flat
+#: and a cat-partitioned table of even k in [0, 40), two appends. Each
+#: entry point gets a fresh table and its calls in this order.
+DML_MATRIX = {
+    "flat": {
+        ("delete_where", "far"): (None, 0, 0, False, {"files_rewritten": 0, "files_total": 2, "rows_kept": 0}, False),
+        ("delete_where", "miss"): ("delete", 1, 1, False, {"files_rewritten": 1, "files_total": 2, "rows_kept": 10}, False),
+        ("delete_where", "hit"): ("delete", 1, 1, False, {"files_rewritten": 1, "files_total": 2, "rows_kept": 8}, False),
+        ("delete_where_dv", "far"): (None, 0, 0, False, {"files_masked": 0, "files_total": 2, "rows_masked": 0}, False),
+        ("delete_where_dv", "miss"): (None, 0, 0, False, {"files_masked": 0, "files_total": 2, "rows_masked": 0}, False),
+        ("delete_where_dv", "hit"): ("dv_delete", 0, 0, True, {"files_masked": 1, "files_total": 2, "rows_masked": 2}, True),
+        ("merge_into_table", "miss"): ("merge", 3, 2, False, {"files_rewritten": 2, "files_total": 2, "rows_written": 21}, False),
+        ("merge_into_table", "hit"): ("merge", 4, 3, False, {"files_rewritten": 3, "files_total": 3, "rows_written": 22}, False),
+        ("merge_into_table_dv", "miss"): ("merge_dv", 1, 0, False, {"files_masked": 0, "files_total": 2, "rows_masked": 0, "rows_inserted": 1}, False),
+        ("merge_into_table_dv", "hit"): ("merge_dv", 1, 0, True, {"files_masked": 1, "files_total": 3, "rows_masked": 1, "rows_inserted": 2}, True),
+    },
+    "partitioned": {
+        ("delete_where", "far"): (None, 0, 0, False, {"files_rewritten": 0, "files_total": 4, "rows_kept": 0}, False),
+        ("delete_where", "miss"): ("delete", 2, 2, False, {"files_rewritten": 2, "files_total": 4, "rows_kept": 10}, False),
+        ("delete_where", "hit"): ("delete", 2, 2, False, {"files_rewritten": 2, "files_total": 4, "rows_kept": 8}, False),
+        ("delete_where_dv", "far"): (None, 0, 0, False, {"files_masked": 0, "files_total": 4, "rows_masked": 0}, False),
+        ("delete_where_dv", "miss"): (None, 0, 0, False, {"files_masked": 0, "files_total": 4, "rows_masked": 0}, False),
+        ("delete_where_dv", "hit"): ("dv_delete", 0, 0, True, {"files_masked": 2, "files_total": 4, "rows_masked": 2}, True),
+        ("merge_into_table", "miss"): ("merge", 5, 4, False, {"files_rewritten": 4, "files_total": 4, "rows_written": 21}, False),
+        ("merge_into_table", "hit"): ("merge", 7, 5, False, {"files_rewritten": 5, "files_total": 5, "rows_written": 22}, False),
+        ("merge_into_table_dv", "miss"): ("merge_dv", 1, 0, False, {"files_masked": 0, "files_total": 4, "rows_masked": 0, "rows_inserted": 1}, False),
+        ("merge_into_table_dv", "hit"): ("merge_dv", 2, 0, True, {"files_masked": 1, "files_total": 5, "rows_masked": 1, "rows_inserted": 2}, True),
+    },
+}
+
+
+def _dml_call(spark, table, entry, call):
+    if entry.startswith("delete"):
+        where = {"far": (100, 200), "miss": (3, 3), "hit": (4, 6)}[call]
+        kw = {"stats_cols": ["k"]} if entry == "delete_where" else {}
+        return getattr(TX, entry)(spark, table, {"k": where}, **kw)
+    rows = [(3, 30, "b")] if call == "miss" else [(4, 999, "a"), (41, 410, "b")]
+    delta = spark.createDataFrame(rows, "k long, v long, cat string").coalesce(1)
+    return getattr(TX, entry)(spark, table, delta, ["k"], stats_cols=["k"])
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+@pytest.mark.parametrize(
+    "entry", ["delete_where", "delete_where_dv", "merge_into_table", "merge_into_table_dv"]
+)
+def test_dml_matrix_commits(spark, tmp_path, layout, entry):
+    """Each DML entry point's commit rule, log entry and stats, with and
+    without a match, on a flat and a partitioned table."""
+    table = str(tmp_path / f"{layout}-{entry}")
+    part = {"partition_by": ["cat"]} if layout == "partitioned" else {}
+    for lo in (0, 20):
+        TX.write_table(_even_rows(spark, lo, lo + 20).coalesce(1), table, stats_cols=["k"], **part)
+    root = TX._root(table)
+    calls = [c for e, c in DML_MATRIX[layout] if e == entry]
+    for call in calls:
+        before = TX.latest_version(table)
+        v, stats = _dml_call(spark, table, entry, call)
+        c = TX._read_json(TX._commit_file(root, v)) if v > before else None
+        got = (
+            c and c["operation"],
+            len(c["add"]) if c else 0,
+            len(c["remove"]) if c else 0,
+            bool(c and c.get("dv_add")),
+            stats,
+            any(root.rglob("dv-*.parquet")),
+        )
+        assert got == DML_MATRIX[layout][(entry, call)], (entry, call)
